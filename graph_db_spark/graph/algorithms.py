@@ -18,7 +18,9 @@ Scale notes:
 
 from __future__ import annotations
 
+import sys
 import threading
+import warnings
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Window
@@ -85,11 +87,53 @@ def checkpoint_keep_partitioning(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True)
 
 
+def _parts(df: DataFrame, n_partitions: int | None) -> int:
+    return n_partitions or df.sparkSession.sparkContext.defaultParallelism
+
+
+def _str_edges(edges: DataFrame, *extra_cols) -> DataFrame:
+    return edges.select(
+        F.col("src").cast("string").alias("src"),
+        F.col("dst").cast("string").alias("dst"),
+        *extra_cols,
+    )
+
+
+def _round_edges(edges: DataFrame, n_partitions: int | None, *extra_cols) -> DataFrame:
+    """The static side of a round loop that walks out-edges: string
+    ``src``/``dst`` (plus ``extra_cols``) hash-partitioned on ``src``
+    through :func:`prepartition_for_rounds`, so each round's
+    frontier⋈edges join shuffles only the frontier."""
+    return prepartition_for_rounds(
+        _str_edges(edges, *extra_cols), _parts(edges, n_partitions), "src"
+    )
+
+
+def _until_quiet(step, state, max_rounds: int, name: str, at_limit: str = "raise"):
+    """Drive a frontier loop. ``step(state, rnd)`` runs round ``rnd``
+    (1-based) and returns ``(state, frontier)`` with the frontier read
+    off a checkpoint, so the one ``limit(1).count()`` probe per round
+    scans materialized rows instead of re-running the round. Returns the
+    state of the first round whose frontier is empty. Exhausting
+    ``max_rounds`` raises — a truncated frontier loop returns silently
+    wrong rows — unless ``at_limit="return"`` (a depth-bounded loop)."""
+    for rnd in range(1, max_rounds + 1):
+        state, frontier = step(state, rnd)
+        if frontier.limit(1).count() == 0:
+            return state
+    if at_limit == "return":
+        return state
+    raise RuntimeError(f"{name} did not converge within {max_rounds} rounds")
+
+
+# connected_components runs this many rounds of plain propagation; a
+# pointer-jump step precedes every later round
+_JUMP_AFTER = 8
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 20,
-    jump_after: int = 8,
-    strict: bool = True,
     n_partitions: int | None = None,
 ) -> DataFrame:
     """Connected components via iterative min-label propagation
@@ -100,22 +144,21 @@ def connected_components(
     ``(id, component)`` where ``component`` is the minimum vertex id in the
     component (stable, deterministic).
 
-    O(diameter) rounds for the first ``jump_after`` rounds. Measured at
+    O(diameter) rounds for the first 8 rounds. Measured at
     sf0.1 (642k vertices, 4.6M directed edge rows): the fixture graph
     converges in 7 rounds, and a Shiloach-Vishkin pointer-jump step per
     round only cut that to 6 while adding a 642k-row self-join + checkpoint
-    per round (32s vs 19s) — so plain propagation runs first. From round
-    ``jump_after`` on, a pointer-jump step (comp[v] ← comp[comp[v]], a
-    self-join on the propagated table) doubles the label-propagation
-    horizon per round, so a deep-diameter graph (duplicate chains longer
-    than ``jump_after`` hops) converges in O(jump_after + log d) rounds
-    instead of O(d) — the cheap path never pays for it, the deep path
-    always converges.
+    per round (32s vs 19s) — so plain propagation runs first. After round
+    8, a pointer-jump step (comp[v] ← comp[comp[v]], a self-join on the
+    propagated table) runs before each round and doubles the
+    label-propagation horizon, so a deep-diameter graph (duplicate chains
+    longer than 8 hops) converges in O(8 + log d) rounds instead of
+    O(d) — the cheap path never pays for it, the deep path always
+    converges.
 
     Convergence is verified, never assumed: exhausting ``max_iter`` without
-    a fixed point raises (``strict=True``, default) or warns — silently
-    returning half-propagated labels would split clusters downstream (e.g.
-    near-dup canonical ids) with no signal.
+    a fixed point raises — silently returning half-propagated labels would
+    split clusters downstream (e.g. near-dup canonical ids) with no signal.
     """
     raw = edges.select(
         F.col("src").cast("string").alias("a"), F.col("dst").cast("string").alias("b")
@@ -129,6 +172,9 @@ def connected_components(
     # self-loops fold "min over self" into the same groupBy as "min over
     # neighbors": the propagation step is exactly one join + one
     # aggregation (two key shuffles), no separate left-join-back step.
+    # Input self-loops are dropped so each vertex has exactly ONE self row
+    # (a duplicated id would repeat in the output and multiply at every
+    # pointer jump); the vertex itself survives through `ids`.
     # hash-partition on the join key BEFORE checkpointing: LogicalRDD
     # preserves the partitioning, so every propagation round shuffles only
     # the (narrow) component table — the edge side's exchange happens once
@@ -137,9 +183,10 @@ def connected_components(
     # dominated by scheduler overhead (32 tiny tasks × 2 jobs × rounds), so
     # callers with size knowledge (sf-aware queries, the post-LSH cluster
     # step) pass a small value; default stays cores-sized for big graphs.
-    nparts = n_partitions or edges.sparkSession.sparkContext.defaultParallelism
     sym = prepartition_for_rounds(
-        raw.unionAll(ids.select("a", F.col("a").alias("b"))), nparts, "b"
+        raw.filter(F.col("a") != F.col("b")).unionAll(ids.select("a", F.col("a").alias("b"))),
+        _parts(edges, n_partitions),
+        "b",
     )
     # read the vertex set back out of the checkpoint's self-loop rows —
     # deriving it from the pre-checkpoint `ids` pipeline would re-execute
@@ -155,9 +202,27 @@ def connected_components(
     # frontier), the same delta trick as the BFS in shortest_paths
     # (measured sf0.1: 15-19 s → see git log). Fixpoint is schedule-
     # independent (min-label lattice), so the result is byte-identical.
-    frontier = comp
-    converged = False
-    for rnd in range(max_iter):
+    def step(state, rnd):
+        comp, frontier, merged = state
+        if rnd > _JUMP_AFTER:
+            # pointer jump: comp[v] ← comp[comp[v]]. Labels are always live
+            # vertex ids (min over neighbor labels), so the lookup join hits.
+            lookup = comp.select(
+                F.col("id").alias("component"), F.col("component").alias("jumped")
+            )
+            comp = (
+                comp.join(lookup, on="component", how="left")
+                .select("id", F.coalesce("jumped", "component").alias("component"))
+                .localCheckpoint(eager=True)
+            )
+            # vertices whose label moved last round (propagation or jump)
+            # must broadcast this round — recompute the frontier against
+            # last round's start labels (vertex-sized join, jump rounds only)
+            frontier = (
+                comp.join(merged.select("id", "old_component"), on="id")
+                .filter(F.col("component") != F.col("old_component"))
+                .select("id", "component")
+            )
         incoming = (
             sym.join(
                 frontier.select(F.col("id").alias("b"), F.col("component").alias("flabel")),
@@ -189,46 +254,44 @@ def connected_components(
             F.col("new_component") != F.col("old_component")
         ).select("id", F.col("new_component").alias("component"))
         comp = merged.select("id", F.col("new_component").alias("component"))
-        if frontier.limit(1).count() == 0:
-            converged = True
-            break
-        if rnd + 1 >= jump_after:
-            # pointer jump: comp[v] ← comp[comp[v]]. Labels are always live
-            # vertex ids (min over neighbor labels), so the lookup join hits.
-            lookup = comp.select(
-                F.col("id").alias("component"), F.col("component").alias("jumped")
-            )
-            comp = (
-                comp.join(lookup, on="component", how="left")
-                .select("id", F.coalesce("jumped", "component").alias("component"))
-                .localCheckpoint(eager=True)
-            )
-            # vertices whose label moved THIS round (propagation or jump)
-            # must broadcast next round — recompute the frontier against
-            # the round-start labels (vertex-sized join, jump rounds only)
-            frontier = (
-                comp.join(merged.select("id", "old_component"), on="id")
-                .filter(F.col("component") != F.col("old_component"))
-                .select("id", "component")
-            )
-    if not converged:
-        msg = (
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds — labels are partially propagated and clusters may be split"
-        )
-        if strict:
-            raise RuntimeError(msg)
-        import warnings
+        return (comp, frontier, merged), frontier
 
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return comp
+    return _until_quiet(step, (comp, comp, None), max_iter, "connected_components")[0]
+
+
+def _out_weighted(e: DataFrame, n_partitions: int | None) -> DataFrame:
+    """``(id, dst, weight = 1/out_degree(id))`` over string edges ``e``,
+    partitioned on ``id`` for the rank rounds: 1/out_degree is static, so
+    it is folded into the edge list once instead of joined every round."""
+    return prepartition_for_rounds(
+        e.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("out_degree"))
+        .join(e, on="src")
+        .select(
+            F.col("src").alias("id"),
+            "dst",
+            (F.lit(1.0) / F.col("out_degree")).alias("weight"),
+        ),
+        _parts(e, n_partitions),
+        "id",
+    )
+
+
+def _warn_if_moving(name: str, max_iter: int, last_delta: float, tol: float) -> None:
+    if last_delta > tol:
+        warnings.warn(
+            f"{name} still moving after max_iter={max_iter} rounds "
+            f"(final L1 delta bound {last_delta:.3g} > tol={tol:g}) — ranks "
+            "are plausible but unconverged; raise max_iter",
+            RuntimeWarning,
+            stacklevel=3,
+        )
 
 
 def pagerank(
     edges: DataFrame,
     reset_prob: float = 0.15,
     max_iter: int = 10,
-    vertices: DataFrame | None = None,
     n_partitions: int | None = None,
     tol: float = 0.01,
 ) -> DataFrame:
@@ -262,15 +325,8 @@ def pagerank(
     If memory pressure ever shows at larger SFs, unpersist the ejected
     checkpoint explicitly when ``prev_partial`` is reassigned.
     """
-    e = edges.select(F.col("src").cast("string").alias("src"), F.col("dst").cast("string").alias("dst"))
-    if vertices is not None:
-        v = vertices.select(F.col("id").cast("string").alias("id")).distinct()
-    else:
-        v = (
-            e.select(F.col("src").alias("id"))
-            .unionAll(e.select(F.col("dst").alias("id")))
-            .distinct()
-        )
+    e = _str_edges(edges)
+    v = e.select(F.col("src").alias("id")).unionAll(e.select(F.col("dst").alias("id"))).distinct()
     # checkpoint_keep_partitioning: distinct() leaves v hash-partitioned
     # on id at shuffle.partitions; recording it makes every round's
     # v ⟕ contribs join AND the next round's ranks⋈weighted join
@@ -281,18 +337,7 @@ def pagerank(
     # only vertices with out-edges produce contributions; dangling mass is
     # recovered by conservation (see below), so the per-iteration plan never
     # touches zero-degree vertices on the contribution side.
-    weighted = prepartition_for_rounds(
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("out_degree"))
-        .join(e, on="src")
-        .select(
-            F.col("src").alias("id"),
-            "dst",
-            (F.lit(1.0) / F.col("out_degree")).alias("weight"),
-        ),
-        n_partitions or edges.sparkSession.sparkContext.defaultParallelism,
-        "id",
-    )
+    weighted = _out_weighted(e, n_partitions)
     ranks = v.withColumn("rank", F.lit(1.0 / n))
     # previous PRE-shift rank table (the movement is measured between
     # consecutive partials, then corrected by the uniform-shift change —
@@ -350,16 +395,7 @@ def pagerank(
         ranks = partial.select(
             "id", (F.col("rank") + F.lit((1.0 - mass) / n)).alias("rank")
         )
-    if last_delta > tol:
-        import warnings
-
-        warnings.warn(
-            f"pagerank still moving after max_iter={max_iter} rounds "
-            f"(final L1 delta bound {last_delta:.3g} > tol={tol:g}) — ranks "
-            "are plausible but unconverged; raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+    _warn_if_moving("pagerank", max_iter, last_delta, tol)
     return ranks
 
 
@@ -397,7 +433,7 @@ def personalized_pagerank(
     |missing_t − missing_{t−1}|) comes from the existing one-row mass
     scan, and a ``RuntimeWarning`` fires if the final round still moved
     more than ``tol``. Output bit-identical; never an early exit."""
-    e = edges.select(F.col("src").cast("string").alias("src"), F.col("dst").cast("string").alias("dst"))
+    e = _str_edges(edges)
     s = sources.select(F.col("id").cast("string").alias("id")).distinct().localCheckpoint(eager=True)
     ns = s.count()
     if ns == 0:
@@ -411,18 +447,7 @@ def personalized_pagerank(
         .unionAll(s)
         .distinct()
     )
-    weighted = prepartition_for_rounds(
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("out_degree"))
-        .join(e, on="src")
-        .select(
-            F.col("src").alias("id"),
-            "dst",
-            (F.lit(1.0) / F.col("out_degree")).alias("weight"),
-        ),
-        n_partitions or edges.sparkSession.sparkContext.defaultParallelism,
-        "id",
-    )
+    weighted = _out_weighted(e, n_partitions)
     # the vertex-wide rank table starts at 0 everywhere; the sources' full
     # initial mass (1/ns each) rides in `missing` and enters round 1 as
     # the broadcast restart rows — no initialization join needed either.
@@ -492,16 +517,7 @@ def personalized_pagerank(
         # Σ|emit_t − emit_{t−1}| ≤ raw partial delta + |missing shift|
         last_delta = raw_delta + abs(missing - prev_missing)
         partial = partial.select("id", "rank")
-    if last_delta > tol:
-        import warnings
-
-        warnings.warn(
-            f"personalized_pagerank still moving after max_iter={max_iter} "
-            f"rounds (final L1 delta bound {last_delta:.3g} > tol={tol:g}) "
-            "— ranks are plausible but unconverged; raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+    _warn_if_moving("personalized_pagerank", max_iter, last_delta, tol)
     # deposit the final round's restart mass once, after the loop
     is_src = F.col("_src").isNotNull()
     src_flag = s.withColumn("_src", F.lit(1))
@@ -533,24 +549,24 @@ def shortest_paths(
     graph depth; total work is O(Σ frontier sizes) = O(reached pairs).
 
     ``landmarks``: DataFrame with an ``id`` column.
+
+    Convergence contract: every other frontier loop in this module raises
+    "did not converge" at its round bound; this one is depth-bounded by
+    design — at ``max_iter`` it returns the pairs within ``max_iter`` hops
+    (``landmark_distance_oracle`` replays exactly 8 levels). Pass
+    ``max_iter=sys.maxsize`` for full reachability: the loop still ends as
+    soon as a round settles nothing new.
     """
-    nparts = n_partitions or edges.sparkSession.sparkContext.defaultParallelism
-    e = prepartition_for_rounds(
-        edges.select(
-            F.col("src").cast("string").alias("src"),
-            F.col("dst").cast("string").alias("dst"),
-        ),
-        nparts,
-        "src",
-    )
+    e = _round_edges(edges, n_partitions)
     dist = (
         landmarks.select(F.col("id").cast("string").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("landmark"), F.lit(0).alias("dist"))
         .localCheckpoint(eager=True)
     )
-    frontier = dist
-    for _ in range(max_iter):
+
+    def step(state, _rnd):
+        dist, frontier = state
         grown = (
             frontier.join(e, frontier["id"] == e["src"])
             .select(
@@ -561,23 +577,14 @@ def shortest_paths(
             .join(dist.select("id", "landmark"), on=["id", "landmark"], how="left_anti")
             .localCheckpoint(eager=True)
         )
-        if grown.limit(1).count() == 0:
-            break
         # no re-checkpoint: the union's legs are each already materialized
         # checkpoints, so the growing dist stays a flat O(depth)-leg union
-        dist = dist.unionByName(grown)
-        frontier = grown
-    return dist
+        return (dist.unionByName(grown), grown), grown
+
+    return _until_quiet(step, (dist, dist), max_iter, "shortest_paths", at_limit="return")[0]
 
 
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 50,
-    assume_simple: bool = False,
-) -> DataFrame:
+def k_core(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
     """The k-core of an undirected graph: iteratively peel vertices with
     degree < ``k`` until a fixpoint; returns the surviving vertices as
     ``(id, degree)`` (degree WITHIN the core). The k-core is unique, so
@@ -590,11 +597,8 @@ def k_core(
     available; raises if ``max_rounds`` is hit without converging (a
     silent partial peel would report a superset of the core).
 
-    ``assume_simple=True`` skips the canonical-pair dedup — an explicit
-    caller contract that the directed input has no duplicate pairs and
-    no reverse pairs (true for FK-derived edge lists like the fixture
-    graph). With multigraph input left at False, parallel edges would
-    double-count degrees.
+    ``edges``: ``src``/``dst``. Duplicate and reverse pairs are folded by
+    the canonical-pair dedup, so parallel edges never double-count degrees.
 
     The whole peel runs on the CANONICAL half-size edge list (each
     undirected pair stored once as ``least,greatest``) instead of a
@@ -605,14 +609,12 @@ def k_core(
     (map-side) aggregation collapses it to vertex-sized shuffle, so the
     halved edge volume is a pure win.
     """
-    directed = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+    directed = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).filter(
         F.col("a") != F.col("b")
     )
     canon = directed.select(
         F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-    )
-    if not assume_simple:
-        canon = canon.distinct()
+    ).distinct()
     # seed the alternating-key discipline below: canon starts partitioned
     # (and recorded, via the AQE-off checkpoint) on "a"
     nparts = edges.sparkSession.sparkContext.defaultParallelism
@@ -679,27 +681,21 @@ def shortest_path_tree(
     table pre-partitioned on src + checkpointed once; per-round shuffle
     is the frontier only; anti-join settles each vertex exactly once at
     its minimal depth). BFS terminates when the frontier empties; raises
-    if ``max_iter`` rounds elapse first — a truncated tree would
-    silently miss reachable vertices. Path RECONSTRUCTION is a
+    "did not converge" if ``max_iter`` rounds elapse first — a truncated
+    tree would silently miss reachable vertices. Path RECONSTRUCTION is a
     level-by-level join over the tree (depth-bounded, see
     ``shortest_path_routes``), never a driver-side walk.
     """
-    nparts = n_partitions or edges.sparkSession.sparkContext.defaultParallelism
-    e = prepartition_for_rounds(
-        edges.select(
-            F.col("src").cast("string").alias("src"),
-            F.col("dst").cast("string").alias("dst"),
-        ),
-        nparts,
-        "src",
+    e = _round_edges(edges, n_partitions)
+    tree = e.sparkSession.createDataFrame([(source,)], "id string").select(
+        "id", F.lit(0).alias("dist"), F.lit(None).cast("string").alias("parent")
     )
-    tree = (
-        e.sparkSession.createDataFrame([(source,)], "id string")
-        .select("id", F.lit(0).alias("dist"), F.lit(None).cast("string").alias("parent"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = tree.select("id")
-    for d in range(1, max_iter + 1):
+
+    def step(state, d):
+        tree, frontier = state
+        # last round's tree ∪ new is checkpointed here, after that round's
+        # probe, so the round that finds nothing new pays no checkpoint
+        tree = tree.localCheckpoint(eager=True)
         grown = (
             frontier.join(e, frontier["id"] == e["src"])
             .select(F.col("dst").alias("id"), F.col("src").alias("parent"))
@@ -711,14 +707,9 @@ def shortest_path_tree(
             .select("id", F.lit(d).alias("dist"), "parent")
             .localCheckpoint(eager=True)
         )
-        if new.limit(1).count() == 0:
-            return tree
-        tree = tree.unionByName(new).localCheckpoint(eager=True)
-        frontier = new.select("id")
-    raise RuntimeError(
-        f"shortest_path_tree did not finish within {max_iter} rounds "
-        "(frontier still non-empty); raise max_iter"
-    )
+        return (tree.unionByName(new), new.select("id")), new
+
+    return _until_quiet(step, (tree, tree.select("id")), max_iter, "shortest_path_tree")[0]
 
 
 def k_truss(
@@ -807,16 +798,7 @@ def weighted_shortest_paths(
     pre-partitioned on ``src`` once; negative weights are rejected
     (negative-cycle detection is a different contract).
     """
-    nparts = n_partitions or edges.sparkSession.sparkContext.defaultParallelism
-    e = prepartition_for_rounds(
-        edges.select(
-            F.col("src").cast("string").alias("src"),
-            F.col("dst").cast("string").alias("dst"),
-            F.col(weight_col).cast("bigint").alias("w"),
-        ),
-        nparts,
-        "src",
-    )
+    e = _round_edges(edges, n_partitions, F.col(weight_col).cast("bigint").alias("w"))
     neg = e.filter(F.col("w") < 0).limit(1).count()
     if neg:
         raise ValueError("weighted_shortest_paths requires non-negative weights")
@@ -826,9 +808,9 @@ def weighted_shortest_paths(
         .select("id", F.col("id").alias("landmark"), F.lit(0).cast("bigint").alias("dist"))
         .localCheckpoint(eager=True)
     )
-    frontier = dist
-    converged = False
-    for _ in range(max_iter):
+
+    def step(state, _rnd):
+        dist, frontier = state
         cand = (
             frontier.join(e, frontier["id"] == e["src"])
             .select(F.col("dst").alias("id"), "landmark", (F.col("dist") + F.col("w")).alias("dist"))
@@ -859,42 +841,12 @@ def weighted_shortest_paths(
             )
         )
         frontier = merged.filter(F.col("_improved")).select("id", "landmark", "dist")
-        dist = merged.select("id", "landmark", "dist")
-        if frontier.limit(1).count() == 0:
-            converged = True
-            break
-    if not converged:
-        # Same contract as k_core: a truncated relax loop would return
-        # silently inflated distances (any vertex whose lightest path
-        # spans > max_iter edges still carries a heavier tentative dist),
-        # so surface it instead of returning a wrong table.
-        raise RuntimeError(
-            f"weighted_shortest_paths did not converge within {max_iter} "
-            "rounds (frontier still non-empty); raise max_iter"
-        )
-    return dist
+        return (merged.select("id", "landmark", "dist"), frontier), frontier
 
-
-def _reach_from(pivot_id, e: DataFrame, reverse: bool = False) -> DataFrame:
-    """Vertex set reachable from ``pivot_id`` over ``e`` (``src``/``dst``;
-    follow edges backwards when ``reverse``) — frontier BFS, returns a
-    1-column ``id`` DataFrame including the pivot itself."""
-    spark = e.sparkSession
-    a, b = ("dst", "src") if reverse else ("src", "dst")
-    seen = spark.createDataFrame([(pivot_id,)], "id string").localCheckpoint(eager=True)
-    frontier = seen
-    while True:
-        grown = (
-            frontier.join(e, frontier["id"] == e[a])
-            .select(F.col(b).alias("id"))
-            .distinct()
-            .join(seen, on="id", how="left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if grown.limit(1).count() == 0:
-            return seen
-        seen = seen.unionByName(grown).localCheckpoint(eager=True)
-        frontier = grown
+    # a truncated relax loop would return silently inflated distances (any
+    # vertex whose lightest path spans > max_iter edges still carries a
+    # heavier tentative dist), so _until_quiet raises at the bound
+    return _until_quiet(step, (dist, dist), max_iter, "weighted_shortest_paths")[0]
 
 
 def strongly_connected_components(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
@@ -915,20 +867,18 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 40) -> Dat
     lineage stays flat across rounds.
 
     Scale shape: every step is a join/aggregate on the (shrinking) edge
-    list; reachability is the same frontier BFS as
-    :func:`shortest_paths`. The min-pivot loop peels ONE non-trivial SCC
-    per round, so rounds = #multi-vertex SCCs + trim depth — the right
-    tool when big graphs have few large SCCs (the common case: one giant
-    SCC plus a DAG shell, which trim absorbs). A graph that is a long
+    list; forward and backward reachability are :func:`shortest_paths`
+    from the pivot, over the edges and over the swapped edges. The
+    min-pivot loop peels ONE non-trivial SCC per round, so rounds =
+    #multi-vertex SCCs + trim depth — the right tool when big graphs
+    have few large SCCs (the common case: one giant SCC plus a DAG
+    shell, which trim absorbs). A graph that is a long
     chain of small cycles degrades to the ``max_rounds`` guard and
     raises — the production fix at that shape is recursing on the three
     partitions (F∖B, B∖F, remainder) in parallel, noted here rather than
     silently looping."""
     e = (
-        edges.select(
-            F.col("src").cast("string").alias("src"),
-            F.col("dst").cast("string").alias("dst"),
-        )
+        _str_edges(edges)
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -965,8 +915,10 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 40) -> Dat
             continue  # re-trim: removing sinks/sources exposes new ones
         # FW-BW peel of the minimum unassigned vertex's SCC
         pivot = verts.agg(F.min("id")).collect()[0][0]  # 1-row scalar probe
-        fwd = _reach_from(pivot, e)
-        bwd = _reach_from(pivot, e, reverse=True)
+        pv = spark.createDataFrame([(pivot,)], "id string")
+        back = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        fwd = shortest_paths(e, pv, max_iter=sys.maxsize).select("id")
+        bwd = shortest_paths(back, pv, max_iter=sys.maxsize).select("id")
         scc = fwd.join(bwd, on="id")  # pivot ∈ both by construction
         assigned = assigned.unionByName(
             scc.select("id", F.lit(pivot).alias("scc"))
@@ -1062,15 +1014,7 @@ def brandes_betweenness(
     sigma/delta ride as narrow doubles (path counts are exact in a
     double's 53-bit mantissa well past trillions). Returns (id, bc) for
     every non-source vertex reached from at least one source."""
-    nparts = n_partitions or edges.sparkSession.sparkContext.defaultParallelism
-    e = prepartition_for_rounds(
-        edges.select(
-            F.col("src").cast("string").alias("src"),
-            F.col("dst").cast("string").alias("dst"),
-        ),
-        nparts,
-        "src",
-    )
+    e = _round_edges(edges, n_partitions)
     lev0 = (
         sources.select(F.col("id").cast("string").alias("id"))
         .distinct()
@@ -1151,15 +1095,7 @@ def luby_mis(edges: DataFrame, rounds: int = 6, n_partitions: int | None = None)
     directions of each undirected edge."""
     from graph_db_spark.operators.dedup import portable_hash
 
-    nparts = n_partitions or edges.sparkSession.sparkContext.defaultParallelism
-    e = prepartition_for_rounds(
-        edges.select(
-            F.col("src").cast("string").alias("src"),
-            F.col("dst").cast("string").alias("dst"),
-        ),
-        nparts,
-        "src",
-    )
+    e = _round_edges(edges, n_partitions)
     active = (
         e.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
     )
@@ -1218,15 +1154,7 @@ def core_decomposition(edges: DataFrame, rounds: int = 8, n_partitions: int | No
     convergence is a few rounds (measured: 4 on the fixture's bipartite
     trade graph; the bound is the graph's degeneracy ordering depth).
     ``edges`` must contain both directions."""
-    nparts = n_partitions or edges.sparkSession.sparkContext.defaultParallelism
-    e = prepartition_for_rounds(
-        edges.select(
-            F.col("src").cast("string").alias("src"),
-            F.col("dst").cast("string").alias("dst"),
-        ),
-        nparts,
-        "src",
-    )
+    e = _round_edges(edges, n_partitions)
     cur = (
         e.groupBy(F.col("dst").alias("id"))
         .agg(F.count(F.lit(1)).cast("long").alias("cor"))
@@ -1279,16 +1207,7 @@ def boruvka_forest(
     window + a COMPONENT-sized min-label closure (the chosen edges form
     a pseudo-forest over components — vanishingly small next to E), so
     round cost is O(E) with log-bounded round count."""
-    nparts = n_partitions or edges.sparkSession.sparkContext.defaultParallelism
-    e = prepartition_for_rounds(
-        edges.select(
-            F.col("src").cast("string").alias("src"),
-            F.col("dst").cast("string").alias("dst"),
-            F.col("w").cast("long").alias("w"),
-        ),
-        nparts,
-        "src",
-    )
+    e = _round_edges(edges, n_partitions, F.col("w").cast("long").alias("w"))
     lab = (
         e.select(F.col("src").alias("id")).distinct()
         .select("id", F.col("id").alias("comp"))

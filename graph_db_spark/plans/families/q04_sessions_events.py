@@ -885,10 +885,10 @@ def k_core_4(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graph_db_spark.graph.algorithms import k_core
 
     g = build_graph(spark, sf_dir)
-    # NOT assume_simple: the synthetic lineitem table has duplicate
-    # (orderkey, linenumber) pairs, so the graph is a genuine multigraph
-    # and the symmetrization dedup is semantically required (verified:
-    # skipping it inflates the core by 30%)
+    # the synthetic lineitem table has duplicate (orderkey, linenumber)
+    # pairs, so the graph is a genuine multigraph and k_core's canonical-
+    # pair dedup is semantically required (verified: skipping it inflates
+    # the core by 30%)
     return k_core(g.edges, 4)
 
 

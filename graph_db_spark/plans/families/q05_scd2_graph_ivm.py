@@ -311,6 +311,8 @@ def _lpa_edges_labels(
     (node, label) table. Shared by label_propagation and
     modularity_communities — the modularity score must be computed on
     EXACTLY the assignment the LPA query reports."""
+    from graph_db_spark.graph.algorithms import prepartition_for_rounds
+
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     op = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")).distinct()
     a = op.alias("a")
@@ -324,8 +326,9 @@ def _lpa_edges_labels(
         # only the modularity caller re-reads e; checkpointing it for the
         # plain LPA query would pay an extra materialization for nothing
         e = e.localCheckpoint(eager=True)
-    ed = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    ed = ed.repartition(32, "v").localCheckpoint(eager=True)
+    ed = prepartition_for_rounds(
+        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))), 32, "v"
+    )
     labels = ed.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )

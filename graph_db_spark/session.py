@@ -52,9 +52,15 @@ def get_spark(app_name: str = "graph_db_spark", shuffle_partitions: int | None =
         # user-frame decoration. Gated on an env var (ADVICE r13) so
         # ad-hoc debugging needs no source edit: SPARK_GRAFT_DF_DEBUG=true
         # re-enables call-site decoration for one run.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"),
-        )
+        .config("spark.python.sql.dataFrameDebugging.enabled", _df_debug_conf())
     )
     return builder.getOrCreate()
+
+
+def _df_debug_conf() -> str:
+    """``SPARK_GRAFT_DF_DEBUG`` as a Spark boolean conf value, parsed
+    forgivingly so a stray value never fails session start: ``1``,
+    ``true`` and ``yes`` (any case, surrounding spaces ignored) mean
+    ``"true"``; anything else, or unset, means ``"false"``."""
+    raw = os.environ.get("SPARK_GRAFT_DF_DEBUG", "")
+    return "true" if raw.strip().lower() in ("1", "true", "yes") else "false"

@@ -43,6 +43,7 @@ delta-rs on S3 — documented limitation, not silently wrong.
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 import uuid
@@ -66,6 +67,10 @@ class AuditRejected(Exception):
     """A write-audit-publish ``audit`` callback returned False: the
     staged snapshot was never published. The table is unchanged; the
     staged data files are unreferenced and reclaimed by vacuum."""
+
+
+def _is_nan(v) -> bool:
+    return isinstance(v, float) and math.isnan(v)
 
 
 def _is_local(path: str) -> bool:
@@ -395,9 +400,9 @@ class SnapshotTable:
         """Per-bucket min/max of each key column — Iceberg-style file
         skipping one level up: the manifest carries the stats, so a keyed
         scan prunes buckets without opening a single footer. One narrow
-        aggregation over data that is being written anyway (the caller
-        checkpoints it first, so this is a re-scan of local blocks, not a
-        recompute)."""
+        aggregation over a read-back of the files just written — only for
+        key dtypes whose footer stats are not exact (see
+        :meth:`_write_buckets`), so it scans parquet, not the merge plan."""
         aggs = []
         for k in keys:
             aggs += [F.min(k).alias(f"_min_{k}"), F.max(k).alias(f"_max_{k}")]
@@ -544,9 +549,11 @@ class SnapshotTable:
         commit ``seq`` (read-side resolution order for merge-on-read
         buckets). Files are never visible to readers until a manifest
         references them, so a crashed commit leaves only garbage for
-        vacuum — never a corrupt table. The input is checkpointed so the
-        stats aggregation reads materialized blocks instead of
-        recomputing the merge plan.
+        vacuum — never a corrupt table. The write runs the input plan
+        exactly once: bucket key stats fold from the written files'
+        parquet footers, and the dtypes footers cannot state exactly
+        (plus any bloom filters) aggregate over ONE read-back of those
+        files, never over the merge plan.
 
         ``cluster_by`` (Iceberg sort-order analog): rows sort WITHIN each
         bucket on these columns and ``records_per_file`` rolls the sorted
@@ -600,32 +607,33 @@ class SnapshotTable:
                     file_stats[full] = self._footer_stats(
                         self._fs.open_parquet(full), stat_cols
                     )
+        # one read-back serves both the aggregate stats and the blooms
+        back = (
+            self.spark.read.parquet(out_dir)
+            if per_bucket_files and (bloom_on or not use_footers)
+            else None
+        )
         if use_footers:
+            # A key enters a bucket's range only when EVERY file in the
+            # bucket has a footer range for it: a range folded from some
+            # of the files would be stamped on all of them and prune the
+            # others' rows. _footer_stats omits a column whose footer has
+            # no min/max (e.g. a string value past the writer's stats size
+            # limit) or a NaN bound (Spark orders NaN above every number,
+            # so no finite max covers it).
             stats = {}
             for b, files in per_bucket_files.items():
-                agg: dict[str, list] = {}
-                for bdir, fn in files:
-                    fst = file_stats[self._fs.join(out_dir, bdir, fn)]
-                    for k in keys:
-                        if k not in fst:
-                            continue
-                        cur = agg.get(k)
-                        agg[k] = (
-                            list(fst[k])
-                            if cur is None
-                            else [min(cur[0], fst[k][0]), max(cur[1], fst[k][1])]
-                        )
-                stats[b] = agg
-        elif per_bucket_files:
-            back = self.spark.read.parquet(out_dir)
+                fsts = [file_stats[self._fs.join(out_dir, bdir, fn)] for bdir, fn in files]
+                stats[b] = {
+                    k: [min(f[k][0] for f in fsts), max(f[k][1] for f in fsts)]
+                    for k in keys
+                    if all(k in f for f in fsts)
+                }
+        elif back is not None:
             stats = self._bucket_stats(back, keys)
         else:
             stats = {}  # empty commit: nothing written, nothing to stat
-        if bloom_on and per_bucket_files:
-            back = self.spark.read.parquet(out_dir)
-            blooms = self._bucket_blooms(back, bloom_on)
-        else:
-            blooms = {}
+        blooms = self._bucket_blooms(back, bloom_on) if bloom_on and back is not None else {}
         entries = []
         for b in sorted(per_bucket_files):
             for bdir, fn in per_bucket_files[b]:
@@ -658,8 +666,8 @@ class SnapshotTable:
         statistics folded) — no data read. ``source`` is whatever the
         table's FS hands pyarrow: a local path, or a positioned-read
         stream over the Hadoop API. Columns whose stats are absent
-        in any row group are omitted (conservative: the pruner keeps
-        files with missing stats)."""
+        or have a NaN bound in any row group are omitted (conservative:
+        the pruner keeps files with missing stats)."""
         import pyarrow.parquet as pq
 
         try:
@@ -682,7 +690,7 @@ class SnapshotTable:
             ok = True
             for rg in range(md.num_row_groups):
                 st = md.row_group(rg).column(j).statistics
-                if st is None or not st.has_min_max:
+                if st is None or not st.has_min_max or _is_nan(st.min) or _is_nan(st.max):
                     ok = False
                     break
                 mn = st.min if mn is None else min(mn, st.min)

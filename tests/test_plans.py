@@ -401,158 +401,88 @@ def test_iterative_round_reuses_edge_partitioning(spark):
     assert n_exchanges == 1, f"expected 1 Exchange (label side only), got {n_exchanges}:\n{plan}"
 
 
-def test_cc_round_two_has_single_exchange(spark):
+def _round_plans(spark, monkeypatch, run):
+    """Run ``run()`` (a production algorithm from graph/algorithms.py)
+    with broadcast joins off and return the executed plan of every
+    frame it passed to ``checkpoint_keep_partitioning``, in call order —
+    the plans its rounds actually ran."""
+    from graph_db_spark.graph import algorithms
+
+    seen = []
+    real = algorithms.checkpoint_keep_partitioning
+
+    def spy(df):
+        out = real(df)
+        seen.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(algorithms, "checkpoint_keep_partitioning", spy)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        run()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    return seen
+
+
+def _round_test_edges(spark):
+    from pyspark.sql import functions as F
+
+    return spark.range(4000).select(
+        (F.col("id") % 800).cast("string").alias("src"),
+        ((F.col("id") * 13) % 800).cast("string").alias("dst"),
+    )
+
+
+def test_cc_round_two_has_single_exchange(spark, monkeypatch):
     """The full CC round-plan contract (r6): with the static edge table
     through prepartition_for_rounds AND the per-round merged table
     through checkpoint_keep_partitioning, round ≥2's whole pipeline —
     frontier⋈sym (alias-aware hash(id)→hash(b)), groupBy(a), and the
     comp⋈incoming merge join — carries EXACTLY ONE Exchange: the
     aggregation. At cluster scale that makes per-round shuffle volume
-    the label deltas alone, not the edge table."""
-    from pyspark.sql import functions as F
+    the label deltas alone, not the edge table. The plan inspected is
+    round 2 of the production connected_components."""
+    from graph_db_spark.graph.algorithms import connected_components
 
-    from graph_db_spark.graph.algorithms import (
-        checkpoint_keep_partitioning,
-        prepartition_for_rounds,
-    )
-
-    edges = spark.range(4000).select(
-        (F.col("id") % 800).cast("string").alias("src"),
-        ((F.col("id") * 13) % 800).cast("string").alias("dst"),
-    )
-    raw = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).unionAll(
-        edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
-    )
-    ids = raw.select("a").distinct()
     # nparts MUST equal spark.sql.shuffle.partitions: the per-round merged
     # table exits its join/agg at shuffle.partitions, and co-partitioned
     # reuse needs matching counts (the algorithms' default —
     # defaultParallelism — matches; callers overriding n_partitions on
     # tiny inputs trade the reuse away knowingly)
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = prepartition_for_rounds(
-        raw.unionAll(ids.select("a", F.col("a").alias("b"))), nparts, "b"
+    edges = _round_test_edges(spark)
+    # one checkpoint_keep_partitioning call per round: [round 1, round 2, ...]
+    plans = _round_plans(
+        spark, monkeypatch, lambda: connected_components(edges, n_partitions=nparts)
     )
-    comp = sym.filter(F.col("a") == F.col("b")).select(
-        F.col("a").alias("id"), F.col("a").alias("component")
-    )
-    frontier = comp
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = None
-        for rnd in range(2):
-            incoming = (
-                sym.join(
-                    frontier.select(
-                        F.col("id").alias("b"), F.col("component").alias("flabel")
-                    ),
-                    on="b",
-                )
-                .groupBy(F.col("a").alias("id"))
-                .agg(F.min("flabel").alias("cand"))
-            )
-            merged_plan = comp.join(incoming, on="id", how="left").select(
-                "id",
-                F.col("component").alias("old_component"),
-                F.least(
-                    F.col("component"), F.coalesce(F.col("cand"), F.col("component"))
-                ).alias("new_component"),
-            )
-            if rnd == 1:
-                merged_plan.count()
-                plan = merged_plan._jdf.queryExecution().executedPlan().toString()
-            merged = checkpoint_keep_partitioning(merged_plan)
-            frontier = merged.filter(
-                F.col("new_component") != F.col("old_component")
-            ).select("id", F.col("new_component").alias("component"))
-            comp = merged.select("id", F.col("new_component").alias("component"))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    n = plan.count("Exchange")
-    assert n == 1, f"expected 1 Exchange (the aggregation), got {n}:\n{plan}"
+    assert len(plans) >= 2, plans
+    n = plans[1].count("Exchange")
+    assert n == 1, f"expected 1 Exchange (the aggregation), got {n}:\n{plans[1]}"
 
 
-def test_pagerank_round_two_has_single_exchange(spark):
+def test_pagerank_round_two_has_single_exchange(spark, monkeypatch):
     """PageRank's round contract (r6, mirrors the CC test): with v and
     the weighted edge table both carrying recorded hash(id) partitioning,
     round ≥2's ranks⋈weighted join and the v⟕contribs null-fill join are
     exchange-free — the union-with-static-complement trick this replaces
     had zero join cost but ERASED partial's partitioning, silently
-    re-exchanging the whole rank table every round."""
-    from pyspark.sql import functions as F
+    re-exchanging the whole rank table every round. The plan inspected
+    is round 2 of the production pagerank."""
+    from graph_db_spark.graph.algorithms import pagerank
 
-    from graph_db_spark.graph.algorithms import (
-        checkpoint_keep_partitioning,
-        prepartition_for_rounds,
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    edges = _round_test_edges(spark)
+    # checkpoint_keep_partitioning calls: [vertex set, round 1, round 2]
+    plans = _round_plans(
+        spark,
+        monkeypatch,
+        lambda: pagerank(edges, max_iter=2, n_partitions=nparts, tol=float("inf")),
     )
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        e = spark.range(4000).select(
-            (F.col("id") % 800).cast("string").alias("src"),
-            ((F.col("id") * 13) % 800).cast("string").alias("dst"),
-        )
-        v = checkpoint_keep_partitioning(
-            e.select(F.col("src").alias("id"))
-            .unionAll(e.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        n = v.count()
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        weighted = prepartition_for_rounds(
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("od"))
-            .join(e, on="src")
-            .select(
-                F.col("src").alias("id"), "dst", (F.lit(1.0) / F.col("od")).alias("weight")
-            ),
-            nparts,
-            "id",
-        )
-        ranks = v.withColumn("rank", F.lit(1.0 / n))
-        plan = None
-        for rnd in range(2):
-            contribs = (
-                ranks.join(weighted, on="id")
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("rank") * F.col("weight")).alias("contrib"),
-                )
-                .groupBy("id")
-                .agg(F.sum("contrib").alias("ic"))
-            )
-            # r12 shape: the vertex side is the PREVIOUS round's rank
-            # table (projection of the preserving checkpoint — same id
-            # set, same recorded partitioning), carrying _prev for the
-            # convergence signal. The join must STAY exchange-free.
-            partial_plan = (
-                ranks.select("id", F.col("rank").alias("_prev"))
-                .join(contribs, on="id", how="left")
-                .select(
-                    "id",
-                    "_prev",
-                    (
-                        F.lit(0.15 / n)
-                        + F.lit(0.85) * F.coalesce(F.col("ic"), F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-            if rnd == 1:
-                partial_plan.count()
-                plan = partial_plan._jdf.queryExecution().executedPlan().toString()
-            partial = checkpoint_keep_partitioning(partial_plan)
-            mass, _delta = partial.agg(
-                F.sum("rank"), F.sum(F.abs(F.col("rank") - F.col("_prev")))
-            ).collect()[0]
-            ranks = partial.select(
-                "id", (F.col("rank") + F.lit((1.0 - mass) / n)).alias("rank")
-            )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    n_ex = plan.count("Exchange")
-    assert n_ex == 1, f"expected 1 Exchange (the aggregation), got {n_ex}:\n{plan}"
+    assert len(plans) == 3, plans
+    n_ex = plans[2].count("Exchange")
+    assert n_ex == 1, f"expected 1 Exchange (the aggregation), got {n_ex}:\n{plans[2]}"
 
 
 def test_forecast_revenue_pushes_all_predicates(spark):

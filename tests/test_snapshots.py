@@ -937,3 +937,32 @@ def test_manifest_bucket_stats_match_exact_aggregate(spark, tmp_path):
         assert st["ik"] == [exact[b]["ik_mn"], exact[b]["ik_mx"]], (b, st)
         assert st["sk"] == [exact[b]["sk_mn"], exact[b]["sk_mx"]], (b, st)
     assert seen == set(exact)
+
+
+def test_range_scan_keeps_rows_of_files_without_footer_range(spark, tmp_path):
+    """A bucket's manifest range may only fold keys every file in it
+    states: a 5000-char string gets no footer min/max, and a NaN double
+    (which Spark orders above every number) gets a NaN bound. Folding
+    the other files' ranges would stamp a too-narrow range on the whole
+    bucket and a range scan would prune those rows. Files roll every 2
+    rows on ``v`` inside the one bucket."""
+    long_key = "z" * 5000
+    sdf = spark.createDataFrame(
+        [("a", 1), ("b", 2), ("c", 3), ("d", 4), (long_key, 5)], "sk string, v int"
+    )
+    st = SnapshotTable.create(
+        spark, str(tmp_path / "s"), sdf, ["sk"], n_buckets=1,
+        cluster_by=["v"], records_per_file=2,
+    )
+    assert len(st._read_manifest(1)["files"]) == 3
+    assert [r["sk"] for r in st.scan({"sk": ("y", None)}).collect()] == [long_key]
+
+    ddf = spark.createDataFrame(
+        [(1.0, 1), (2.0, 2), (float("nan"), 3), (0.5, 4)], "dk double, v int"
+    )
+    dt = SnapshotTable.create(
+        spark, str(tmp_path / "d"), ddf, ["dk"], n_buckets=1,
+        cluster_by=["v"], records_per_file=2,
+    )
+    assert len(dt._read_manifest(1)["files"]) == 2
+    assert [r["v"] for r in dt.scan({"dk": (2.5, None)}).collect()] == [3]
