@@ -26,7 +26,11 @@ Output protocol (r14, r13 verdict item 1): the driver records only a
 per-query minima are ALSO re-emitted as small chunk lines — each an
 independently parseable {"queries": {...}} JSON object — ordered
 ascending by time so the slowest (most informative) queries sit in the
-surviving tail window. The compact totals summary stays the LAST line.
+surviving tail window. The compact totals summary stays the LAST line;
+it also carries ``"slowest": {name: min_sec}`` — up to the 40 slowest
+queries, slowest first, trimmed so the line stays within 1900 chars —
+so a parser that reads only that line still gets the per-query numbers
+that matter most.
 """
 
 from __future__ import annotations
@@ -117,6 +121,19 @@ def _loadavg() -> list[float] | None:
             return [float(x) for x in f.read().split()[:3]]
     except (OSError, ValueError):
         return None
+
+
+def _summary_line(summary: dict, timings: dict[str, float]) -> str:
+    """``summary`` as one JSON line plus ``"slowest"``: the 40 slowest
+    per-query minima, slowest first, with the fastest of them dropped
+    one by one until the line fits in 1900 chars (inside the driver's
+    ~2000-char stdout tail)."""
+    slowest = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))[:40]
+    while True:
+        line = json.dumps({**summary, "slowest": dict(slowest)})
+        if len(line) <= 1900 or not slowest:
+            return line
+        slowest.pop()
 
 
 def main() -> None:
@@ -213,7 +230,7 @@ def main() -> None:
     # Compact machine-readable summary LAST so the totals contract always
     # survives tail capture (unchanged since r5).
     print(
-        json.dumps(
+        _summary_line(
             {
                 "metric": "queries_total_wall",
                 "value": total,
@@ -234,7 +251,8 @@ def main() -> None:
                 ) if stage_ms else None,
                 "loadavg_end": _loadavg(),
                 "sf": sf_val,
-            }
+            },
+            timings,
         )
     )
 

@@ -14,179 +14,32 @@ Conventions that keep the value-hash comparison deterministic:
 - integer aggregates are cast to BIGINT on both sides (DuckDB sums of
   integers are HUGEINT otherwise).
 
-
-r12 layout: the inventory lives in plans/families/q*.py (one module
-per family band, mechanically split with statement order and bodies
-byte-identical); this module imports every part IN ORDER — so each
-@register call, and therefore the QUERIES/ORACLE_SQL dict order the
-driver gate reads, executes exactly as in the pre-split monolith —
-and re-exports every top-level name so existing imports
-(`from graph_db_spark.plans.queries import QUERIES, _GATE_WINDOW, r4,
-...`) keep working unchanged.
+The inventory lives in plans/families/q*.py, one module per family
+band. This module imports them IN ORDER: each ``@register`` call runs
+at import, so the import order below is the QUERIES/ORACLE_SQL dict
+order the driver gate reads. Private helpers are imported from the
+family module that defines them.
 """
 
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401,E402
-    A, Callable, Column, DataFrame,
-    F, J, ORACLE_SQL, QUERIES,
-    S, SparkSession, Window, _fmt_ts,
-    _poly_sql, _sf_tag, annotations, hashlib,
-    load_table, os, r4, register,
-    session_intervals,
+from graph_db_spark.plans.families import (  # noqa: F401 — imported for their @register calls
+    q00_base,
+    q01_relational_pipeline,
+    q02_datetime_rollups,
+    q03_dedup_bounds_gate,
+    q04_sessions_events,
+    q05_scd2_graph_ivm,
+    q06_curation_streaming,
+    q07_timeseries_stats,
+    q08_survival_sampling,
+    q09_graph_oracles,
+    q10_hypothesis_tests,
+    q11_rank_stats_lm,
+    q12_uplift_attribution,
+    q13_tsa_retrieval,
+    q14_retrieval_drift,
 )
-from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401,E402
-    D, P, SIM, TX,
-    _SW_SQL, _graph_nparts, _ivf_oracle_sql, _ivf_pq_oracle_sql,
-    _ivf_training_sql, _lsh_planes_sql, _pagerank_oracle_sql, _pq_d2,
-    _pq_oracle_sql, _pq_training_sql, ann_ivf_pq_topk, ann_ivf_topk,
-    ann_lsh_topk, ann_pq_topk, anti_parts_never_ordered, asof_nearest_line,
-    broadcast_dim_join, build_graph, composite_id_q, connected_components,
-    connected_components_q, datetime_coercion, dedup_first_wins, depth_from_label,
-    distinct_sorted_set_q, doc_fingerprint_dedup, earliest_per_group_q, edge_customer_order,
-    edges_sql, embedding_cosine_topk, embedding_near_dup_pairs, enrich_missing_brand,
-    event_day_stats, event_day_stats_zero_null, first_non_empty_pick, graph_degrees,
-    interval_scoped_avg, json_extract_props, loose_number_parse, minhash_lsh_dedup,
-    motif_branch_conation, motif_region_order_path, ngram_jaccard_pairs, null_guard_filter,
-    pagerank, pagerank_q, pipeline_application_event_idx, pipeline_irrigation_events,
-    pipeline_optimum_element_ranges, pipeline_sap_analyses, pipeline_sap_element_results, pipeline_soil_param_results,
-    pipeline_weather_day_metrics, point_parse, pricing_summary, proj_rename,
-    range_parse, running_idx, sanitize_prop_names, semi_customers_with_orders,
-    sessionization, set_membership, simhash_near_dups_q, text_quality_lang,
-    text_token_stats, topk_per_group, union_dedup, unit_conversion,
-)
-from graph_db_spark.plans.families.q02_datetime_rollups import (  # noqa: F401,E402
-    CK, MM, PK, SK,
-    STRM, _STREAM_PARTS_LOCK, _contextmanager, _dsir_oracle_sql,
-    _run_stream_to_table, _stream_state_partitions, _threading, area_normalized_sum,
-    asof_bucketed_line, benchmark_decontamination, capped_label_sample, conditional_edge_join,
-    constraint_violations, cube_order_counts, curated_corpus_stats, dangling_edge_check,
-    data_field_discovery, datetime_components_q, depth_diff_q, dsir_selection,
-    dynamic_measurement_pivot, epoch_seconds_q, except_types, fallback_selection,
-    grouping_sets_revenue, hll_user_reach, hll_user_reach_portable, ineq_trimmed_float_q,
-    intersect_types, iso_z_parse, json_encode_props, longest_label_pick,
-    mixture_weights, motif_4hop_counts, multimodal_audio_features, multimodal_features,
-    multimodal_frame_sample, multimodal_png_decode, multimodal_resize, nutrient_alias_wide,
-    percentile_value_stats, pipeline_app_nutrient_contents, pipeline_depth_points, pipeline_water_param_results,
-    rolling_7day_window, rollup_pricing, sequence_packing, stratified_sample,
-    streaming_daily_stats, streaming_decontamination, streaming_exact_dedup, streaming_sessions,
-    streaming_sliding_counts, time_rollup_multigrain, tz_offset_map, tz_zone_correct_offsets,
-    wide_melt_roundtrip, window_widened_scan,
-)
-from graph_db_spark.plans.families.q03_dedup_bounds_gate import (  # noqa: F401,E402
-    PF, QL, SK, _ANN_TRUTH_SQL,
-    _EXPENSIVE_LAST, _GATE_WINDOW, _SHINGLE_TRUTH_SQL, _bloom_oracle_sql,
-    _cms_day_merge_oracle_sql, _cms_oracle_sql, _hex_window_sql, _kmv_ngram_oracle_sql,
-    _kmv_oracle_sql, _metric_rows, _minhash_band_sql, _portable_hll_oracle_sql,
-    _reorder_for_gate, _simhash_oracle_sql, ann_ivf_recall_bound, ann_lsh_recall_bound,
-    ann_pq_distortion_bound, bloom_semi_prune, cms_day_merge, cms_heavy_hitters,
-    cooccurrence_triangles, hll_error_bound, kmv_audience_overlap, kmv_source_ngram_overlap,
-    large_volume_customers, local_supplier_volume, minhash_recall_bound, near_dup_clusters_q,
-    order_value_deciles, pii_scrub_audit, repetition_quality, salted_skew_join,
-    shipping_priority, shortest_paths_from_regions, simhash_completeness_bound, spread,
-    streaming_enriched_daily, tfidf_top_terms, vocab_coverage,
-)
-from graph_db_spark.plans.families.q04_sessions_events import (  # noqa: F401,E402
-    _cusum_oracle_sql, _k_core_oracle_sql, _ppr_oracle_sql, _semantic_dedup_oracle_sql,
-    _session_iv_sql, _weighted_paths_oracle, _weighted_sample_oracle_sql, bpe_top_pairs,
-    cohort_retention, cusum_drift_q, degree_histogram, disjunctive_discount_revenue,
-    doc_chunks, dow_seasonality, embedding_diversity_q, event_transition_matrix,
-    funnel_conversion, idle_rich_customers, incremental_lsh_dedup, incremental_view_maintenance,
-    join_key_skew_profile, k_core_4, last_touch_attribution, min_cost_supplier,
-    order_priority_checking, percentile_sketch_bound, personalized_pagerank_regions, quality_quantile_filter,
-    repeated_spans, returned_item_reporting, rolling_anomaly_flags, semantic_dedup_q,
-    session_overlap_pairs, small_quantity_revenue, snapshot_table_lifecycle, sole_late_supplier,
-    source_dup_rate, streaming_incremental_dedup, streaming_touch_pairs, tokenizer_fertility,
-    top_supplier_revenue, unigram_logperplexity, weighted_paths_from_region, weighted_sample_docs,
-)
-from graph_db_spark.plans.families.q05_scd2_graph_ivm import (  # noqa: F401,E402
-    _CURATED_ORACLE, _DQ_RULES, _PROFILE_COLS, _PROVENANCE_ORACLE,
-    _SKEW_N, _SKEW_TEMPLATE, _VALUE_BANDS, _dq_oracle_sql,
-    _hits_oracle_sql, _k_truss_oracle_sql, _lpa_cte, _lpa_edges_labels,
-    _lpa_oracle_sql, _profile_oracle_sql, _run_batched_stream, chi_square_independence,
-    corpus_global_shuffle, corpus_shard_plan, dataset_split_assign, dedup_skewed_corpus,
-    dq_validation_report, entity_resolution_pairs, equi_depth_histogram, gap_fill_forward,
-    hits_scores, ivm_minmax_rescan, k_truss_cooccurrence, label_propagation,
-    link_prediction_adamic_adar, motif_var_length, pipeline_snapshot_merge_rerun, profile_distinct_approx_bound,
-    quantile_approx_bound, range_band_join, robust_outliers, scd2_lookup_join,
-    scd2_user_state, snapshot_range_pruning, streaming_late_data, table_profile,
-    trigram_lm_topk, truss_communities,
-)
-from graph_db_spark.plans.families.q06_curation_streaming import (  # noqa: F401,E402
-    _BM25_B, _BM25_K1, _BM25_TERMS, _bm25_cte_sql,
-    _bm25_scored, _centroid_cte_sql, _label_centroid, _landmark_levels_cte_sql,
-    bm25_doc_ranking, curated_training_corpus, curation_provenance, customer_order_distribution,
-    degree_assortativity, doc_token_entropy, forecast_revenue, hard_negative_mining,
-    harmonic_centrality_landmarks, heavy_part_suppliers, hybrid_retrieval_rerank, important_parts_share,
-    landmark_eccentricity, late_shipment_priority, local_clustering_coeff, motif_props_projection,
-    nation_market_share, nation_volume_shipping, parts_supplier_counts, product_type_profit,
-    promo_revenue_share, rrf_fusion_ranking, sample_sum_estimate_bound, scc_trade_partners,
-    shortest_path_routes, snapshot_schema_evolution, snapshot_write_audit_publish, streaming_full_outer_attribution,
-    streaming_left_outer_attribution, streaming_watermark_dedup, zorder_clustering_prune,
-)
-from graph_db_spark.plans.families.q07_timeseries_stats import (  # noqa: F401,E402
-    _EWMA_ALPHA, _POIS1_CDF, _SQL_API_TEXT, ab_test_proportions,
-    autocorrelation_lags, bootstrap_ci_mean, conversion_latency_quantiles, degree_powerlaw_mle,
-    ewma_smoothing, ks_two_sample, lineitem_correlations, mannwhitney_u_test,
-    market_basket_lift, modularity_communities, ngram_containment_pairs, psi_distribution_drift,
-    rfm_customer_segments, session_path_topk, snapshot_bloom_point_skip, snapshot_rebucket_evolution,
-    snapshot_tag_travel, spearman_rank_correlation, sql_api_region_revenue, streaming_scd2_enrichment,
-    theil_sen_trend, trade_graph_transitivity, trimmed_mean_stats, zipf_law_fit,
-)
-from graph_db_spark.plans.families.q08_survival_sampling import (  # noqa: F401,E402
-    _bitemporal_spans_sql, _bitemporal_sql, _boruvka_sql, _cms_join_size_sql,
-    _coreness_sql, _holt_sql, _label_noise_sql, _luby_sql,
-    _wordpiece_sql, bitemporal_point_in_time, boruvka_spanning_forest, cms_join_cardinality,
-    core_decomposition_histogram, edit_distance_blocked_join, embedding_eval_contamination, gee_distinct_estimate,
-    holt_trend_forecast, ivm_join_view, jaccard_link_prediction, k_anonymity_audit,
-    kaplan_meier_churn, label_noise_screen, maximal_independent_set, median_order_statistic_ci,
-    moments_rollup_variance, neyman_allocation, prefix_filter_jaccard, range_partition_balance,
-    rolling_robust_anomaly, sampled_triangle_estimate, sq8_quantization_bound, window_funnel_levels,
-    wordpiece_vocab_segment,
-)
-from graph_db_spark.plans.families.q09_graph_oracles import (  # noqa: F401,E402
-    _ams_f2_sql, _brandes_sql, _distoracle_sql, _dp_noisy_counts_sql,
-    _hyperanf_sql, _kcenter_sql, _walks_sql, ams_f2_moment,
-    anova_f_oneway, benford_first_digit, betweenness_landmarks, cramers_v_association,
-    cross_correlation_lead_lag, curriculum_phase_assign, dp_noisy_source_counts, embedding_centroid_drift,
-    geo_grid_distance_join, gini_concentration, hierarchy_subtree_rollup, hyperanf_neighborhood,
-    kcenter_coreset, knn_loo_label_eval, kruskal_wallis_test, landmark_distance_oracle,
-    mase_forecast_accuracy, mutual_nearest_pairs, naive_bayes_token_screen, ols_normal_equations,
-    quantile_normalize_lengths, random_walk_sampling, source_js_divergence, stl_seasonal_decompose,
-)
-from graph_db_spark.plans.families.q10_hypothesis_tests import (  # noqa: F401,E402
-    _katz_oracle_sql, _pca_power_sql, association_rule_triples, binary_segmentation_changepoint,
-    capture_recapture_estimate, dispersion_index_check, energy_distance_groups, good_turing_unseen_mass,
-    heaps_law_fit, item_item_collaborative_topk, katz_walk_centrality, levene_variance_test,
-    markov_absorption_conversion, markov_entropy_rate, mcnemar_paired_test, pca_power_iteration,
-    poisson_rate_ratio, positional_phrase_search, region_trade_assortativity, rich_club_coefficient,
-    sprt_sequential_decision, token_pmi_collocations, trade_reciprocity, weighted_median_price,
-    welch_t_test,
-)
-from graph_db_spark.plans.families.q11_rank_stats_lm import (  # noqa: F401,E402
-    _GUMBEL_F30, _GUMBEL_F365, _GUMBEL_K, _NDCG_DISC,
-    _NDCG_IDCG, _ljung_box_sql, bland_altman_agreement, brand_price_elasticity,
-    brier_calibration_decomposition, cohens_kappa_raters, corpus_diversity_indices, diff_in_diff_uplift,
-    filter_cascade_attrition, growth_accounting_weekly, gumbel_extreme_value_fit, information_gain_split,
-    jackknife_ratio_variance, kendall_tau_b, kneser_ney_bigram, ljung_box_q,
-    ndcg_label_retrieval, nelson_aalen_hazard, open_order_backlog, revenue_var_cvar,
-    runs_test_randomness, simpson_paradox_check, spc_individuals_chart, theil_index_decomposition,
-)
-from graph_db_spark.plans.families.q12_uplift_attribution import (  # noqa: F401,E402
-    _bh_fdr_oracle_sql, _bh_z_thresholds, abc_inventory_classes, benjamini_hochberg_fdr,
-    cumulative_gains_deciles, cuped_variance_reduction, empirical_bayes_shrinkage, flesch_reading_ease,
-    friedman_priority_ranks, hodges_lehmann_shift, isotonic_calibration_pav, logrank_cohort_test,
-    mann_kendall_trend, pareto_skyline_parts, position_based_attribution, price_index_fisher,
-    quantile_treatment_effect, regression_stump_split, wilcoxon_signed_rank,
-)
-from graph_db_spark.plans.families.q13_tsa_retrieval import (  # noqa: F401,E402
-    _mrr_ivf_oracle_sql, auc_doc_length_lang, bray_curtis_source_matrix, chao1_vocab_richness,
-    cmh_return_rate, durbin_watson_trend, effect_size_priority, engle_granger_cointegration,
-    hurst_exponent_rs, interevent_burstiness_memory, max_drawdown_daily, mrr_hit_at_k,
-    negbin_overdispersion, shapley_channel_attribution, wasserstein_price_shift, weibull_time_to_convert,
-)
-from graph_db_spark.plans.families.q14_retrieval_drift import (  # noqa: F401,E402
-    ab_power_sample_size, concentration_hhi, granger_causality_f, huber_onestep_location,
-    ipf_raking_margins, mrr_hit_at_k_ivf, page_hinkley_drift, relative_risk_ci,
-    taylors_power_law, weekly_cycle_dft,
-)
+from graph_db_spark.plans.families.q00_base import ORACLE_SQL, QUERIES
+
+__all__ = ["ORACLE_SQL", "QUERIES"]

@@ -88,3 +88,34 @@ def test_bench_chunk_lines_ascending_and_tail_sized(spark, monkeypatch, capsys):
         prev_max = max(vals)
         seen.update(d["queries"])
     assert seen == full["queries"]
+
+
+def test_bench_summary_carries_slowest_within_tail(spark, monkeypatch, capsys):
+    """The LAST line carries ``"slowest"``: the top-N per-query minima,
+    slowest first, and stays within 1900 chars even with 40 of the
+    longest registered query names — trimmed from the fast end when
+    realistic multi-second values would push it past the limit."""
+    import bench
+    from graph_db_spark.plans.queries import QUERIES
+
+    longest = sorted(QUERIES, key=lambda n: (-len(n), n))[:40]
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_REPS", "1")
+    monkeypatch.setattr(bench, "HEADLINE", [])
+    monkeypatch.setattr(
+        bench, "QUERIES", {n: (lambda s, sf_dir: s.range(1).toDF("id")) for n in longest}
+    )
+    bench.main()
+    lines = [l for l in capsys.readouterr().out.strip().splitlines() if l.startswith("{")]
+    full, compact = json.loads(lines[0]), json.loads(lines[-1])
+    assert len(lines[-1]) <= 1900
+    ranked = sorted(full["queries"].items(), key=lambda kv: (-kv[1], kv[0]))
+    assert list(compact["slowest"].items()) == ranked[: len(compact["slowest"])]
+    assert len(compact["slowest"]) == 40  # sub-second minima all fit
+    # multi-minute minima make every entry longer: the line is trimmed
+    # from the fast end, never past 1900 chars, never reordered
+    big = {n: 1000.0 + i + 0.123 for i, n in enumerate(longest)}
+    line = bench._summary_line({k: v for k, v in compact.items() if k != "slowest"}, big)
+    trimmed = json.loads(line)["slowest"]
+    assert len(line) <= 1900 and 0 < len(trimmed) < 40
+    ranked = sorted(big.items(), key=lambda kv: -kv[1])
+    assert list(trimmed.items()) == ranked[: len(trimmed)]

@@ -869,7 +869,12 @@ def test_bm25_matches_python_reference(spark):
     repeated terms, absent terms, and varied doc lengths."""
     import math
 
-    from graph_db_spark.plans.queries import _BM25_B, _BM25_K1, _BM25_TERMS, _bm25_scored
+    from graph_db_spark.plans.families.q06_curation_streaming import (
+        _BM25_B,
+        _BM25_K1,
+        _BM25_TERMS,
+        _bm25_scored,
+    )
 
     texts = {
         0: "spark join merge spark spark",

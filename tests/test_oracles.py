@@ -11,7 +11,7 @@ import duckdb
 import pytest
 
 from __spark_entry__ import oracle_sql, queries
-from graph_db_spark.plans.queries import _EXPENSIVE_LAST
+from graph_db_spark.plans.families.q03_dedup_bounds_gate import _EXPENSIVE_LAST
 from graph_db_spark.tables import TABLE_NAMES
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -53,7 +53,7 @@ def test_gate_window_and_expensive_tail_ordering():
     exactly _GATE_WINDOW (the round-6 rotation closing the never-driver-
     checked backlog), and the expensive iterative queries not promoted
     into the window close the tail in their cost order."""
-    from graph_db_spark.plans.queries import _GATE_WINDOW
+    from graph_db_spark.plans.families.q03_dedup_bounds_gate import _GATE_WINDOW
 
     q = list(queries())
     assert len(_GATE_WINDOW) == 50
@@ -98,7 +98,7 @@ def test_r13_gate_window_mixes_requeues_and_stalest():
     import json
     import os
 
-    from graph_db_spark.plans.queries import _GATE_WINDOW
+    from graph_db_spark.plans.families.q03_dedup_bounds_gate import _GATE_WINDOW
 
     requeued = [
         "nation_volume_shipping", "nation_market_share",
@@ -154,7 +154,7 @@ def test_bh_z_thresholds_match_textbook_quantiles():
     decrease in i (larger rank -> larger allowed p -> smaller |z|).
     Catches any edit to the bisection or the (m, q) constants that would
     silently shift every rejection decision."""
-    from graph_db_spark.plans.queries import _bh_z_thresholds
+    from graph_db_spark.plans.families.q12_uplift_attribution import _bh_z_thresholds
 
     th = _bh_z_thresholds()
     assert len(th) == 25
@@ -176,7 +176,7 @@ def test_rounded_emissions_cannot_produce_negative_zero(spark, sf_dir):
     import duckdb
     from pyspark.sql import functions as F
 
-    from graph_db_spark.plans.queries import r4
+    from graph_db_spark.plans.families.q00_base import r4
 
     # unit level: r4 pins the sign of a rounded tiny negative
     row = spark.range(1).select(r4(F.lit(-1e-9)).alias("v")).first()

@@ -513,6 +513,34 @@ def test_mor_merge_appends_and_resolves(spark, tmp_path):
     assert t.compact() is None  # nothing left to do
 
 
+def test_compact_retries_after_losing_publish_race(spark, tmp_path):
+    """compact() commits through the same optimistic loop as every other
+    writer: when a concurrent merge publishes first, compact re-derives
+    the fragmented buckets from the winner's snapshot and commits the
+    next version instead of raising CommitConflict."""
+    path = str(tmp_path / "t")
+    t = SnapshotTable.create(spark, path, _mk(spark, [(1, "a"), (2, "b")]), ["k"], n_buckets=4)
+    t.merge(_mk(spark, [(2, "B2"), (3, "c")]), mode="mor")  # v2: two seqs per touched bucket
+    orig = t._publish
+    winner = []
+
+    def racing_publish(manifest):
+        if not winner:
+            winner.append(
+                SnapshotTable(spark, path).merge(_mk(spark, [(4, "from_A")]), mode="mor")
+            )
+        orig(manifest)
+
+    t._publish = racing_publish
+    v = t.compact()
+    assert winner == [3] and v == 4
+    assert _rows(t.read()) == [(1, "a"), (2, "B2"), (3, "c"), (4, "from_A")]
+    per_bucket = {}
+    for e in t._read_manifest(v)["files"]:
+        per_bucket.setdefault(e["bucket"], set()).add(e["seq"])
+    assert all(len(s) == 1 for s in per_bucket.values()), per_bucket
+
+
 def test_delete_and_change_feed(spark, tmp_path):
     """CDC between snapshots: inserts/updates/deletes surface with row
     images; buckets whose file sets are identical in both manifests are
@@ -852,7 +880,6 @@ def test_hadoop_fs_route_full_lifecycle(spark, tmp_path):
         n_buckets=4,
         cluster_by=["k"],
         records_per_file=2,
-        use_hadoop_fs=True,
     )
     assert isinstance(t._fs, _HadoopTableFS)
     assert t.latest_version() == 1
@@ -879,7 +906,7 @@ def test_hadoop_fs_route_full_lifecycle(spark, tmp_path):
     assert sorted(r["k"] for r in t.scan({"k": (2, 3)}).collect()) == [2, 3]
     # a second handle on the same URI (fresh FileSystem object) sees
     # the committed state — manifests are the source of truth
-    t2 = SnapshotTable(spark, uri, use_hadoop_fs=True)
+    t2 = SnapshotTable(spark, uri)
     assert t2.latest_version() == 2
     assert _rows(t2.read()) == [(1, "a"), (2, "B"), (3, "c"), (4, "d")]
     # vacuum over the hadoop listdir/getmtime/delete path
@@ -893,15 +920,22 @@ def test_hadoop_fs_route_full_lifecycle(spark, tmp_path):
 
 
 def test_hadoop_fs_default_routing_by_scheme(spark, tmp_path):
-    """Bare and file: paths stay on POSIX primitives by default; the
-    hadoop route engages only for real schemes or the explicit flag —
-    so the ~15 local snapshot queries' behavior is untouched."""
+    """The path's URI scheme alone picks the filesystem: a bare path
+    stays on POSIX primitives (the local snapshot queries' route), and
+    any scheme — ``file://`` and the single-slash ``file:/`` form Spark
+    itself prints included — goes through the Hadoop FileSystem API."""
     from graph_db_spark.writers.snapshots import _HadoopTableFS, _LocalTableFS
 
     t = SnapshotTable.create(spark, str(tmp_path / "p"), _mk(spark, [(1, "a")]), ["k"])
     assert isinstance(t._fs, _LocalTableFS)
-    th = SnapshotTable(spark, f"file://{tmp_path}/p2", use_hadoop_fs=True)
+    th = SnapshotTable(spark, f"file://{tmp_path}/p2")
     assert isinstance(th._fs, _HadoopTableFS)
+    ts = SnapshotTable.create(
+        spark, f"file:{tmp_path}/p3", _mk(spark, [(1, "a"), (2, "b")]), ["k"]
+    )
+    assert isinstance(ts._fs, _HadoopTableFS)
+    assert _rows(ts.read()) == [(1, "a"), (2, "b")]
+    assert _rows(SnapshotTable(spark, f"file:{tmp_path}/p3").read()) == [(1, "a"), (2, "b")]
 
 
 def test_manifest_bucket_stats_match_exact_aggregate(spark, tmp_path):
