@@ -33,8 +33,7 @@ import time
 
 from graph_db_spark.plans.pipeline import REGISTRY, build
 from graph_db_spark.session import get_spark
-from graph_db_spark.streaming.jobs import merge_into_parquet_table
-from graph_db_spark.writers.upsert import assert_unique_key, write_table
+from graph_db_spark.writers.upsert import assert_unique_key, merge_into_parquet_table, write_table
 
 
 def run(
@@ -58,12 +57,10 @@ def run(
         td = REGISTRY[name]
         path = os.path.join(out_dir, name)
         if mode == "upsert" and td.keys:
-            # the locked staged-rename MERGE (streaming/jobs.py): never
+            # the locked staged-rename MERGE (writers/upsert.py): never
             # overwrites the directory it is lazily reading, serializes
-            # concurrent writers, and is crash-recoverable mid-swap —
-            # the round-3 read-then-overwrite-in-place dance relied on
-            # Spark not noticing the self-overwrite
-            merge_into_parquet_table(df, path, td.keys, co_partition=True)
+            # concurrent writers, and is crash-recoverable mid-swap
+            merge_into_parquet_table(df, path, td.keys)
         else:
             write_table(df, path, keys=td.keys or None)
         if check_keys and td.kind == "node" and td.keys:

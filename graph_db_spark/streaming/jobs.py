@@ -8,7 +8,7 @@ idempotent MERGE writes; these jobs are the honest streaming versions:
 |---------------------------------------------------|------|
 | daily tumbling aggregation of sensor stats        | ``stream_daily_stats`` (window + watermark) |
 | irrigation events = gap-separated intervals       | ``stream_sessions`` (session_window) |
-| idempotent MERGE on re-run                        | ``upsert_sink`` (foreachBatch + keyed upsert) |
+| idempotent MERGE on re-run                        | ``writers.snapshots.snapshot_sink`` (foreachBatch + exactly-once snapshot MERGE) |
 | late/duplicate rows on overlapping windows        | watermark + ``dedupe_within_watermark`` |
 
 Scale: state size is bounded by the watermark horizon × key cardinality;
@@ -182,311 +182,6 @@ def stream_decontaminate(
     )
 
 
-def _fs(spark, p):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(p)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _rename(fs, src, dst) -> None:
-    # Hadoop FileSystem.rename signals failure by RETURNING false (and
-    # renaming onto an existing directory moves the source INTO it);
-    # swallowing that would let the micro-batch commit while the merged
-    # table is later deleted as stale — silent data loss. Raise so the
-    # batch fails and Spark replays it.
-    if not fs.rename(src, dst):
-        raise IOError(f"rename failed: {src} -> {dst}")
-
-
-def _is_local_path(p: str) -> bool:
-    from urllib.parse import urlparse
-
-    return urlparse(p).scheme in ("", "file")
-
-
-def _local_part(p: str) -> str:
-    from urllib.parse import urlparse
-
-    u = urlparse(p)
-    return u.path if u.scheme else p
-
-
-# one in-process mutex per table path: serializes concurrent sinks inside
-# the same driver without busy-waiting on the filesystem lock
-_PROCESS_LOCKS: dict[str, "threading.Lock"] = {}
-_PROCESS_LOCKS_GUARD = None
-
-
-def _process_lock(path: str):
-    import threading
-
-    global _PROCESS_LOCKS_GUARD
-    if _PROCESS_LOCKS_GUARD is None:
-        _PROCESS_LOCKS_GUARD = threading.Lock()
-    with _PROCESS_LOCKS_GUARD:
-        return _PROCESS_LOCKS.setdefault(path, threading.Lock())
-
-
-class TableLock:
-    """Single-writer lock for a staged-rename parquet table.
-
-    The staged-rename merge is read-modify-write: two concurrent writers
-    that both read the current table each merge only their OWN batch, and
-    the last swap wins — silently dropping the other writer's keys. Plain
-    parquet has no transaction log, so concurrent MERGE needs mutual
-    exclusion. Two layers:
-
-    - **in-process**: a per-path ``threading.Lock`` — two streaming sinks
-      (or a sink + a batch writer) in the same driver serialize without
-      touching the filesystem;
-    - **cross-process**: an exclusive lockfile. For local paths the
-      create uses POSIX ``O_CREAT|O_EXCL`` (truly atomic — Hadoop's
-      RawLocalFileSystem ``createNewFile`` is a non-atomic exists+create
-      and measurably races under thread interleaving); for cluster
-      filesystems it uses Hadoop ``createNewFile``, which HDFS makes
-      atomic at the namenode. On eventual-consistency object stores
-      neither is a real lock — there, and in production generally, the
-      answer is a transactional table format whose optimistic commit IS
-      the concurrency story (SCALE.md §6.5); this is the sound
-      plain-parquet fallback.
-
-    Crash-robustness: a writer that dies holding the lock would block all
-    successors, so locks older than ``ttl_ms`` are broken (the staged
-    swap they guarded is itself crash-recoverable). A LIVE holder is
-    protected from TTL breaking by a heartbeat: a daemon thread bumps the
-    lockfile mtime every ``ttl_ms/3``, so only a dead writer's lock ever
-    looks stale — a merge slower than the TTL no longer loses the lock
-    mid-flight (review finding). Each lockfile carries its holder's
-    random token, and release/breaking deletes the file only if the token
-    still matches what the deleter expects — a holder that somehow lost
-    the lock can't cascade-delete the NEXT holder's lock. Breaking
-    re-checks freshness immediately before deleting; the residual
-    two-breaker race is inherent to lockfiles without compare-and-swap.
-    """
-
-    def __init__(self, spark, path: str, ttl_ms: int = 600_000, timeout_ms: int = 120_000, poll_ms: int = 50):
-        import uuid
-
-        self.spark, self.table_path, self.path = spark, path, path + "__lock"
-        self.ttl_ms, self.timeout_ms, self.poll_ms = ttl_ms, timeout_ms, poll_ms
-        self._plock = _process_lock(path)
-        self._token = uuid.uuid4().hex
-        self._hb_stop = None
-
-    # -- lockfile primitives, local-atomic or hadoop ---------------------
-    def _try_create(self) -> bool:
-        if _is_local_path(self.path):
-            import os
-
-            try:
-                local = _local_part(self.path)
-                os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
-                fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, self._token.encode())
-                os.close(fd)
-                return True
-            except FileExistsError:
-                return False
-        fs, lock = _fs(self.spark, self.path)
-        try:
-            # create(overwrite=False) is the namenode-atomic primitive;
-            # the token rides in the file body
-            out = fs.create(lock, False)
-            out.write(bytearray(self._token.encode()))
-            out.close()
-            return True
-        except Exception:
-            return False
-
-    def _read_token(self) -> str | None:
-        try:
-            if _is_local_path(self.path):
-                with open(_local_part(self.path)) as f:
-                    return f.read()
-            fs, lock = _fs(self.spark, self.path)
-            stream = fs.open(lock)
-            token = self.spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-            stream.close()
-            return token
-        except Exception:
-            return None
-
-    def _touch(self) -> None:
-        import contextlib
-        import time
-
-        with contextlib.suppress(Exception):
-            if _is_local_path(self.path):
-                import os
-
-                os.utime(_local_part(self.path), None)
-            else:
-                fs, lock = _fs(self.spark, self.path)
-                now = int(time.time() * 1000)
-                fs.setTimes(lock, now, now)
-
-    def _start_heartbeat(self) -> None:
-        import threading
-
-        stop = threading.Event()
-        interval = max(self.ttl_ms / 3000.0, 0.05)
-
-        def beat() -> None:
-            while not stop.wait(interval):
-                self._touch()
-
-        t = threading.Thread(target=beat, daemon=True, name=f"tablelock-hb-{self.table_path}")
-        t.start()
-        self._hb_stop = stop
-
-    def _age_ms(self) -> float | None:
-        import time
-
-        try:
-            if _is_local_path(self.path):
-                import os
-
-                return time.time() * 1000 - os.stat(_local_part(self.path)).st_mtime * 1000
-            fs, lock = _fs(self.spark, self.path)
-            return time.time() * 1000 - fs.getFileStatus(lock).getModificationTime()
-        except Exception:
-            return None  # vanished between probe and stat
-
-    def _delete(self, expect_token: str | None) -> None:
-        """Delete the lockfile, but only when its token matches
-        ``expect_token`` (None = delete unconditionally — used when the
-        breaker just read the token it is breaking)."""
-        if expect_token is not None and self._read_token() != expect_token:
-            return
-        if _is_local_path(self.path):
-            import contextlib
-            import os
-
-            with contextlib.suppress(OSError):
-                os.unlink(_local_part(self.path))
-            return
-        fs, lock = _fs(self.spark, self.path)
-        fs.delete(lock, False)
-
-    def __enter__(self):
-        import time
-
-        if not self._plock.acquire(timeout=self.timeout_ms / 1000.0):
-            raise TimeoutError(f"could not acquire in-process table lock {self.path}")
-        try:
-            deadline = time.time() + self.timeout_ms / 1000.0
-            while True:
-                if self._try_create():
-                    self._start_heartbeat()
-                    return self
-                age = self._age_ms()
-                if age is not None and age > self.ttl_ms:
-                    stale_token = self._read_token()
-                    # re-probe right before breaking: only delete if STILL
-                    # stale AND still the same holder we judged stale
-                    age2 = self._age_ms()
-                    if age2 is not None and age2 > self.ttl_ms:
-                        self._delete(expect_token=stale_token)
-                    continue
-                if time.time() > deadline:
-                    raise TimeoutError(f"could not acquire table lock {self.path}")
-                time.sleep(self.poll_ms / 1000.0)
-        except BaseException:
-            self._plock.release()
-            raise
-
-    def __exit__(self, *exc):
-        try:
-            if self._hb_stop is not None:
-                self._hb_stop.set()
-                self._hb_stop = None
-            # release only OUR lock: if a breaker took it over, the token
-            # differs and the new holder's lockfile survives
-            self._delete(expect_token=self._token)
-        finally:
-            self._plock.release()
-        return False
-
-
-def merge_into_parquet_table(
-    batch_df: DataFrame, path: str, keys: list[str], co_partition: bool = False
-) -> None:
-    """One serialized MERGE of ``batch_df`` into the parquet table at
-    ``path``: acquire the single-writer lock, read-merge-stage-swap,
-    release. Module-level so the streaming sink, the pipeline CLI, and
-    the concurrency test share the exact code path. ``co_partition``
-    repartitions the merged table by ``keys`` before landing (the
-    bucketing analogue for plain parquet — downstream key joins read
-    co-located data). The staged ``__next`` write also means the merge
-    never overwrites the parquet directory it is lazily reading from."""
-    from graph_db_spark.writers.upsert import upsert
-
-    spark = batch_df.sparkSession
-    with TableLock(spark, path):
-        jvm = spark._jvm
-        fs, cur = _fs(spark, path)
-        nxt = jvm.org.apache.hadoop.fs.Path(path + "__next")
-        old = jvm.org.apache.hadoop.fs.Path(path + "__old")
-        # recover from a crash between the two renames of a prior batch:
-        # current missing but __old present → the old table is still intact.
-        if not fs.exists(cur) and fs.exists(old):
-            _rename(fs, old, cur)
-        # drop stale leftovers from interrupted batches ('_next' is the
-        # pre-round-2 staging suffix — one-time migration cleanup)
-        legacy = jvm.org.apache.hadoop.fs.Path(path + "_next")
-        for stale in (nxt, old, legacy):
-            if fs.exists(stale):
-                fs.delete(stale, True)
-        # explicit existence probe instead of parsing exception messages —
-        # only a genuinely missing path is a first write; any other read
-        # error (corruption, permissions) raises out of spark.read below.
-        existing = spark.read.parquet(path) if fs.exists(cur) else None
-        merged = upsert(existing, batch_df, keys)
-        if co_partition:
-            merged = merged.repartition(*keys)
-        merged.write.mode("overwrite").parquet(path + "__next")
-        # swap: cur→old, next→cur, drop old. Each rename is atomic and
-        # failure-checked; every intermediate state is recoverable (see
-        # recovery block above).
-        if fs.exists(cur):
-            _rename(fs, cur, old)
-        _rename(fs, nxt, cur)
-        if fs.exists(old):
-            fs.delete(old, True)
-
-
-def upsert_sink(query_df: DataFrame, path: str, keys: list[str], checkpoint: str):
-    """foreachBatch sink running the keyed upsert per micro-batch — MERGE
-    semantics onto a parquet table (on Delta/Iceberg this becomes MERGE
-    INTO directly). Returns the started StreamingQuery.
-
-    Crash-safety: the merged table is staged at ``path__next`` and swapped
-    in via filesystem renames (atomic on HDFS/local; Delta/Iceberg replace
-    this with a transactional commit). The current table is never deleted
-    before its replacement exists — a crash at any point leaves either the
-    old table at ``path`` or a recoverable ``path__old``, so replayed
-    micro-batches never mistake a partial write for a first write.
-
-    Concurrency: batches serialize through :class:`TableLock`, so two
-    sinks (or a sink plus a batch writer) interleaving on the same table
-    cannot lose each other's keys — unit-tested by interleaving writers
-    in ``tests/test_upsert.py``.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_into_parquet_table(batch_df, path, keys)
-
-    return (
-        query_df.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stateful_sessions(
     events: DataFrame,
     key_col: str = "user_id",
@@ -621,9 +316,9 @@ def stream_incremental_dedup(
         cands = minhash_lsh_candidates_against(bdf, index_banded, text_col, id_col)
         # per-batch OVERWRITE subdir, not a blind append: a micro-batch
         # replayed after a crash-between-commit-and-checkpoint rewrites
-        # its own partition instead of duplicating pairs (the same
-        # idempotence discipline as upsert_sink's staged swap); readers
-        # see hive-style batch_id partitions under out_path
+        # its own partition instead of duplicating pairs (replay-safe,
+        # as snapshot_sink is through its txn marker); readers see
+        # hive-style batch_id partitions under out_path
         cands.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
 
     return (

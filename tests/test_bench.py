@@ -119,3 +119,13 @@ def test_bench_summary_carries_slowest_within_tail(spark, monkeypatch, capsys):
     assert len(line) <= 1900 and 0 < len(trimmed) < 40
     ranked = sorted(big.items(), key=lambda kv: -kv[1])
     assert list(trimmed.items()) == ranked[: len(trimmed)]
+
+
+def test_run_module_exposes_traced_entry_points():
+    """perfbench's traced ``graph_etl`` wraps these ``graph_db_spark.run``
+    attributes by name; a move that drops one would silently empty the
+    ``upsert``/``pipeline`` layers of ``--trace 1``."""
+    from graph_db_spark import run
+
+    for name in ("run", "build", "merge_into_parquet_table", "write_table", "assert_unique_key"):
+        assert callable(getattr(run, name, None)), name

@@ -99,7 +99,7 @@ def test_concurrent_writers_lose_no_keys(spark, tmp_path):
     writer swaps first)."""
     import threading
 
-    from graph_db_spark.streaming.jobs import merge_into_parquet_table
+    from graph_db_spark.writers.upsert import merge_into_parquet_table
 
     path = str(tmp_path / "tbl")
     errors = []
@@ -121,7 +121,9 @@ def test_concurrent_writers_lose_no_keys(spark, tmp_path):
 
 
 def test_table_lock_blocks_and_breaks_stale(spark, tmp_path):
-    from graph_db_spark.streaming.jobs import TableLock, _fs
+    import os
+
+    from graph_db_spark.writers.upsert import TableLock
 
     path = str(tmp_path / "locked_tbl")
     # held lock blocks a second acquirer until released
@@ -129,38 +131,67 @@ def test_table_lock_blocks_and_breaks_stale(spark, tmp_path):
         with pytest.raises(TimeoutError):
             TableLock(spark, path, timeout_ms=300).__enter__()
     # a stale lock (dead writer) is broken after ttl and acquisition succeeds
-    fs, lock = _fs(spark, path + "__lock")
-    assert fs.createNewFile(lock)
+    lock = path + "__lock"
+    open(lock, "x").close()
     lk = TableLock(spark, path, ttl_ms=200, timeout_ms=5000)
     import time
 
     time.sleep(0.4)
     lk.__enter__()
     lk.__exit__(None, None, None)
-    assert not fs.exists(lock)
+    assert not os.path.exists(lock)
 
 
 def test_table_lock_heartbeat_protects_live_holder(spark, tmp_path):
     """A merge slower than the TTL must NOT lose its lock: the heartbeat
     keeps the lockfile fresh, so a waiting writer times out instead of
     breaking in (review finding); and release still works afterwards."""
+    import os
     import time
 
-    from graph_db_spark.streaming.jobs import TableLock, _fs
+    from graph_db_spark.writers.upsert import TableLock
 
     path = str(tmp_path / "hb_tbl")
-    fs, lock = _fs(spark, path + "__lock")
+    lock = path + "__lock"
     with TableLock(spark, path, ttl_ms=300):
         time.sleep(1.0)  # well past the TTL; heartbeat (ttl/3) keeps it live
         with pytest.raises(TimeoutError):
             TableLock(spark, path, ttl_ms=300, timeout_ms=700).__enter__()
-        assert fs.exists(lock)  # never broken while held
-    assert not fs.exists(lock)
+        assert os.path.exists(lock)  # never broken while held
+    assert not os.path.exists(lock)
     # token guard: a stranger's fresh lock is not deleted by our release
     other = TableLock(spark, path, ttl_ms=60_000)
     other.__enter__()
     stale_handle = TableLock(spark, path)
     stale_handle._delete(expect_token=stale_handle._token)  # token mismatch → no-op
-    assert fs.exists(lock)
+    assert os.path.exists(lock)
     other.__exit__(None, None, None)
-    assert not fs.exists(lock)
+    assert not os.path.exists(lock)
+
+
+def test_table_lock_under_regular_file_raises_at_once(spark, tmp_path):
+    """A table path below a regular file can never be locked: the lock
+    must say so at once instead of reading the failed parent mkdir as
+    "lock held" and spinning until its timeout."""
+    import time
+
+    from graph_db_spark.writers.upsert import TableLock
+
+    regular_file = tmp_path / "plain"
+    regular_file.write_text("not a directory")
+    t0 = time.monotonic()
+    with pytest.raises(NotADirectoryError):
+        TableLock(spark, str(regular_file / "t"), timeout_ms=300).__enter__()
+    assert time.monotonic() - t0 < 0.3
+
+
+def test_merge_keeps_sibling_table_with_next_suffix(spark, tmp_path):
+    """``<path>_next`` is an ordinary name for another table: merging
+    into ``t`` must not touch ``t_next``."""
+    from graph_db_spark.writers.upsert import merge_into_parquet_table
+
+    sibling = str(tmp_path / "t_next")
+    df_of(spark, [(7, "s", "t")]).write.parquet(sibling)
+    merge_into_parquet_table(df_of(spark, [(1, "x", "y")]), str(tmp_path / "t"), ["k"])
+    assert as_set(spark.read.parquet(sibling)) == {(7, "s", "t")}
+    assert as_set(spark.read.parquet(str(tmp_path / "t"))) == {(1, "x", "y")}
