@@ -113,20 +113,6 @@ def parse_range(col: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# F6 — ISO-day format
-# ---------------------------------------------------------------------------
-
-
-def iso_day(col: Column | str) -> Column:
-    """datetime/date/ISO-string → ``YYYY-MM-DD`` string.
-
-    Parity: ``_iso_day`` /root/reference/app/graph_sap_analysis.py:15-21 (+5 clones).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c.cast("timestamp"), "yyyy-MM-dd")
-
-
-# ---------------------------------------------------------------------------
 # F7 — datetime coercion
 # ---------------------------------------------------------------------------
 
@@ -344,22 +330,6 @@ def json_encode(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.to_json(c)
-
-
-# ---------------------------------------------------------------------------
-# F18 — nutrient entry iterator (map explode)
-# ---------------------------------------------------------------------------
-
-
-def explode_map_entries(col: Column | str, key_name: str = "name", val_name: str = "value"):
-    """Return (key, value) explode helper for map-typed nutrient payloads:
-    use as ``df.select(F.explode(col).alias(key_name, val_name))``; value
-    parsing composes with :func:`loose_number`.
-
-    Parity: ``_iter_nutrients`` /root/reference/app/graph_app_nutrient_content.py:108-135.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.explode(c)
 
 
 # ---------------------------------------------------------------------------

@@ -133,14 +133,6 @@ def capped_sample(df: DataFrame, group_cols: list[str], value_col: str, cap: int
     )
 
 
-def pick_longest_label(df: DataFrame, group_cols: list[str], label_col: str) -> DataFrame:
-    """A10 — prefer the longest label per group (parity: ``_pick_label``
-    /root/reference/app/graph_soil_layer.py:45-51)."""
-    return df.groupBy(*group_cols).agg(
-        F.max_by(label_col, F.length(label_col)).alias("label")
-    )
-
-
 def pivot_metrics(
     df: DataFrame,
     group_cols: list[str],

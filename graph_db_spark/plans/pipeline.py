@@ -19,6 +19,18 @@ product applications, part→FertilizerProduct catalog.
 Every node table ends with a uniqueness assertion on its natural key — the
 23 Neo4j constraints (/root/reference/app/graph_constraints.py) as checked
 invariants instead of DDL.
+
+Node ids: ``node_id(label)`` is the node's one key column unchanged, or
+``S.composite_id`` of its keys in declared order when it has several. It is
+the only place the id format lives; every edge endpoint and every child's
+parent-id column comes from it, so an edge row always names an existing node.
+
+Edges: each relationship is an inner join of two node tables, declared as
+one row of ``EDGES`` (name, REL_TYPE, src label, dst label, join pairs) and
+built by ``_edge_task``. Broadcast rule: the dst side is broadcast when its
+label is a dimension (stations, fields, crops, fertilizer_products),
+otherwise the src side when it is one; an edge between two fact tables is
+left to the planner.
 """
 
 from __future__ import annotations
@@ -26,7 +38,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graph_db_spark.functions import scalars as S
@@ -43,6 +55,7 @@ class TableDef:
     builder: Callable[..., DataFrame]  # (ctx, **dep_dfs) -> DataFrame
     deps: list[str] = field(default_factory=list)
     keys: list[str] = field(default_factory=list)  # uniqueness constraint
+    ends: tuple[str, str] | None = None  # edge: (src label, dst label)
 
 
 @dataclass
@@ -70,12 +83,19 @@ class Context:
 REGISTRY: dict[str, TableDef] = {}
 
 
-def task(name: str, kind: str, deps: list[str] | None = None, keys: list[str] | None = None):
+def task(name: str, kind: str, deps: list[str] | None = None, keys: list[str] | None = None,
+         ends: tuple[str, str] | None = None):
     def deco(fn):
-        REGISTRY[name] = TableDef(name, kind, fn, deps or [], keys or [])
+        REGISTRY[name] = TableDef(name, kind, fn, deps or [], keys or [], ends)
         return fn
 
     return deco
+
+
+def node_id(label: str) -> Column:
+    """The id of a ``label`` node, from its declared keys."""
+    keys = REGISTRY[label].keys
+    return F.col(keys[0]) if len(keys) == 1 else S.composite_id(*keys)
 
 
 # ---------------------------------------------------------------------------
@@ -110,15 +130,6 @@ def crops(ctx: Context, fields: DataFrame) -> DataFrame:
     return fields.select(F.col("crop_name").alias("name")).distinct()
 
 
-@task("planted_with", "edge", deps=["fields", "crops"])
-def planted_with(ctx: Context, fields: DataFrame, crops: DataFrame) -> DataFrame:
-    """Field-PLANTED_WITH→Crop (graph_fields.py:40-46)."""
-    return J.edge_join(
-        fields, crops, on=fields["crop_name"] == crops["name"],
-        rel_type="PLANTED_WITH", src_key="field_id", dst_key="name", broadcast_dst=True,
-    )
-
-
 @task("stations", "node", keys=["serial_number"])
 def stations(ctx: Context) -> DataFrame:
     """Station nodes (graph_stations.py:16-39): registry = distinct event
@@ -134,16 +145,6 @@ def stations(ctx: Context) -> DataFrame:
             (F.col("uid") + 1).alias("field_id"),
             F.lit(True).alias("has_soil_moisture"),
         )
-    )
-
-
-@task("has_station", "edge", deps=["fields", "stations"])
-def has_station(ctx: Context, fields: DataFrame, stations: DataFrame) -> DataFrame:
-    """Field-HAS_STATION→Station (graph_stations.py:33-39)."""
-    return J.edge_join(
-        fields, stations, on=fields["field_id"] == stations["field_id"],
-        rel_type="HAS_STATION", src_key="field_id", dst_key="serial_number",
-        broadcast_dst=True,
     )
 
 
@@ -351,7 +352,7 @@ def soil_param_results(ctx: Context, soil_analyses: DataFrame) -> DataFrame:
     )
     joined = rows.join(parents, on="lab_no")  # J6 semi-ish: only rows with parents
     out = joined.select(
-        S.composite_id("field_id", "date", "lab_no").alias("analysis_id"),
+        node_id("soil_analyses").alias("analysis_id"),
         "parameter",
         "line_no",
         S.ineq_trimmed_float("raw_value").alias("value"),
@@ -361,22 +362,6 @@ def soil_param_results(ctx: Context, soil_analyses: DataFrame) -> DataFrame:
     # rows) — a bare dropDuplicates picks an arbitrary row and breaks
     # re-run stability
     return A.dedup_first(out, ["analysis_id", "parameter"], ["line_no", "value"]).drop("line_no")
-
-
-@task("has_soil_param", "edge", deps=["soil_analyses", "soil_param_results"])
-def has_soil_param(ctx: Context, soil_analyses: DataFrame,
-                   soil_param_results: DataFrame) -> DataFrame:
-    """SoilAnalysis-HAS_SOIL_PARAM→SoilParamResult
-    (graph_soil_param_result.py:131-146) — keys canonical, so no dangling
-    edges (asserted in tests)."""
-    sa = soil_analyses.select(
-        S.composite_id("field_id", "date", "lab_no").alias("analysis_id")
-    )
-    return J.edge_join(
-        sa, soil_param_results,
-        on=sa["analysis_id"] == soil_param_results["analysis_id"],
-        rel_type="HAS_SOIL_PARAM", src_key="analysis_id", dst_key="parameter",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -421,7 +406,7 @@ def product_applications(ctx: Context, application_events: DataFrame) -> DataFra
         "l_shipdate",
     )
     ae = application_events.select(
-        S.composite_id("field_id", "date", "app_type", "idx").alias("application_event_id"),
+        node_id("application_events").alias("application_event_id"),
         F.col("order_ref").alias("ae_order_ref"),
     )
     # events and inventories share order_ref in this mapping → equi-join
@@ -435,7 +420,7 @@ def product_applications(ctx: Context, application_events: DataFrame) -> DataFra
     )
     return out.select(
         "application_event_id", "idx", "partkey", "amount",
-        S.composite_id("application_event_id", "idx").alias("product_application_id"),
+        node_id("product_applications").alias("product_application_id"),
     )
 
 
@@ -561,11 +546,7 @@ def sap_element_results(ctx: Context, sap_analyses: DataFrame) -> DataFrame:
     # heavy part; pre-join both leaf variants parse on all cores
     li = spread(ctx.table("lineitem"))
     parents = sap_analyses.select(
-        S.composite_id("field_id", "date", "crop_name", "leaf_type", "sample_id").alias(
-            "sap_analysis_id"
-        ),
-        "order_ref",
-        "leaf_type",
+        node_id("sap_analyses").alias("sap_analysis_id"), "order_ref", "leaf_type"
     )
     nutrient = F.element_at(
         F.array(*[F.lit(n) for n in _NUTRIENTS]), (F.col("l_partkey") % 8 + 1).cast("int")
@@ -617,6 +598,12 @@ def optimum_sap_ranges(ctx: Context, sap_analyses: DataFrame) -> DataFrame:
     )
 
 
+def _opt_range_id() -> Column:
+    """The reference's 'crop|date' OptimumSAPRange handle
+    (graph_optimum_element_range.py:117) that element ranges key under."""
+    return F.concat_ws("|", "crop_name", "date")
+
+
 @task("optimum_element_ranges", "node", deps=["sap_analyses"],
       keys=["opt_range_id", "nutrient"])
 def optimum_element_ranges(ctx: Context, sap_analyses: DataFrame) -> DataFrame:
@@ -633,7 +620,7 @@ def optimum_element_ranges(ctx: Context, sap_analyses: DataFrame) -> DataFrame:
     # sap_element_results for why — post-join partitions are AQE-coalesced)
     li = spread(ctx.table("lineitem"))
     parents = sap_analyses.filter(F.col("leaf_type") == "young").select(
-        F.concat_ws("|", "crop_name", "date").alias("opt_range_id"),
+        _opt_range_id().alias("opt_range_id"),
         "order_ref",
     )
     q = F.col("l_quantity").cast("int").cast("string")
@@ -678,6 +665,19 @@ def optimum_element_ranges(ctx: Context, sap_analyses: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _sample_source() -> Column:
+    """An order's water sample source, a missing one filled with the one
+    canonical 'unknown' (see water_analyses). It is a WaterAnalysis key, so
+    water_param_results must derive it exactly as water_analyses does for
+    its parent id to name an existing node."""
+    src = (
+        F.when(F.col("o_orderkey") % 3 == 0, F.lit("well"))
+        .when(F.col("o_orderkey") % 3 == 1, F.lit("canal"))
+        .otherwise(F.lit(None).cast("string"))
+    )
+    return F.coalesce(S.norm_str(src), F.lit("unknown"))
+
+
 @task("water_analyses", "node", deps=["fields"],
       keys=["field_id", "date", "sample_source"])
 def water_analyses(ctx: Context, fields: DataFrame) -> DataFrame:
@@ -689,15 +689,10 @@ def water_analyses(ctx: Context, fields: DataFrame) -> DataFrame:
     day×field fetch loop (:51-68) is one range scan (S10)."""
     o = ctx.table("orders").filter(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
     dim = fields.select("field_id", "crop_name")
-    src = (
-        F.when(F.col("o_orderkey") % 3 == 0, F.lit("well"))
-        .when(F.col("o_orderkey") % 3 == 1, F.lit("canal"))
-        .otherwise(F.lit(None).cast("string"))
-    )
     rows = o.join(F.broadcast(dim), on=o["o_custkey"] == dim["field_id"]).select(
         "field_id",
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("date"),
-        F.coalesce(S.norm_str(src), F.lit("unknown")).alias("sample_source"),
+        _sample_source().alias("sample_source"),
         "crop_name",
         F.col("o_orderkey").alias("lab_id"),
     )
@@ -720,21 +715,16 @@ def water_param_results(ctx: Context, fields: DataFrame) -> DataFrame:
     reference's MERGE-by-wa_id does."""
     o = ctx.table("orders").filter(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
     li = ctx.table("lineitem")
-    src = (
-        F.when(F.col("o_orderkey") % 3 == 0, F.lit("well"))
-        .when(F.col("o_orderkey") % 3 == 1, F.lit("canal"))
-        .otherwise(F.lit(None).cast("string"))
-    )
     parents = o.select(
         F.col("o_orderkey").alias("order_ref"),
         F.col("o_custkey").alias("field_id"),
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("date"),
-        F.coalesce(S.norm_str(src), F.lit("unknown")).alias("sample_source"),
+        _sample_source().alias("sample_source"),
     )
     raw_param = F.concat(F.lit("  Param_"), (F.col("l_partkey") % 10).cast("string"), F.lit(" "))
     raw_val = F.concat(F.lit("< "), F.col("l_quantity").cast("string"))
     rows = li.join(parents, on=li["l_orderkey"] == parents["order_ref"]).select(
-        S.composite_id("field_id", "date", "sample_source").alias("water_analysis_id"),
+        node_id("water_analyses").alias("water_analysis_id"),
         S.mineral_norm(raw_param).alias("parameter"),
         F.col("l_linenumber").alias("line_no"),
         S.ineq_trimmed_float(raw_val).alias("value"),
@@ -768,328 +758,128 @@ def depth_points(ctx: Context, stations: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Remaining edges (J1 family)
+# Edges (J1 family): one declaration row per relationship type
 # ---------------------------------------------------------------------------
 
 
-@task("at_depth", "edge", deps=["stations", "depth_points"])
-def at_depth(ctx: Context, stations: DataFrame, depth_points: DataFrame) -> DataFrame:
-    """Station-AT_DEPTH→DepthPoint (graph_stations.py:51-55,62-66)."""
-    # depth_points is a narrow projection of stations, so the join lineage
-    # is a self-join — rename the key to disambiguate attributes
-    dp = depth_points.select(
-        F.col("serial_number").alias("dp_serial"),
-        S.composite_id("serial_number", "depth", "sensor_index").alias("dp_id"),
-    )
-    return J.edge_join(
-        stations, dp, on=stations["serial_number"] == dp["dp_serial"],
-        rel_type="AT_DEPTH", src_key="serial_number", dst_key="dp_id",
-        broadcast_src=True,
-    )
+ID = object()  # a join-pair src that is the src node's id
+_DIMENSIONS = {"stations", "fields", "crops", "fertilizer_products"}
+
+# name, REL_TYPE, src label, dst label, join pairs: (src column | ID | Column
+# factory, dst column), or one column name that both sides join on, as in
+# DataFrame.join(on=[...]); the comment cites the reference's edge writer
+EDGES: list[tuple[str, str, str, str, list]] = [
+    ("planted_with", "PLANTED_WITH", "fields", "crops",
+     [("crop_name", "name")]),  # graph_fields.py:40-46
+    ("has_station", "HAS_STATION", "fields", "stations", ["field_id"]),  # graph_stations.py:33-39
+    ("has_sap_analysis", "HAS_SAP_ANALYSIS", "fields", "sap_analyses",
+     ["field_id"]),  # graph_sap_analysis.py:180-194
+    ("has_haney_analysis", "HAS_HANEY_ANALYSIS", "fields", "haney_analyses",
+     ["field_id"]),  # graph_haney_analysis.py:135-144
+    ("has_tnd_analysis", "HAS_TND_ANALYSIS", "fields", "tnd_analyses",
+     ["field_id"]),  # graph_tnd_analysis.py:215-224
+    ("has_soil_analysis", "HAS_SOIL_ANALYSIS", "fields", "soil_analyses",
+     ["field_id"]),  # graph_soil_analysis.py:129-138
+    ("has_water_analysis", "HAS_WATER_ANALYSIS", "fields", "water_analyses",
+     ["field_id"]),  # graph_water_analysis.py:110-123
+    ("has_application", "HAS_APPLICATION", "fields", "application_events",
+     ["field_id"]),  # graph_application_event.py:190-207
+    ("at_depth", "AT_DEPTH", "stations", "depth_points",
+     ["serial_number"]),  # graph_stations.py:51-55,62-66
+    ("has_weather_day", "HAS_WEATHER_DAY", "stations", "weather_days",
+     ["serial_number"]),  # graph_weather_day.py:250-257
+    ("has_soil_day", "HAS_SOIL_DAY", "stations", "soil_days",
+     ["serial_number"]),  # graph_soil_day.py:132-140
+    ("has_irrigation_day", "HAS_IRRIGATION_DAY", "stations", "irrigation_days",
+     ["serial_number"]),  # graph_irrigation_day.py:233-240
+    ("has_canopy_day", "HAS_CANOPY_DAY", "stations", "canopy_days",
+     ["serial_number"]),  # graph_canopy_day.py:231-238
+    ("has_sap_day", "HAS_SAP_DAY", "stations", "sap_days",
+     ["serial_number"]),  # graph_sap_day.py:223-230
+    ("has_et0", "HAS_ET0", "stations", "et0_days", ["serial_number"]),  # graph_et0.py:86-93
+    ("has_forecast", "HAS_FORECAST", "stations", "weather_forecasts",
+     ["serial_number"]),  # graph_weather_forecast.py:64-71
+    ("has_irrigation_event", "HAS_IRRIGATION_EVENT", "stations", "irrigation_events",
+     ["serial_number"]),  # graph_irrigation_event.py:335-343
+    ("has_layer_reading", "HAS_LAYER_READING", "soil_days", "soil_layer_readings",
+     ["serial_number", "date"]),  # graph_soil_layer.py:254-261
+    ("has_soil_param", "HAS_SOIL_PARAM", "soil_analyses", "soil_param_results",
+     [(ID, "analysis_id")]),  # graph_soil_param_result.py:131-146
+    ("measured_element", "MEASURED_ELEMENT", "sap_analyses", "sap_element_results",
+     [(ID, "sap_analysis_id")]),  # graph_sap_element_result.py:135-151
+    ("has_optimum_range", "HAS_OPTIMUM_RANGE", "crops", "optimum_sap_ranges",
+     [("name", "crop_name")]),  # graph_optimum_sap_range.py:74-82
+    ("has_optimum_element", "HAS_OPTIMUM_ELEMENT", "optimum_sap_ranges",
+     "optimum_element_ranges",
+     [(_opt_range_id, "opt_range_id")]),  # graph_optimum_element_range.py:159-167
+    ("has_water_param", "HAS_WATER_PARAM", "water_analyses", "water_param_results",
+     [(ID, "water_analysis_id")]),  # graph_water_param_result.py:120-135
+    ("has_product_app", "HAS_PRODUCT_APP", "application_events", "product_applications",
+     [(ID, "application_event_id")]),  # graph_product_application.py:267-287
+    ("uses_product", "USES_PRODUCT", "product_applications", "fertilizer_products",
+     ["partkey"]),  # graph_fertilizer_product.py:223-230
+    ("has_nutrient_content", "HAS_NUTRIENT_CONTENT", "product_applications",
+     "app_nutrient_contents", ["product_application_id"]),  # graph_app_nutrient_content.py:153
+]
 
 
-def _station_day_edge(stations: DataFrame, days: DataFrame, rel_type: str) -> DataFrame:
-    """Shared Station→<day-node> edge shape (HAS_WEATHER_DAY et al.): the
-    day node key is (serial, date) → composite dst id. Day nodes embed the
-    station scan in their lineage (self-join) → renamed join key."""
-    d = days.select(
-        F.col("serial_number").alias("day_serial"),
-        S.composite_id("serial_number", "date").alias("day_id"),
-    )
-    return J.edge_join(
-        stations, d, on=stations["serial_number"] == d["day_serial"],
-        rel_type=rel_type, src_key="serial_number", dst_key="day_id",
-        broadcast_src=True,
-    )
+def _endpoint(df: DataFrame, label: str, end: str, values: list) -> tuple[DataFrame, list[str]]:
+    """``df`` projected to its node id (column ``end``) plus its join values
+    under fresh aliases — the two sides of an edge often share one scan
+    lineage. A value that is the id itself joins on ``end``: a second alias
+    of a computed id (a station's serial) would keep a Project above the
+    aggregate that computes it. Returns the join column names in pair order."""
+    cols, names = {end: node_id(label)}, []
+    for i, v in enumerate(values):
+        if v is ID or [v] == REGISTRY[label].keys:
+            names.append(end)
+        else:
+            names.append(f"{end}{i}")
+            cols[names[-1]] = v() if callable(v) else F.col(v)
+    return df.select(*[c.alias(n) for n, c in cols.items()]), names
 
 
-@task("has_forecast", "edge", deps=["stations", "weather_forecasts"])
-def has_forecast(ctx: Context, stations: DataFrame, weather_forecasts: DataFrame) -> DataFrame:
-    """Station-HAS_FORECAST→WeatherForecast (graph_weather_forecast.py:64-71)."""
-    return _station_day_edge(stations, weather_forecasts, "HAS_FORECAST")
+def _edge_task(rel_type: str, src: str, dst: str, pairs: list) -> Callable[..., DataFrame]:
+    pairs = [(p, p) if isinstance(p, str) else p for p in pairs]
 
-
-@task("has_soil_day", "edge", deps=["stations", "soil_days"])
-def has_soil_day(ctx: Context, stations: DataFrame, soil_days: DataFrame) -> DataFrame:
-    """Station-HAS_SOIL_DAY→SoilDay (graph_soil_day.py:132-140)."""
-    return _station_day_edge(stations, soil_days, "HAS_SOIL_DAY")
-
-
-@task("has_layer_reading", "edge", deps=["soil_days", "soil_layer_readings"])
-def has_layer_reading(ctx: Context, soil_days: DataFrame,
-                      soil_layer_readings: DataFrame) -> DataFrame:
-    """SoilDay-HAS_LAYER_READING→SoilLayerReading (graph_soil_layer.py:254-261)
-    — parent is the (serial, date) day container, child adds depth_cm."""
-    # both sides derive from the same events⋈stations lineage — rename the
-    # child's join keys to keep attributes unambiguous
-    sd = soil_days.select(
-        "serial_number", "date", S.composite_id("serial_number", "date").alias("day_id")
-    )
-    slr = soil_layer_readings.select(
-        F.col("serial_number").alias("r_serial"),
-        F.col("date").alias("r_date"),
-        S.composite_id("serial_number", "date", "depth_cm").alias("reading_id"),
-    )
-    return J.edge_join(
-        sd, slr,
-        on=[(sd["serial_number"] == slr["r_serial"]) & (sd["date"] == slr["r_date"])],
-        rel_type="HAS_LAYER_READING", src_key="day_id", dst_key="reading_id",
-    )
-
-
-@task("has_irrigation_day", "edge", deps=["stations", "irrigation_days"])
-def has_irrigation_day(ctx: Context, stations: DataFrame, irrigation_days: DataFrame) -> DataFrame:
-    """Station-HAS_IRRIGATION_DAY→IrrigationDay (graph_irrigation_day.py:233-240)."""
-    return _station_day_edge(stations, irrigation_days, "HAS_IRRIGATION_DAY")
-
-
-@task("has_canopy_day", "edge", deps=["stations", "canopy_days"])
-def has_canopy_day(ctx: Context, stations: DataFrame, canopy_days: DataFrame) -> DataFrame:
-    """Station-HAS_CANOPY_DAY→CanopyDay (graph_canopy_day.py:231-238)."""
-    return _station_day_edge(stations, canopy_days, "HAS_CANOPY_DAY")
-
-
-@task("has_sap_day", "edge", deps=["stations", "sap_days"])
-def has_sap_day(ctx: Context, stations: DataFrame, sap_days: DataFrame) -> DataFrame:
-    """Station-HAS_SAP_DAY→SAPDay (graph_sap_day.py:223-230)."""
-    return _station_day_edge(stations, sap_days, "HAS_SAP_DAY")
-
-
-@task("has_et0", "edge", deps=["stations", "et0_days"])
-def has_et0(ctx: Context, stations: DataFrame, et0_days: DataFrame) -> DataFrame:
-    """Station-HAS_ET0→ET0Day (graph_et0.py:86-93) — canonical date key on
-    both sides (quirk §2.10.3 fixed: no bare-string datetime mismatch)."""
-    return _station_day_edge(stations, et0_days, "HAS_ET0")
-
-
-def _field_analysis_edge(fields: DataFrame, analyses: DataFrame, rel_type: str,
-                         id_cols: list[str]) -> DataFrame:
-    """Shared Field→<analysis> edge shape (HAS_SAP_ANALYSIS / HAS_HANEY /
-    HAS_TND / HAS_SOIL / HAS_WATER): composite analysis id as dst.
-    Analyses embed the field dimension in their lineage → renamed key."""
-    a = analyses.select(
-        F.col("field_id").alias("a_field_id"),
-        S.composite_id(*id_cols).alias("analysis_node_id"),
-    )
-    return J.edge_join(
-        fields, a, on=fields["field_id"] == a["a_field_id"],
-        rel_type=rel_type, src_key="field_id", dst_key="analysis_node_id",
-        broadcast_src=True,
-    )
-
-
-@task("has_sap_analysis", "edge", deps=["fields", "sap_analyses"])
-def has_sap_analysis(ctx: Context, fields: DataFrame, sap_analyses: DataFrame) -> DataFrame:
-    """Field-HAS_SAP_ANALYSIS→SAPAnalysis (graph_sap_analysis.py:180-194)."""
-    return _field_analysis_edge(
-        fields, sap_analyses, "HAS_SAP_ANALYSIS",
-        ["field_id", "date", "crop_name", "leaf_type", "sample_id"],
-    )
-
-
-@task("measured_element", "edge", deps=["sap_analyses", "sap_element_results"])
-def measured_element(ctx: Context, sap_analyses: DataFrame,
-                     sap_element_results: DataFrame) -> DataFrame:
-    """SAPAnalysis-MEASURED_ELEMENT→SAPElementResult
-    (graph_sap_element_result.py:135-151)."""
-    sa = sap_analyses.select(
-        S.composite_id("field_id", "date", "crop_name", "leaf_type", "sample_id").alias(
-            "sap_analysis_id"
+    def build(ctx: Context, **dfs: DataFrame) -> DataFrame:
+        s, s_on = _endpoint(dfs[src], src, "src", [v for v, _ in pairs])
+        d, d_on = _endpoint(dfs[dst], dst, "dst", [c for _, c in pairs])
+        return J.edge_join(
+            s, d, on=[s[a] == d[b] for a, b in zip(s_on, d_on)],
+            rel_type=rel_type, src_key="src", dst_key="dst",
+            broadcast_dst=dst in _DIMENSIONS,
+            broadcast_src=dst not in _DIMENSIONS and src in _DIMENSIONS,
         )
-    )
-    ser = sap_element_results.withColumn(
-        "ser_id", S.composite_id("sap_analysis_id", "nutrient")
-    )
-    return J.edge_join(
-        sa, ser, on=sa["sap_analysis_id"] == ser["sap_analysis_id"],
-        rel_type="MEASURED_ELEMENT", src_key="sap_analysis_id", dst_key="ser_id",
-    )
+
+    return build
 
 
-@task("has_optimum_range", "edge", deps=["crops", "optimum_sap_ranges"])
-def has_optimum_range(ctx: Context, crops: DataFrame, optimum_sap_ranges: DataFrame) -> DataFrame:
-    """Crop-HAS_OPTIMUM_RANGE→OptimumSAPRange (graph_optimum_sap_range.py:74-82)."""
-    osr = optimum_sap_ranges.withColumn("osr_id", S.composite_id("crop_name", "date"))
-    return J.edge_join(
-        crops, osr, on=crops["name"] == osr["crop_name"],
-        rel_type="HAS_OPTIMUM_RANGE", src_key="name", dst_key="osr_id",
-        broadcast_src=True,
-    )
-
-
-@task("has_optimum_element", "edge", deps=["optimum_sap_ranges", "optimum_element_ranges"])
-def has_optimum_element(ctx: Context, optimum_sap_ranges: DataFrame,
-                        optimum_element_ranges: DataFrame) -> DataFrame:
-    """OptimumSAPRange-HAS_OPTIMUM_ELEMENT→OptimumElementRange
-    (graph_optimum_element_range.py:159-167) — join keyed by the
-    'crop|date' opt_range_id (:117)."""
-    osr = optimum_sap_ranges.select(
-        F.concat_ws("|", "crop_name", "date").alias("opt_range_id")
-    )
-    oer = optimum_element_ranges.withColumn(
-        "oer_id", S.composite_id("opt_range_id", "nutrient")
-    )
-    return J.edge_join(
-        osr, oer, on=osr["opt_range_id"] == oer["opt_range_id"],
-        rel_type="HAS_OPTIMUM_ELEMENT", src_key="opt_range_id", dst_key="oer_id",
-    )
-
-
-@task("has_haney_analysis", "edge", deps=["fields", "haney_analyses"])
-def has_haney_analysis(ctx: Context, fields: DataFrame, haney_analyses: DataFrame) -> DataFrame:
-    """Field-HAS_HANEY_ANALYSIS→HaneyAnalysis (graph_haney_analysis.py:135-144)."""
-    return _field_analysis_edge(
-        fields, haney_analyses, "HAS_HANEY_ANALYSIS", ["field_id", "date", "lab_no"]
-    )
-
-
-@task("has_tnd_analysis", "edge", deps=["fields", "tnd_analyses"])
-def has_tnd_analysis(ctx: Context, fields: DataFrame, tnd_analyses: DataFrame) -> DataFrame:
-    """Field-HAS_TND_ANALYSIS→TNDAnalysis (graph_tnd_analysis.py:215-224)."""
-    return _field_analysis_edge(
-        fields, tnd_analyses, "HAS_TND_ANALYSIS", ["field_id", "date", "lab_no"]
-    )
-
-
-@task("has_soil_analysis", "edge", deps=["fields", "soil_analyses"])
-def has_soil_analysis(ctx: Context, fields: DataFrame, soil_analyses: DataFrame) -> DataFrame:
-    """Field-HAS_SOIL_ANALYSIS→SoilAnalysis (graph_soil_analysis.py:129-138)."""
-    return _field_analysis_edge(
-        fields, soil_analyses, "HAS_SOIL_ANALYSIS", ["field_id", "date", "lab_no"]
-    )
-
-
-@task("has_water_analysis", "edge", deps=["fields", "water_analyses"])
-def has_water_analysis(ctx: Context, fields: DataFrame, water_analyses: DataFrame) -> DataFrame:
-    """Field-HAS_WATER_ANALYSIS→WaterAnalysis (graph_water_analysis.py:110-123)."""
-    return _field_analysis_edge(
-        fields, water_analyses, "HAS_WATER_ANALYSIS",
-        ["field_id", "date", "sample_source"],
-    )
-
-
-@task("has_water_param", "edge", deps=["water_analyses", "water_param_results"])
-def has_water_param(ctx: Context, water_analyses: DataFrame,
-                    water_param_results: DataFrame) -> DataFrame:
-    """WaterAnalysis-HAS_WATER_PARAM→WaterParamResult
-    (graph_water_param_result.py:120-135) — the canonical 'unknown' fill on
-    BOTH sides means zero dangling edges (quirk §2.10.4 fixed; asserted in
-    tests)."""
-    wa = water_analyses.select(
-        S.composite_id("field_id", "date", "sample_source").alias("water_analysis_id")
-    )
-    wpr = water_param_results.withColumn(
-        "wpr_id", S.composite_id("water_analysis_id", "parameter")
-    )
-    return J.edge_join(
-        wa, wpr, on=wa["water_analysis_id"] == wpr["water_analysis_id"],
-        rel_type="HAS_WATER_PARAM", src_key="water_analysis_id", dst_key="wpr_id",
-    )
-
-
-@task("has_nutrient_content", "edge", deps=["product_applications", "app_nutrient_contents"])
-def has_nutrient_content(ctx: Context, product_applications: DataFrame,
-                         app_nutrient_contents: DataFrame) -> DataFrame:
-    """ProductApplication-HAS_NUTRIENT_CONTENT→AppNutrientContent
-    (graph_app_nutrient_content.py:153)."""
-    anc = app_nutrient_contents.select(
-        F.col("product_application_id").alias("anc_pa_id"),
-        S.composite_id("product_application_id", "nutrient").alias("anc_id"),
-    )
-    return J.edge_join(
-        product_applications, anc,
-        on=product_applications["product_application_id"] == anc["anc_pa_id"],
-        rel_type="HAS_NUTRIENT_CONTENT", src_key="product_application_id", dst_key="anc_id",
-    )
+for _name, _rel, _src, _dst, _pairs in EDGES:
+    REGISTRY[_name] = TableDef(_name, "edge", _edge_task(_rel, _src, _dst, _pairs),
+                               [_src, _dst], ends=(_src, _dst))
 
 
 @task("contains_nutrient", "edge",
-      deps=["product_applications", "fertilizer_products", "app_nutrient_contents"])
+      deps=["product_applications", "fertilizer_products", "app_nutrient_contents"],
+      ends=("fertilizer_products", "app_nutrient_contents"))
 def contains_nutrient(ctx: Context, product_applications: DataFrame,
                       fertilizer_products: DataFrame,
                       app_nutrient_contents: DataFrame) -> DataFrame:
     """FertilizerProduct-CONTAINS_NUTRIENT→AppNutrientContent
     (graph_app_nutrient_content.py:155-162) — the conditional edge (J7):
     only products with name+brand present (the Cypher `CALL { WHERE }`
-    subquery) link to the nutrient rows of their applications."""
+    subquery) link to the nutrient rows of their applications. The one edge
+    that is not a two-table join: it goes through product_applications."""
     pa = product_applications.select("product_application_id", "partkey")
-    fp = fertilizer_products.select("partkey", "name", "brand").filter(
+    fp = fertilizer_products.filter(
         F.col("name").isNotNull() & F.col("brand").isNotNull()
-    )
+    ).select("partkey", node_id("fertilizer_products").alias("src"))
     anc = app_nutrient_contents.select(
-        "product_application_id",
-        S.composite_id("product_application_id", "nutrient").alias("anc_id"),
+        "product_application_id", node_id("app_nutrient_contents").alias("dst")
     )
     linked = pa.join(F.broadcast(fp), on="partkey").join(anc, on="product_application_id")
-    return linked.select(
-        F.col("name").alias("src"),
-        F.col("anc_id").alias("dst"),
-        F.lit("CONTAINS_NUTRIENT").alias("rel_type"),
-    )
-
-
-@task("has_weather_day", "edge", deps=["stations", "weather_days"])
-def has_weather_day(ctx: Context, stations: DataFrame, weather_days: DataFrame) -> DataFrame:
-    """Station-HAS_WEATHER_DAY→WeatherDay (graph_weather_day.py:250-257)."""
-    return _station_day_edge(stations, weather_days, "HAS_WEATHER_DAY")
-
-
-@task("has_irrigation_event", "edge", deps=["stations", "irrigation_events"])
-def has_irrigation_event(ctx: Context, stations: DataFrame,
-                         irrigation_events: DataFrame) -> DataFrame:
-    """Station-HAS_IRRIGATION_EVENT→IrrigationEvent
-    (graph_irrigation_event.py:335-343)."""
-    ev = irrigation_events.select(
-        F.col("serial_number").alias("ev_serial"),
-        S.composite_id("serial_number", "start_at").alias("event_id"),
-    )
-    return J.edge_join(
-        stations, ev, on=stations["serial_number"] == ev["ev_serial"],
-        rel_type="HAS_IRRIGATION_EVENT", src_key="serial_number", dst_key="event_id",
-        broadcast_src=True,
-    )
-
-
-@task("has_application", "edge", deps=["fields", "application_events"])
-def has_application(ctx: Context, fields: DataFrame, application_events: DataFrame) -> DataFrame:
-    """Field-HAS_APPLICATION→ApplicationEvent (graph_application_event.py:190-207)."""
-    ae = application_events.withColumn(
-        "ae_id", S.composite_id("field_id", "date", "app_type", "idx")
-    )
-    return J.edge_join(
-        fields, ae, on=fields["field_id"] == ae["field_id"],
-        rel_type="HAS_APPLICATION", src_key="field_id", dst_key="ae_id",
-        broadcast_src=True,
-    )
-
-
-@task("has_product_app", "edge", deps=["application_events", "product_applications"])
-def has_product_app(ctx: Context, application_events: DataFrame,
-                    product_applications: DataFrame) -> DataFrame:
-    """ApplicationEvent-HAS_PRODUCT_APP→ProductApplication
-    (graph_product_application.py:267-287)."""
-    ae = application_events.select(
-        S.composite_id("field_id", "date", "app_type", "idx").alias("ae_id")
-    )
-    return J.edge_join(
-        ae, product_applications,
-        on=ae["ae_id"] == product_applications["application_event_id"],
-        rel_type="HAS_PRODUCT_APP", src_key="ae_id", dst_key="product_application_id",
-    )
-
-
-@task("uses_product", "edge", deps=["product_applications", "fertilizer_products"])
-def uses_product(ctx: Context, product_applications: DataFrame,
-                 fertilizer_products: DataFrame) -> DataFrame:
-    """ProductApplication-USES_PRODUCT→FertilizerProduct
-    (graph_fertilizer_product.py:223-230); P6 existence precondition is
-    already inside the catalog task."""
-    return J.edge_join(
-        product_applications, fertilizer_products,
-        on=product_applications["partkey"] == fertilizer_products["partkey"],
-        rel_type="USES_PRODUCT", src_key="product_application_id", dst_key="name",
-        broadcast_dst=True,
-    )
+    return linked.select("src", "dst", F.lit("CONTAINS_NUTRIENT").alias("rel_type"))
 
 
 # ---------------------------------------------------------------------------

@@ -4,10 +4,14 @@ SURVEY §2.10.3-4)."""
 
 from __future__ import annotations
 
+import functools
+
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_db_spark.plans.pipeline import REGISTRY, build, validate_keys
+from graph_db_spark.checks import dangling_edges
+from graph_db_spark.plans.pipeline import REGISTRY, build, node_id, validate_keys
 
 
 def test_registry_covers_reference_families():
@@ -67,18 +71,22 @@ def test_node_keys_unique(spark, sf_dir):
 
 
 def test_no_dangling_edges(spark, sf_dir):
-    """Every edge endpoint resolves to a node — the check the reference
-    can't pass for HAS_SOIL_PARAM (string vs datetime keys, §2.10.3)."""
-    out = build(spark, sf_dir, only=["soil_analyses", "soil_param_results", "has_soil_param"])
-    from graph_db_spark.functions import scalars as S
-
-    nodes = out["soil_analyses"].select(
-        S.composite_id("field_id", "date", "lab_no").alias("id")
-    )
-    dangling = out["has_soil_param"].join(
-        nodes, on=out["has_soil_param"]["src"] == nodes["id"], how="left_anti"
-    )
-    assert dangling.count() == 0
+    """Every endpoint of every edge resolves to a node of its declared label
+    — the check the reference can't pass for HAS_SOIL_PARAM (string vs
+    datetime keys, §2.10.3). Node-key uniqueness (validate_keys) says
+    nothing about edges, so this is their integrity check."""
+    out = build(spark, sf_dir)
+    ends = []
+    for name, td in REGISTRY.items():
+        if td.kind != "edge":
+            continue
+        for end, label in zip(("src", "dst"), td.ends):
+            nodes = out[label].select(node_id(label).alias("id"))
+            bad = dangling_edges(out[name], nodes, [end], ["id"])
+            ends.append(bad.select(F.lit(f"{name}.{end}").alias("end")))
+    assert len(ends) == 54
+    dangling = functools.reduce(DataFrame.unionByName, ends).groupBy("end").count()
+    assert {r["end"]: r["count"] for r in dangling.collect()} == {}
 
 
 def test_no_dangling_water_params(spark, sf_dir):
@@ -86,15 +94,8 @@ def test_no_dangling_water_params(spark, sf_dir):
     both WaterAnalysis and WaterParamResult means every HAS_WATER_PARAM
     edge resolves (the reference dangles every null-source result)."""
     out = build(spark, sf_dir, only=["water_analyses", "has_water_param"])
-    from graph_db_spark.functions import scalars as S
-
-    nodes = out["water_analyses"].select(
-        S.composite_id("field_id", "date", "sample_source").alias("id")
-    )
-    dangling = out["has_water_param"].join(
-        nodes, on=out["has_water_param"]["src"] == nodes["id"], how="left_anti"
-    )
-    assert dangling.count() == 0
+    nodes = out["water_analyses"].select(node_id("water_analyses").alias("id"))
+    assert dangling_edges(out["has_water_param"], nodes, ["src"], ["id"]).count() == 0
     # and the fill actually occurs (some orders have a null-ish source)
     assert out["water_analyses"].filter(F.col("sample_source") == "unknown").count() > 0
 
