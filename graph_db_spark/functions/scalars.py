@@ -307,13 +307,13 @@ def first_non_empty(*cols: Column | str, default: str = "unknown") -> Column:
 # ---------------------------------------------------------------------------
 
 
-def composite_id(*cols: Column | str, sep: str = ":") -> Column:
+def composite_id(*cols: Column | str) -> Column:
     """``f"{a}:{b}:..."`` natural-key string id.
 
     Parity: /root/reference/app/graph_sap_element_result.py:65-67 and 4 more.
     """
     cs = [(F.col(c) if isinstance(c, str) else c).cast("string") for c in cols]
-    return F.concat_ws(sep, *cs)
+    return F.concat_ws(":", *cs)
 
 
 # ---------------------------------------------------------------------------

@@ -73,7 +73,7 @@ def build_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
     return PropertyGraph(vertices=vertices, edges=edges)
 
 
-def edges_sql(prefix_table: dict[str, str] | None = None) -> str:
+def edges_sql() -> str:
     """The DuckDB-equivalent edge list (same ids/types) for oracle queries."""
     return """
     SELECT concat('R:', n_regionkey) AS src, concat('N:', n_nationkey) AS dst, 'HAS_NATION' AS rel_type FROM nation

@@ -107,34 +107,12 @@ class PropertyGraph:
     vertices: DataFrame  # columns: id, label, ...
     edges: DataFrame  # columns: src, dst, rel_type, ...
 
-    def out_degrees(self) -> DataFrame:
-        """Out-degree per vertex — one shuffle on src."""
-        return self.edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("out_degree"))
-
-    def in_degrees(self) -> DataFrame:
-        return self.edges.groupBy(F.col("dst").alias("id")).agg(F.count(F.lit(1)).alias("in_degree"))
-
     def degrees(self) -> DataFrame:
         """Total degree treating edges as undirected."""
         ends = self.edges.select(F.col("src").alias("id")).unionAll(
             self.edges.select(F.col("dst").alias("id"))
         )
         return ends.groupBy("id").agg(F.count(F.lit(1)).alias("degree"))
-
-    def expand(self, frontier: DataFrame, rel_type: str | None = None) -> DataFrame:
-        """One traversal hop: frontier ``(id, ...)`` → neighbors ``(id, ...)``
-        via edges (optionally restricted to one relationship type). The
-        building block for motif paths — Cypher ``(a)-[:R]->(b)`` becomes
-        ``expand(a_nodes, "R")`` joined to b's label.
-        """
-        e = self.edges
-        if rel_type is not None:
-            e = e.filter(F.col("rel_type") == rel_type)
-        return (
-            frontier.select(F.col("id").alias("src"))
-            .join(e, on="src", how="inner")
-            .select(F.col("dst").alias("id"))
-        )
 
     def find(self, pattern: str, props: dict[str, list[str]] | None = None) -> DataFrame:
         """Composable motif finder — the Cypher ``MATCH`` / GraphFrames

@@ -84,29 +84,11 @@ def portable_hash(col: Column, mult: int = 31) -> Column:
     polynomial ran as an interpreted per-character ``aggregate`` and
     taxed the dedup signature path ~4× at bench scale. DuckDB reproduces
     this hash exactly by parsing the same md5 hex window (``_poly_sql``,
-    plans/queries.py) — verified identical including multibyte code
-    points, which is what keeps MinHash-LSH / SimHash / CMS / KMV / HLL
-    on EXACT hash-matched oracles; xxhash64 has no DuckDB counterpart."""
+    plans/families/q00_base.py) — verified identical including multibyte
+    code points, which is what keeps MinHash-LSH / SimHash / CMS / KMV /
+    HLL on EXACT hash-matched oracles; xxhash64 has no DuckDB
+    counterpart."""
     return _md5_window(F.md5(col), _MD5_WINDOW[mult])
-
-
-HASH_FAMILIES = ("portable", "xxhash64")
-
-
-def _hash31(col: Column, hash_family: str) -> Column:
-    """Token/shingle hash in [0, 2^31-1) for the affine MinHash maps.
-
-    ``portable`` (default everywhere) is the md5-window hash DuckDB
-    replays exactly — it keeps every dedup query on an exact oracle.
-    ``xxhash64`` is the cheapest JVM-native alternative for production
-    clusters that don't need engine-portable replay; a recall-equivalence
-    test (tests/test_llm_ops.py) pins the two families to the same
-    near-dup recall on a planted corpus."""
-    if hash_family == "portable":
-        return portable_hash(col)
-    if hash_family == "xxhash64":
-        return F.pmod(F.xxhash64(col), F.lit(_MINHASH_P)).cast("long")
-    raise ValueError(f"unknown hash_family {hash_family!r}; one of {HASH_FAMILIES}")
 
 
 def minhash_signature_table(
@@ -115,7 +97,6 @@ def minhash_signature_table(
     id_col: str,
     num_hashes: int = 32,
     k: int = 3,
-    hash_family: str = "portable",
 ) -> DataFrame:
     """MinHash signatures as ``(id, sig array<bigint>)``: min over
     shingles of ``(aᵢ·h(s) + bᵢ) mod p``.
@@ -133,7 +114,7 @@ def minhash_signature_table(
     )
     # hash projected ONCE into a column; the 32 min-aggs below reference
     # the materialized value, not the md5 subtree
-    h = sh.select("id", _hash31(F.col("s"), hash_family).alias("h"))
+    h = sh.select("id", portable_hash(F.col("s")).alias("h"))
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % _MINHASH_P).alias(f"m{i}")
         for i, (a, b) in enumerate(minhash_params(num_hashes))
@@ -272,7 +253,6 @@ def minhash_banded(
     num_hashes: int = 32,
     bands: int = 8,
     k: int = 3,
-    hash_family: str = "portable",
 ) -> DataFrame:
     """Banded MinHash index rows ``(id, band, band_sig)`` — the persisted
     LSH index of a corpus. Building this once and storing it (partitioned
@@ -280,7 +260,7 @@ def minhash_banded(
     each new crawl batch joins its own banded rows against the index
     instead of re-signing the corpus."""
     rows_per_band = num_hashes // bands
-    sig = minhash_signature_table(df, text_col, id_col, num_hashes, k, hash_family)
+    sig = minhash_signature_table(df, text_col, id_col, num_hashes, k)
     band_idx = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
     return sig.select("id", band_idx, "sig").select(
         "id",
@@ -299,7 +279,6 @@ def minhash_lsh_candidates_against(
     num_hashes: int = 32,
     bands: int = 8,
     k: int = 3,
-    hash_family: str = "portable",
     max_task_pairs: int = 25_000_000,
 ) -> DataFrame:
     """Incremental LSH dedup: candidate pairs between a NEW batch and an
@@ -310,7 +289,7 @@ def minhash_lsh_candidates_against(
     skew-join decomposition (:func:`_guarded_bucket_cross_join`). The
     at-rest full-corpus sweep (:func:`minhash_lsh_candidates`) and this
     ingest-time path share signature code, so their candidates agree."""
-    new_banded = minhash_banded(new_df, text_col, id_col, num_hashes, bands, k, hash_family)
+    new_banded = minhash_banded(new_df, text_col, id_col, num_hashes, bands, k)
     return (
         _guarded_bucket_cross_join(
             new_banded, index_banded, ["band", "band_sig"], max_task_pairs
@@ -327,7 +306,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 32,
     bands: int = 8,
     k: int = 3,
-    hash_family: str = "portable",
     max_task_pairs: int = 25_000_000,
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing at least one band of the MinHash
@@ -339,7 +317,7 @@ def minhash_lsh_candidates(
     signature collisions (the templated-doc skew-bomb) can't produce a
     straggler task — see :func:`_guarded_bucket_self_join`.
     """
-    banded = minhash_banded(df, text_col, id_col, num_hashes, bands, k, hash_family)
+    banded = minhash_banded(df, text_col, id_col, num_hashes, bands, k)
     return (
         _guarded_bucket_self_join(banded, ["band", "band_sig"], [], max_task_pairs)
         .select("id_a", "id_b")
@@ -389,6 +367,10 @@ def jaccard_pairs(
     prefer :func:`minhash_lsh_candidates` to propose pairs and use this
     only to verify them — enforced by :func:`guard_block_pairs`, which
     raises when any block's pair count exceeds ``max_block_pairs``.
+
+    The filter reads the raw value: a caller that rounds ``jaccard``
+    must round after this filter, or raw values just under ``threshold``
+    would round up into the result.
     """
     toks = df.select(
         F.col(id_col).alias("id"),
@@ -396,11 +378,26 @@ def jaccard_pairs(
         F.array_distinct(tokens(F.col(text_col))).alias("toks"),
     ).withColumn("sz", F.size("toks"))
     guard_block_pairs(toks, "blk", max_block_pairs)
-    a, b = toks.alias("a"), toks.alias("b")
+    # blocks are few, so a join keyed on blk alone runs ~serially: bucket
+    # side a by id-hash and replicate side b across the buckets so the join
+    # key (blk, bkt) has enough distinct values to parallelize.
+    nb = 32
+    a = (
+        toks.withColumn("bkt", F.pmod(F.xxhash64("id"), F.lit(nb)))
+        .repartition(nb, "blk", "bkt")  # a small source is one task;
+        .alias("a")                     # spread the probe side explicitly
+    )
+    b = toks.withColumn(
+        "bkt", F.explode(F.sequence(F.lit(0), F.lit(nb - 1)).cast("array<bigint>"))
+    ).alias("b")
+    cond = [
+        F.col("a.blk") == F.col("b.blk"),
+        F.col("a.bkt") == F.col("b.bkt"),
+        F.col("a.id") < F.col("b.id"),
+    ]
     # exact length prefilter: jaccard <= min(|A|,|B|)/max(|A|,|B|), so a
     # threshold t admits only pairs with |A| >= t*|B| and |B| >= t*|A| —
     # pruned inside the join, before any array_intersect evaluates.
-    cond = [F.col("a.blk") == F.col("b.blk"), F.col("a.id") < F.col("b.id")]
     if threshold > 0:
         cond += [
             F.col("a.sz").cast("double") >= threshold * F.col("b.sz"),
@@ -410,30 +407,23 @@ def jaccard_pairs(
         F.col("a.id").alias("id_a"),
         F.col("b.id").alias("id_b"),
         F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks"))).cast("double").alias("inter"),
-        (F.col("a.sz") + F.col("b.sz")).cast("double").alias("szsum"),
+        (F.col("a.sz") + F.col("b.sz")).alias("szsum"),
     )
-    union = F.col("szsum") - F.col("inter")
-    jac = F.when(union > 0, F.col("inter") / union).otherwise(F.lit(0.0))
+    # every token array has >= 1 element, so the union is never 0; a NULL
+    # text's NULL size propagates and its pairs fail the filter
+    jac = F.col("inter") / (F.col("szsum") - F.col("inter"))
     return pairs.select("id_a", "id_b", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
 
 
-def _token_words(t: Column, hash_family: str) -> tuple[Column, Column]:
+def _token_words(t: Column) -> tuple[Column, Column]:
     """Two 32-bit pseudo-random words per token — the 64 SimHash bit
-    decisions. ``portable``: hex windows 1-8 / 9-16 of one md5 (DuckDB
-    parses the identical windows, keeping the oracle exact). ``xxhash64``:
-    low/high halves of one xxhash64."""
-    if hash_family == "portable":
-        hexc = F.md5(t)
-        w1 = F.conv(F.substring(hexc, 1, 8), 16, 10).cast("long")
-        w2 = F.conv(F.substring(hexc, 9, 8), 16, 10).cast("long")
-    elif hash_family == "xxhash64":
-        h = F.xxhash64(t)
-        w1 = h.bitwiseAND(F.lit(0xFFFFFFFF).cast("long"))
-        w2 = F.shiftright(h, 32).bitwiseAND(F.lit(0xFFFFFFFF).cast("long"))
-    else:
-        raise ValueError(f"unknown hash_family {hash_family!r}; one of {HASH_FAMILIES}")
+    decisions: hex windows 1-8 / 9-16 of one md5 (DuckDB parses the
+    identical windows, keeping the oracle exact)."""
+    hexc = F.md5(t)
+    w1 = F.conv(F.substring(hexc, 1, 8), 16, 10).cast("long")
+    w2 = F.conv(F.substring(hexc, 9, 8), 16, 10).cast("long")
     return w1, w2
 
 
@@ -454,7 +444,6 @@ def simhash_table(
     text_col: str,
     id_col: str,
     bits: int = 64,
-    hash_family: str = "portable",
 ) -> DataFrame:
     """SimHash signatures as ``(id, sig bigint)``: bit i of the signature
     is the sign of Σ_tokens (±1), +1 iff bit i of the token's 64
@@ -478,7 +467,7 @@ def simhash_table(
             F.array_distinct(tokens(F.coalesce(F.col(text_col), F.lit(""))))
         ).alias("t"),
     )
-    w1, w2 = _token_words(F.col("t"), hash_family)
+    w1, w2 = _token_words(F.col("t"))
     words = tok.select("id", w1.alias("w1"), w2.alias("w2"))
     # The 64 per-bit aggregates and the 64-term sign pack are generated
     # as SQL TEXT and parsed once per expression: building them Column-
@@ -513,7 +502,7 @@ def simhash(text: Column | str, bits: int = 64) -> Column:
     words = F.transform(
         toks,
         lambda t: F.struct(
-            *(w.alias(n) for w, n in zip(_token_words(t, "portable"), ("w1", "w2")))
+            *(w.alias(n) for w, n in zip(_token_words(t), ("w1", "w2")))
         ),
     )
     positions = F.sequence(F.lit(0), F.lit(bits - 1))
@@ -549,7 +538,6 @@ def simhash_near_dups(
     id_col: str,
     max_hamming: int = 3,
     bits: int = 64,
-    hash_family: str = "portable",
     max_task_pairs: int = 25_000_000,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming`` using
@@ -560,7 +548,7 @@ def simhash_near_dups(
     are salt-and-split — see :func:`_guarded_bucket_self_join`."""
     nblocks = max_hamming + 1
     block_bits = bits // nblocks
-    sig = simhash_table(df, text_col, id_col, bits, hash_family)
+    sig = simhash_table(df, text_col, id_col, bits)
     blk_idx = F.explode(F.sequence(F.lit(0), F.lit(nblocks - 1))).alias("blk")
     mask = F.shiftleft(F.lit(1).cast("bigint"), block_bits) - 1
     blocked = sig.select("id", "sig", blk_idx).select(
@@ -588,7 +576,6 @@ def near_dup_clusters(
     num_hashes: int = 32,
     bands: int = 8,
     k: int = 3,
-    hash_family: str = "portable",
     max_task_pairs: int = 25_000_000,
 ) -> DataFrame:
     """End-to-end near-duplicate clustering — the training-data dedup
@@ -609,7 +596,7 @@ def near_dup_clusters(
     is the filtered corpus.
     """
     cands = minhash_lsh_candidates(
-        df, text_col, id_col, num_hashes, bands, k, hash_family, max_task_pairs
+        df, text_col, id_col, num_hashes, bands, k, max_task_pairs
     )
     toks = df.select(
         F.col(id_col).alias("id"), F.array_distinct(tokens(F.col(text_col))).alias("toks")

@@ -82,7 +82,8 @@ def asof_join(
 
     For each left row, pick the single right row (sharing ``on`` keys) whose
     ``right_ts`` minimizes ``abs(left_ts - right_ts)``; ties broken by
-    ``tiebreak_cols`` ascending.
+    ``tiebreak_cols`` ascending. ``direction="backward"`` only considers
+    right rows at or before the left timestamp.
 
     Parity: the Neo4j read-back + argmin pick
     /root/reference/app/graph_product_application.py:156-214 (argmin
@@ -106,10 +107,10 @@ def asof_join(
     diff = F.abs(lt.cast("double") - rt.cast("double"))
     if direction == "backward":
         range_cond = rt <= lt
-    elif direction == "forward":
-        range_cond = rt >= lt
-    else:
+    elif direction == "nearest":
         range_cond = F.lit(True)
+    else:
+        raise ValueError(f"unknown direction={direction!r}; 'nearest' or 'backward'")
     if tolerance_seconds is not None:
         range_cond = range_cond & (diff <= F.lit(float(tolerance_seconds)))
     joined = left2.join(right2, on=[*cond, range_cond], how="left")
@@ -130,17 +131,16 @@ def enrich_join(
     lookup: DataFrame,
     on: list[str],
     fill: dict[str, str],
-    broadcast_lookup_side: bool = True,
 ) -> DataFrame:
     """J4 — enrichment left join: ``fill[target] = source`` columns from the
-    lookup patch nulls in the base (``coalesce(base, lookup)``).
+    lookup patch nulls in the base (``coalesce(base, lookup)``). The lookup
+    side is broadcast.
 
     Parity: inventories lacking inline nutrients pull them from
     FertilizerProduct by (name, brand) —
     /root/reference/app/graph_app_nutrient_content.py:306-354.
     """
-    right = F.broadcast(lookup) if broadcast_lookup_side else lookup
-    out = base.join(right, on=on, how="left")
+    out = base.join(F.broadcast(lookup), on=on, how="left")
     for target, source in fill.items():
         out = out.withColumn(target, F.coalesce(base[target], lookup[source]))
     return out.select([out[c] for c in base.columns])
@@ -297,26 +297,15 @@ def interval_overlap_join(
     left_end: str,
     right_start: str,
     right_end: str,
-    how: str = "naive",
-    bucket_seconds: int = 7 * 86400,
 ) -> DataFrame:
     """Range join: pairs of rows (sharing ``on`` keys) whose
     [start, end] intervals OVERLAP (closed intervals: touching endpoints
     count). Returns left columns + right columns (right's renamed with a
     ``r_`` prefix on collision).
 
-    ``how="naive"``: equi-join on the keys + the two range predicates —
-    fine when per-key row counts are modest (the fan-out is the true
-    overlap count plus the pruned range pairs).
-
-    ``how="bucketed"``: the scale path for hot keys and wide time spans —
-    each interval explodes to the coarse time buckets it covers, the join
-    runs on (keys, bucket) so only same-bucket candidates ever pair, and
-    a distinct + the exact overlap predicate de-duplicate and verify.
-    Fan-out is bounded by interval_length/bucket_seconds per row instead
-    of the per-key row count — the same discipline as
-    :func:`asof_join_bucketed`. Result-identical to naive
-    (hypothesis-tested)."""
+    An equi-join on the keys plus the two range predicates: the fan-out
+    is the true overlap count plus the pruned range pairs, fine while
+    per-key row counts are modest."""
     l2 = left.select(
         *[F.col(c) for c in left.columns],
         F.col(left_start).cast("timestamp").alias("__ls"),
@@ -332,30 +321,7 @@ def interval_overlap_join(
     )
     overlap = (F.col("__ls") <= F.col("__re")) & (F.col("__rs") <= F.col("__le"))
     out_cols = [c for c in left.columns] + [rcols[c] for c in right.columns if rcols[c] not in on]
-    if how == "naive":
-        return l2.join(r2, on=on).filter(overlap).select(*out_cols)
-    if how != "bucketed":
-        raise ValueError(f"unknown how={how!r}; 'naive' or 'bucketed'")
-    b = F.lit(bucket_seconds)
-
-    def buckets(s: str, e: str):
-        lo = F.floor(F.col(s).cast("double") / b)
-        hi = F.floor(F.col(e).cast("double") / b)
-        return F.explode(F.sequence(lo.cast("long"), hi.cast("long"))).alias("__bkt")
-
-    lb = l2.select("*", buckets("__ls", "__le"))
-    rb = r2.select("*", buckets("__rs", "__re"))
-    # a pair spanning k buckets appears k times — dedup on the full pair
-    # identity (keys, every output column, both interval bounds). Rows
-    # indistinguishable on ALL of those collapse (set semantics; the
-    # naive path keeps bag semantics for fully-duplicate input rows —
-    # carry a unique id column if that distinction matters).
-    return (
-        lb.join(rb, on=[*on, "__bkt"])
-        .filter(overlap)
-        .dropDuplicates([*out_cols, "__ls", "__le", "__rs", "__re"])
-        .select(*out_cols)
-    )
+    return l2.join(r2, on=on).filter(overlap).select(*out_cols)
 
 
 def grid_distance_join(

@@ -175,46 +175,25 @@ def decode_bmp(blob: bytes) -> tuple[int, int, float]:
     return width, height, (total / n if n else 0.0)
 
 
-# Pluggable image-decoder registry: format → (sniff(bytes)->bool,
-# decode(bytes)->(width, height, mean_px)). Production swaps in
-# PIL/libjpeg/ffmpeg-backed decoders for JPEG/WebP/... with
-# ``register_image_decoder`` and NO change to the Arrow plumbing — the
-# mapInPandas batch shape, schema, and flag-don't-fail contract are
-# decoder-agnostic. The stdlib PNG/BMP decoders are the tested defaults.
-IMAGE_DECODERS: dict[str, tuple] = {}
+# The image decoders: (sniff(bytes) -> bool, decode(bytes) -> (width,
+# height, mean_px)), tried in order. ``sniff`` reads header bytes only.
+_IMAGE_FORMATS = (
+    (lambda b: b[:8] == _PNG_SIG, decode_png),
+    (lambda b: b[:2] == b"BM", decode_bmp),
+)
 
 
-def register_image_decoder(fmt: str, sniff, decode) -> None:
-    """Register (or replace) a decoder. ``sniff`` must be cheap (header
-    bytes only); ``decode`` returns (width, height, mean_px) or raises —
-    a raise marks the row ``feature_ok=0`` instead of failing the job.
-    Registered callables are captured by value into each query's closure
-    (cloudpickle), so registration at driver runtime reaches executors."""
-    IMAGE_DECODERS[fmt] = (sniff, decode)
-
-
-def unregister_image_decoder(fmt: str) -> None:
-    IMAGE_DECODERS.pop(fmt, None)
-
-
-register_image_decoder("png", lambda b: b[:8] == _PNG_SIG, decode_png)
-register_image_decoder("bmp", lambda b: b[:2] == b"BM", decode_bmp)
-
-
-def decode_image_batch(
-    content: "pd.Series", fake: bool = False, decoders: dict | None = None
-) -> "pd.DataFrame":
+def decode_image_batch(content: "pd.Series", fake: bool = False) -> "pd.DataFrame":
     """Decode a batch of image bytes → (n_bytes, content_hash, width,
     height, mean_px, feature_ok).
 
-    Real mode tries each registered decoder (stdlib PNG + uncompressed
-    BMP by default; see :func:`register_image_decoder`); rows no decoder
-    claims come back with ``feature_ok=0`` and -1 dimensions — the
-    flag-don't-fail contract for undecodable media at scale. ``fake=True``
-    runs the byte-statistics stand-in (same output shape, no format
-    requirement) used to exercise the distributed plumbing.
+    Real mode tries the stdlib PNG and uncompressed BMP decoders; rows
+    neither claims, or whose decode raises, come back with
+    ``feature_ok=0`` and -1 dimensions — the flag-don't-fail contract for
+    undecodable media. ``fake=True`` runs the byte-statistics stand-in
+    (same output shape, no format requirement) used to exercise the
+    distributed plumbing.
     """
-    decoders = IMAGE_DECODERS if decoders is None else decoders
     sizes, hashes, widths, heights, means, oks = [], [], [], [], [], []
     for blob in content:
         b = bytes(blob) if blob is not None else b""
@@ -227,7 +206,7 @@ def decode_image_batch(
             oks.append(1 if b else 0)
             continue
         try:
-            for sniff, decode in decoders.values():
+            for sniff, decode in _IMAGE_FORMATS:
                 if sniff(b):
                     w, h, m = decode(b)
                     break
@@ -258,14 +237,10 @@ def extract_features(media: DataFrame, fake: bool = False) -> DataFrame:
     """Feature extraction over media rows via ``mapInPandas`` — Arrow
     batches in, Arrow batches out; the binary column is dropped on output
     so nothing downstream shuffles bytes."""
-    # snapshot the registry BY VALUE: the closure (not the re-imported
-    # module) ships to executors, so decoders registered at driver
-    # runtime are honored there
-    decoders = dict(IMAGE_DECODERS)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = decode_image_batch(pdf["content"], fake=fake, decoders=decoders)
+            feats = decode_image_batch(pdf["content"], fake=fake)
             out = pd.DataFrame(
                 {
                     "media_id": pdf["media_id"].values,

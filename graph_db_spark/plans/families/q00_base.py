@@ -1,9 +1,7 @@
 """Shared query-registry core: the QUERIES/ORACLE_SQL dicts, the
 @register decorator, and the cross-family helper expressions
 (r4 rounding, timestamp formatting, the portable-hash SQL
-replica). Mechanically split out of plans/queries.py in r12 —
-statement order, names, and bodies are byte-identical to the
-monolith; only module boundaries were added."""
+replica)."""
 
 from __future__ import annotations
 

@@ -1,7 +1,4 @@
-"""Query inventory part 01 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 54 queries:
+"""Registers 54 queries:
 
   event_day_stats, event_day_stats_zero_null, proj_rename
   null_guard_filter, set_membership, edge_customer_order
@@ -1162,50 +1159,10 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (guard_block_pairs), delegating huge corpora to the LSH-propose path
     (near_dup_clusters)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.col("doc_id").alias("id"),
-        F.col("lang").alias("blk"),
-        F.array_distinct(TX.tokens(F.col("text"))).alias("toks"),
-    ).withColumn("sz", F.size("toks"))
-    D.guard_block_pairs(toks, "blk", max_block_pairs=25_000_000)
-    # language blocks are few, so a join keyed on blk alone runs ~serially;
-    # bucket side a by id-hash and replicate side b across the buckets so the
-    # join key (blk, bucket) has enough distinct values to parallelize.
-    nb = 32
-    a = (
-        toks.withColumn("bkt", F.pmod(F.xxhash64("id"), F.lit(nb)))
-        .repartition(nb, "blk", "bkt")  # the source is one small file → one
-        .alias("a")                     # task; spread the probe side explicitly
-    )
-    b = toks.withColumn(
-        "bkt", F.explode(F.sequence(F.lit(0), F.lit(nb - 1)).cast("array<bigint>"))
-    ).alias("b")
-    # exact length prefilter: jaccard <= min(|A|,|B|)/max(|A|,|B|), so
-    # threshold t requires |A| >= t*|B| and |B| >= t*|A| — prunes the pair
-    # space inside the join before any array_intersect runs.
-    pairs = a.join(
-        b,
-        on=[
-            F.col("a.blk") == F.col("b.blk"),
-            F.col("a.bkt") == F.col("b.bkt"),
-            F.col("a.id") < F.col("b.id"),
-            F.col("a.sz").cast("double") >= 0.8 * F.col("b.sz"),
-            F.col("b.sz").cast("double") >= 0.8 * F.col("a.sz"),
-        ],
-    ).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks"))).cast("double").alias("inter"),
-        (F.col("a.sz") + F.col("b.sz")).alias("szsum"),
-    )
-    jac = F.col("inter") / (F.col("szsum") - F.col("inter"))
-    # filter on the RAW jaccard (as the oracle does), round only in the
-    # projection — rounding first would admit raw values in [0.79995, 0.8).
-    return (
-        pairs.withColumn("_raw", jac)
-        .filter(F.col("_raw") >= 0.8)
-        .select("id_a", "id_b", r4(F.col("_raw")).alias("jaccard"))
-    )
+    pairs = D.jaccard_pairs(docs, "text", "doc_id", block_col="lang", threshold=0.8)
+    # jaccard_pairs filters on the RAW value (as the oracle does); rounding
+    # first would admit raw values in [0.79995, 0.8).
+    return pairs.select("id_a", "id_b", r4(F.col("jaccard")).alias("jaccard"))
 
 
 @register("minhash_lsh_dedup")  # EXACT oracle assigned post-def (portable hash)

@@ -1,7 +1,4 @@
-"""Query inventory part 02 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 51 queries:
+"""Registers 51 queries:
 
   pipeline_water_param_results, pipeline_app_nutrient_contents, pipeline_depth_points
   tz_offset_map, tz_zone_correct_offsets, datetime_components

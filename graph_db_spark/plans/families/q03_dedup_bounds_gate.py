@@ -1,7 +1,4 @@
-"""Query inventory part 03 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 24 queries:
+"""Registers 24 queries:
 
   streaming_enriched_daily, salted_skew_join, cooccurrence_triangles
   shortest_paths_from_regions, minhash_recall_bound, simhash_completeness_bound
@@ -853,7 +850,7 @@ ORACLE_SQL["minhash_lsh_dedup"] = f"""
 
 def _hex_window_sql(expr: str, off: int) -> str:
     """DuckDB replica of an 8-hex-digit md5 window parsed as a 32-bit
-    integer (operators/dedup.py:_token_words, portable family) — the raw
+    integer (operators/dedup.py:_token_words) — the raw
     window, no mod, so all 32 bits stay usable as bit decisions."""
     return (
         f"list_reduce(list_prepend(CAST(0 AS BIGINT), "

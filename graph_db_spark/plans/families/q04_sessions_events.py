@@ -1,7 +1,4 @@
-"""Query inventory part 04 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 37 queries:
+"""Registers 37 queries:
 
   session_overlap_pairs, dow_seasonality, degree_histogram
   rolling_anomaly_flags, source_dup_rate, event_transition_matrix
@@ -71,10 +68,8 @@ def session_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range join — per user, pairs of CLICK sessions and ERROR sessions
     whose time intervals overlap ("were errors happening while the user
     was actively clicking?"). Composes the sessionizer with the
-    ``interval_overlap_join`` operator (operators/joins.py): naive keyed
-    range join here — per-key fan-out is sessions/user — with the
-    bucketed variant as the hot-key scale path (hypothesis-tested
-    result-identical)."""
+    ``interval_overlap_join`` operator (operators/joins.py): a keyed
+    range join — per-key fan-out is sessions/user."""
     ev = load_table(spark, sf_dir, "events")
 
     def sess(t: str) -> DataFrame:

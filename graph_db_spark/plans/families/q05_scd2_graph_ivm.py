@@ -1,7 +1,4 @@
-"""Query inventory part 05 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 27 queries:
+"""Registers 27 queries:
 
   scd2_user_state, dataset_split_assign, corpus_shard_plan
   robust_outliers, link_prediction_adamic_adar, label_propagation

@@ -1,7 +1,4 @@
-"""Query inventory part 06 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 31 queries:
+"""Registers 31 queries:
 
   curation_provenance, curated_training_corpus, streaming_left_outer_attribution
   streaming_full_outer_attribution, motif_props_projection, shortest_path_routes

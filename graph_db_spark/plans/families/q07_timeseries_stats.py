@@ -1,7 +1,4 @@
-"""Query inventory part 07 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 25 queries:
+"""Registers 25 queries:
 
   market_basket_lift, ewma_smoothing, autocorrelation_lags
   theil_sen_trend, lineitem_correlations, zipf_law_fit

@@ -1,7 +1,4 @@
-"""Query inventory part 08 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 24 queries:
+"""Registers 24 queries:
 
   embedding_eval_contamination, jaccard_link_prediction, sq8_quantization_bound
   k_anonymity_audit, kaplan_meier_churn, maximal_independent_set

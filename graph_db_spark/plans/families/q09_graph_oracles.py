@@ -1,7 +1,4 @@
-"""Query inventory part 09 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 25 queries:
+"""Registers 25 queries:
 
   hyperanf_neighborhood, landmark_distance_oracle, betweenness_landmarks
   random_walk_sampling, hierarchy_subtree_rollup, kcenter_coreset

@@ -1,7 +1,4 @@
-"""Query inventory part 10 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 23 queries:
+"""Registers 23 queries:
 
   welch_t_test, levene_variance_test, sprt_sequential_decision
   katz_walk_centrality, region_trade_assortativity, association_rule_triples

@@ -1,7 +1,4 @@
-"""Query inventory part 11 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 22 queries:
+"""Registers 22 queries:
 
   corpus_diversity_indices, open_order_backlog, kendall_tau_b
   theil_index_decomposition, ndcg_label_retrieval, cohens_kappa_raters

@@ -1,7 +1,4 @@
-"""Query inventory part 12 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 17 queries:
+"""Registers 17 queries:
 
   cumulative_gains_deciles, regression_stump_split, position_based_attribution
   abc_inventory_classes, benjamini_hochberg_fdr, quantile_treatment_effect

@@ -1,7 +1,4 @@
-"""Query inventory part 13 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 15 queries:
+"""Registers 15 queries:
 
   durbin_watson_trend, max_drawdown_daily, chao1_vocab_richness
   cmh_return_rate, shapley_channel_attribution, wasserstein_price_shift

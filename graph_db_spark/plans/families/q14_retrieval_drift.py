@@ -1,7 +1,4 @@
-"""Query inventory part 14 (mechanical r12 split of
-plans/queries.py — statement order and bodies byte-identical to
-the monolith; registration order is preserved by the aggregator's
-import order). Registers 10 queries:
+"""Registers 10 queries:
 
   mrr_hit_at_k_ivf, relative_risk_ci, huber_onestep_location
   ipf_raking_margins, ab_power_sample_size, page_hinkley_drift

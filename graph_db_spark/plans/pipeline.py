@@ -703,9 +703,8 @@ def water_analyses(ctx: Context, fields: DataFrame) -> DataFrame:
     )
 
 
-@task("water_param_results", "node", deps=["fields"],
-      keys=["water_analysis_id", "parameter"])
-def water_param_results(ctx: Context, fields: DataFrame) -> DataFrame:
+@task("water_param_results", "node", keys=["water_analysis_id", "parameter"])
+def water_param_results(ctx: Context) -> DataFrame:
     """WaterParamResult nodes (graph_water_param_result.py:78-118):
     parameter keys normalized lowercase/trim (_norm_param :23-27), values
     with the inequality-trimmed float (F4), water_analysis_id = _make_wa_id

@@ -45,7 +45,6 @@ def run(
     start: str | None = None,
     end: str | None = None,
     mode: str = "upsert",
-    check_keys: bool = True,
 ) -> dict[str, float]:
     """Materialize the selected DAG targets to ``out_dir``; returns
     {task → seconds}. Library entry so tests/drivers skip argparse."""
@@ -63,7 +62,7 @@ def run(
             merge_into_parquet_table(df, path, td.keys)
         else:
             write_table(df, path, keys=td.keys or None)
-        if check_keys and td.kind == "node" and td.keys:
+        if td.kind == "node" and td.keys:
             assert_unique_key(spark.read.parquet(path), td.keys)
         timings[name] = round(time.monotonic() - t0, 3)
         print(f"[TIMER] {name}: {timings[name]}s")

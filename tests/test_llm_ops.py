@@ -552,7 +552,7 @@ def skewed_docs_df(spark, n=300, n_near=6):
     filler = " ".join(f"w{j}token{j * 7 % 13}" for j in range(48))
     for j in range(n_near):
         # long shared body (sign margins wide) + one differing token so the
-        # near-dup stays within Hamming 3 of its partner for any hash family
+        # near-dup stays within Hamming 3 of its partner
         t = f"unique document number {j} {filler} body"
         rows.append((1000 + 2 * j, t))
         rows.append((1001 + 2 * j, t.replace("body", "tail")))
@@ -611,59 +611,26 @@ def test_simhash_column_equals_table(spark):
     assert col_sigs == tbl_sigs
 
 
-def test_hash_families_equivalent_recall(spark):
-    """The portable (md5-window, oracle-exact) and xxhash64 (production)
-    families must recover the same planted near-dup pairs end-to-end —
-    the contract that lets production swap the hash without changing
-    dedup behavior."""
+def test_planted_near_dup_recall(spark):
+    """MinHash-LSH clustering and SimHash must both recover every planted
+    near-dup pair end-to-end."""
     df = skewed_docs_df(spark, n=3, n_near=8)  # 8 planted near-dup pairs + 1 dup-triple
     planted = {(1000 + 2 * j, 1001 + 2 * j) for j in range(8)}
-    for family in D.HASH_FAMILIES:
-        clusters = D.near_dup_clusters(df, "text", "doc_id", threshold=0.6, hash_family=family)
-        canon = {int(r["id"]): r["canonical_id"] for r in clusters.collect()}
-        for x, y in planted:  # planted near-dups may transitively merge
-            assert x in canon and y in canon and canon[x] == canon[y], (
-                f"{family} did not cluster planted pair {(x, y)}"
-            )
-        # max_hamming=7 → 8 blocks × 8 bits: full 64-bit coverage, and wide
-        # enough that a 1-token edit of a ~55-token doc stays inside for
-        # either hash family (deterministic — no flake)
-        sim_pairs = {
-            (r["id_a"], r["id_b"])
-            for r in D.simhash_near_dups(
-                df, "text", "doc_id", max_hamming=7, hash_family=family
-            ).collect()
-        }
-        for pair in planted:
-            assert pair in sim_pairs, f"simhash[{family}] missed planted pair {pair}"
-
-
-def test_image_decoder_seam_external_decoder(spark):
-    """A decoder registered at driver runtime (the PIL/ffmpeg production
-    seam) must flow through extract_features unchanged — same Arrow
-    plumbing, schema, and flag-don't-fail contract — and removal must
-    restore the stdlib-only behavior."""
-    from graph_db_spark.operators import multimodal as MM
-
-    blob = b"FAKEIMG!" + bytes(range(16))
-    rows = [
-        (1, "image", bytearray(blob), "image/x-fake", -1, -1, -1),
-        (2, "image", bytearray(b"\x00not-an-image"), "application/octet-stream", -1, -1, -1),
-    ]
-    media = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
-    MM.register_image_decoder(
-        "fakefmt", lambda b: b[:8] == b"FAKEIMG!", lambda b: (7, 9, 42.5)
-    )
-    try:
-        feats = {r["media_id"]: r for r in MM.extract_features(media).collect()}
-        assert (feats[1]["width"], feats[1]["height"], feats[1]["mean_px"]) == (7, 9, 42.5)
-        assert feats[1]["feature_ok"] == 1
-        assert feats[2]["feature_ok"] == 0  # unclaimed bytes still flagged
-    finally:
-        MM.unregister_image_decoder("fakefmt")
-    # stdlib-only again: the FAKE blob is now undecodable, flagged not fatal
-    feats = {r["media_id"]: r for r in MM.extract_features(media).collect()}
-    assert feats[1]["feature_ok"] == 0
+    clusters = D.near_dup_clusters(df, "text", "doc_id", threshold=0.6)
+    canon = {int(r["id"]): r["canonical_id"] for r in clusters.collect()}
+    for x, y in planted:  # planted near-dups may transitively merge
+        assert x in canon and y in canon and canon[x] == canon[y], (
+            f"did not cluster planted pair {(x, y)}"
+        )
+    # max_hamming=7 → 8 blocks × 8 bits: full 64-bit coverage, and wide
+    # enough that a 1-token edit of a ~55-token doc stays inside
+    # (deterministic — no flake)
+    sim_pairs = {
+        (r["id_a"], r["id_b"])
+        for r in D.simhash_near_dups(df, "text", "doc_id", max_hamming=7).collect()
+    }
+    for pair in planted:
+        assert pair in sim_pairs, f"simhash missed planted pair {pair}"
 
 
 def test_positional_ngrams_keep_repeats(spark):

@@ -86,6 +86,35 @@ def test_asof_join_no_match_keeps_left(spark):
     assert out == {1: "x", 2: None}
 
 
+def test_asof_join_rejects_unknown_direction(spark):
+    left = spark.createDataFrame([(1, ts(0))], "k int, lt timestamp")
+    right = spark.createDataFrame([(1, ts(1))], "k int, rt timestamp")
+    with pytest.raises(ValueError, match="direction"):
+        J.asof_join(left, right, ["k"], "lt", "rt", direction="forward")
+
+
+def test_interval_overlap_join_closed_intervals(spark):
+    """Closed intervals: a right interval that starts exactly where the
+    left one ends (or ends where it starts) overlaps; one a minute past
+    does not, and keys never cross."""
+    left = spark.createDataFrame([(1, ts(10), ts(20), "L")], "k int, s timestamp, e timestamp, tag string")
+    right = spark.createDataFrame(
+        [
+            (1, ts(20), ts(30), "touch_end"),
+            (1, ts(0), ts(10), "touch_start"),
+            (1, ts(12), ts(15), "inside"),
+            (1, ts(21), ts(30), "after"),
+            (2, ts(10), ts(20), "other_key"),
+        ],
+        "k int, rs timestamp, re timestamp, tag string",
+    )
+    out = J.interval_overlap_join(
+        left, right, on=["k"], left_start="s", left_end="e", right_start="rs", right_end="re"
+    )
+    assert out.columns == ["k", "s", "e", "tag", "rs", "re", "r_tag"]
+    assert sorted(r["r_tag"] for r in out.collect()) == ["inside", "touch_end", "touch_start"]
+
+
 def test_interval_agg_join_disjoint_contract(spark):
     pts = spark.createDataFrame([(1, ts(1), 10.0)], "u int, t timestamp, v double")
     iv = spark.createDataFrame([(1, ts(0), ts(2))], "u int, s timestamp, e timestamp")

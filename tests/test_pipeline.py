@@ -162,3 +162,29 @@ def test_product_idx_deterministic(spark, sf_dir):
     a = {tuple(r) for r in out1.collect()}
     b = {tuple(r) for r in out2.collect()}
     assert a == b
+
+
+def test_task_builders_read_their_declared_deps():
+    """Every @task builder reads each dependency it declares: a declared
+    but unread dep records a DAG edge that does not exist and makes
+    build(only=[...]) resolve a task for nothing. Checked on the source by
+    name lookup in each builder body — no Spark needed."""
+    import ast
+    import inspect
+
+    from graph_db_spark.plans import pipeline
+
+    checked = 0
+    for fn in ast.parse(inspect.getsource(pipeline)).body:
+        for dec in getattr(fn, "decorator_list", []):
+            if not (isinstance(dec, ast.Call) and getattr(dec.func, "id", None) == "task"):
+                continue
+            deps = [ast.literal_eval(k.value) for k in dec.keywords if k.arg == "deps"]
+            deps = deps[0] if deps else (ast.literal_eval(dec.args[2]) if len(dec.args) > 2 else [])
+            read = {
+                n.id for stmt in fn.body for n in ast.walk(stmt)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+            }
+            assert not set(deps) - read, f"{fn.name} never reads {sorted(set(deps) - read)}"
+            checked += 1
+    assert checked == len(REGISTRY) - len(pipeline.EDGES)  # every hand-written task seen

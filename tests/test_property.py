@@ -260,54 +260,6 @@ def test_positional_ngrams_match_python_reference(spark, texts, n):
         assert r["g"] == expect
 
 
-interval_case = st.tuples(
-    st.lists(  # left intervals: (key, start_s, length_s)
-        st.tuples(st.integers(0, 2), st.integers(0, 5000), st.integers(0, 2000)),
-        min_size=1, max_size=10,
-    ),
-    st.lists(  # right intervals
-        st.tuples(st.integers(0, 2), st.integers(0, 5000), st.integers(0, 2000)),
-        min_size=0, max_size=10,
-    ),
-    st.sampled_from([300, 900, 3600]),  # bucket widths (seconds)
-)
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
-)
-@given(case=interval_case)
-def test_bucketed_interval_overlap_equals_naive(spark, case):
-    """The bucketed range join must return exactly the naive join's
-    overlap pairs — including intervals spanning many buckets and
-    touching endpoints."""
-    from graph_db_spark.operators.joins import interval_overlap_join
-
-    left_rows, right_rows, bucket = case
-    left = spark.createDataFrame(
-        [(k, _ts(s), _ts(s + ln), i) for i, (k, s, ln) in enumerate(left_rows)],
-        ["k", "ls", "le", "lid"],
-    )
-    right = spark.createDataFrame(
-        [(k, _ts(s), _ts(s + ln), i) for i, (k, s, ln) in enumerate(right_rows)],
-        ["k", "rs", "re", "rid"],
-    ) if right_rows else spark.createDataFrame([], "k int, rs timestamp, re timestamp, rid int")
-    kw = dict(on=["k"], left_start="ls", left_end="le", right_start="rs", right_end="re")
-    naive = {
-        (r["k"], r["lid"], r["rid"])
-        for r in interval_overlap_join(left, right, how="naive", **kw).collect()
-    }
-    bucketed = {
-        (r["k"], r["lid"], r["rid"])
-        for r in interval_overlap_join(
-            left, right, how="bucketed", bucket_seconds=bucket, **kw
-        ).collect()
-    }
-    assert bucketed == naive
-
-
 bucket_case = st.tuples(
     # docs: groups of identical texts (group id, copies) → signature buckets
     st.lists(st.tuples(st.integers(0, 3), st.integers(1, 8)), min_size=1, max_size=6),

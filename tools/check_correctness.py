@@ -58,12 +58,16 @@ def norm_rows(cols, rows):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs, oracles = queries(), oracle_sql()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown query name(s): {', '.join(unknown)}")
+        return 2
     spark = get_spark("correctness-check")
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs, oracles = queries(), oracle_sql()
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
