@@ -9,6 +9,11 @@ shape as Field-HAS_STATION→Station / Station-HAS_WEATHER_DAY→WeatherDay
 Node ids are label-prefixed strings so one vertex table can hold all labels:
 ``R:<regionkey>``, ``N:<nationkey>``, ``C:<custkey>``, ``O:<orderkey>``,
 ``L:<orderkey>:<linenumber>``, ``S:<suppkey>``, ``P:<partkey>``.
+
+The customer–supplier trade graph is the one projection the graph
+analytics queries share: a customer and a supplier are adjacent when some
+order of the customer has a line from the supplier (``trade_edges`` in
+Spark, ``trade_edges_sql`` for the DuckDB oracles).
 """
 
 from __future__ import annotations
@@ -90,3 +95,35 @@ def edges_sql() -> str:
     UNION ALL
     SELECT concat('N:', s_nationkey), concat('S:', s_suppkey), 'HAS_SUPPLIER' FROM supplier
     """
+
+
+def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer–supplier trade graph: distinct ``C:<custkey>`` ↔
+    ``S:<suppkey>`` pairs over orders ⋈ lineitem, listed in both
+    directions as ``src``/``dst``."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    eb = (
+        li.join(o, on=[F.col("l_orderkey") == F.col("o_orderkey")])
+        .select(
+            F.concat(F.lit("C:"), F.col("o_custkey").cast("string")).alias("c"),
+            F.concat(F.lit("S:"), F.col("l_suppkey").cast("string")).alias("s"),
+        )
+        .distinct()
+    )
+    return eb.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
+        eb.select(F.col("s").alias("src"), F.col("c").alias("dst"))
+    )
+
+
+def trade_edges_sql() -> str:
+    """DuckDB twin of ``trade_edges``: the CTEs ``eb`` (distinct pairs)
+    and ``e`` (both directions), to follow a ``WITH``."""
+    return (
+        "eb AS MATERIALIZED (SELECT DISTINCT"
+        " 'C:' || CAST(o_custkey AS VARCHAR) AS c,"
+        " 'S:' || CAST(l_suppkey AS VARCHAR) AS s"
+        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey),\n"
+        "e AS MATERIALIZED (SELECT c AS src, s AS dst FROM eb"
+        " UNION ALL SELECT s, c FROM eb)"
+    )

@@ -1,13 +1,22 @@
 """Shared query-registry core: the QUERIES/ORACLE_SQL dicts, the
-@register decorator, and the cross-family helper expressions
-(r4 rounding, timestamp formatting, the portable-hash SQL
-replica)."""
+@register decorator, the cross-family helper expressions (r4 rounding,
+timestamp formatting, the portable-hash SQL replica), the scratch
+directory rule (``_scratch_dir``) and the stream runner: every
+streaming query drains an availableNow run through ``_drain_to_memory``
+(or bounds its own sink with ``_await_stream``) under reduced state
+partitions."""
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
+import shutil
+import tempfile
+import threading
+import time
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -16,6 +25,7 @@ from graph_db_spark.functions import scalars as S
 from graph_db_spark.operators import aggregates as A
 from graph_db_spark.operators import joins as J
 from graph_db_spark.operators.sessionize import session_intervals
+from graph_db_spark.streaming import jobs as STRM
 from graph_db_spark.tables import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -29,6 +39,15 @@ def _sf_tag(sf_dir: str) -> str:
     /tmp/graft_* trees never matched the cleanup path and paths were not
     reproducible across processes (r5 ADVICE #1)."""
     return hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+
+
+def _scratch_dir(name: str, sf_dir: str) -> str:
+    """The one scratch-path rule: ``<tmp>/graft_<name>_<sf tag>``, emptied
+    so a rerun never reads the previous run's files. Returns the path;
+    the caller's writer creates it."""
+    d = os.path.join(tempfile.gettempdir(), f"graft_{name}_{_sf_tag(sf_dir)}")
+    shutil.rmtree(d, ignore_errors=True)
+    return d
 
 
 def register(name: str, oracle: str | None = None):
@@ -72,8 +91,124 @@ def _fmt_ts(c: Column) -> Column:
     return F.date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS")
 
 
-# ---------------------------------------------------------------------------
-# A1 — daily grouped stats (flagship; weather-day semantics on `events`)
-# ---------------------------------------------------------------------------
+_STREAM_PARTS_LOCK = threading.Lock()
 
 
+@contextmanager
+def _stream_state_partitions(spark, n: int = 8):
+    """Run a streaming job with a reduced shuffle-partition count — the
+    stateful operators (stream-stream joins, windowed aggs, dedup) open
+    one state store PER shuffle partition, and at fixture scale the
+    per-store open/commit overhead dominates (measured: the full-outer
+    interval join 8.8s at 32 partitions -> 4.5s at 8, min-of-2 sf0.1).
+    On a real cluster the right number tracks executor count x state
+    volume; here it is a fixed small constant. Serialized behind a lock
+    and restored in finally, same discipline as the AQE toggle
+    (graph/algorithms.py:_aqe_off); partition count never changes
+    RESULTS, only state-store fan-out."""
+    with _STREAM_PARTS_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+_STREAM_TIMEOUT_S = 300
+
+
+def _await_stream(q) -> None:
+    """The one bound on a stream run: wait for the availableNow query to
+    finish; past the bound, stop it and fail loudly — its sink is
+    partial, and an oracle mismatch on it would hide the cause."""
+    if not q.awaitTermination(_STREAM_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query did not finish within {_STREAM_TIMEOUT_S}s — "
+            "its sink is partial; failing loudly instead of surfacing a "
+            "confusing oracle mismatch"
+        )
+
+
+def _drain_to_memory(spark, stream: DataFrame, qname: str, mode: str) -> DataFrame:
+    """Run ``stream`` over everything available (trigger availableNow)
+    into the memory sink ``qname`` under reduced state partitions, bounded
+    by ``_await_stream``; return the sink's table."""
+    with _stream_state_partitions(spark):
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(qname)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        _await_stream(q)
+    return spark.table(qname)
+
+
+def _run_stream_to_table(spark, sf_dir, name, transform, table="events", mode="complete"):
+    """Run a streaming job over a (static) fixture table into the memory
+    sink ``mem_<name>``; return the result table. The fixture is
+    re-written to a scratch dir because the file streaming source wants
+    a directory of (already ns→µs-converted) files."""
+    batch = load_table(spark, sf_dir, table)
+    d = _scratch_dir(f"stream_{name}", sf_dir)
+    batch.write.mode("overwrite").parquet(d)
+    stream = spark.readStream.schema(batch.schema).parquet(d)
+    return _drain_to_memory(spark, transform(stream), f"mem_{name}", mode)
+
+
+def _touch_pairs_table(spark, sf_dir, name, qname, how):
+    """Purchases ⋈ view/click touches by user within 24h
+    (streaming/jobs.py:stream_touch_pairs, join type ``how``), each side
+    its own stream over one scratch copy of ``events``, drained into the
+    memory sink ``qname``."""
+    ev = load_table(spark, sf_dir, "events")
+    d = _scratch_dir(f"stream_{name}", sf_dir)
+    ev.write.mode("overwrite").parquet(d)
+
+    def side(keep: Column) -> DataFrame:
+        return spark.readStream.schema(ev.schema).parquet(d).filter(keep)
+
+    pairs = STRM.stream_touch_pairs(
+        side(F.col("event_type") == "purchase"),
+        side(F.col("event_type").isin("view", "click")),
+        how=how,
+    )
+    return _drain_to_memory(spark, pairs, qname, "append")
+
+
+def _run_batched_stream(spark, sf_dir, name, batches, transform):
+    """Run a streaming job over a deterministic SEQUENCE of micro-batches
+    in append mode: each batch is one parquet file (mtimes 10s apart so
+    the file source's oldest-first ordering is unambiguous) and
+    ``maxFilesPerTrigger=1`` makes admission control take one file per
+    trigger. This is what makes watermark semantics oracle-checkable:
+    which rows are late is a pure function of the data split, not of
+    scheduling.
+
+    Measured watermark mechanics (Spark 4.1, pinned by the
+    streaming_late_data oracle): during batch N, EVICTION (append-mode
+    emission of closed windows) uses ``max(event time over batches
+    0..N−1) − delay``, while the LATE-ROW FILTER uses the watermark from
+    one batch earlier — ``max(batches 0..N−2) − delay`` (SPARK-24588's
+    two-watermark design) — and compares the row's WINDOW END, not its
+    event time, so a late row whose window is still open always lands."""
+    d = _scratch_dir(f"stream2_{name}", sf_dir)
+    src = os.path.join(d, "src")
+    os.makedirs(src)
+    now = time.time()
+    for i, b in enumerate(batches):
+        tmp = os.path.join(d, f"w{i}")
+        b.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        dest = os.path.join(src, f"b{i}.parquet")
+        shutil.copyfile(part, dest)
+        os.utime(dest, (now + i * 10, now + i * 10))
+    stream = (
+        spark.readStream.schema(batches[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    return _drain_to_memory(spark, transform(stream), f"mem_{name}", "append")

@@ -23,8 +23,8 @@ from __future__ import annotations
 from graph_db_spark.plans.families.q00_base import (  # noqa: F401
     A, DataFrame, F, J,
     S, SparkSession, Window, _fmt_ts,
-    _poly_sql, _sf_tag, load_table, r4,
-    register,
+    STRM, _poly_sql, _run_stream_to_table, load_table,
+    r4, register,
 )
 from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
     P, TX, _SW_SQL, build_graph,
@@ -1125,74 +1125,11 @@ def asof_bucketed_line(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming entries — availableNow runs of the Structured Streaming jobs;
-# stream result == batch result on static input, so both are oracle-checked.
+# Streaming entries (availableNow runs through q00_base's
+# _run_stream_to_table; on static input the stream result equals the batch
+# result, so the batch oracle applies), plus the corpus-curation, edge-join,
+# motif and pivot queries that follow them.
 # ---------------------------------------------------------------------------
-
-from graph_db_spark.streaming import jobs as STRM  # noqa: E402
-
-
-import threading as _threading
-from contextlib import contextmanager as _contextmanager
-
-_STREAM_PARTS_LOCK = _threading.Lock()
-
-
-@_contextmanager
-def _stream_state_partitions(spark, n: int = 8):
-    """Run a streaming job with a reduced shuffle-partition count — the
-    stateful operators (stream-stream joins, windowed aggs, dedup) open
-    one state store PER shuffle partition, and at fixture scale the
-    per-store open/commit overhead dominates (measured: the full-outer
-    interval join 8.8s at 32 partitions -> 4.5s at 8, min-of-2 sf0.1).
-    On a real cluster the right number tracks executor count x state
-    volume; here it is a fixed small constant. Serialized behind a lock
-    and restored in finally, same discipline as the AQE toggle
-    (graph/algorithms.py:_aqe_off); partition count never changes
-    RESULTS, only state-store fan-out."""
-    with _STREAM_PARTS_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _run_stream_to_table(spark, sf_dir, name, transform, table="events", mode="complete"):
-    """Run a streaming job over a (static) fixture table with
-    trigger(availableNow) into a memory sink; return the result table.
-    The fixture is re-written to a temp dir because the file streaming
-    source wants a directory of (already ns→µs-converted) files."""
-    import os
-    import tempfile
-
-    batch = load_table(spark, sf_dir, table)
-    d = os.path.join(
-        tempfile.gettempdir(),
-        f"graft_stream_{name}_{_sf_tag(sf_dir)}",
-    )
-    batch.write.mode("overwrite").parquet(d)
-    stream = spark.readStream.schema(batch.schema).parquet(d)
-    qname = f"mem_{name}"
-    with _stream_state_partitions(spark):
-        q = (
-            transform(stream)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = q.awaitTermination(300)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            "streaming query did not finish within 300s — the memory sink "
-            "is partial; failing loudly instead of surfacing a confusing "
-            "oracle mismatch (r5 ADVICE #2)"
-        )
-    return spark.table(qname)
 
 
 @register(

@@ -13,15 +13,12 @@ from __future__ import annotations
 
 from graph_db_spark.plans.families.q00_base import (  # noqa: F401
     A, DataFrame, F, J,
-    ORACLE_SQL, QUERIES, SparkSession, Window,
-    _poly_sql, load_table, r4, register,
+    ORACLE_SQL, QUERIES, STRM, SparkSession, Window,
+    _poly_sql, _run_stream_to_table, load_table, r4, register,
 )
 from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
     D, SIM, TX, _graph_nparts,
     build_graph,
-)
-from graph_db_spark.plans.families.q02_datetime_rollups import (  # noqa: F401
-    STRM, _run_stream_to_table,
 )
 from graph_db_spark.operators.joins import dim_hint
 

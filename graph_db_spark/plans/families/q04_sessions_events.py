@@ -17,16 +17,14 @@
 from __future__ import annotations
 
 from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    DataFrame, F, J, SparkSession,
-    Window, _poly_sql, _sf_tag, load_table,
-    r4, register, session_intervals,
+    DataFrame, F, J, STRM, SparkSession,
+    Window, _await_stream, _poly_sql, _scratch_dir,
+    _touch_pairs_table, load_table, r4, register,
+    session_intervals,
 )
 from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
     D, SIM, TX, _SW_SQL,
     _graph_nparts, _ivf_training_sql, build_graph, edges_sql,
-)
-from graph_db_spark.plans.families.q02_datetime_rollups import (  # noqa: F401
-    STRM, _stream_state_partitions,
 )
 from graph_db_spark.plans.families.q03_dedup_bounds_gate import (  # noqa: F401
     PF, _metric_rows, _minhash_band_sql, spread,
@@ -536,43 +534,8 @@ def streaming_touch_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     state). availableNow processes the full fixture, so the pair set
     equals the batch interval join exactly — the oracle is that batch
     join, aggregated per (day, touch type)."""
-    import os
-    import tempfile
-
-    ev = load_table(spark, sf_dir, "events")
-    d = os.path.join(
-        tempfile.gettempdir(),
-        f"graft_stream_touch_{_sf_tag(sf_dir)}",
-    )
-    ev.write.mode("overwrite").parquet(d)
-    p_stream = (
-        spark.readStream.schema(ev.schema).parquet(d)
-        .filter(F.col("event_type") == "purchase")
-    )
-    t_stream = (
-        spark.readStream.schema(ev.schema).parquet(d)
-        .filter(F.col("event_type").isin("view", "click"))
-    )
-    pairs = STRM.stream_touch_pairs(p_stream, t_stream)
-    qname = "mem_touch_pairs"
-    with _stream_state_partitions(spark):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = q.awaitTermination(300)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            "streaming query did not finish within 300s — the memory sink "
-            "is partial; failing loudly instead of surfacing a confusing "
-            "oracle mismatch (r5 ADVICE #2)"
-        )
     return (
-        spark.table(qname)
+        _touch_pairs_table(spark, sf_dir, "touch", "mem_touch_pairs", "inner")
         .groupBy(
             F.date_format(F.to_date("pts"), "yyyy-MM-dd").alias("day"),
             F.col("touch").alias("touch_type"),
@@ -1086,18 +1049,12 @@ def snapshot_table_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the state a direct computation produces. The reference's
     MERGE-everything write story (app/graph_fields.py:16-25) lands here
     as a transactional table, not a directory swap."""
-    import os
-    import shutil
-    import tempfile
-
     from graph_db_spark.writers.snapshots import SnapshotTable
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    tag = _sf_tag(sf_dir)
-    path = os.path.join(tempfile.gettempdir(), f"graft_snaptable_{tag}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir("snaptable", sf_dir)
     t = SnapshotTable.create(
         spark, path, cust.filter(F.col("c_custkey") <= 1000), ["c_custkey"], n_buckets=8
     )
@@ -1158,10 +1115,6 @@ def incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deletes' retractions) reconstructs the direct answer exactly.
     At 100 TB this is the materialized-view story: maintenance cost ∝
     churn, never table size."""
-    import os
-    import shutil
-    import tempfile
-
     from graph_db_spark.writers.snapshots import (
         SnapshotTable,
         apply_changes_to_aggregate,
@@ -1170,9 +1123,7 @@ def incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    tag = _sf_tag(sf_dir)
-    path = os.path.join(tempfile.gettempdir(), f"graft_ivm_{tag}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir("ivm", sf_dir)
     t = SnapshotTable.create(
         spark, path, cust.filter(F.col("c_custkey") <= 800), ["c_custkey"], n_buckets=8
     )
@@ -1366,35 +1317,21 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the answer — candidates are per-document against a static index —
     so the oracle is the same as the batch query's; the union of batch
     outputs must hash-match it exactly."""
-    import os
-    import shutil
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") < 400)
     new = docs.filter(F.col("doc_id") >= 400)
     # index built once, materialized — every micro-batch reuses the rows
     index = D.minhash_banded(corpus, "text", "doc_id").localCheckpoint()
-    tag = _sf_tag(sf_dir)
-    src = os.path.join(tempfile.gettempdir(), f"graft_incdedup_src_{tag}")
-    out = os.path.join(tempfile.gettempdir(), f"graft_incdedup_out_{tag}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"graft_incdedup_ckpt_{tag}")
-    for d in (out, ckpt):  # append-mode sink + checkpoint must start clean
-        shutil.rmtree(d, ignore_errors=True)
+    src = _scratch_dir("incdedup_src", sf_dir)
+    out = _scratch_dir("incdedup_out", sf_dir)
+    ckpt = _scratch_dir("incdedup_ckpt", sf_dir)
     new.repartition(6).write.mode("overwrite").parquet(src)
     stream = (
         spark.readStream.schema(new.schema)
         .option("maxFilesPerTrigger", 2)  # force several micro-batches
         .parquet(src)
     )
-    q = STRM.stream_incremental_dedup(stream, index, out, ckpt)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "streaming query did not finish within 300s — the memory sink "
-            "is partial; failing loudly instead of surfacing a confusing "
-            "oracle mismatch (r5 ADVICE #2)"
-        )
+    _await_stream(STRM.stream_incremental_dedup(stream, index, out, ckpt))
     return spark.read.parquet(out).select("new_id", "corpus_id").distinct()
 
 

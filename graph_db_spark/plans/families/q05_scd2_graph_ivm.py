@@ -13,15 +13,12 @@
 from __future__ import annotations
 
 from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    DataFrame, F, ORACLE_SQL, SparkSession,
-    Window, _fmt_ts, _poly_sql, _sf_tag,
-    load_table, r4, register,
+    DataFrame, F, ORACLE_SQL, STRM, SparkSession,
+    Window, _fmt_ts, _poly_sql, _run_batched_stream,
+    _scratch_dir, load_table, r4, register,
 )
 from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
     P, _SW_SQL, build_graph, edges_sql,
-)
-from graph_db_spark.plans.families.q02_datetime_rollups import (  # noqa: F401
-    STRM, _stream_state_partitions,
 )
 from graph_db_spark.plans.families.q03_dedup_bounds_gate import (  # noqa: F401
     PF, _metric_rows, _minhash_band_sql,
@@ -1265,14 +1262,10 @@ def pipeline_snapshot_merge_rerun(spark: SparkSession, sf_dir: str) -> DataFrame
     would double the overlap rows and fail on n_stations. Bucket-level
     copy-on-write means run 2 rewrites only buckets its keys touch."""
     import os
-    import shutil
-    import tempfile
 
     from graph_db_spark.writers.snapshots import SnapshotTable
 
-    tag = _sf_tag(sf_dir)
-    path = os.path.join(tempfile.gettempdir(), f"graft_snap_rerun_{tag}", "weather_days")
-    shutil.rmtree(os.path.dirname(path), ignore_errors=True)
+    path = os.path.join(_scratch_dir("snap_rerun", sf_dir), "weather_days")
     run1 = P.build(spark, sf_dir, only=["weather_days"],
                    start="2024-01-01", end="2024-01-15")["weather_days"]
     t = SnapshotTable.create(
@@ -1288,65 +1281,6 @@ def pipeline_snapshot_merge_rerun(spark: SparkSession, sf_dir: str) -> DataFrame
         F.sum(view["n"]).cast("bigint").alias("view_n"),
         r4(F.max(click["max"])).alias("max_click"),
     )
-
-
-def _run_batched_stream(spark, name, batches, transform, mode="append", tag=""):
-    """Run a streaming job over a deterministic SEQUENCE of micro-batches:
-    each batch is one parquet file (mtimes 10s apart so the file source's
-    oldest-first ordering is unambiguous) and ``maxFilesPerTrigger=1``
-    makes admission control take one file per trigger. This is what makes
-    watermark semantics oracle-checkable: which rows are late is a pure
-    function of the data split, not of scheduling.
-
-    Measured watermark mechanics (Spark 4.1, pinned by the
-    streaming_late_data oracle): during batch N, EVICTION (append-mode
-    emission of closed windows) uses ``max(event time over batches
-    0..N−1) − delay``, while the LATE-ROW FILTER uses the watermark from
-    one batch earlier — ``max(batches 0..N−2) − delay`` (SPARK-24588's
-    two-watermark design) — and compares the row's WINDOW END, not its
-    event time, so a late row whose window is still open always lands."""
-    import glob as _glob
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    d = os.path.join(tempfile.gettempdir(), f"graft_stream2_{name}_{tag}")
-    shutil.rmtree(d, ignore_errors=True)
-    src = os.path.join(d, "src")
-    os.makedirs(src)
-    now = time.time()
-    for i, b in enumerate(batches):
-        tmp = os.path.join(d, f"w{i}")
-        b.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(src, f"b{i}.parquet")
-        shutil.copyfile(part, dest)
-        os.utime(dest, (now + i * 10, now + i * 10))
-    stream = (
-        spark.readStream.schema(batches[0].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    qname = f"mem_{name}"
-    with _stream_state_partitions(spark):
-        q = (
-            transform(stream)
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = q.awaitTermination(300)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            "streaming query did not finish within 300s — the memory sink "
-            "is partial; failing loudly instead of surfacing a confusing "
-            "oracle mismatch (r5 ADVICE #2)"
-        )
-    return spark.table(qname)
 
 
 @register(
@@ -1386,7 +1320,7 @@ def streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     - batch 0: the on-time bulk (user_id%10∉{3,7}, ts < Jan 21) — its max
       event time defines the watermark the LATE batch is filtered with
       (the late filter lags eviction by one batch — measured, see
-      ``_run_batched_stream``): wm1 = max(batch 0) − 2d ≈ Jan 18 23:59.
+      ``q00_base._run_batched_stream``): wm1 = max(batch 0) − 2d ≈ Jan 18 23:59.
     - batch 1: more on-time rows (%10=3, ts < Jan 21) — the lag filler.
     - batch 2: the LATE stream (%10=7, ALL dates) plus the fresh tail
       (%10≠7, ts ≥ Jan 21). Late rows whose day window closed before wm1
@@ -1406,13 +1340,9 @@ def streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     b0 = ev.filter(~mod.isin(3, 7) & (F.col("ts") < cut))
     b1 = ev.filter((mod == 3) & (F.col("ts") < cut))
     b2 = ev.filter((mod == 7) | ((mod != 7) & (F.col("ts") >= cut)))
-    import os
-
     out = _run_batched_stream(
-        spark, "late_data", [b0, b1, b2],
+        spark, sf_dir, "late_data", [b0, b1, b2],
         lambda s: STRM.stream_daily_stats(s, watermark="2 days"),
-        mode="append",
-        tag=_sf_tag(sf_dir),
     )
     return out.select(
         "day",
@@ -1543,16 +1473,12 @@ def snapshot_range_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimization, never a semantics change) and the contract row is 1.0
     iff the scan read strictly fewer files than the table holds."""
     import os
-    import shutil
-    import tempfile
 
     from graph_db_spark.writers.snapshots import SnapshotTable
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     n = cust.count()
-    tag = _sf_tag(sf_dir)
-    path = os.path.join(tempfile.gettempdir(), f"graft_snap_range_{tag}", "cust")
-    shutil.rmtree(os.path.dirname(path), ignore_errors=True)
+    path = os.path.join(_scratch_dir("snap_range", sf_dir), "cust")
     t = SnapshotTable.create(
         spark, path, cust, keys=["c_custkey"], n_buckets=4,
         cluster_by=["c_acctbal"], records_per_file=max(10, n // 40),
@@ -1608,10 +1534,6 @@ def ivm_minmax_rescan(spark: SparkSession, sf_dir: str) -> DataFrame:
     both the fold path and the rescan path execute, and the hash match
     against the direct SQL replay proves the maintained view equals the
     recompute."""
-    import os
-    import shutil
-    import tempfile
-
     from graph_db_spark.writers.snapshots import (
         SnapshotTable,
         apply_changes_to_minmax,
@@ -1620,9 +1542,7 @@ def ivm_minmax_rescan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    tag = _sf_tag(sf_dir)
-    path = os.path.join(tempfile.gettempdir(), f"graft_ivm_mm_{tag}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir("ivm_mm", sf_dir)
     t = SnapshotTable.create(
         spark, path, cust.filter(F.col("c_custkey") <= 800), ["c_custkey"], n_buckets=8
     )

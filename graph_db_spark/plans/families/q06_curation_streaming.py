@@ -15,20 +15,18 @@
 from __future__ import annotations
 
 from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    DataFrame, F, SparkSession, Window,
-    _sf_tag, load_table, r4, register,
+    DataFrame, F, STRM, SparkSession, Window,
+    _run_batched_stream, _scratch_dir, _touch_pairs_table,
+    load_table, r4, register,
 )
 from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
     TX, _graph_nparts, build_graph, edges_sql,
-)
-from graph_db_spark.plans.families.q02_datetime_rollups import (  # noqa: F401
-    STRM, _stream_state_partitions,
 )
 from graph_db_spark.plans.families.q03_dedup_bounds_gate import (  # noqa: F401
     PF, _metric_rows,
 )
 from graph_db_spark.plans.families.q05_scd2_graph_ivm import (  # noqa: F401
-    _CURATED_ORACLE, _PROVENANCE_ORACLE, _run_batched_stream,
+    _CURATED_ORACLE, _PROVENANCE_ORACLE,
 )
 from graph_db_spark.operators.joins import dim_hint
 
@@ -155,43 +153,8 @@ def streaming_left_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     ``pts < wm`` cut reproduces exactly which purchases report as
     unattributed vs stay pending. State stays bounded by the interval
     condition + watermarks on both sides, same as the inner variant."""
-    import os
-    import tempfile
-
-    ev = load_table(spark, sf_dir, "events")
-    d = os.path.join(
-        tempfile.gettempdir(),
-        f"graft_stream_lo_{_sf_tag(sf_dir)}",
-    )
-    ev.write.mode("overwrite").parquet(d)
-    p_stream = (
-        spark.readStream.schema(ev.schema).parquet(d)
-        .filter(F.col("event_type") == "purchase")
-    )
-    t_stream = (
-        spark.readStream.schema(ev.schema).parquet(d)
-        .filter(F.col("event_type").isin("view", "click"))
-    )
-    pairs = STRM.stream_touch_pairs(p_stream, t_stream, how="left_outer")
-    qname = "mem_touch_lo"
-    with _stream_state_partitions(spark):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = q.awaitTermination(300)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            "streaming query did not finish within 300s — the memory sink "
-            "is partial; failing loudly instead of surfacing a confusing "
-            "oracle mismatch (r5 ADVICE #2)"
-        )
     return (
-        spark.table(qname)
+        _touch_pairs_table(spark, sf_dir, "lo", "mem_touch_lo", "left_outer")
         .groupBy(
             F.date_format(F.to_date("pts"), "yyyy-MM-dd").alias("day"),
             F.coalesce(F.col("touch"), F.lit("none")).alias("touch_type"),
@@ -255,48 +218,13 @@ def streaming_full_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     qualifying purchase could still arrive. Rows younger than their
     horizon at end-of-stream stay pending and never emit — the oracle's
     two cuts reproduce exactly which rows report unmatched."""
-    import os
-    import tempfile
-
-    ev = load_table(spark, sf_dir, "events")
-    d = os.path.join(
-        tempfile.gettempdir(),
-        f"graft_stream_fo_{_sf_tag(sf_dir)}",
-    )
-    ev.write.mode("overwrite").parquet(d)
-    p_stream = (
-        spark.readStream.schema(ev.schema).parquet(d)
-        .filter(F.col("event_type") == "purchase")
-    )
-    t_stream = (
-        spark.readStream.schema(ev.schema).parquet(d)
-        .filter(F.col("event_type").isin("view", "click"))
-    )
-    pairs = STRM.stream_touch_pairs(p_stream, t_stream, how="full_outer")
-    qname = "mem_touch_fo"
-    with _stream_state_partitions(spark):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = q.awaitTermination(300)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            "streaming query did not finish within 300s — the memory sink "
-            "is partial; failing loudly instead of surfacing a confusing "
-            "oracle mismatch (r5 ADVICE #2)"
-        )
     side = (
         F.when(F.col("pts").isNull(), "touch_only")
         .when(F.col("touch").isNull(), "purchase_only")
         .otherwise("both")
     )
     return (
-        spark.table(qname)
+        _touch_pairs_table(spark, sf_dir, "fo", "mem_touch_fo", "full_outer")
         .groupBy(
             F.date_format(
                 F.to_date(F.coalesce("pts", "tts")), "yyyy-MM-dd"
@@ -1095,8 +1023,6 @@ def zorder_clustering_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression at write time and prunes every dimension of the
     rectangle at read time."""
     import os
-    import shutil
-    import tempfile
 
     from graph_db_spark.writers.snapshots import SnapshotTable, zorder_column
 
@@ -1104,9 +1030,7 @@ def zorder_clustering_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_nationkey", "c_acctbal"
     )
     n = cust.count()
-    tag = _sf_tag(sf_dir)
-    root = os.path.join(tempfile.gettempdir(), f"graft_snap_zorder_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _scratch_dir("snap_zorder", sf_dir)
     rpf = max(5, n // 64)
     lin = SnapshotTable.create(
         spark, os.path.join(root, "linear"), cust, keys=["c_custkey"], n_buckets=4,
@@ -1500,18 +1424,12 @@ def snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     read NULL, doubled balances land); the ``__v1_has_tier__`` contract
     row pins that TIME TRAVEL to v1 still serves the pre-evolution
     schema — old snapshots never grow columns retroactively."""
-    import os
-    import shutil
-    import tempfile
-
     from graph_db_spark.writers.snapshots import SnapshotTable
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    tag = _sf_tag(sf_dir)
-    path = os.path.join(tempfile.gettempdir(), f"graft_snap_evolve_{tag}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir("snap_evolve", sf_dir)
     t = SnapshotTable.create(
         spark, path, cust.filter(F.col("c_custkey") <= 800), ["c_custkey"], n_buckets=8
     )
@@ -1659,7 +1577,7 @@ def streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup viable at 100 TB — state holds one entry per key only inside
     the watermark horizon, and the price is that a key re-sent AFTER its
     horizon re-admits. This query pins the exact eviction timing,
-    measured on Spark 4.1 (same method as _run_batched_stream's
+    measured on Spark 4.1 (same method as q00_base._run_batched_stream's
     late-data mechanics):
 
     - batch 0: the base cohort — every key lands, state created.
@@ -1695,13 +1613,12 @@ def streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = _run_batched_stream(
         spark,
+        sf_dir,
         "wm_dedup",
         [base, base, b2],
         lambda s: STRM.dedupe_within_watermark(
             s, ["event_id"], ts_col="ts", watermark="2 days"
         ),
-        mode="append",
-        tag=_sf_tag(sf_dir),
     )
     return out.groupBy(F.col("event_id").cast("bigint").alias("event_id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_emitted")
@@ -1886,18 +1803,12 @@ def snapshot_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejected write left zero trace in reader-visible state); the
     contract rows pin that rejection kept version=1 and the good commit
     landed as version=2."""
-    import os
-    import shutil
-    import tempfile
-
     from graph_db_spark.writers.snapshots import AuditRejected, SnapshotTable
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    tag = _sf_tag(sf_dir)
-    path = os.path.join(tempfile.gettempdir(), f"graft_snap_wap_{tag}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir("snap_wap", sf_dir)
     t = SnapshotTable.create(spark, path, cust, ["c_custkey"], n_buckets=8)
     # modulus cohort, not a key range: non-empty at EVERY fixture SF
     window = cust.filter(F.col("c_custkey") % 4 == 1)

@@ -14,14 +14,11 @@ from __future__ import annotations
 
 from graph_db_spark.plans.families.q00_base import (  # noqa: F401
     DataFrame, F, SparkSession, Window,
-    _poly_sql, _sf_tag, load_table, r4,
-    register,
+    _drain_to_memory, _poly_sql, _scratch_dir, load_table,
+    r4, register,
 )
 from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
     TX,
-)
-from graph_db_spark.plans.families.q02_datetime_rollups import (  # noqa: F401
-    _stream_state_partitions,
 )
 from graph_db_spark.plans.families.q03_dedup_bounds_gate import (  # noqa: F401
     _metric_rows,
@@ -1051,9 +1048,6 @@ def streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twin is scd2_lookup_join. Purchases before any span or for
     users with no first-half history report '<unknown>' (the LEFT
     contract, oracle-encoded)."""
-    import os
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
     h = ev.filter(F.dayofmonth("ts") <= 15)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1073,9 +1067,7 @@ def streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vf",
         F.lead("vf").over(w2).alias("vt"),
     ).localCheckpoint(eager=True)  # frozen dimension history for every batch
-    d = os.path.join(
-        tempfile.gettempdir(), f"graft_stream_scd2_{_sf_tag(sf_dir)}"
-    )
+    d = _scratch_dir("stream_scd2", sf_dir)
     ev.write.mode("overwrite").parquet(d)
     stream = (
         spark.readStream.schema(ev.schema).parquet(d)
@@ -1088,25 +1080,8 @@ def streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("vt").isNull() | (F.col("ts") < F.col("vt"))),
         "left",
     )
-    qname = "mem_scd2_enrich"
-    with _stream_state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = q.awaitTermination(300)
-    if not done:
-        q.stop()
-        raise TimeoutError(
-            "streaming query did not finish within 300s — the memory sink "
-            "is partial; failing loudly instead of surfacing a confusing "
-            "oracle mismatch (r5 ADVICE #2)"
-        )
     return (
-        spark.table(qname)
+        _drain_to_memory(spark, joined, "mem_scd2_enrich", "append")
         .groupBy(
             F.coalesce(F.col("state"), F.lit("<unknown>")).alias(
                 "state_at_purchase"
@@ -1463,19 +1438,12 @@ def snapshot_rebucket_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against the closed-form reconstruction. Cost truth:
     rebucketing is one full rewrite — priced like capacity planning,
     not like a merge; see writers/snapshots.py rebucket."""
-    import os
-    import shutil
-    import tempfile
-
     from graph_db_spark.writers.snapshots import SnapshotTable
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    path = os.path.join(
-        tempfile.gettempdir(), f"graft_snap_rebkt_{_sf_tag(sf_dir)}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir("snap_rebkt", sf_dir)
     t = SnapshotTable.create(spark, path, cust, ["c_custkey"], n_buckets=4)
     t.merge(
         cust.filter(F.col("c_custkey") % 4 == 1).withColumn(
@@ -1533,19 +1501,12 @@ def snapshot_bloom_point_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     least one of the 8 buckets prunes with near-certainty at every SF.
     Filters are built in one distributed aggregate per commit and
     rebuilt only for rewritten buckets (carried entries keep theirs)."""
-    import os
-    import shutil
-    import tempfile
-
     from graph_db_spark.writers.snapshots import SnapshotTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    path = os.path.join(
-        tempfile.gettempdir(), f"graft_snap_bloom_{_sf_tag(sf_dir)}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir("snap_bloom", sf_dir)
     t = SnapshotTable.create(
         spark, path, orders, ["o_orderkey"], n_buckets=8,
         bloom_on=["o_totalprice"],
@@ -1752,18 +1713,13 @@ def snapshot_tag_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     is SF-independent driver-fixed cost, same as the WAP/lifecycle
     queries; see writers/snapshots.py create_tag/vacuum."""
     import os
-    import shutil
-    import tempfile
 
     from graph_db_spark.writers.snapshots import SnapshotTable
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    path = os.path.join(
-        tempfile.gettempdir(), f"graft_snap_tag_{_sf_tag(sf_dir)}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir("snap_tag", sf_dir)
     t = SnapshotTable.create(spark, path, cust, ["c_custkey"], n_buckets=8)
     t.create_tag("baseline")
     t.merge(

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from graph_db_spark.plans.families.q00_base import (  # noqa: F401
     DataFrame, F, SparkSession, Window,
-    _poly_sql, _sf_tag, load_table, r4,
+    _poly_sql, _scratch_dir, load_table, r4,
     register,
 )
 from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
@@ -22,6 +22,7 @@ from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F40
 from graph_db_spark.plans.families.q03_dedup_bounds_gate import (  # noqa: F401
     PF,
 )
+from graph_db_spark.graph.build import trade_edges, trade_edges_sql
 from graph_db_spark.operators.joins import dim_hint
 
 @register(
@@ -481,12 +482,7 @@ def _luby_sql(rounds: int = 6) -> str:
     emitted unconditionally (count 0 + hash-sum 0 for an empty round)
     so the shape never depends on convergence speed."""
     parts = [
-        "WITH eb AS MATERIALIZED (SELECT DISTINCT"
-        " 'C:' || CAST(o_custkey AS VARCHAR) AS c,"
-        " 'S:' || CAST(l_suppkey AS VARCHAR) AS s"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey)",
-        "e AS MATERIALIZED (SELECT c AS src, s AS dst FROM eb"
-        " UNION ALL SELECT s, c FROM eb)",
+        "WITH " + trade_edges_sql(),
         "act0 AS MATERIALIZED (SELECT DISTINCT src AS id FROM e)",
     ]
     for r in range(1, rounds + 1):
@@ -538,19 +534,7 @@ def maximal_independent_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graph_db_spark.graph.algorithms import luby_mis
     from graph_db_spark.operators.dedup import portable_hash
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    eb = (
-        li.join(o, on=[F.col("l_orderkey") == F.col("o_orderkey")])
-        .select(
-            F.concat(F.lit("C:"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("S:"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    e = eb.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-        eb.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    e = trade_edges(spark, sf_dir)
     mis = luby_mis(e, rounds=6).localCheckpoint(eager=True)
     rows = []
     for r in list(range(1, 7)) + [-1]:
@@ -858,10 +842,6 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     (including dim-update fan-out patching) reconstructs the direct
     join exactly. Maintenance cost ∝ churn × fan-out; data volumes are
     SF-independent (commit-overhead-bound, like the aggregate IVM)."""
-    import os
-    import shutil
-    import tempfile
-
     from graph_db_spark.writers.snapshots import (
         SnapshotTable,
         apply_dim_changes_to_join_view,
@@ -874,11 +854,8 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    tag = _sf_tag(sf_dir)
-    po = os.path.join(tempfile.gettempdir(), f"graft_ivmj_o_{tag}")
-    pc = os.path.join(tempfile.gettempdir(), f"graft_ivmj_c_{tag}")
-    for p in (po, pc):
-        shutil.rmtree(p, ignore_errors=True)
+    po = _scratch_dir("ivmj_o", sf_dir)
+    pc = _scratch_dir("ivmj_c", sf_dir)
     t_o = SnapshotTable.create(
         spark, po, orders.filter(F.col("o_orderkey") <= 800), ["o_orderkey"], n_buckets=8
     )
@@ -1747,10 +1724,6 @@ def bitemporal_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     That divergence (same valid-time question, different answers by
     transaction time) is the bitemporal defining property, and the
     oracle replays both table states + all four probes exactly."""
-    import os
-    import shutil
-    import tempfile
-
     from graph_db_spark.writers.snapshots import SnapshotTable
 
     ev = load_table(spark, sf_dir, "events")
@@ -1776,8 +1749,7 @@ def bitemporal_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     cutoff = F.lit("2024-01-16").cast("timestamp")
-    path = os.path.join(tempfile.gettempdir(), f"graft_bitemp_{_sf_tag(sf_dir)}")
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir("bitemp", sf_dir)
     t = SnapshotTable.create(
         spark, path, spans(ev.filter(F.col("ts") < cutoff)),
         ["user_id", "seg_id"], n_buckets=8,
@@ -1814,12 +1786,7 @@ def _coreness_sql(rounds: int = 8) -> str:
     max(least(rank, est))), the round -1 changed-count row proving the
     fixpoint landed inside the truncation."""
     parts = [
-        "WITH eb AS MATERIALIZED (SELECT DISTINCT"
-        " 'C:' || CAST(o_custkey AS VARCHAR) AS c,"
-        " 'S:' || CAST(l_suppkey AS VARCHAR) AS s"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey)",
-        "e AS MATERIALIZED (SELECT c AS src, s AS dst FROM eb"
-        " UNION ALL SELECT s, c FROM eb)",
+        "WITH " + trade_edges_sql(),
         "cor0 AS MATERIALIZED (SELECT dst AS id, count(*) AS cor,"
         " FALSE AS chg FROM e GROUP BY 1)",
     ]
@@ -1857,19 +1824,7 @@ def core_decomposition_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixpoint, not an assumed convergence."""
     from graph_db_spark.graph.algorithms import core_decomposition
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    eb = (
-        li.join(o, on=[F.col("l_orderkey") == F.col("o_orderkey")])
-        .select(
-            F.concat(F.lit("C:"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("S:"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    e = eb.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-        eb.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    e = trade_edges(spark, sf_dir)
     cd = core_decomposition(e, rounds=8).localCheckpoint(eager=True)
     hist = cd.groupBy(F.col("coreness").cast("bigint").alias("coreness")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes")

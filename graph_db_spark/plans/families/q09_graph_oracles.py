@@ -19,6 +19,7 @@ from graph_db_spark.plans.families.q00_base import (  # noqa: F401
 from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
     SIM, _pq_d2,
 )
+from graph_db_spark.graph.build import trade_edges, trade_edges_sql
 
 def _hyperanf_sql(p: int = 4, rounds: int = 3) -> str:
     """DuckDB replay of the HyperANF register propagation: same 62-bit
@@ -30,12 +31,7 @@ def _hyperanf_sql(p: int = 4, rounds: int = 3) -> str:
     alpha_m2 = (0.7213 / (1 + 1.079 / m)) * m * m
     rho_max = 63 - p
     parts = [
-        "WITH eb AS MATERIALIZED (SELECT DISTINCT"
-        " 'C:' || CAST(o_custkey AS VARCHAR) AS c,"
-        " 'S:' || CAST(l_suppkey AS VARCHAR) AS s"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey)",
-        "e AS MATERIALIZED (SELECT c AS src, s AS dst FROM eb"
-        " UNION ALL SELECT s, c FROM eb)",
+        "WITH " + trade_edges_sql(),
         "nodes AS MATERIALIZED (SELECT DISTINCT src AS id FROM e)",
         f"h AS MATERIALIZED (SELECT id,"
         f" ({_poly_sql('id')} * 2147483648 + {_poly_sql('id', 131)}) AS h64"
@@ -87,22 +83,8 @@ def hyperanf_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = 1 << p
     alpha_m2 = (0.7213 / (1 + 1.079 / m)) * m * m
     rho_max = 63 - p
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    eb = (
-        li.join(o, on=[F.col("l_orderkey") == F.col("o_orderkey")])
-        .select(
-            F.concat(F.lit("C:"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("S:"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
     e = prepartition_for_rounds(
-        eb.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-            eb.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-        ),
-        spark.sparkContext.defaultParallelism,
-        "src",
+        trade_edges(spark, sf_dir), spark.sparkContext.defaultParallelism, "src"
     )
     nodes = e.select(F.col("src").alias("id")).distinct()
     h64 = portable_hash(F.col("id"), 31) * F.lit(2**31).cast("long") + portable_hash(
@@ -155,12 +137,7 @@ def _distoracle_sql(depth: int = 8) -> str:
     shortest_paths loop runs, truncated identically — then the
     triangle-inequality sandwich per sample pair."""
     parts = [
-        "WITH eb AS MATERIALIZED (SELECT DISTINCT"
-        " 'C:' || CAST(o_custkey AS VARCHAR) AS c,"
-        " 'S:' || CAST(l_suppkey AS VARCHAR) AS s"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey)",
-        "e AS MATERIALIZED (SELECT c AS src, s AS dst FROM eb"
-        " UNION ALL SELECT s, c FROM eb)",
+        "WITH " + trade_edges_sql(),
         "lmk AS MATERIALIZED (SELECT 'C:' || CAST(c_custkey AS VARCHAR) AS id"
         " FROM customer WHERE c_custkey IN (20, 40)"
         " UNION ALL SELECT 'S:' || CAST(s_suppkey AS VARCHAR)"
@@ -222,19 +199,7 @@ def landmark_distance_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     run, both landmark sets together)."""
     from graph_db_spark.graph.algorithms import shortest_paths
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    eb = (
-        li.join(o, on=[F.col("l_orderkey") == F.col("o_orderkey")])
-        .select(
-            F.concat(F.lit("C:"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("S:"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    e = eb.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-        eb.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    e = trade_edges(spark, sf_dir)
     lmk = load_table(spark, sf_dir, "customer").filter(
         F.col("c_custkey").isin(20, 40)
     ).select(
@@ -245,7 +210,8 @@ def landmark_distance_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.concat(F.lit("S:"), F.col("s_suppkey").cast("string")).alias("id"))
     )
     smp = (
-        o.filter(F.col("o_custkey") <= 8)
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_custkey") <= 8)
         .select(F.concat(F.lit("C:"), F.col("o_custkey").cast("string")).alias("id"))
         .distinct()
     )
@@ -300,12 +266,7 @@ def _brandes_sql(depth: int = 4) -> str:
     — the final round(.,4) absorbs the ulps (the PageRank-oracle
     precedent)."""
     parts = [
-        "WITH eb AS MATERIALIZED (SELECT DISTINCT"
-        " 'C:' || CAST(o_custkey AS VARCHAR) AS c,"
-        " 'S:' || CAST(l_suppkey AS VARCHAR) AS s"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey)",
-        "e AS MATERIALIZED (SELECT c AS src, s AS dst FROM eb"
-        " UNION ALL SELECT s, c FROM eb)",
+        "WITH " + trade_edges_sql(),
         "lev0 AS MATERIALIZED (SELECT"
         " 'C:' || CAST(c_custkey AS VARCHAR) AS source,"
         " 'C:' || CAST(c_custkey AS VARCHAR) AS id, 1.0 AS sigma"
@@ -363,19 +324,7 @@ def betweenness_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUNDED score (ties → id) so cross-engine ulps cannot flip ranks."""
     from graph_db_spark.graph.algorithms import brandes_betweenness
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    eb = (
-        li.join(o, on=[F.col("l_orderkey") == F.col("o_orderkey")])
-        .select(
-            F.concat(F.lit("C:"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("S:"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    e = eb.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-        eb.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    e = trade_edges(spark, sf_dir)
     sources = load_table(spark, sf_dir, "customer").filter(
         F.col("c_custkey").isin(1, 7, 13)
     ).select(F.concat(F.lit("C:"), F.col("c_custkey").cast("string")).alias("id"))
@@ -390,12 +339,7 @@ def _walks_sql(length: int = 4) -> str:
     same portable md5-window hash (_poly_sql) choosing
     rank = 1 + hash(start || '#t') % degree at every step."""
     parts = [
-        "WITH eb AS MATERIALIZED (SELECT DISTINCT"
-        " 'C:' || CAST(o_custkey AS VARCHAR) AS c,"
-        " 'S:' || CAST(l_suppkey AS VARCHAR) AS s"
-        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey)",
-        "e AS MATERIALIZED (SELECT c AS src, s AS dst FROM eb"
-        " UNION ALL SELECT s, c FROM eb)",
+        "WITH " + trade_edges_sql(),
         "ranked AS MATERIALIZED (SELECT src, dst,"
         " CAST(row_number() OVER (PARTITION BY src ORDER BY dst) AS BIGINT) AS rnk,"
         " CAST(count(*) OVER (PARTITION BY src) AS BIGINT) AS deg FROM e)",
@@ -429,21 +373,10 @@ def random_walk_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-resolved BEFORE the edge join so hubs never fan out."""
     from graph_db_spark.graph.algorithms import deterministic_walks
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    eb = (
-        li.join(o, on=[F.col("l_orderkey") == F.col("o_orderkey")])
-        .select(
-            F.concat(F.lit("C:"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("S:"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .distinct()
-    )
-    e = eb.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-        eb.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
+    e = trade_edges(spark, sf_dir)
     starts = (
-        o.filter(F.col("o_custkey") < 50)
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_custkey") < 50)
         .select(F.concat(F.lit("C:"), F.col("o_custkey").cast("string")).alias("start"))
         .distinct()
     )

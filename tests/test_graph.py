@@ -683,3 +683,26 @@ def test_boruvka_forest_matches_kruskal(spark):
     assert got == expect
     comps = {r["comp"] for r in lab.collect()}
     assert len(comps) == 2
+
+
+def test_trade_edges_match_oracle_cte(spark, sf_dir):
+    """``trade_edges`` (Spark) and ``trade_edges_sql`` (the CTE every
+    trade-graph oracle starts with) give the same row multiset, and the
+    rows are the symmetric, distinct customer–supplier edge list."""
+    from collections import Counter
+
+    import duckdb
+
+    from graph_db_spark.graph.build import trade_edges, trade_edges_sql
+
+    con = duckdb.connect()
+    for t in ("lineitem", "orders"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    oracle = Counter(
+        con.execute(f"WITH {trade_edges_sql()} SELECT src, dst FROM e").fetchall()
+    )
+    got = Counter((r.src, r.dst) for r in trade_edges(spark, sf_dir).collect())
+    assert got and got == oracle
+    assert set(got.values()) == {1}  # distinct
+    assert all((d, s) in got for s, d in got)  # symmetric
+    assert {(s[:2], d[:2]) for s, d in got} == {("C:", "S:"), ("S:", "C:")}

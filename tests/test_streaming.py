@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graph_db_spark.operators.sessionize import session_intervals
+from graph_db_spark.plans.families.q00_base import _await_stream
 from graph_db_spark.streaming.jobs import (
     dedupe_within_watermark,
     stream_daily_stats,
@@ -234,3 +235,33 @@ def test_stream_incremental_dedup_replay_idempotent(spark, tmp_path):
     assert n1 == n2 and n1 > 0  # overwrite-per-batch => no duplication
     pairs = spark.read.parquet(out).select("new_id", "corpus_id")
     assert pairs.count() == pairs.distinct().count()
+
+
+class _StubQuery:
+    """Stands in for a StreamingQuery: ``awaitTermination`` reports
+    ``finished`` and every call is recorded."""
+
+    def __init__(self, finished: bool):
+        self.finished, self.waits, self.stops = finished, [], 0
+
+    def awaitTermination(self, timeout):
+        self.waits.append(timeout)
+        return self.finished
+
+    def stop(self):
+        self.stops += 1
+
+
+def test_await_stream_stops_once_and_raises_past_bound():
+    """The one stream bound (no JVM): an unfinished run is stopped exactly
+    once and raises TimeoutError with a message that names no sink type;
+    a finished run is neither stopped nor raised on."""
+    late = _StubQuery(finished=False)
+    with pytest.raises(TimeoutError, match="did not finish within 300s") as exc:
+        _await_stream(late)
+    assert late.waits == [300] and late.stops == 1
+    assert "memory" not in str(exc.value)
+
+    done = _StubQuery(finished=True)
+    _await_stream(done)
+    assert done.waits == [300] and done.stops == 0

@@ -2,7 +2,9 @@
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB
 against the same parquet dir, then compares row count, schema (column
-names), and an order-insensitive value comparison. Run:
+names), and an order-insensitive value comparison. Each ok/FAIL line ends
+with the seconds spent in Spark (build + collect), in DuckDB, and in the
+comparison. Run:
 
     python tools/check_correctness.py [sf_dir] [query ...]
 """
@@ -81,17 +83,20 @@ def main() -> int:
             print(f"FAIL {name}: spark error\n{traceback.format_exc()}")
             failures += 1
             continue
+        t1 = time.monotonic()
+        spark_s = f"spark {t1 - t0:.1f}s"
         if name not in oracles:
-            print(f"okro {name}: rows-only, {len(srows)} rows [{time.monotonic() - t0:.1f}s]")
+            print(f"okro {name}: rows-only, {len(srows)} rows [{spark_s}]")
             continue
         try:
             res = con.execute(oracles[name])
             ocols = [d[0] for d in res.description]
             orows = res.fetchall()
         except Exception:
-            print(f"FAIL {name}: duckdb error\n{traceback.format_exc()}")
+            print(f"FAIL {name}: duckdb error [{spark_s}]\n{traceback.format_exc()}")
             failures += 1
             continue
+        t2 = time.monotonic()
         problems = []
         if sorted(scols) != sorted(ocols):
             problems.append(f"schema: spark={sorted(scols)} oracle={sorted(ocols)}")
@@ -120,11 +125,12 @@ def main() -> int:
                     mags[c] = max(mags.get(c, 0.0), abs(v))
         for c, v in sorted(mags.items()):
             print(f"MAG  {name}.{c}: max|v| = {v:.6g}")
+        secs = f"[{spark_s}, duckdb {t2 - t1:.1f}s, compare {time.monotonic() - t2:.1f}s]"
         if problems:
             failures += 1
-            print(f"FAIL {name}: " + "; ".join(problems))
+            print(f"FAIL {name}: " + "; ".join(problems) + f" {secs}")
         else:
-            print(f"ok   {name}: {len(srows)} rows [{time.monotonic() - t0:.1f}s]")
+            print(f"ok   {name}: {len(srows)} rows {secs}")
     print(f"\n{'ALL GREEN' if failures == 0 else f'{failures} FAILURES'}")
     return 1 if failures else 0
 
