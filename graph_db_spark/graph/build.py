@@ -10,10 +10,17 @@ Node ids are label-prefixed strings so one vertex table can hold all labels:
 ``R:<regionkey>``, ``N:<nationkey>``, ``C:<custkey>``, ``O:<orderkey>``,
 ``L:<orderkey>:<linenumber>``, ``S:<suppkey>``, ``P:<partkey>``.
 
-The customer–supplier trade graph is the one projection the graph
-analytics queries share: a customer and a supplier are adjacent when some
-order of the customer has a line from the supplier (``trade_edges`` in
-Spark, ``trade_edges_sql`` for the DuckDB oracles).
+The graph analytics queries share three projections, each built here
+once in Spark and once as the DuckDB oracles' CTE text:
+
+- the customer–supplier trade graph: a customer and a supplier are
+  adjacent when some order of the customer has a line from the supplier
+  (``trade_edges`` / ``trade_edges_sql``);
+- the part co-occurrence graph: two parts are adjacent when some order
+  has a line of each (``cooccurrence_edges`` / ``cooccurrence_edges_sql``);
+- the customer–part purchase graph: a customer is adjacent to every part
+  some order of theirs has a line of (``purchase_edges`` /
+  ``purchase_edges_sql``).
 """
 
 from __future__ import annotations
@@ -126,4 +133,50 @@ def trade_edges_sql() -> str:
         " FROM lineitem JOIN orders ON l_orderkey = o_orderkey),\n"
         "e AS MATERIALIZED (SELECT c AS src, s AS dst FROM eb"
         " UNION ALL SELECT s, c FROM eb)"
+    )
+
+
+def cooccurrence_edges(lineitem: DataFrame, u: str = "p1", v: str = "p2") -> DataFrame:
+    """The part co-occurrence graph over ``lineitem`` (or a filtered
+    subset of it): distinct part pairs that share an order, each listed
+    once with the smaller part key in column ``u`` and the larger in
+    ``v``."""
+    op = lineitem.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")).distinct()
+    a, b = op.alias("a"), op.alias("b")
+    return (
+        a.join(b, on=[F.col("a.o") == F.col("b.o"), F.col("a.p") < F.col("b.p")])
+        .select(F.col("a.p").alias(u), F.col("b.p").alias(v))
+        .distinct()
+    )
+
+
+def cooccurrence_edges_sql(src: str = "lineitem", u: str = "p1", v: str = "p2") -> str:
+    """DuckDB twin of ``cooccurrence_edges`` over the relation ``src``:
+    the CTEs ``op`` (distinct order–part rows) and ``e`` (the edges), to
+    follow a ``WITH``."""
+    return (
+        f"op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM {src}),\n"
+        f"    e AS MATERIALIZED (SELECT DISTINCT a.p AS {u}, b.p AS {v}"
+        " FROM op a JOIN op b ON a.o = b.o AND a.p < b.p)"
+    )
+
+
+def purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer–part purchase graph: distinct (``c`` = custkey,
+    ``p`` = partkey) pairs over lineitem ⋈ orders."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
+        .distinct()
+    )
+
+
+def purchase_edges_sql() -> str:
+    """DuckDB twin of ``purchase_edges``: the CTE ``cp``, to follow a
+    ``WITH``."""
+    return (
+        "cp AS (SELECT DISTINCT o_custkey AS c, l_partkey AS p"
+        " FROM lineitem JOIN orders ON l_orderkey = o_orderkey)"
     )

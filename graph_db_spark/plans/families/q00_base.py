@@ -1,10 +1,13 @@
 """Shared query-registry core: the QUERIES/ORACLE_SQL dicts, the
 @register decorator, the cross-family helper expressions (r4 rounding,
 timestamp formatting, the portable-hash SQL replica), the scratch
-directory rule (``_scratch_dir``) and the stream runner: every
-streaming query drains an availableNow run through ``_drain_to_memory``
-(or bounds its own sink with ``_await_stream``) under reduced state
-partitions."""
+directory rule (``_scratch_dir``), the stream runner (every streaming
+query drains an availableNow run through ``_drain_to_memory``, or bounds
+its own sink with ``_await_stream``, under reduced state partitions) and
+two query inputs shared across families, each in Spark and as DuckDB CTE
+text: the degree-ordered triangle count (``_oriented_triangles``) and
+the time-to-conversion observations with their per-cohort risk set
+(``_conversion_obs``, ``_cohort_risk``)."""
 
 from __future__ import annotations
 
@@ -21,10 +24,7 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from graph_db_spark.functions import scalars as S
-from graph_db_spark.operators import aggregates as A
-from graph_db_spark.operators import joins as J
-from graph_db_spark.operators.sessionize import session_intervals
+from graph_db_spark.operators.joins import dim_hint
 from graph_db_spark.streaming import jobs as STRM
 from graph_db_spark.tables import load_table
 
@@ -212,3 +212,168 @@ def _run_batched_stream(spark, sf_dir, name, batches, transform):
         .parquet(src)
     )
     return _drain_to_memory(spark, transform(stream), f"mem_{name}", "append")
+
+
+def _oriented_triangles(e: DataFrame) -> DataFrame:
+    """Triangle count of the undirected graph ``e`` (``p1`` < ``p2``, each
+    edge once) by degree-ordered orientation: every edge points toward
+    its higher-(degree, id) endpoint, so each out-list is bounded by the
+    arboricity and the wedge join Σ out_deg² stays polynomial even with
+    hub vertices; each triangle is counted once, at its lowest-rank
+    vertex. Returns one row, ``n`` (bigint). ``e`` should be
+    materialized: the degree table, the orientation and the closure all
+    read it."""
+    # degree table is |vertices|-sized — which SCALES with SF (r13
+    # dim_hint audit): no forced hint; AQE broadcasts it at bench scale
+    # and falls back to a shuffle once it outgrows the broadcast limit
+    deg = (
+        e.select(F.col("p1").alias("p"))
+        .unionAll(e.select(F.col("p2").alias("p")))
+        .groupBy("p")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    da = dim_hint(deg.select(F.col("p").alias("p1"), F.col("d").alias("d1")), bounded=False)
+    db = dim_hint(deg.select(F.col("p").alias("p2"), F.col("d").alias("d2")), bounded=False)
+    lower = F.struct("d1", "p1") < F.struct("d2", "p2")
+    ore = (
+        e.join(da, on="p1")
+        .join(db, on="p2")
+        .select(
+            F.when(lower, F.col("p1")).otherwise(F.col("p2")).alias("u"),
+            F.when(lower, F.col("p2")).otherwise(F.col("p1")).alias("v"),
+        )
+        .localCheckpoint(eager=True)  # referenced by both wedge sides + closure
+    )
+    dv = dim_hint(deg.select(F.col("p").alias("v"), F.col("d").alias("dv")), bounded=False)
+    rk = ore.join(dv, on="v").select("u", "v", "dv")
+    e1, e2 = rk.alias("e1"), rk.alias("e2")
+    wedges = e1.join(
+        e2,
+        on=[
+            F.col("e1.u") == F.col("e2.u"),
+            F.struct(F.col("e1.dv"), F.col("e1.v")) < F.struct(F.col("e2.dv"), F.col("e2.v")),
+        ],
+    ).select(F.col("e1.v").alias("wu"), F.col("e2.v").alias("wv"))
+    e3 = ore.select(F.col("u").alias("wu"), F.col("v").alias("wv"))
+    return wedges.join(e3, on=["wu", "wv"]).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+
+
+def _oriented_triangles_sql(edges: str) -> str:
+    """DuckDB twin of ``_oriented_triangles`` over the edge CTE ``edges``
+    (``p1``, ``p2``): the CTEs ``deg``, ``ore``, ``rk`` and ``tri`` (one
+    row, ``n``), to follow a ``WITH`` list."""
+    return f"""deg AS MATERIALIZED (SELECT p, count(*) AS d FROM
+                         (SELECT p1 AS p FROM {edges} UNION ALL SELECT p2 FROM {edges}) GROUP BY p),
+    ore AS MATERIALIZED (
+      SELECT CASE WHEN (da.d, e.p1) < (db.d, e.p2) THEN e.p1 ELSE e.p2 END AS u,
+             CASE WHEN (da.d, e.p1) < (db.d, e.p2) THEN e.p2 ELSE e.p1 END AS v
+      FROM {edges} e JOIN deg da ON e.p1 = da.p JOIN deg db ON e.p2 = db.p
+    ),
+    rk AS MATERIALIZED (SELECT ore.u, ore.v, dv.d AS dv_ FROM ore JOIN deg dv ON ore.v = dv.p),
+    tri AS (
+      SELECT CAST(count(*) AS BIGINT) AS n
+      FROM rk e1
+      JOIN rk e2 ON e1.u = e2.u AND (e1.dv_, e1.v) < (e2.dv_, e2.v)
+      JOIN ore e3 ON e3.u = e1.v AND e3.v = e2.v
+    )"""
+
+
+def _conversion_obs(spark: SparkSession, sf_dir: str, min_value: int | None = None) -> DataFrame:
+    """Time-to-conversion observations, one row per user: ``cohort`` (the
+    user's FIRST event type, ties broken on event_id), ``t`` = days from
+    first activity to the first purchase worth at least ``min_value``
+    (any purchase when None), and ``death`` = 1 if that purchase exists;
+    users who never convert are CENSORED at the observation horizon
+    (``t`` runs to the last event of the table, ``death`` = 0)."""
+    ev = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    span = (
+        ev.withColumn("cohort", F.first("event_type").over(w))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("first_ts"), F.first("cohort").alias("cohort"))
+    )
+    buy = F.col("event_type") == "purchase"
+    if min_value is not None:
+        buy = buy & (F.col("value") >= min_value)
+    conv = ev.filter(buy).groupBy("user_id").agg(F.min("ts").alias("conv_ts"))
+    h = ev.agg(F.max("ts").alias("h"))
+    return (
+        span.join(conv, on="user_id", how="left")
+        .crossJoin(F.broadcast(h))
+        .select(
+            "cohort",
+            F.when(
+                F.col("conv_ts").isNotNull(),
+                F.datediff(F.col("conv_ts"), F.col("first_ts")),
+            )
+            .otherwise(F.datediff(F.col("h"), F.col("first_ts")))
+            .cast("bigint")
+            .alias("t"),
+            F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("death"),
+        )
+    )
+
+
+def _conversion_obs_sql(min_value: int | None = None) -> str:
+    """DuckDB twin of ``_conversion_obs``: the CTEs ``span``, ``conv``,
+    ``horizon`` and ``obs`` (``cohort``, ``t``, ``death``), to follow a
+    ``WITH``."""
+    worth = "" if min_value is None else f" AND value >= {min_value}"
+    return f"""span AS (
+      SELECT user_id,
+             min(ts) AS first_ts,
+             arg_min(event_type, strftime(ts, '%Y-%m-%d %H:%M:%S.%f')
+                     || '#' || lpad(CAST(event_id AS VARCHAR), 12, '0')) AS cohort
+      FROM events GROUP BY 1
+    ),
+    conv AS (
+      SELECT user_id, min(ts) AS conv_ts FROM events
+      WHERE event_type = 'purchase'{worth} GROUP BY 1
+    ),
+    horizon AS (SELECT max(ts) AS h FROM events),
+    obs AS (
+      SELECT s.cohort,
+             CASE WHEN c.user_id IS NOT NULL
+                  THEN CAST(date_diff('day', s.first_ts, c.conv_ts) AS BIGINT)
+                  ELSE CAST(date_diff('day', s.first_ts, h) AS BIGINT) END AS t,
+             CASE WHEN c.user_id IS NOT NULL THEN 1 ELSE 0 END AS death
+      FROM span s LEFT JOIN conv c USING (user_id) CROSS JOIN horizon
+    )"""
+
+
+def _cohort_risk(obs: DataFrame) -> DataFrame:
+    """Per-(cohort, day) event counts ``d`` and at-risk counts ``n_risk``
+    over the observations ``obs``: the cohort's size minus everyone whose
+    observation ended on an earlier day (a right-aligned cumulative)."""
+    tot = obs.groupBy("cohort").agg(F.count(F.lit(1)).alias("n"))
+    dt = obs.groupBy("cohort", "t").agg(
+        F.sum("death").cast("bigint").alias("d"),
+        F.count(F.lit(1)).cast("bigint").alias("ended"),
+    )
+    wprev = (
+        Window.partitionBy("cohort").orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return dt.join(tot, on="cohort").select(
+        "cohort", "t", "d",
+        (F.col("n") - F.coalesce(F.sum("ended").over(wprev), F.lit(0))).alias("n_risk"),
+    )
+
+
+def _cohort_risk_sql() -> str:
+    """DuckDB twin of ``_cohort_risk`` over the CTE ``obs``: the CTEs
+    ``tot``, ``dt`` and ``risk`` (``cohort``, ``t``, ``d``, ``n_risk``), to
+    follow a ``WITH`` list."""
+    return """tot AS (SELECT cohort, count(*) AS n FROM obs GROUP BY 1),
+    dt AS (
+      SELECT cohort, t,
+             CAST(sum(death) AS BIGINT) AS d,
+             CAST(count(*) AS BIGINT) AS ended
+      FROM obs GROUP BY 1, 2
+    ),
+    risk AS (
+      SELECT cohort, t, d,
+             tot.n - coalesce(sum(ended) OVER (PARTITION BY cohort ORDER BY t
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+               AS n_risk
+      FROM dt JOIN tot USING (cohort)
+    )"""

@@ -21,11 +21,22 @@
 """
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    A, DataFrame, F, J,
-    S, SparkSession, Window, _fmt_ts,
-    load_table, r4, register, session_intervals,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from graph_db_spark.functions import scalars as S
+from graph_db_spark.graph.algorithms import connected_components, pagerank
+from graph_db_spark.graph.build import build_graph, edges_sql
+from graph_db_spark.operators import aggregates as A
+from graph_db_spark.operators import dedup as D
+from graph_db_spark.operators import joins as J
+from graph_db_spark.operators import similarity as SIM
+from graph_db_spark.operators import text as TX
+from graph_db_spark.operators.sessionize import session_intervals
+from graph_db_spark.plans import pipeline as P
+from graph_db_spark.plans.families.q00_base import _fmt_ts, r4, register
+from graph_db_spark.tables import load_table
+
 
 @register(
     "event_day_stats",
@@ -875,9 +886,6 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Graph layer — degrees, motifs, analytics (SURVEY §7.2.7)
 # ---------------------------------------------------------------------------
 
-from graph_db_spark.graph.build import build_graph, edges_sql  # noqa: E402
-from graph_db_spark.graph.algorithms import connected_components, pagerank  # noqa: E402
-
 
 @register(
     "graph_degrees",
@@ -1046,10 +1054,6 @@ def pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # LLM-data-pipeline operators: text analysis, dedup, similarity
 # ---------------------------------------------------------------------------
-
-from graph_db_spark.operators import dedup as D  # noqa: E402
-from graph_db_spark.operators import similarity as SIM  # noqa: E402
-from graph_db_spark.operators import text as TX  # noqa: E402
 
 
 @register(
@@ -1641,8 +1645,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Pipeline-DAG outputs (the reference's 25-task ETL re-expressed — §3.1/§3.3)
 # ---------------------------------------------------------------------------
 
-from graph_db_spark.plans import pipeline as P  # noqa: E402
-
 
 @register(
     "pipeline_application_event_idx",
@@ -1829,7 +1831,7 @@ def pipeline_sap_element_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     WITH sa AS (
       SELECT o.o_orderkey AS order_ref,
-             concat_ws('|', c.c_mktsegment, strftime(o.o_orderdate, '%Y-%m-%d')) AS opt_range_id
+             concat_ws(':', c.c_mktsegment, strftime(o.o_orderdate, '%Y-%m-%d')) AS opt_range_id
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ), rows_ AS (
       SELECT sa.opt_range_id,
@@ -1855,8 +1857,8 @@ def pipeline_sap_element_results(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipeline_optimum_element_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pipeline — OptimumElementRange: the F5 range-string parse over all
     four forms ('1-4', '>= 2.5', '<=7', '3') plus the skip-unparsable
-    branch (graph_optimum_element_range.py:38-61,146-148); 'crop|date'
-    opt_range_id (:117); A8 dedup. The oracle recomputes the parsed bounds
+    branch (graph_optimum_element_range.py:38-61,146-148); 'crop:date'
+    opt_range_id (the parent OptimumSAPRange id); A8 dedup. The oracle recomputes the parsed bounds
     analytically from the same synthesis rule."""
     oer = P.build(spark, sf_dir, only=["optimum_element_ranges"])["optimum_element_ranges"]
     return oer.select("opt_range_id", "nutrient", "range_min", "range_max")

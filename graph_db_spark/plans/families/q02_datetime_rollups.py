@@ -20,16 +20,27 @@
 """
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    A, DataFrame, F, J,
-    S, SparkSession, Window, _fmt_ts,
-    STRM, _poly_sql, _run_stream_to_table, load_table,
-    r4, register,
-)
-from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
-    P, TX, _SW_SQL, build_graph,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from graph_db_spark import checks as CK
+from graph_db_spark.functions import scalars as S
+from graph_db_spark.graph.build import build_graph
+from graph_db_spark.operators import aggregates as A
+from graph_db_spark.operators import joins as J
+from graph_db_spark.operators import multimodal as MM
+from graph_db_spark.operators import packing as PK
+from graph_db_spark.operators import sketches as SK
+from graph_db_spark.operators import text as TX
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.plans import pipeline as P
+from graph_db_spark.plans.families.q00_base import (
+    _fmt_ts, _poly_sql, _run_stream_to_table, r4, register,
+)
+from graph_db_spark.plans.families.q01_relational_pipeline import _SW_SQL
+from graph_db_spark.streaming import jobs as STRM
+from graph_db_spark.tables import load_table
+
 
 @register(
     "pipeline_water_param_results",
@@ -499,10 +510,6 @@ def wide_melt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Check jobs (S14 + §5.5), multimodal plumbing, and remaining P/S/F operators
 # ---------------------------------------------------------------------------
-
-from graph_db_spark import checks as CK  # noqa: E402
-from graph_db_spark.operators import multimodal as MM  # noqa: E402
-from graph_db_spark.operators import packing as PK  # noqa: E402
 
 
 @register(
@@ -1669,8 +1676,6 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Mergeable sketches + exact quantiles (A9 telemetry generalized to the
 # re-aggregatable 100 TB form — see operators/sketches.py)
 # ---------------------------------------------------------------------------
-
-from graph_db_spark.operators import sketches as SK  # noqa: E402
 
 
 @register(

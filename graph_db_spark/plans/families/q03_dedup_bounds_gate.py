@@ -11,16 +11,27 @@
 """
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    A, DataFrame, F, J,
-    ORACLE_SQL, QUERIES, STRM, SparkSession, Window,
-    _poly_sql, _run_stream_to_table, load_table, r4, register,
-)
-from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
-    D, SIM, TX, _graph_nparts,
-    build_graph,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from graph_db_spark.graph.build import build_graph, cooccurrence_edges, cooccurrence_edges_sql
+from graph_db_spark.operators import aggregates as A
+from graph_db_spark.operators import dedup as D
+from graph_db_spark.operators import joins as J
+from graph_db_spark.operators import quality as QL
+from graph_db_spark.operators import similarity as SIM
+from graph_db_spark.operators import sketches as SK
+from graph_db_spark.operators import text as TX
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.plans.families.q00_base import (
+    ORACLE_SQL, _oriented_triangles, _oriented_triangles_sql, _poly_sql, _run_stream_to_table, r4,
+    register,
+)
+from graph_db_spark.plans.families.q01_relational_pipeline import _graph_nparts
+from graph_db_spark.streaming import jobs as STRM
+from graph_db_spark.tables import load_table
+from graph_db_spark.util import spread
+
 
 @register(
     "streaming_enriched_daily",
@@ -81,84 +92,26 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cooccurrence_triangles",
-    oracle="""
-    WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-    e AS MATERIALIZED (SELECT DISTINCT a.p AS p1, b.p AS p2
-                       FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-    deg AS MATERIALIZED (SELECT p, count(*) AS d FROM
-                         (SELECT p1 AS p FROM e UNION ALL SELECT p2 FROM e) GROUP BY p),
-    ore AS MATERIALIZED (
-      SELECT CASE WHEN (da.d, e.p1) < (db.d, e.p2) THEN e.p1 ELSE e.p2 END AS u,
-             CASE WHEN (da.d, e.p1) < (db.d, e.p2) THEN e.p2 ELSE e.p1 END AS v
-      FROM e JOIN deg da ON e.p1 = da.p JOIN deg db ON e.p2 = db.p
-    ),
-    rk AS MATERIALIZED (SELECT ore.u, ore.v, dv.d AS dv_ FROM ore JOIN deg dv ON ore.v = dv.p)
-    SELECT CAST(count(*) AS BIGINT) AS n_triangles
-    FROM rk e1
-    JOIN rk e2 ON e1.u = e2.u AND (e1.dv_, e1.v) < (e2.dv_, e2.v)
-    JOIN ore e3 ON e3.u = e1.v AND e3.v = e2.v
+    oracle="WITH " + cooccurrence_edges_sql() + ",\n    " + _oriented_triangles_sql("e") + """
+    SELECT n AS n_triangles FROM tri
     """,
 )
 def cooccurrence_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics with an EXACT oracle: FULL (unsampled) triangle
     count over the part-co-occurrence graph via degree-ordered orientation
-    — every edge points toward its higher-(degree, id) endpoint, so each
-    vertex's out-list is bounded by arboricity (~O(√E)) and the wedge join
-    Σ out_deg² stays polynomial even with hub parts; each triangle is
-    counted exactly once at its lowest-rank vertex. This replaces the
-    round-2 10%-sample scope cut: same two-shuffle join shape, but the
-    orientation is what makes the full count tractable at 100 TB (the
-    count is orientation-invariant — cross-validated against the naive
-    p1<p2 enumeration at sf0.001)."""
-    op = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    a, b = op.alias("a"), op.alias("b")
+    (``_oriented_triangles``), which bounds every vertex's out-list by
+    arboricity (~O(√E)) so the full count stays tractable at 100 TB with
+    hub parts. This replaces the round-2 10%-sample scope cut: same
+    two-shuffle join shape (the count is orientation-invariant —
+    cross-validated against the naive p1<p2 enumeration at sf0.001)."""
     e = (
-        a.join(b, on=[F.col("a.o") == F.col("b.o"), F.col("a.p") < F.col("b.p")])
-        .select(F.col("a.p").alias("p1"), F.col("b.p").alias("p2"))
-        .distinct()
+        cooccurrence_edges(load_table(spark, sf_dir, "lineitem"))
         # e feeds deg (×3), the orientation, and the closure side — without
         # materialization every self-join reference recomputes the whole
         # co-occurrence join+distinct (plan audit: 194 Exchange nodes)
         .localCheckpoint(eager=True)
     )
-    # degree table is |parts|-sized — which SCALES with SF (r13 dim_hint
-    # audit): no forced hint; AQE broadcasts it at bench scale and falls
-    # back to a shuffle once |parts| outgrows the 8 GB broadcast limit
-    deg = (
-        e.select(F.col("p1").alias("p"))
-        .unionAll(e.select(F.col("p2").alias("p")))
-        .groupBy("p")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    da = dim_hint(deg.select(F.col("p").alias("p1"), F.col("d").alias("d1")), bounded=False)
-    db = dim_hint(deg.select(F.col("p").alias("p2"), F.col("d").alias("d2")), bounded=False)
-    lower = F.struct("d1", "p1") < F.struct("d2", "p2")
-    ore = (
-        e.join(da, on="p1")
-        .join(db, on="p2")
-        .select(
-            F.when(lower, F.col("p1")).otherwise(F.col("p2")).alias("u"),
-            F.when(lower, F.col("p2")).otherwise(F.col("p1")).alias("v"),
-        )
-        .localCheckpoint(eager=True)  # referenced by both wedge sides + closure
-    )
-    dv = dim_hint(deg.select(F.col("p").alias("v"), F.col("d").alias("dv")), bounded=False)
-    rk = ore.join(dv, on="v").select("u", "v", "dv")
-    e1, e2 = rk.alias("e1"), rk.alias("e2")
-    wedges = e1.join(
-        e2,
-        on=[
-            F.col("e1.u") == F.col("e2.u"),
-            F.struct(F.col("e1.dv"), F.col("e1.v")) < F.struct(F.col("e2.dv"), F.col("e2.v")),
-        ],
-    ).select(F.col("e1.v").alias("wu"), F.col("e2.v").alias("wv"))
-    e3 = ore.select(F.col("u").alias("wu"), F.col("v").alias("wv"))
-    tri = wedges.join(e3, on=["wu", "wv"])
-    return tri.agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
+    return _oriented_triangles(e).select(F.col("n").alias("n_triangles"))
 
 
 @register(
@@ -593,210 +546,6 @@ def near_dup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_clusters(docs, "text", "doc_id", threshold=0.6)
 
 
-# ---------------------------------------------------------------------------
-# Driver-gate ordering. The correctness driver walks ``queries()`` in
-# registration order under a wall-clock budget (round 2 stopped at 50 of 86,
-# leaving 36 queries without a driver-visible verdict). Sub-second queries
-# run first; the multi-second ones run last, ordered cheapest-first so a
-# budget cut drops as few verdicts as possible (measured sf0.01 timings in
-# tools/check_correctness.py output).
-# ---------------------------------------------------------------------------
-
-_EXPENSIVE_LAST = [
-    "markov_absorption_conversion", # ~13s at sf0.01 (8 tiny rounds, job overhead)
-    "pca_power_iteration",          # ~3s at sf0.01 (r13 join-free grid + driver-side eigen; was ~14s)
-    "katz_walk_centrality",         # ~2.3s at sf0.01 (4 walk-count rounds)
-    "link_prediction_adamic_adar",  # ~2.4s at sf0.01 (wedge join)
-    "label_propagation",            # ~2.7s (3 sync rounds)
-    "streaming_decontamination",    # ~3s at sf0.01 (stream machinery)
-    "simhash_completeness_bound",   # ~3s
-    "running_idx",                  # ~3.5s
-    "ann_ivf_recall_bound",         # ~3.5s
-    "salted_skew_join",             # ~3.7s
-    "hits_scores",                  # ~4s (6 checkpointed half-steps)
-    "pipeline_optimum_element_ranges",  # ~4.3s
-    "simhash_near_dups",            # ~4.4s
-    "ann_lsh_recall_bound",         # ~5s
-    "streaming_exact_dedup",        # ~6s (stream machinery)
-    "streaming_watermark_dedup",    # ~10s at sf0.1 (3 micro-batches, keyed state)
-    "enrich_missing_brand",         # ~5.6s
-    "pipeline_sap_analyses",        # ~6s
-    "shortest_paths_from_regions",  # ~6s
-    "harmonic_centrality_landmarks",  # ~6s (5-landmark BFS, one frontier run)
-    "landmark_eccentricity",        # ~6s (same BFS, max-depth reduction)
-    "scc_trade_partners",           # ~7s (one fact pass + nation-sized trim/FW-BW rounds)
-    "minhash_recall_bound",         # ~7s
-    "pipeline_app_nutrient_contents",  # ~7s
-    "pipeline_sap_element_results", # ~8s
-    "cooccurrence_triangles",       # ~9s
-    "near_dup_clusters",            # ~9s
-    "curated_training_corpus",      # ~18s at sf0.01 (LSH dedup → quality cut → split, end-to-end)
-    "truss_communities",            # ~17s at sf0.01 (peel + CC + unrolled closure oracle)
-    "shortest_path_routes",         # ~14s at sf0.01 (full BFS tree + level-wise reconstruction)
-    "streaming_left_outer_attribution",  # ~13s (two-sided state store + null emission)
-    "k_truss_cooccurrence",         # ~10s at sf0.01 (3-4 peel rounds, triangle join each)
-    "snapshot_schema_evolution",    # ~8s (create + evolving merge; commit-overhead-bound)
-    "snapshot_write_audit_publish", # ~9s (create + rejected merge + committed merge)
-    "zorder_clustering_prune",      # ~11s (two clustered creates + footer stats; commit-overhead-bound)
-    "snapshot_range_pruning",       # ~11s (clustered create + footer stats; commit-overhead-bound)
-    "curation_provenance",          # ~18s at sf0.01 (shares the capstone's LSH dedup + closure)
-    "ivm_join_view",                # ~19s (5 snapshot commits + CDC folds; SF-independent)
-    "ivm_minmax_rescan",            # ~19s (3 commits + minmax folds + rescans; SF-independent)
-    "incremental_view_maintenance", # ~12s at sf0.1 (3 commits + 3 CDC folds; SF-independent data)
-    "snapshot_table_lifecycle",     # ~10s at sf0.1 (5 commits: COW/MOR/delete/compact — ~15 sequential jobs of driver-fixed overhead; data volume is SF-independent)
-    "k_core_4",                     # ~13s at sf0.1 (iterative peel)
-    "streaming_touch_pairs",        # ~14s at sf0.1 (two-sided state store)
-    "weighted_paths_from_region",   # ~14s at sf0.1 (Bellman-Ford relax rounds)
-    "connected_components",         # ~12s
-    "pagerank",                     # ~14s
-    "personalized_pagerank_regions",  # ~18s at sf0.1 (iterative + per-round restart join)
-]
-
-
-# Round-13 rotation of the driver's correctness window (the driver gate
-# reads the FIRST 50 registered queries). Staleness map at r13 open
-# (last-green round, from CORRECTNESS_r01-r12): r5: 43, r6: 48, r7: 48,
-# r8: 49, r9: 47, r10: 50, r11: 50, r12: 50.
-#
-# r13 window = (a) the 38 oldest r5-stale names in CORRECTNESS_r05
-# order, then (b) the round's 12 CODE-CHANGED queries, which outrank
-# stale re-checks per the gate contract ("a changed query takes a
-# re-queue slot"): the 11 forced-broadcast removals (r12 verdict
-# "What's wrong" #1 — SF-scaling customer/supplier/part sides now go
-# unhinted through ``dim_hint(bounded=False)`` and AQE decides; a pure
-# plan change, oracle-green at sf0.001+sf0.01 locally and plan-asserted
-# in test_no_forced_broadcast_on_sf_scaling_sides) and the
-# pca_power_iteration covariance rewrite (verdict #2 — join-free
-# in-row pair expansion + driver-side eigensolve, oracle-green at both
-# SFs, plan-asserted in test_pca_covariance_stage_is_join_free,
-# measured 1.5-4.4 s vs the old 5.9-6.1 s at sf0.1). ZERO new
-# registrations this round, so the remaining 5 r5-stale names
-# (k_core_4, streaming_touch_pairs, connected_components, pagerank,
-# personalized_pagerank_regions) roll to the r14 queue head.
-#
-# Not re-queued (documented no-output-change exceptions):
-#   * the r13 SECOND dim_hint audit pass: the same review applied to
-#     the part table (SF x 200k rows — ~20B at the 100 TB point, the
-#     same scaling class the judge flagged for customer/supplier)
-#     found 11 more li ⋈ F.broadcast(part) sites:
-#     conditional_edge_join, disjunctive_discount_revenue (ALSO holds
-#     window slot 15 as an r5-stale re-check, so it gets a fresh
-#     driver row anyway), promo_revenue_share, parts_supplier_counts,
-#     market_basket_lift, association_rule_triples,
-#     bland_altman_agreement, brand_price_elasticity,
-#     benjamini_hochberg_fdr, taylors_power_law, concentration_hhi.
-#     All switched to dim_hint(bounded=False) — a pure plan change
-#     with no emission-affecting arithmetic — and proven equivalent by
-#     the exact oracle gate (rows+schema+hash vs DuckDB) at
-#     sf0.001+sf0.01 immediately after the edit, ALL GREEN, plus the
-#     round-close 3-SF sweeps; plan-asserted (no broadcast hint on the
-#     p_partkey join) in test_no_forced_broadcast_on_sf_scaling_sides.
-#     The window was already sealed at 38 stale + 12 re-queues when
-#     this pass landed; the r14 staleness queue picks them up on
-#     schedule.
-#   * the r13 THIRD dim_hint pass (same review, aggregate-DERIVED
-#     sides whose KEY SPACE scales: per-user/per-part/per-token/
-#     per-orderkey aggregates and supplier/part dims in the Q2/Q15/
-#     Q17/Q18/Q21/Q22 shapes): conversion_latency_quantiles,
-#     ngram_containment_pairs, top_supplier_revenue,
-#     jaccard_link_prediction, sampled_triangle_estimate, plus eight
-#     queries that ALREADY hold r13 window slots (cooccurrence_
-#     triangles, tfidf_top_terms, large_volume_customers,
-#     min_cost_supplier, small_quantity_revenue, sole_late_supplier,
-#     idle_rich_customers, link_prediction_adamic_adar) and so get
-#     fresh driver rows anyway. Same proof protocol: pure plan change,
-#     exact oracle gate ALL GREEN at sf0.001+sf0.01 post-edit, 3-SF
-#     sweeps at close. Deliberately NOT changed: the similarity
-#     family's brute-force-cosine baselines (knn_loo_label_eval,
-#     embedding_cosine_topk, ann recall oracles) — broadcasting one
-#     side IS their documented contract, and the LSH/IVF/PQ variants
-#     are the scale path.
-#   * the r13 FOURTH (final-census) dim_hint pass: bloom_semi_prune
-#     (truth key list ~ 4% of part), item_item_collaborative_topk
-#     (per-item counts ~ |parts|), token_pmi_collocations (unigram
-#     counts ~ vocabulary), mrr_hit_at_k_ivf (label map ~ |embeddings|,
-#     query labels ~ 20% sample), and streaming_enriched_daily (the
-#     stream-static customer dim in streaming/jobs.py — streaming has
-#     no AQE, so the un-hinted join picks broadcast from file stats at
-#     bench scale and shuffle-hash past the threshold). Same proof
-#     protocol, ALL GREEN at sf0.001+sf0.01 post-edit. After this pass the census holds:
-#     every remaining F.broadcast is a 1-row scalar, a bounded
-#     enumeration (nation/region/event-type/brand/source/label/
-#     quantity/dow/pos/landmark/bucket), a k-sized top-k/centroid/
-#     sketch frame, a fixed query-term list, or a documented
-#     brute-force baseline (energy_distance_groups' pairwise legs,
-#     the cosine-topk family).
-#   * the PPR truncation-semantics pin (docstring + expected-warning
-#     filter only, zero plan or emission change) and the ADVICE.md
-#     snapshot/bench hygiene fixes (writer/bench internals, not query
-#     code).
-_GATE_WINDOW = [
-    # (a) 38 oldest r5-stale names, CORRECTNESS_r05 order
-    "trigram_lm_topk",
-    "unigram_logperplexity",
-    "tokenizer_fertility",
-    "sequence_packing",
-    "dataset_split_assign",
-    "corpus_shard_plan",
-    "corpus_global_shuffle",
-    "stratified_sample",
-    "mixture_weights",
-    "scd2_user_state",
-    "scd2_lookup_join",
-    "order_priority_checking",
-    "returned_item_reporting",
-    "small_quantity_revenue",
-    "disjunctive_discount_revenue",
-    "table_profile",
-    "dq_validation_report",
-    "robust_outliers",
-    "quality_quantile_filter",
-    "equi_depth_histogram",
-    "chi_square_independence",
-    "entity_resolution_pairs",
-    "cusum_drift",
-    "cohort_retention",
-    "profile_distinct_approx_bound",
-    "quantile_approx_bound",
-    "semantic_dedup",
-    "incremental_lsh_dedup",
-    "streaming_incremental_dedup",
-    "motif_var_length",
-    "pipeline_snapshot_merge_rerun",
-    "streaming_late_data",
-    "dedup_skewed_corpus",
-    "link_prediction_adamic_adar",
-    "label_propagation",
-    "hits_scores",
-    "shortest_paths_from_regions",
-    "cooccurrence_triangles",
-    # (b) r13 code-changed re-queues (11 dim_hint sites + pca rewrite)
-    "nation_volume_shipping",
-    "nation_market_share",
-    "product_type_profit",
-    "important_parts_share",
-    "heavy_part_suppliers",
-    "scc_trade_partners",
-    "trade_graph_transitivity",
-    "region_trade_assortativity",
-    "trade_reciprocity",
-    "theil_index_decomposition",
-    "diff_in_diff_uplift",
-    "pca_power_iteration",
-]
-assert len(_GATE_WINDOW) == 50
-
-
-def _reorder_for_gate() -> None:
-    head = [n for n in _GATE_WINDOW if n in QUERIES]
-    late = [n for n in _EXPENSIVE_LAST if n in QUERIES and n not in set(head)]
-    mid = [n for n in QUERIES if n not in set(head) and n not in set(late)]
-    for d in (QUERIES, ORACLE_SQL):
-        ordered = {n: d[n] for n in head + mid + late if n in d}
-        d.clear()
-        d.update(ordered)
-
-
 def _minhash_band_sql(
     num_hashes: int = 32, bands: int = 8, cands_pred: str = "a.doc_id < b.doc_id"
 ) -> str:
@@ -976,11 +725,6 @@ ORACLE_SQL["near_dup_clusters"] = f"""
 # Corpus-quality signals, PII scrubbing, Count-Min heavy hitters, Bloom
 # pruning (round-3 additions; operators/quality.py, operators/sketches.py)
 # ---------------------------------------------------------------------------
-
-from graph_db_spark.operators import profiling as PF  # noqa: E402
-from graph_db_spark.operators import quality as QL  # noqa: E402
-from graph_db_spark.operators import sketches as SK  # noqa: E402
-from graph_db_spark.util import spread  # noqa: E402
 
 
 @register(

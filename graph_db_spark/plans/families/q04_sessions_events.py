@@ -16,20 +16,28 @@
 """
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    DataFrame, F, J, STRM, SparkSession,
-    Window, _await_stream, _poly_sql, _scratch_dir,
-    _touch_pairs_table, load_table, r4, register,
-    session_intervals,
-)
-from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
-    D, SIM, TX, _SW_SQL,
-    _graph_nparts, _ivf_training_sql, build_graph, edges_sql,
-)
-from graph_db_spark.plans.families.q03_dedup_bounds_gate import (  # noqa: F401
-    PF, _metric_rows, _minhash_band_sql, spread,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from graph_db_spark.graph.build import build_graph, edges_sql
+from graph_db_spark.operators import dedup as D
+from graph_db_spark.operators import joins as J
+from graph_db_spark.operators import profiling as PF
+from graph_db_spark.operators import similarity as SIM
+from graph_db_spark.operators import text as TX
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.operators.sessionize import session_intervals
+from graph_db_spark.plans.families.q00_base import (
+    _await_stream, _poly_sql, _scratch_dir, _touch_pairs_table, r4, register,
+)
+from graph_db_spark.plans.families.q01_relational_pipeline import (
+    _SW_SQL, _graph_nparts, _ivf_training_sql,
+)
+from graph_db_spark.plans.families.q03_dedup_bounds_gate import _metric_rows, _minhash_band_sql
+from graph_db_spark.streaming import jobs as STRM
+from graph_db_spark.tables import load_table
+from graph_db_spark.util import spread
+
 
 def _session_iv_sql(event_type: str) -> str:
     """CTE body: gap-1800s session intervals of one event type (the

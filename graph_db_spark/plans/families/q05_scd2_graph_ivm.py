@@ -12,18 +12,25 @@
 """
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    DataFrame, F, ORACLE_SQL, STRM, SparkSession,
-    Window, _fmt_ts, _poly_sql, _run_batched_stream,
-    _scratch_dir, load_table, r4, register,
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from graph_db_spark.graph.algorithms import connected_components, k_truss
+from graph_db_spark.graph.build import (
+    build_graph, cooccurrence_edges, cooccurrence_edges_sql, edges_sql, purchase_edges,
+    purchase_edges_sql,
 )
-from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
-    P, _SW_SQL, build_graph, edges_sql,
-)
-from graph_db_spark.plans.families.q03_dedup_bounds_gate import (  # noqa: F401
-    PF, _metric_rows, _minhash_band_sql,
-)
+from graph_db_spark.operators import profiling as PF
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.plans import pipeline as P
+from graph_db_spark.plans.families.q00_base import (
+    ORACLE_SQL, _fmt_ts, _poly_sql, _run_batched_stream, _scratch_dir, r4, register,
+)
+from graph_db_spark.plans.families.q01_relational_pipeline import _SW_SQL
+from graph_db_spark.plans.families.q03_dedup_bounds_gate import _metric_rows, _minhash_band_sql
+from graph_db_spark.streaming import jobs as STRM
+from graph_db_spark.tables import load_table
+
 
 @register(
     "scd2_user_state",
@@ -192,11 +199,7 @@ def robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "link_prediction_adamic_adar",
-    oracle="""
-    WITH cp AS (
-      SELECT DISTINCT o_custkey AS c, l_partkey AS p
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
+    oracle="WITH " + purchase_edges_sql() + """,
     keep AS (
       SELECT p, CAST(count(*) AS BIGINT) AS d FROM cp GROUP BY 1
       HAVING count(*) BETWEEN 2 AND 500
@@ -225,13 +228,7 @@ def link_prediction_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     and quadratic work; standard link-prediction hub suppression, encoded
     identically in the oracle). Top-50 ranks on the ROUNDED score with a
     (cust_a, cust_b) tie-break, deterministic on both engines."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cp = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
+    cp = purchase_edges(spark, sf_dir)
     keep = (
         cp.groupBy("p").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
         .filter((F.col("d") >= 2) & (F.col("d") <= 500))
@@ -267,8 +264,7 @@ def _lpa_cte(iters: int = 3) -> str:
     tie-break as the Spark loop. Reused by the LPA query and the
     modularity scorer so both replay the identical community assignment."""
     parts = [
-        """op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-    e AS (SELECT DISTINCT a.p AS u, b.p AS v FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+        cooccurrence_edges_sql(u="u", v="v") + """,
     ed AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
     lab0 AS (SELECT DISTINCT u AS node, u AS label FROM ed)"""
     ]
@@ -307,15 +303,7 @@ def _lpa_edges_labels(
     EXACTLY the assignment the LPA query reports."""
     from graph_db_spark.graph.algorithms import prepartition_for_rounds
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    op = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")).distinct()
-    a = op.alias("a")
-    b = op.select(F.col("o").alias("ob"), F.col("p").alias("pb")).alias("b")
-    e = (
-        a.join(b, (F.col("a.o") == F.col("ob")) & (F.col("a.p") < F.col("pb")))
-        .select(F.col("a.p").alias("u"), F.col("pb").alias("v"))
-        .distinct()
-    )
+    e = cooccurrence_edges(load_table(spark, sf_dir, "lineitem"), "u", "v")
     if keep_edges:
         # only the modularity caller re-reads e; checkpointing it for the
         # plain LPA query would pay an extra materialization for nothing
@@ -921,10 +909,7 @@ def _hits_oracle_sql(iters: int = 3) -> str:
     """Unrolled HITS power iteration on the customer→part edge list with
     sum-normalization each half-step — same arithmetic as the Spark loop."""
     parts = [
-        """cp AS (
-      SELECT DISTINCT o_custkey AS c, l_partkey AS p
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
+        purchase_edges_sql() + """,
     h0 AS (SELECT DISTINCT c, 1.0 AS h FROM cp)"""
     ]
     for i in range(1, iters + 1):
@@ -967,14 +952,7 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver collect). Fixed rounds keep it deterministic and let the
     oracle replay the exact arithmetic unrolled. Top-10 per role ranks
     on the ROUNDED score with id tie-break."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cp = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    cp = purchase_edges(spark, sf_dir).localCheckpoint(eager=True)
     h = cp.select("c").distinct().withColumn("h", F.lit(1.0))
     a = None
     for _ in range(3):
@@ -1586,10 +1564,9 @@ def _k_truss_oracle_sql(k: int = 6, rounds: int = 8) -> str:
     the id-ordering (x<y<z); a final support pass over the converged
     edge set yields the reported per-edge supports."""
     parts = [
-        "WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p"
-        " FROM lineitem WHERE l_partkey % 4 = 0)",
-        "e0 AS MATERIALIZED (SELECT DISTINCT a.p AS a, b.p AS b"
-        " FROM op a JOIN op b ON a.o = b.o AND a.p < b.p)",
+        "WITH "
+        + cooccurrence_edges_sql("(SELECT * FROM lineitem WHERE l_partkey % 4 = 0)", "a", "b"),
+        "e0 AS (SELECT a, b FROM e)",
     ]
     for r in range(rounds):
         parts.append(
@@ -1632,21 +1609,8 @@ def k_truss_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     support from surviving edges). Output is the support histogram of
     the converged truss. Oracle: the peel unrolled round-by-round in SQL
     with a fixpoint margin."""
-    from graph_db_spark.graph.algorithms import k_truss
-
-    li = load_table(spark, sf_dir, "lineitem")
-    op = (
-        li.filter(F.col("l_partkey") % 4 == 0)
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    a, b = op.alias("a"), op.alias("b")
-    e = (
-        a.join(b, on=[F.col("a.o") == F.col("b.o"), F.col("a.p") < F.col("b.p")])
-        .select(F.col("a.p").alias("src"), F.col("b.p").alias("dst"))
-        .distinct()
-    )
-    t = k_truss(e, 6)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_partkey") % 4 == 0)
+    t = k_truss(cooccurrence_edges(li, "src", "dst"), 6)
     return t.groupBy(F.col("support").cast("bigint").alias("support")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_edges")
     )
@@ -1689,21 +1653,8 @@ def truss_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline a graph-DB user writes. Both stages are the already-verified
     operators; the oracle appends the recursive closure to the unrolled
     peel. Output: community-size histogram."""
-    from graph_db_spark.graph.algorithms import connected_components, k_truss
-
-    li = load_table(spark, sf_dir, "lineitem")
-    op = (
-        li.filter(F.col("l_partkey") % 4 == 0)
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    a, b = op.alias("a"), op.alias("b")
-    e = (
-        a.join(b, on=[F.col("a.o") == F.col("b.o"), F.col("a.p") < F.col("b.p")])
-        .select(F.col("a.p").alias("src"), F.col("b.p").alias("dst"))
-        .distinct()
-    )
-    truss = k_truss(e, 6).select(
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_partkey") % 4 == 0)
+    truss = k_truss(cooccurrence_edges(li, "src", "dst"), 6).select(
         F.col("a").cast("string").alias("src"), F.col("b").cast("string").alias("dst")
     )
     comp = connected_components(truss, n_partitions=4)

@@ -14,21 +14,24 @@
 """
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    DataFrame, F, STRM, SparkSession, Window,
-    _run_batched_stream, _scratch_dir, _touch_pairs_table,
-    load_table, r4, register,
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from graph_db_spark.graph.build import (
+    build_graph, cooccurrence_edges, cooccurrence_edges_sql, edges_sql,
 )
-from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
-    TX, _graph_nparts, build_graph, edges_sql,
-)
-from graph_db_spark.plans.families.q03_dedup_bounds_gate import (  # noqa: F401
-    PF, _metric_rows,
-)
-from graph_db_spark.plans.families.q05_scd2_graph_ivm import (  # noqa: F401
-    _CURATED_ORACLE, _PROVENANCE_ORACLE,
-)
+from graph_db_spark.operators import profiling as PF
+from graph_db_spark.operators import text as TX
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.plans.families.q00_base import (
+    _run_batched_stream, _scratch_dir, _touch_pairs_table, r4, register,
+)
+from graph_db_spark.plans.families.q01_relational_pipeline import _graph_nparts
+from graph_db_spark.plans.families.q03_dedup_bounds_gate import _metric_rows
+from graph_db_spark.plans.families.q05_scd2_graph_ivm import _CURATED_ORACLE, _PROVENANCE_ORACLE
+from graph_db_spark.streaming import jobs as STRM
+from graph_db_spark.tables import load_table
+
 
 @register("curation_provenance", oracle=_PROVENANCE_ORACLE)
 def curation_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -338,11 +341,9 @@ def shortest_path_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "local_clustering_coeff",
-    oracle="""
-    WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                FROM lineitem WHERE l_partkey % 4 = 0),
-    e AS MATERIALIZED (SELECT DISTINCT a.p AS a, b.p AS b
-                       FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+    oracle="WITH "
+    + cooccurrence_edges_sql("(SELECT * FROM lineitem WHERE l_partkey % 4 = 0)", "a", "b")
+    + """,
     tri AS MATERIALIZED (
       SELECT e1.a AS x, e1.b AS y, e2.b AS z
       FROM e e1 JOIN e e2 ON e2.a = e1.b
@@ -379,19 +380,8 @@ def local_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle shape as k_truss's single round; never per-vertex
     neighborhood intersection. Output is the 0.1-bucketed coefficient
     histogram plus the (3×triangle-count) mass check."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = (
-        li.filter(F.col("l_partkey") % 4 == 0)
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    a, b = op.alias("a"), op.alias("b")
-    e = (
-        a.join(b, on=[F.col("a.o") == F.col("b.o"), F.col("a.p") < F.col("b.p")])
-        .select(F.col("a.p").alias("a"), F.col("b.p").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_partkey") % 4 == 0)
+    e = cooccurrence_edges(li, "a", "b").localCheckpoint(eager=True)
     xy = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
     yz = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
     xz = e.select(F.col("a").alias("x"), F.col("b").alias("z"))

@@ -12,21 +12,18 @@
 """
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    DataFrame, F, SparkSession, Window,
-    _drain_to_memory, _poly_sql, _scratch_dir, load_table,
-    r4, register,
-)
-from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
-    TX,
-)
-from graph_db_spark.plans.families.q03_dedup_bounds_gate import (  # noqa: F401
-    _metric_rows,
-)
-from graph_db_spark.plans.families.q05_scd2_graph_ivm import (  # noqa: F401
-    _lpa_cte, _lpa_edges_labels,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from graph_db_spark.operators import text as TX
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.plans.families.q00_base import (
+    _drain_to_memory, _poly_sql, _scratch_dir, r4, register,
+)
+from graph_db_spark.plans.families.q03_dedup_bounds_gate import _metric_rows
+from graph_db_spark.plans.families.q05_scd2_graph_ivm import _lpa_cte, _lpa_edges_labels
+from graph_db_spark.tables import load_table
+
 
 @register(
     "market_basket_lift",

@@ -11,19 +11,24 @@
 """
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    DataFrame, F, SparkSession, Window,
-    _poly_sql, _scratch_dir, load_table, r4,
-    register,
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from graph_db_spark.graph.build import (
+    cooccurrence_edges, cooccurrence_edges_sql, purchase_edges, purchase_edges_sql, trade_edges,
+    trade_edges_sql,
 )
-from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
-    SIM, _ivf_training_sql,
-)
-from graph_db_spark.plans.families.q03_dedup_bounds_gate import (  # noqa: F401
-    PF,
-)
-from graph_db_spark.graph.build import trade_edges, trade_edges_sql
+from graph_db_spark.operators import profiling as PF
+from graph_db_spark.operators import similarity as SIM
+from graph_db_spark.operators.dedup import portable_hash
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.plans.families.q00_base import (
+    _cohort_risk, _cohort_risk_sql, _conversion_obs, _conversion_obs_sql, _oriented_triangles,
+    _oriented_triangles_sql, _poly_sql, _scratch_dir, r4, register,
+)
+from graph_db_spark.plans.families.q01_relational_pipeline import _ivf_training_sql
+from graph_db_spark.tables import load_table
+
 
 @register(
     "embedding_eval_contamination",
@@ -100,11 +105,7 @@ def embedding_eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "jaccard_link_prediction",
-    oracle="""
-    WITH cp AS (
-      SELECT DISTINCT o_custkey AS c, l_partkey AS p
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
+    oracle="WITH " + purchase_edges_sql() + """,
     keep AS (
       SELECT p FROM cp GROUP BY 1 HAVING count(*) BETWEEN 2 AND 500
     ),
@@ -137,13 +138,7 @@ def jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio. Jaccard is pure integer arithmetic, so both engines rank on
     bit-identical doubles; top-50 on the RAW score with (a, b)
     tie-break."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cp = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
+    cp = purchase_edges(spark, sf_dir)
     keep = (
         cp.groupBy("p")
         .agg(F.count(F.lit(1)).alias("d"))
@@ -347,41 +342,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "kaplan_meier_churn",
-    oracle="""
-    WITH span AS (
-      SELECT user_id,
-             min(ts) AS first_ts,
-             arg_min(event_type, strftime(ts, '%Y-%m-%d %H:%M:%S.%f')
-                     || '#' || lpad(CAST(event_id AS VARCHAR), 12, '0')) AS cohort
-      FROM events GROUP BY 1
-    ),
-    conv AS (
-      SELECT user_id, min(ts) AS conv_ts FROM events
-      WHERE event_type = 'purchase' AND value >= 95 GROUP BY 1
-    ),
-    horizon AS (SELECT max(ts) AS h FROM events),
-    obs AS (
-      SELECT s.cohort,
-             CASE WHEN c.user_id IS NOT NULL
-                  THEN CAST(date_diff('day', s.first_ts, c.conv_ts) AS BIGINT)
-                  ELSE CAST(date_diff('day', s.first_ts, h) AS BIGINT) END AS t,
-             CASE WHEN c.user_id IS NOT NULL THEN 1 ELSE 0 END AS death
-      FROM span s LEFT JOIN conv c USING (user_id) CROSS JOIN horizon
-    ),
-    tot AS (SELECT cohort, count(*) AS n FROM obs GROUP BY 1),
-    dt AS (
-      SELECT cohort, t,
-             CAST(sum(death) AS BIGINT) AS d,
-             CAST(count(*) AS BIGINT) AS ended
-      FROM obs GROUP BY 1, 2
-    ),
-    risk AS (
-      SELECT cohort, t, d,
-             tot.n - coalesce(sum(ended) OVER (PARTITION BY cohort ORDER BY t
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS n_risk
-      FROM dt JOIN tot USING (cohort)
-    ),
+    oracle="WITH " + _conversion_obs_sql(95) + ",\n    " + _cohort_risk_sql() + """,
     km AS (
       -- d = n_risk makes the factor 0 and every later S(t) exactly 0;
       -- guard the ln argument (DuckDB ln(0) ERRORS, Spark NULLs) and
@@ -412,46 +373,7 @@ def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential fold; the at-risk counts are a right-aligned cumulative.
     All counts integer; the one float surface (the product) is
     engine-replayed and rounded."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    span = (
-        ev.withColumn("cohort", F.first("event_type").over(w))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("first_ts"), F.first("cohort").alias("cohort"))
-    )
-    conv = (
-        ev.filter((F.col("event_type") == "purchase") & (F.col("value") >= 95))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("conv_ts"))
-    )
-    h = ev.agg(F.max("ts").alias("h"))
-    obs = (
-        span.join(conv, on="user_id", how="left")
-        .crossJoin(F.broadcast(h))
-        .select(
-            "cohort",
-            F.when(
-                F.col("conv_ts").isNotNull(),
-                F.datediff(F.col("conv_ts"), F.col("first_ts")),
-            )
-            .otherwise(F.datediff(F.col("h"), F.col("first_ts")))
-            .cast("bigint")
-            .alias("t"),
-            F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("death"),
-        )
-    )
-    tot = obs.groupBy("cohort").agg(F.count(F.lit(1)).alias("n"))
-    dt = obs.groupBy("cohort", "t").agg(
-        F.sum("death").cast("bigint").alias("d"),
-        F.count(F.lit(1)).cast("bigint").alias("ended"),
-    )
-    wprev = (
-        Window.partitionBy("cohort").orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    risk = dt.join(tot, on="cohort").select(
-        "cohort", "t", "d",
-        (F.col("n") - F.coalesce(F.sum("ended").over(wprev), F.lit(0))).alias("n_risk"),
-    )
+    risk = _cohort_risk(_conversion_obs(spark, sf_dir, min_value=95))
     wkm = Window.partitionBy("cohort").orderBy("t")
     # mirror the oracle's zero-factor guard: d = n_risk zeroes S(t) from
     # that event time on; ln only ever sees strictly positive factors
@@ -532,7 +454,6 @@ def maximal_independent_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(log n) round bound while making every run (and the oracle replay)
     bit-identical."""
     from graph_db_spark.graph.algorithms import luby_mis
-    from graph_db_spark.operators.dedup import portable_hash
 
     e = trade_edges(spark, sf_dir)
     mis = luby_mis(e, rounds=6).localCheckpoint(eager=True)
@@ -558,27 +479,12 @@ def maximal_independent_set(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sampled_triangle_estimate",
     oracle=f"""
-    WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-    eall AS MATERIALIZED (SELECT DISTINCT a.p AS p1, b.p AS p2
-                          FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-    e AS MATERIALIZED (
-      SELECT p1, p2 FROM eall
+    WITH {cooccurrence_edges_sql()},
+    es AS MATERIALIZED (
+      SELECT p1, p2 FROM e
       WHERE ({_poly_sql("CAST(p1 AS VARCHAR) || '-' || CAST(p2 AS VARCHAR)")}) % 10 < 3
     ),
-    deg AS MATERIALIZED (SELECT p, count(*) AS d FROM
-                         (SELECT p1 AS p FROM e UNION ALL SELECT p2 FROM e) GROUP BY p),
-    ore AS MATERIALIZED (
-      SELECT CASE WHEN (da.d, e.p1) < (db.d, e.p2) THEN e.p1 ELSE e.p2 END AS u,
-             CASE WHEN (da.d, e.p1) < (db.d, e.p2) THEN e.p2 ELSE e.p1 END AS v
-      FROM e JOIN deg da ON e.p1 = da.p JOIN deg db ON e.p2 = db.p
-    ),
-    rk AS MATERIALIZED (SELECT ore.u, ore.v, dv.d AS dv_ FROM ore JOIN deg dv ON ore.v = dv.p),
-    tri AS (
-      SELECT CAST(count(*) AS BIGINT) AS n
-      FROM rk e1
-      JOIN rk e2 ON e1.u = e2.u AND (e1.dv_, e1.v) < (e2.dv_, e2.v)
-      JOIN ore e3 ON e3.u = e1.v AND e3.v = e2.v
-    )
+    {_oriented_triangles_sql("es")}
     SELECT n AS sampled_triangles,
            round(n / 0.027, 4) + 0.0 AS estimated_triangles
     FROM tri
@@ -594,56 +500,15 @@ def sampled_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (unbiased; variance bounds in the paper) — the exact
     ``cooccurrence_triangles`` stays as this query's ground-truth
     companion at verification scale."""
-    op = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    from graph_db_spark.operators.dedup import portable_hash
-
-    a, b = op.alias("a"), op.alias("b")
     ekey = F.concat(
         F.col("p1").cast("string"), F.lit("-"), F.col("p2").cast("string")
     )
     e = (
-        a.join(b, on=[F.col("a.o") == F.col("b.o"), F.col("a.p") < F.col("b.p")])
-        .select(F.col("a.p").alias("p1"), F.col("b.p").alias("p2"))
-        .distinct()
+        cooccurrence_edges(load_table(spark, sf_dir, "lineitem"))
         .filter(portable_hash(ekey) % 10 < 3)
         .localCheckpoint(eager=True)
     )
-    deg = (
-        e.select(F.col("p1").alias("p"))
-        .unionAll(e.select(F.col("p2").alias("p")))
-        .groupBy("p")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    da = dim_hint(deg.select(F.col("p").alias("p1"), F.col("d").alias("d1")), bounded=False)
-    db = dim_hint(deg.select(F.col("p").alias("p2"), F.col("d").alias("d2")), bounded=False)
-    lower = F.struct("d1", "p1") < F.struct("d2", "p2")
-    ore = (
-        e.join(da, on="p1")
-        .join(db, on="p2")
-        .select(
-            F.when(lower, F.col("p1")).otherwise(F.col("p2")).alias("u"),
-            F.when(lower, F.col("p2")).otherwise(F.col("p1")).alias("v"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    dv = dim_hint(deg.select(F.col("p").alias("v"), F.col("d").alias("dv")), bounded=False)
-    rk = ore.join(dv, on="v").select("u", "v", "dv")
-    e1, e2 = rk.alias("e1"), rk.alias("e2")
-    wedges = e1.join(
-        e2,
-        on=[
-            F.col("e1.u") == F.col("e2.u"),
-            F.struct(F.col("e1.dv"), F.col("e1.v")) < F.struct(F.col("e2.dv"), F.col("e2.v")),
-        ],
-    ).select(F.col("e1.v").alias("wu"), F.col("e2.v").alias("wv"))
-    e3 = ore.select(F.col("u").alias("wu"), F.col("v").alias("wv"))
-    tri = wedges.join(e3, on=["wu", "wv"]).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
+    tri = _oriented_triangles(e)
     return tri.select(
         F.col("n").alias("sampled_triangles"),
         r4(F.col("n") / F.lit(0.027)).alias("estimated_triangles"),
@@ -1322,7 +1187,6 @@ def gee_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimator's bias on this distribution is visible. This is the
     optimizer's NDV probe when even one pass is too expensive — the
     sample is the only thing read."""
-    from graph_db_spark.operators.dedup import portable_hash
 
     ev = load_table(spark, sf_dir, "events")
     smp = ev.filter(portable_hash(F.col("event_id").cast("string")) % 20 == 0)
@@ -1393,7 +1257,6 @@ def range_partition_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Boundary semantics: bucket = count of boundaries strictly below
     the key."""
     from graph_db_spark.operators.aggregates import with_global_rank
-    from graph_db_spark.operators.dedup import portable_hash
 
     o = load_table(spark, sf_dir, "orders")
     keys = o.select(F.col("o_totalprice").alias("k"))

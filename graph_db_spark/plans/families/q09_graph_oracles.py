@@ -12,14 +12,15 @@
 """
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    DataFrame, F, SparkSession, Window,
-    _poly_sql, load_table, r4, register,
-)
-from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
-    SIM, _pq_d2,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
 from graph_db_spark.graph.build import trade_edges, trade_edges_sql
+from graph_db_spark.operators import similarity as SIM
+from graph_db_spark.plans.families.q00_base import _poly_sql, r4, register
+from graph_db_spark.plans.families.q01_relational_pipeline import _pq_d2
+from graph_db_spark.tables import load_table
+
 
 def _hyperanf_sql(p: int = 4, rounds: int = 3) -> str:
     """DuckDB replay of the HyperANF register propagation: same 62-bit

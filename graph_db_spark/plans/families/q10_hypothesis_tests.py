@@ -13,14 +13,15 @@ from __future__ import annotations
 
 import math
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    DataFrame, F, SparkSession, Window,
-    load_table, r4, register,
-)
-from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
-    SIM, edges_sql,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from graph_db_spark.graph.build import edges_sql
+from graph_db_spark.operators import similarity as SIM
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.plans.families.q00_base import r4, register
+from graph_db_spark.tables import load_table
+
 
 @register(
     "welch_t_test",

@@ -11,14 +11,17 @@
 """
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    Column, DataFrame, F, SparkSession,
-    Window, load_table, r4, register,
-)
-from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
-    SIM, _SW_SQL,
-)
+from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from graph_db_spark.operators import similarity as SIM
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.plans.families.q00_base import (
+    _cohort_risk, _cohort_risk_sql, _conversion_obs, _conversion_obs_sql, r4, register,
+)
+from graph_db_spark.plans.families.q01_relational_pipeline import _SW_SQL
+from graph_db_spark.tables import load_table
+
 
 @register(
     "corpus_diversity_indices",
@@ -1200,41 +1203,7 @@ def brand_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "nelson_aalen_hazard",
-    oracle="""
-    WITH span AS (
-      SELECT user_id,
-             min(ts) AS first_ts,
-             arg_min(event_type, strftime(ts, '%Y-%m-%d %H:%M:%S.%f')
-                     || '#' || lpad(CAST(event_id AS VARCHAR), 12, '0')) AS cohort
-      FROM events GROUP BY 1
-    ),
-    conv AS (
-      SELECT user_id, min(ts) AS conv_ts FROM events
-      WHERE event_type = 'purchase' GROUP BY 1
-    ),
-    horizon AS (SELECT max(ts) AS h FROM events),
-    obs AS (
-      SELECT s.cohort,
-             CASE WHEN c.user_id IS NOT NULL
-                  THEN CAST(date_diff('day', s.first_ts, c.conv_ts) AS BIGINT)
-                  ELSE CAST(date_diff('day', s.first_ts, h) AS BIGINT) END AS t,
-             CASE WHEN c.user_id IS NOT NULL THEN 1 ELSE 0 END AS death
-      FROM span s LEFT JOIN conv c USING (user_id) CROSS JOIN horizon
-    ),
-    tot AS (SELECT cohort, count(*) AS n FROM obs GROUP BY 1),
-    dt AS (
-      SELECT cohort, t,
-             CAST(sum(death) AS BIGINT) AS d,
-             CAST(count(*) AS BIGINT) AS ended
-      FROM obs GROUP BY 1, 2
-    ),
-    risk AS (
-      SELECT cohort, t, d,
-             tot.n - coalesce(sum(ended) OVER (PARTITION BY cohort ORDER BY t
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS n_risk
-      FROM dt JOIN tot USING (cohort)
-    ),
+    oracle="WITH " + _conversion_obs_sql() + ",\n    " + _cohort_risk_sql() + """,
     na AS (
       SELECT cohort, t, n_risk, d,
              sum(d * 1.0 / n_risk) OVER (PARTITION BY cohort ORDER BY t
@@ -1262,46 +1231,7 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the bounded per-cohort day grid, and the hazard sums are
     ordered windows over those — each d/n term is an integer ratio, so
     both engines walk bit-identical partial sums."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    span = (
-        ev.withColumn("cohort", F.first("event_type").over(w))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("first_ts"), F.first("cohort").alias("cohort"))
-    )
-    conv = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("conv_ts"))
-    )
-    h = ev.agg(F.max("ts").alias("h"))
-    obs = (
-        span.join(conv, on="user_id", how="left")
-        .crossJoin(F.broadcast(h))
-        .select(
-            "cohort",
-            F.when(
-                F.col("conv_ts").isNotNull(),
-                F.datediff(F.col("conv_ts"), F.col("first_ts")),
-            )
-            .otherwise(F.datediff(F.col("h"), F.col("first_ts")))
-            .cast("bigint")
-            .alias("t"),
-            F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("death"),
-        )
-    )
-    tot = obs.groupBy("cohort").agg(F.count(F.lit(1)).alias("n"))
-    dt = obs.groupBy("cohort", "t").agg(
-        F.sum("death").cast("bigint").alias("d"),
-        F.count(F.lit(1)).cast("bigint").alias("ended"),
-    )
-    wprev = (
-        Window.partitionBy("cohort").orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    risk = dt.join(tot, on="cohort").select(
-        "cohort", "t", "d",
-        (F.col("n") - F.coalesce(F.sum("ended").over(wprev), F.lit(0))).alias("n_risk"),
-    )
+    risk = _cohort_risk(_conversion_obs(spark, sf_dir))
     wna = (
         Window.partitionBy("cohort").orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
     )

@@ -9,11 +9,15 @@
 """
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    DataFrame, F, SparkSession, Window,
-    _fmt_ts, load_table, r4, register,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.plans.families.q00_base import (
+    _conversion_obs, _conversion_obs_sql, _fmt_ts, r4, register,
+)
+from graph_db_spark.tables import load_table
+
 
 @register(
     "cumulative_gains_deciles",
@@ -952,35 +956,18 @@ def friedman_priority_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "logrank_cohort_test",
-    oracle="""
-    WITH span AS (
-      SELECT user_id, min(ts) AS first_ts,
-             arg_min(event_type, strftime(ts, '%Y-%m-%d %H:%M:%S.%f')
-                     || '#' || lpad(CAST(event_id AS VARCHAR), 12, '0'))
-               AS cohort
-      FROM events GROUP BY 1
-    ),
-    conv AS (
-      SELECT user_id, min(ts) AS conv_ts FROM events
-      WHERE event_type = 'purchase' AND value >= 95 GROUP BY 1
-    ),
-    horizon AS (SELECT max(ts) AS h FROM events),
-    obs AS MATERIALIZED (
-      SELECT CASE WHEN s.cohort = 'view' THEN 1 ELSE 0 END AS grp,
-             CASE WHEN c.user_id IS NOT NULL
-                  THEN CAST(date_diff('day', s.first_ts, c.conv_ts) AS BIGINT)
-                  ELSE CAST(date_diff('day', s.first_ts, h) AS BIGINT) END AS t,
-             CASE WHEN c.user_id IS NOT NULL THEN 1 ELSE 0 END AS death
-      FROM span s LEFT JOIN conv c USING (user_id) CROSS JOIN horizon
-      WHERE s.cohort IN ('view', 'click')
+    oracle="WITH " + _conversion_obs_sql(95) + """,
+    gobs AS MATERIALIZED (
+      SELECT CASE WHEN cohort = 'view' THEN 1 ELSE 0 END AS grp, t, death
+      FROM obs WHERE cohort IN ('view', 'click')
     ),
     ended_all AS MATERIALIZED (
       SELECT grp, t, CAST(count(*) AS BIGINT) AS ended,
              CAST(sum(death) AS BIGINT) AS d
-      FROM obs GROUP BY 1, 2
+      FROM gobs GROUP BY 1, 2
     ),
-    tot AS (SELECT grp, CAST(count(*) AS BIGINT) AS n FROM obs GROUP BY 1),
-    times AS (SELECT t FROM obs WHERE death = 1 GROUP BY 1),
+    tot AS (SELECT grp, CAST(count(*) AS BIGINT) AS n FROM gobs GROUP BY 1),
+    times AS (SELECT t FROM gobs WHERE death = 1 GROUP BY 1),
     risk AS MATERIALIZED (
       SELECT times.t AS tau, tot.grp,
              tot.n - coalesce(sum(CASE WHEN e.t < times.t THEN e.ended END), 0)
@@ -1025,33 +1012,11 @@ def logrank_cohort_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one shuffle. Every n/d is an integer; E1 and V are short sums of
     exact rationals (1-ulp noise at magnitude ~10^2, far from the r4
     boundary)."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    span = (
-        ev.withColumn("cohort", F.first("event_type").over(w))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("first_ts"), F.first("cohort").alias("cohort"))
-    )
-    conv = (
-        ev.filter((F.col("event_type") == "purchase") & (F.col("value") >= 95))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("conv_ts"))
-    )
-    h = ev.agg(F.max("ts").alias("h"))
     obs = (
-        span.filter(F.col("cohort").isin("view", "click"))
-        .join(conv, on="user_id", how="left")
-        .crossJoin(F.broadcast(h))
+        _conversion_obs(spark, sf_dir, min_value=95)
+        .filter(F.col("cohort").isin("view", "click"))
         .select(
-            F.when(F.col("cohort") == "view", 1).otherwise(0).alias("grp"),
-            F.when(
-                F.col("conv_ts").isNotNull(),
-                F.datediff(F.col("conv_ts"), F.col("first_ts")),
-            )
-            .otherwise(F.datediff(F.col("h"), F.col("first_ts")))
-            .cast("bigint")
-            .alias("t"),
-            F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias("death"),
+            F.when(F.col("cohort") == "view", 1).otherwise(0).alias("grp"), "t", "death"
         )
         .localCheckpoint()  # day-bounded rows, consumed by three subtrees
     )

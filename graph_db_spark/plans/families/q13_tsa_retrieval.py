@@ -8,13 +8,15 @@
 """
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    DataFrame, F, SparkSession, Window,
-    load_table, r4, register,
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from graph_db_spark.plans.families.q00_base import (
+    _conversion_obs, _conversion_obs_sql, r4, register,
 )
-from graph_db_spark.plans.families.q01_relational_pipeline import (  # noqa: F401
-    _ivf_training_sql,
-)
+from graph_db_spark.plans.families.q01_relational_pipeline import _ivf_training_sql
+from graph_db_spark.tables import load_table
+
 
 @register(
     "durbin_watson_trend",
@@ -950,23 +952,7 @@ def engle_granger_cointegration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "weibull_time_to_convert",
-    oracle="""
-    WITH span AS (
-      SELECT user_id, min(ts) AS first_ts FROM events GROUP BY 1
-    ),
-    conv AS (
-      SELECT user_id, min(ts) AS conv_ts FROM events
-      WHERE event_type = 'purchase' AND value >= 95 GROUP BY 1
-    ),
-    horizon AS (SELECT max(ts) AS h FROM events),
-    obs AS (
-      SELECT CASE WHEN c.user_id IS NOT NULL
-                  THEN CAST(date_diff('day', s.first_ts, c.conv_ts) AS BIGINT)
-                  ELSE CAST(date_diff('day', s.first_ts, h) AS BIGINT) END
-               AS t,
-             CASE WHEN c.user_id IS NOT NULL THEN 1 ELSE 0 END AS death
-      FROM span s LEFT JOIN conv c USING (user_id) CROSS JOIN horizon
-    ),
+    oracle="WITH " + _conversion_obs_sql(95) + """,
     tot AS (SELECT count(*) AS n FROM obs),
     dt AS (
       SELECT t, CAST(sum(death) AS BIGINT) AS d,
@@ -1027,31 +1013,9 @@ def weibull_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     median λ·(ln2)^(1/k). The OLS runs over ≤ horizon-days KM points
     (log-log regression over a bounded grid — the heaps_law_fit float
     precedent); event-time windows are horizon-bounded (allowlisted)."""
-    ev = load_table(spark, sf_dir, "events")
-    span = ev.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
-    conv = (
-        ev.filter(
-            (F.col("event_type") == "purchase") & (F.col("value") >= 95)
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("conv_ts"))
-    )
-    h = ev.agg(F.max("ts").alias("h"))
     obs = (
-        span.join(conv, on="user_id", how="left")
-        .crossJoin(F.broadcast(h))
-        .select(
-            F.when(
-                F.col("conv_ts").isNotNull(),
-                F.datediff(F.col("conv_ts"), F.col("first_ts")),
-            )
-            .otherwise(F.datediff(F.col("h"), F.col("first_ts")))
-            .cast("bigint")
-            .alias("t"),
-            F.when(F.col("conv_ts").isNotNull(), 1).otherwise(0).alias(
-                "death"
-            ),
-        )
+        _conversion_obs(spark, sf_dir, min_value=95)
+        .select("t", "death")
         .localCheckpoint()  # user-level frame: feeds KM grid AND totals
     )
     tot = obs.agg(F.count(F.lit(1)).alias("n"))

@@ -7,17 +7,14 @@
 """
 from __future__ import annotations
 
-from graph_db_spark.plans.families.q00_base import (  # noqa: F401
-    DataFrame, F, SparkSession, Window,
-    load_table, r4, register,
-)
-from graph_db_spark.plans.families.q03_dedup_bounds_gate import (  # noqa: F401
-    _reorder_for_gate,
-)
-from graph_db_spark.plans.families.q13_tsa_retrieval import (  # noqa: F401
-    _mrr_ivf_oracle_sql,
-)
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.plans.families.q00_base import r4, register
+from graph_db_spark.plans.families.q13_tsa_retrieval import _mrr_ivf_oracle_sql
+from graph_db_spark.tables import load_table
+
 
 @register("mrr_hit_at_k_ivf", oracle=_mrr_ivf_oracle_sql())
 def mrr_hit_at_k_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1080,6 +1077,3 @@ def weekly_cycle_dft(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         r4(F.atan2("im", "re")).alias("phase_rad"),
     )
-
-
-_reorder_for_gate()

@@ -598,20 +598,15 @@ def optimum_sap_ranges(ctx: Context, sap_analyses: DataFrame) -> DataFrame:
     )
 
 
-def _opt_range_id() -> Column:
-    """The reference's 'crop|date' OptimumSAPRange handle
-    (graph_optimum_element_range.py:117) that element ranges key under."""
-    return F.concat_ws("|", "crop_name", "date")
-
-
 @task("optimum_element_ranges", "node", deps=["sap_analyses"],
       keys=["opt_range_id", "nutrient"])
 def optimum_element_ranges(ctx: Context, sap_analyses: DataFrame) -> DataFrame:
     """OptimumElementRange nodes (graph_optimum_element_range.py:86-171):
     optimum range strings ('1-4', '>= 2.5', '<=7', '3') parse to
     (min,max) via F5 (_parse_optimum :38-61 ≙ S.parse_range); rows where
-    neither bound parses are skipped (:146-148); opt_range_id =
-    'crop|date' (:117). The elements⊎others stream concat (U1, :132-136)
+    neither bound parses are skipped (:146-148); opt_range_id is the
+    parent OptimumSAPRange's node id (the reference's 'crop|date' handle,
+    :117). The elements⊎others stream concat (U1, :132-136)
     is one lineitem scan here; A8 dedup keeps the first entry per
     (header, nutrient)."""
     from graph_db_spark.util import spread
@@ -620,7 +615,7 @@ def optimum_element_ranges(ctx: Context, sap_analyses: DataFrame) -> DataFrame:
     # sap_element_results for why — post-join partitions are AQE-coalesced)
     li = spread(ctx.table("lineitem"))
     parents = sap_analyses.filter(F.col("leaf_type") == "young").select(
-        _opt_range_id().alias("opt_range_id"),
+        node_id("optimum_sap_ranges").alias("opt_range_id"),
         "order_ref",
     )
     q = F.col("l_quantity").cast("int").cast("string")
@@ -764,8 +759,8 @@ def depth_points(ctx: Context, stations: DataFrame) -> DataFrame:
 ID = object()  # a join-pair src that is the src node's id
 _DIMENSIONS = {"stations", "fields", "crops", "fertilizer_products"}
 
-# name, REL_TYPE, src label, dst label, join pairs: (src column | ID | Column
-# factory, dst column), or one column name that both sides join on, as in
+# name, REL_TYPE, src label, dst label, join pairs: (src column | ID, dst
+# column), or one column name that both sides join on, as in
 # DataFrame.join(on=[...]); the comment cites the reference's edge writer
 EDGES: list[tuple[str, str, str, str, list]] = [
     ("planted_with", "PLANTED_WITH", "fields", "crops",
@@ -810,7 +805,7 @@ EDGES: list[tuple[str, str, str, str, list]] = [
      [("name", "crop_name")]),  # graph_optimum_sap_range.py:74-82
     ("has_optimum_element", "HAS_OPTIMUM_ELEMENT", "optimum_sap_ranges",
      "optimum_element_ranges",
-     [(_opt_range_id, "opt_range_id")]),  # graph_optimum_element_range.py:159-167
+     [(ID, "opt_range_id")]),  # graph_optimum_element_range.py:159-167
     ("has_water_param", "HAS_WATER_PARAM", "water_analyses", "water_param_results",
      [(ID, "water_analysis_id")]),  # graph_water_param_result.py:120-135
     ("has_product_app", "HAS_PRODUCT_APP", "application_events", "product_applications",
@@ -834,7 +829,7 @@ def _endpoint(df: DataFrame, label: str, end: str, values: list) -> tuple[DataFr
             names.append(end)
         else:
             names.append(f"{end}{i}")
-            cols[names[-1]] = v() if callable(v) else F.col(v)
+            cols[names[-1]] = F.col(v)
     return df.select(*[c.alias(n) for n, c in cols.items()]), names
 
 

@@ -13,7 +13,7 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "graph_db_spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "graph_db_spark") -> SparkSession:
     """Create (or reuse) a SparkSession with engine defaults.
 
     AQE handles runtime coalescing of shuffle partitions and skew-join
@@ -21,11 +21,10 @@ def get_spark(app_name: str = "graph_db_spark", shuffle_partitions: int | None =
     upper bound; at 100 TB we'd raise it to O(cores×3) and let AQE coalesce.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    n_shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(n_shuffle))
+        .config("spark.sql.shuffle.partitions", str(int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

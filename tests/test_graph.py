@@ -685,24 +685,39 @@ def test_boruvka_forest_matches_kruskal(spark):
     assert len(comps) == 2
 
 
-def test_trade_edges_match_oracle_cte(spark, sf_dir):
-    """``trade_edges`` (Spark) and ``trade_edges_sql`` (the CTE every
-    trade-graph oracle starts with) give the same row multiset, and the
-    rows are the symmetric, distinct customer–supplier edge list."""
+@pytest.mark.parametrize(
+    "builder", ["trade_edges", "cooccurrence_edges", "purchase_edges"]
+)
+def test_graph_builder_matches_oracle_cte(spark, sf_dir, builder):
+    """Each shared graph of graph/build.py, built in Spark and by its
+    ``*_sql`` CTE text (what the oracles start with), gives the same row
+    multiset with no duplicate rows; the trade graph is symmetric over
+    C:/S: ids, and each co-occurrence edge lists its smaller part first."""
     from collections import Counter
 
     import duckdb
 
-    from graph_db_spark.graph.build import trade_edges, trade_edges_sql
+    from graph_db_spark.graph import build as B
+    from graph_db_spark.tables import load_table
 
     con = duckdb.connect()
     for t in ("lineitem", "orders"):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    oracle = Counter(
-        con.execute(f"WITH {trade_edges_sql()} SELECT src, dst FROM e").fetchall()
-    )
-    got = Counter((r.src, r.dst) for r in trade_edges(spark, sf_dir).collect())
+    build, cte, table = {
+        "trade_edges": (lambda: B.trade_edges(spark, sf_dir), B.trade_edges_sql(), "e"),
+        "cooccurrence_edges": (
+            lambda: B.cooccurrence_edges(load_table(spark, sf_dir, "lineitem")),
+            B.cooccurrence_edges_sql(),
+            "e",
+        ),
+        "purchase_edges": (lambda: B.purchase_edges(spark, sf_dir), B.purchase_edges_sql(), "cp"),
+    }[builder]
+    oracle = Counter(con.execute(f"WITH {cte} SELECT * FROM {table}").fetchall())
+    got = Counter(tuple(r) for r in build().collect())
     assert got and got == oracle
     assert set(got.values()) == {1}  # distinct
-    assert all((d, s) in got for s, d in got)  # symmetric
-    assert {(s[:2], d[:2]) for s, d in got} == {("C:", "S:"), ("S:", "C:")}
+    if builder == "trade_edges":
+        assert all((d, s) in got for s, d in got)  # symmetric
+        assert {(s[:2], d[:2]) for s, d in got} == {("C:", "S:"), ("S:", "C:")}
+    if builder == "cooccurrence_edges":
+        assert all(u < v for u, v in got)

@@ -11,7 +11,7 @@ import duckdb
 import pytest
 
 from __spark_entry__ import oracle_sql, queries
-from graph_db_spark.plans.families.q03_dedup_bounds_gate import _EXPENSIVE_LAST
+from graph_db_spark.plans.queries import _EXPENSIVE_LAST
 from graph_db_spark.tables import TABLE_NAMES
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -53,7 +53,7 @@ def test_gate_window_and_expensive_tail_ordering():
     exactly _GATE_WINDOW (the round-6 rotation closing the never-driver-
     checked backlog), and the expensive iterative queries not promoted
     into the window close the tail in their cost order."""
-    from graph_db_spark.plans.families.q03_dedup_bounds_gate import _GATE_WINDOW
+    from graph_db_spark.plans.queries import _GATE_WINDOW
 
     q = list(queries())
     assert len(_GATE_WINDOW) == 50
@@ -98,7 +98,7 @@ def test_r13_gate_window_mixes_requeues_and_stalest():
     import json
     import os
 
-    from graph_db_spark.plans.families.q03_dedup_bounds_gate import _GATE_WINDOW
+    from graph_db_spark.plans.queries import _GATE_WINDOW
 
     requeued = [
         "nation_volume_shipping", "nation_market_share",
@@ -201,3 +201,40 @@ def test_rounded_emissions_cannot_produce_negative_zero(spark, sf_dir):
     assert any(v == 0.0 for v in svals + ovals), "fixture no longer hits the round-to-zero path"
     bad = [v for v in svals + ovals if v == 0.0 and math.copysign(1.0, v) < 0]
     assert not bad, f"{len(bad)} -0.0 cells emitted"
+
+
+def test_family_imports_name_their_defining_module():
+    """No re-export shims: every name a family module imports from another
+    family module is defined there (def, class or assignment), not merely
+    imported into it — pyspark and library names come from their own
+    modules."""
+    import ast
+    import pathlib
+
+    from graph_db_spark.plans import families
+
+    def defined(tree):
+        names = set()
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                names.add(node.name)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names |= {t.id for t in targets if isinstance(t, ast.Name)}
+        return names
+
+    trees = {
+        p.stem: ast.parse(p.read_text())
+        for p in pathlib.Path(families.__file__).parent.glob("q*.py")
+    }
+    defs = {name: defined(tree) for name, tree in trees.items()}
+    prefix = "graph_db_spark.plans.families."
+    bad = [
+        f"{name} imports {a.name} from {node.module}"
+        for name, tree in trees.items()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(prefix)
+        for a in node.names
+        if a.name not in defs[node.module[len(prefix):]]
+    ]
+    assert len(trees) == 15 and not bad, bad

@@ -87,6 +87,9 @@ def test_no_dangling_edges(spark, sf_dir):
     assert len(ends) == 54
     dangling = functools.reduce(DataFrame.unionByName, ends).groupBy("end").count()
     assert {r["end"]: r["count"] for r in dangling.collect()} == {}
+    # a child's parent-id column names its parent node, not only via the edge
+    ranges = out["optimum_sap_ranges"].select(node_id("optimum_sap_ranges").alias("id"))
+    assert dangling_edges(out["optimum_element_ranges"], ranges, ["opt_range_id"], ["id"]).count() == 0
 
 
 def test_no_dangling_water_params(spark, sf_dir):

@@ -791,3 +791,24 @@ def test_dump_plans_usage_line_on_missing_args(monkeypatch, capsys):
     rc = dump_plans.main()
     assert rc == 2
     assert "usage:" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("min_value", [95, None])
+def test_conversion_obs_matches_oracle_cte(spark, min_value):
+    """``_conversion_obs`` (Spark) and ``_conversion_obs_sql`` (the CTEs
+    the four survival oracles start with) give the same (cohort, t,
+    death) multiset, for the high-value and the any-purchase filter."""
+    from collections import Counter
+
+    import duckdb
+
+    from graph_db_spark.plans.families.q00_base import _conversion_obs, _conversion_obs_sql
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF_DIR}/events.parquet'")
+    sql = f"WITH {_conversion_obs_sql(min_value)} SELECT cohort, t, death FROM obs"
+    oracle = Counter(con.execute(sql).fetchall())
+    got = Counter(tuple(r) for r in _conversion_obs(spark, SF_DIR, min_value).collect())
+    assert got and got == oracle
+    if min_value is not None:  # the high-value cut leaves users censored
+        assert {d for _, _, d in got} == {0, 1}
