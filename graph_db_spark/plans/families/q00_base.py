@@ -24,6 +24,7 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from graph_db_spark.operators.dedup import _MD5_WINDOW, _MINHASH_P
 from graph_db_spark.operators.joins import dim_hint
 from graph_db_spark.streaming import jobs as STRM
 from graph_db_spark.tables import load_table
@@ -66,15 +67,12 @@ def _poly_sql(expr: str, mult: int = 31) -> str:
     chars 9-16) as an integer mod 2^31-1. md5 hex output is identical in
     both engines (UTF-8 bytes, lowercase hex — verified incl. multibyte);
     the 8-step digit fold is the engine-neutral hex→int parse."""
-    from graph_db_spark.operators.dedup import _MD5_WINDOW
-    from graph_db_spark.operators.dedup import _MINHASH_P as P
-
     off = _MD5_WINDOW[mult]
     return (
         f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
         f"list_transform(string_split_regex(substr(md5({expr}), {off}, 8), ''), "
         f"c -> CAST(strpos('0123456789abcdef', c) - 1 AS BIGINT))), "
-        f"(acc, x) -> acc * 16 + x) % {P}"
+        f"(acc, x) -> acc * 16 + x) % {_MINHASH_P}"
     )
 
 
@@ -95,20 +93,20 @@ _STREAM_PARTS_LOCK = threading.Lock()
 
 
 @contextmanager
-def _stream_state_partitions(spark, n: int = 8):
+def _stream_state_partitions(spark):
     """Run a streaming job with a reduced shuffle-partition count — the
     stateful operators (stream-stream joins, windowed aggs, dedup) open
     one state store PER shuffle partition, and at fixture scale the
     per-store open/commit overhead dominates (measured: the full-outer
     interval join 8.8s at 32 partitions -> 4.5s at 8, min-of-2 sf0.1).
     On a real cluster the right number tracks executor count x state
-    volume; here it is a fixed small constant. Serialized behind a lock
+    volume; here it is fixed at 8. Serialized behind a lock
     and restored in finally, same discipline as the AQE toggle
     (graph/algorithms.py:_aqe_off); partition count never changes
     RESULTS, only state-store fan-out."""
     with _STREAM_PARTS_LOCK:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
             yield
         finally:

@@ -36,6 +36,7 @@ from graph_db_spark.operators.sessionize import session_intervals
 from graph_db_spark.plans import pipeline as P
 from graph_db_spark.plans.families.q00_base import _fmt_ts, r4, register
 from graph_db_spark.tables import load_table
+from graph_db_spark.util import spread
 
 
 @register(
@@ -996,7 +997,13 @@ def connected_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(g.edges, n_partitions=_graph_nparts(sf_dir))
 
 
-def _pagerank_oracle_sql(iters: int = 10, reset: float = 0.15) -> str:
+# The fixed PageRank budget both engines run: 10 power iterations with
+# reset probability 0.15 (uniform here, to the Region sources in q04's
+# personalized variant).
+_PR_ITERS, _PR_RESET = 10, 0.15
+
+
+def _pagerank_oracle_sql() -> str:
     """Generate the DuckDB power-iteration oracle — the same algorithm as
     graph/algorithms.pagerank (uniform init, per-edge 1/out_degree weights
     with duplicate-edge multiplicity, dangling mass recovered by
@@ -1014,11 +1021,11 @@ def _pagerank_oracle_sql(iters: int = 10, reset: float = 0.15) -> str:
         "w AS MATERIALIZED (SELECT edges.src AS id, edges.dst, 1.0 / deg.d AS wt FROM edges JOIN deg ON edges.src = deg.src)",
         "pr0 AS (SELECT id, 1.0 / (SELECT n FROM nn) AS rank FROM verts)",
     ]
-    for i in range(iters):
+    for i in range(_PR_ITERS):
         p, q = f"pr{i}", f"pr{i + 1}"
         parts += [
             f"c{i} AS (SELECT w.dst AS id, sum({p}.rank * w.wt) AS contrib FROM {p} JOIN w ON {p}.id = w.id GROUP BY w.dst)",
-            f"t{i} AS MATERIALIZED (SELECT v.id, {reset} / (SELECT n FROM nn) + {1 - reset} * coalesce(c{i}.contrib, 0) AS rank"
+            f"t{i} AS MATERIALIZED (SELECT v.id, {_PR_RESET} / (SELECT n FROM nn) + {1 - _PR_RESET} * coalesce(c{i}.contrib, 0) AS rank"
             f" FROM verts v LEFT JOIN c{i} ON v.id = c{i}.id)",
             f"{q} AS MATERIALIZED (SELECT id, rank + (1.0 - (SELECT sum(rank) FROM t{i})) / (SELECT n FROM nn) AS rank FROM t{i})",
         ]
@@ -1041,7 +1048,9 @@ def pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     a wrong damping factor, dangling handling, or degree normalization
     shifts label masses at the 3rd-4th decimal and fails the gate."""
     g = build_graph(spark, sf_dir)
-    pr = pagerank(g.edges, max_iter=10, n_partitions=_graph_nparts(sf_dir))
+    pr = pagerank(
+        g.edges, reset_prob=_PR_RESET, max_iter=_PR_ITERS, n_partitions=_graph_nparts(sf_dir)
+    )
     return (
         pr.groupBy(F.substring("id", 1, 1).alias("label"))
         .agg(
@@ -1169,6 +1178,13 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select("id_a", "id_b", r4(F.col("jaccard")).alias("jaccard"))
 
 
+# The MinHash-LSH and SimHash settings the dedup queries share with their
+# oracles (q03's `_minhash_band_sql` and `_simhash_oracle_sql`): 32
+# minhashes in 8 bands; 64-bit signatures, Hamming distance at most 3.
+_MINHASH_HASHES, _MINHASH_BANDS = 32, 8
+_SIMHASH_BITS, _SIMHASH_MAX_HAMMING = 64, 3
+
+
 @register("minhash_lsh_dedup")  # EXACT oracle assigned post-def (portable hash)
 def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup — MinHash+LSH candidate pairs (32 hashes, 8 bands, 3-shingles).
@@ -1178,7 +1194,9 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucket join EXACTLY (oracle at module bottom). Recall/precision vs
     exact Jaccard also unit-tested (tests/test_llm_ops.py)."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.minhash_lsh_candidates(docs, "text", "doc_id")
+    return D.minhash_lsh_candidates(
+        docs, "text", "doc_id", num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS
+    )
 
 
 @register("simhash_near_dups")  # EXACT oracle assigned post-def (portable hash)
@@ -1189,7 +1207,9 @@ def simhash_near_dups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB recomputes signatures, blocks, and Hamming verify EXACTLY
     (oracle at module bottom)."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.simhash_near_dups(docs, "text", "doc_id", max_hamming=3)
+    return D.simhash_near_dups(
+        docs, "text", "doc_id", max_hamming=_SIMHASH_MAX_HAMMING, bits=_SIMHASH_BITS
+    )
 
 
 @register(
@@ -1237,8 +1257,6 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair space is bounded per block (at scale: LSH buckets replace the
     label blocking)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    from graph_db_spark.util import spread
-
     a = spread(emb).select(F.col("vec_id").alias("id_a"), F.col("label").alias("lbl"),
                            F.col("embedding").cast("array<double>").alias("va"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("label").alias("lbl"),
@@ -1253,16 +1271,26 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_planes_sql(dim: int = 64, n_planes: int = 4, n_tables: int = 16,
-                    seed: int = 42) -> str:
+# The ANN indexes every approximate top-k query shares with its oracle:
+# 64-dim embeddings and the top 5 neighbours per query; LSH = 16 tables
+# of 4 hyperplanes from LCG seed 42; IVF = 16 spherical-k-means lists
+# after 3 Lloyd rounds, 8 probed per query; PQ = 4 subspace codebooks of
+# 8 codewords after 2 Lloyd rounds.
+_EMB_DIM, _ANN_K = 64, 5
+_LSH_PLANES, _LSH_TABLES, _LSH_SEED = 4, 16, 42
+_IVF_CENTROIDS, _IVF_ITERS, _IVF_NPROBE = 16, 3, 8
+_PQ_M, _PQ_K_SUB, _PQ_ITERS = 4, 8, 2
+
+
+def _lsh_planes_sql() -> str:
     """The LSH hyperplanes as a DuckDB VALUES literal — the planes come
     from a pure-Python LCG (similarity.hyperplanes), so the ENTIRE
     approximate pipeline is reproducible in SQL: same planes, same sign
     buckets, same candidates, same re-rank. ``repr(float)`` round-trips
     exactly, so both engines see bit-identical plane coefficients."""
     rows = []
-    for t in range(n_tables):
-        for i, plane in enumerate(SIM.hyperplanes(dim, n_planes, seed + 1000 * t)):
+    for t in range(_LSH_TABLES):
+        for i, plane in enumerate(SIM.hyperplanes(_EMB_DIM, _LSH_PLANES, _LSH_SEED + 1000 * t)):
             vec = "[" + ", ".join(repr(x) for x in plane) + "]"
             rows.append(f"({t}, {i}, {vec})")
     return ",\n      ".join(rows)
@@ -1304,7 +1332,7 @@ def _lsh_planes_sql(dim: int = 64, n_planes: int = 4, n_tables: int = 16,
              CAST(row_number() OVER (PARTITION BY query_id
                                      ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
       FROM scored
-    ) WHERE rank <= 5
+    ) WHERE rank <= {_ANN_K}
     """,
 )
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1319,17 +1347,20 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate result itself, not just its quality bound."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-    out = SIM.cosine_topk_lsh(emb, q, dim=64, k=5, n_planes=4, n_tables=16)
+    out = SIM.cosine_topk_lsh(
+        emb, q, dim=_EMB_DIM, k=_ANN_K, n_planes=_LSH_PLANES, n_tables=_LSH_TABLES,
+        seed=_LSH_SEED,
+    )
     return out.select(
         "query_id", "neighbor_id", r4(F.col("cosine_sim")).alias("cosine_sim"),
         F.col("rank").cast("bigint").alias("rank"),
     )
 
 
-def _ivf_training_sql(n_centroids: int = 16, lloyd_iters: int = 3, dim: int = 64) -> list[str]:
+def _ivf_training_sql() -> list[str]:
     """Shared DuckDB CTE prefix replicating IVF training + corpus
     assignment (similarity.py:ivf_centroids / ivf_assign): the engine-
-    portable LCG seed pick, ``lloyd_iters`` unrolled spherical-k-means
+    portable LCG seed pick, ``_IVF_ITERS`` unrolled spherical-k-means
     rounds (argmax assignment with the same larger-index tiebreak, per-
     dimension means rebuilt into normalized centroid lists, empty
     clusters keeping their previous centroid), ending at ``casg`` —
@@ -1344,10 +1375,10 @@ def _ivf_training_sql(n_centroids: int = 16, lloyd_iters: int = 3, dim: int = 64
         " list_transform(rawv, x -> x / sqrt(list_dot_product(rawv, rawv))) AS v,"
         " (id * 1103515245 + 12345) % 2147483648 AS h FROM base)",
         f"cent0 AS MATERIALIZED (SELECT row_number() OVER (ORDER BY h, id) - 1 AS cluster, v AS cvec"
-        f" FROM uv ORDER BY h, id LIMIT {n_centroids})",
+        f" FROM uv ORDER BY h, id LIMIT {_IVF_CENTROIDS})",
     ]
     cur = "cent0"
-    for r in range(lloyd_iters):
+    for r in range(_IVF_ITERS):
         nxt = f"cent{r + 1}"
         parts += [
             # argmax assignment over UNIT vectors; ties → larger cluster idx
@@ -1358,7 +1389,7 @@ def _ivf_training_sql(n_centroids: int = 16, lloyd_iters: int = 3, dim: int = 64
             f"           ORDER BY list_dot_product(uv.v, c.cvec) DESC, c.cluster DESC) AS rn"
             f"  FROM uv CROSS JOIN {cur} c) WHERE rn = 1)",
             f"mean{r} AS MATERIALIZED (SELECT a.cluster, t.pos, avg(uv.v[t.pos]) AS m"
-            f" FROM asg{r} a JOIN uv ON a.id = uv.id CROSS JOIN range(1, {dim + 1}) t(pos)"
+            f" FROM asg{r} a JOIN uv ON a.id = uv.id CROSS JOIN range(1, {_EMB_DIM + 1}) t(pos)"
             f" GROUP BY 1, 2)",
             f"{nxt} AS MATERIALIZED (SELECT p.cluster,"
             f" CASE WHEN n.lst IS NULL THEN p.cvec"
@@ -1381,18 +1412,17 @@ def _ivf_training_sql(n_centroids: int = 16, lloyd_iters: int = 3, dim: int = 64
     return parts
 
 
-def _ivf_oracle_sql(n_centroids: int = 16, nprobe: int = 8, lloyd_iters: int = 3,
-                    k: int = 5, dim: int = 64) -> str:
+def _ivf_oracle_sql() -> str:
     """ANN top-k oracle: the shared IVF training replay + the nprobe
     probe and exact cosine re-rank."""
-    parts = _ivf_training_sql(n_centroids, lloyd_iters, dim)
-    cur = f"cent{lloyd_iters}"
+    parts = _ivf_training_sql()
+    cur = f"cent{_IVF_ITERS}"
     parts += [
         f"qpro AS MATERIALIZED (SELECT id AS query_id, cluster, rawv AS qv FROM ("
         f"  SELECT uv.id, uv.rawv, c.cluster,"
         f"         row_number() OVER (PARTITION BY uv.id"
         f"           ORDER BY list_dot_product(uv.rawv, c.cvec) DESC, c.cluster DESC) AS rn"
-        f"  FROM uv CROSS JOIN {cur} c WHERE uv.id < 10) WHERE rn <= {nprobe})",
+        f"  FROM uv CROSS JOIN {cur} c WHERE uv.id < 10) WHERE rn <= {_IVF_NPROBE})",
         "scored AS (SELECT q.query_id, c.neighbor_id,"
         " CASE WHEN sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.cv, c.cv)) > 0"
         "      THEN list_dot_product(q.qv, c.cv)"
@@ -1406,7 +1436,7 @@ def _ivf_oracle_sql(n_centroids: int = 16, nprobe: int = 8, lloyd_iters: int = 3
              CAST(row_number() OVER (PARTITION BY query_id
                                      ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
       FROM scored
-    ) WHERE rank <= {k}
+    ) WHERE rank <= {_ANN_K}
     """
 
 
@@ -1418,9 +1448,7 @@ def _pq_d2(a: str, b: str) -> str:
     )
 
 
-def _pq_training_sql(
-    m: int = 4, k_sub: int = 8, lloyd_iters: int = 2, dim: int = 64
-) -> list[str]:
+def _pq_training_sql() -> list[str]:
     """DuckDB CTE suffix replaying PQ codebook training + corpus encoding
     (operators/similarity.py:pq_codebooks/pq_encode — LCG seed rows,
     unrolled plain-L2 Lloyd rounds with smaller-index tiebreak and
@@ -1429,19 +1457,19 @@ def _pq_training_sql(
     oracle and the IVF-PQ composition provide one — the latter reuses
     `_ivf_training_sql`'s, whose extra columns are harmless)."""
     d2 = _pq_d2
-    subdim = dim // m
+    subdim = _EMB_DIM // _PQ_M
     lo = lambda s: s * subdim + 1  # noqa: E731
     hi = lambda s: (s + 1) * subdim  # noqa: E731
     parts = [
         f"seeds AS MATERIALIZED (SELECT row_number() OVER (ORDER BY h, id) - 1 AS code, rawv"
-        f" FROM uv ORDER BY h, id LIMIT {k_sub})",
+        f" FROM uv ORDER BY h, id LIMIT {_PQ_K_SUB})",
     ]
-    for s in range(m):
+    for s in range(_PQ_M):
         parts.append(
             f"bk{s}_0 AS MATERIALIZED (SELECT code, rawv[{lo(s)}:{hi(s)}] AS cvec FROM seeds)"
         )
-    for r in range(lloyd_iters):
-        for s in range(m):
+    for r in range(_PQ_ITERS):
+        for s in range(_PQ_M):
             sub = f"uv.rawv[{lo(s)}:{hi(s)}]"
             parts += [
                 f"asg{s}_{r} AS MATERIALIZED (SELECT id, code FROM ("
@@ -1458,8 +1486,8 @@ def _pq_training_sql(
                 f" FROM bk{s}_{r} p LEFT JOIN (SELECT code, list(mn ORDER BY pos) AS lst"
                 f"   FROM mean{s}_{r} GROUP BY code) n ON p.code = n.code)",
             ]
-    fin = lloyd_iters
-    for s in range(m):
+    fin = _PQ_ITERS
+    for s in range(_PQ_M):
         sub = f"uv.rawv[{lo(s)}:{hi(s)}]"
         parts.append(
             f"enc{s} AS MATERIALIZED (SELECT id, code AS c{s} FROM ("
@@ -1468,34 +1496,32 @@ def _pq_training_sql(
             f"           ORDER BY {d2(sub, 'b.cvec')} ASC, b.code ASC) AS rn"
             f"  FROM uv CROSS JOIN bk{s}_{fin} b) WHERE rn = 1)"
         )
-    enc_joins = " ".join(f"JOIN enc{s} ON uv.id = enc{s}.id" for s in range(m))
-    enc_cols = ", ".join(f"enc{s}.c{s}" for s in range(m))
+    enc_joins = " ".join(f"JOIN enc{s} ON uv.id = enc{s}.id" for s in range(_PQ_M))
+    enc_cols = ", ".join(f"enc{s}.c{s}" for s in range(_PQ_M))
     parts.append(
         f"codes AS MATERIALIZED (SELECT uv.id, {enc_cols} FROM uv {enc_joins})"
     )
     return parts
 
 
-def _pq_oracle_sql(
-    m: int = 4, k_sub: int = 8, lloyd_iters: int = 2, k: int = 5, dim: int = 64
-) -> str:
+def _pq_oracle_sql() -> str:
     """Standalone PQ ANN oracle: training replay + full-corpus ADC scan +
     re-rank. The squared-L2 form and the s=0..m−1 ADC summation order are
     written identically in both engines so argmin comparisons and the
     final distances agree bit-for-bit."""
-    subdim = dim // m
+    subdim = _EMB_DIM // _PQ_M
     lo = lambda s: s * subdim + 1  # noqa: E731
     hi = lambda s: (s + 1) * subdim  # noqa: E731
     parts = [
         "WITH base AS (SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS rawv FROM embeddings)",
         "uv AS MATERIALIZED (SELECT id, rawv,"
         " (id * 1103515245 + 12345) % 2147483648 AS h FROM base)",
-    ] + _pq_training_sql(m, k_sub, lloyd_iters, dim)
+    ] + _pq_training_sql()
     adc = " + ".join(
-        _pq_d2(f"q.rawv[{lo(s)}:{hi(s)}]", f"b{s}.cvec") for s in range(m)
+        _pq_d2(f"q.rawv[{lo(s)}:{hi(s)}]", f"b{s}.cvec") for s in range(_PQ_M)
     )
     joins = " ".join(
-        f"JOIN bk{s}_{lloyd_iters} b{s} ON t.c{s} = b{s}.code" for s in range(m)
+        f"JOIN bk{s}_{_PQ_ITERS} b{s} ON t.c{s} = b{s}.code" for s in range(_PQ_M)
     )
     parts.append(
         f"scored AS (SELECT q.id AS query_id, t.id AS neighbor_id, {adc} AS ad"
@@ -1508,20 +1534,11 @@ def _pq_oracle_sql(
              CAST(row_number() OVER (PARTITION BY query_id
                                      ORDER BY ad ASC, neighbor_id) AS BIGINT) AS rank
       FROM scored
-    ) WHERE rank <= {k}
+    ) WHERE rank <= {_ANN_K}
     """
 
 
-def _ivf_pq_oracle_sql(
-    n_centroids: int = 16,
-    nprobe: int = 8,
-    ivf_iters: int = 3,
-    m: int = 4,
-    k_sub: int = 8,
-    pq_iters: int = 2,
-    k: int = 5,
-    dim: int = 64,
-) -> str:
+def _ivf_pq_oracle_sql() -> str:
     """IVF-PQ oracle — BOTH replay generators composed: the IVF prefix
     (`_ivf_training_sql`, whose ``uv`` carries the id/rawv/h columns the
     PQ suffix needs) trains centroids, assigns the corpus (``casg``) and
@@ -1529,27 +1546,27 @@ def _ivf_pq_oracle_sql(
     and encodes; the candidate scan then scores approx cosine
     Σ〈q_s,cw_s〉 / (‖q‖·√Σ‖cw_s‖²) from codes alone — identical
     subspace summation order to similarity.cosine_topk_ivf_pq."""
-    subdim = dim // m
+    subdim = _EMB_DIM // _PQ_M
     lo = lambda s: s * subdim + 1  # noqa: E731
     hi = lambda s: (s + 1) * subdim  # noqa: E731
-    parts = _ivf_training_sql(n_centroids, ivf_iters, dim)
-    cur = f"cent{ivf_iters}"
+    parts = _ivf_training_sql()
+    cur = f"cent{_IVF_ITERS}"
     parts += [
         f"qpro AS MATERIALIZED (SELECT id AS query_id, cluster, rawv AS qv FROM ("
         f"  SELECT uv.id, uv.rawv, c.cluster,"
         f"         row_number() OVER (PARTITION BY uv.id"
         f"           ORDER BY list_dot_product(uv.rawv, c.cvec) DESC, c.cluster DESC) AS rn"
-        f"  FROM uv CROSS JOIN {cur} c WHERE uv.id < 10) WHERE rn <= {nprobe})",
+        f"  FROM uv CROSS JOIN {cur} c WHERE uv.id < 10) WHERE rn <= {_IVF_NPROBE})",
     ]
-    parts += _pq_training_sql(m, k_sub, pq_iters, dim)
+    parts += _pq_training_sql()
     approx_dot = " + ".join(
-        f"list_dot_product(q.qv[{lo(s)}:{hi(s)}], b{s}.cvec)" for s in range(m)
+        f"list_dot_product(q.qv[{lo(s)}:{hi(s)}], b{s}.cvec)" for s in range(_PQ_M)
     )
     recon_sq = " + ".join(
-        f"list_dot_product(b{s}.cvec, b{s}.cvec)" for s in range(m)
+        f"list_dot_product(b{s}.cvec, b{s}.cvec)" for s in range(_PQ_M)
     )
     joins = " ".join(
-        f"JOIN bk{s}_{pq_iters} b{s} ON t.c{s} = b{s}.code" for s in range(m)
+        f"JOIN bk{s}_{_PQ_ITERS} b{s} ON t.c{s} = b{s}.code" for s in range(_PQ_M)
     )
     parts.append(
         "scored AS (SELECT q.query_id, c.neighbor_id,"
@@ -1565,7 +1582,7 @@ def _ivf_pq_oracle_sql(
              CAST(row_number() OVER (PARTITION BY query_id
                                      ORDER BY ac DESC, neighbor_id) AS BIGINT) AS rank
       FROM scored
-    ) WHERE rank <= {k}
+    ) WHERE rank <= {_ANN_K}
     """
 
 
@@ -1586,7 +1603,8 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     out = SIM.cosine_topk_ivf_pq(
-        emb, q, k=5, n_centroids=16, nprobe=8, ivf_iters=3, m=4, k_sub=8, pq_iters=2
+        emb, q, k=_ANN_K, n_centroids=_IVF_CENTROIDS, nprobe=_IVF_NPROBE, ivf_iters=_IVF_ITERS,
+        m=_PQ_M, k_sub=_PQ_K_SUB, pq_iters=_PQ_ITERS, dim=_EMB_DIM,
     )
     return out.select(
         "query_id", "neighbor_id", r4(F.col("approx_cos")).alias("approx_cos"),
@@ -1612,7 +1630,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the approximate result itself."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-    out = SIM.pq_topk(emb, q, k=5, m=4, k_sub=8, lloyd_iters=2)
+    out = SIM.pq_topk(
+        emb, q, k=_ANN_K, m=_PQ_M, k_sub=_PQ_K_SUB, lloyd_iters=_PQ_ITERS, dim=_EMB_DIM
+    )
     return out.select(
         "query_id", "neighbor_id", r4(F.col("approx_dist")).alias("approx_dist"),
         F.col("rank").cast("bigint").alias("rank"),
@@ -1634,7 +1654,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled Lloyd rounds and reproduces the probe + re-rank end to end."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-    out = SIM.cosine_topk_ivf(emb, q, k=5, n_centroids=16, nprobe=8)
+    out = SIM.cosine_topk_ivf(
+        emb, q, k=_ANN_K, n_centroids=_IVF_CENTROIDS, nprobe=_IVF_NPROBE, lloyd_iters=_IVF_ITERS
+    )
     return out.select(
         "query_id", "neighbor_id", r4(F.col("cosine_sim")).alias("cosine_sim"),
         F.col("rank").cast("bigint").alias("rank"),

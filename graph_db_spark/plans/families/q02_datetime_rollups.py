@@ -32,6 +32,7 @@ from graph_db_spark.operators import multimodal as MM
 from graph_db_spark.operators import packing as PK
 from graph_db_spark.operators import sketches as SK
 from graph_db_spark.operators import text as TX
+from graph_db_spark.operators.dedup import portable_hash
 from graph_db_spark.operators.joins import dim_hint
 from graph_db_spark.plans import pipeline as P
 from graph_db_spark.plans.families.q00_base import (
@@ -846,13 +847,18 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("__h") < rate_map[F.col("lang")]).drop("__h")
 
 
-def _dsir_oracle_sql(n_buckets: int = 256, k: int = 50) -> str:
+# DSIR's hashed feature count and selection size, shared with its oracle.
+_DSIR_BUCKETS, _DSIR_K = 256, 50
+
+
+def _dsir_oracle_sql() -> str:
     """DSIR replay: same whitespace tokens, same md5-window hash mod
-    ``n_buckets``, Laplace-smoothed bucket distributions, identical
+    ``_DSIR_BUCKETS``, Laplace-smoothed bucket distributions, identical
     log-ratio formula (division/paren structure matters for float
     parity), per-doc sum, top-k. ``round(w,4) + 0.0`` pins the -0.0
     sign for near-zero weights (r5 lesson)."""
     h = _poly_sql("t")
+    n_buckets = _DSIR_BUCKETS
     return f"""
     WITH tok AS (
       SELECT doc_id, lang, t FROM (
@@ -877,7 +883,7 @@ def _dsir_oracle_sql(n_buckets: int = 256, k: int = 50) -> str:
                WHERE hb.lang = 'en' GROUP BY hb.doc_id)
     SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok,
            round(w, 4) + 0.0 AS dsir_logweight
-    FROM scored ORDER BY w DESC, doc_id LIMIT {k}
+    FROM scored ORDER BY w DESC, doc_id LIMIT {_DSIR_K}
     """
 
 
@@ -886,7 +892,7 @@ def dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-data selection via hashed-n-gram importance resampling
     (DSIR — Xie et al. 2023, "Data Selection for Language Models via
     Importance Resampling"): estimate target/raw token-bucket
-    distributions with ``n_buckets`` hashed features + Laplace
+    distributions with ``_DSIR_BUCKETS`` hashed features + Laplace
     smoothing, score every raw-pool document by its summed bucket
     log-ratio, and take the top-k most target-like. Here the target
     domain is the non-English documents and the raw pool is English —
@@ -900,9 +906,7 @@ def dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc sum, TakeOrdered top-k. Nothing quadratic, nothing
     driver-side beyond the k rows; the same plan at 100 TB is one
     map-side-combined shuffle per distribution + one for the doc sum."""
-    from graph_db_spark.operators.dedup import portable_hash
-
-    B = 256
+    B = _DSIR_BUCKETS
     docs = load_table(spark, sf_dir, "documents")
     tok = (
         docs.select("doc_id", "lang", F.explode(TX.tokens("text")).alias("t"))
@@ -935,7 +939,7 @@ def dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         scored.orderBy(F.desc("w"), "doc_id")
-        .limit(50)
+        .limit(_DSIR_K)
         .select("doc_id", "n_tok", r4(F.col("w")).alias("dsir_logweight"))
     )
 
@@ -1717,6 +1721,10 @@ def hll_user_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Portable-HLL precision (2^12 registers), shared with the oracle in q03.
+_HLL_P = 12
+
+
 @register("hll_user_reach_portable")  # oracle assigned post-def (shared literals)
 def hll_user_reach_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per event_type from MERGED per-day PORTABLE-HLL
@@ -1727,8 +1735,8 @@ def hll_user_reach_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays as the compact-binary production path; this one closes the last
     rows-only gap with a hash-matched oracle."""
     ev = load_table(spark, sf_dir, "events")
-    regs = SK.portable_hll_registers(ev, "ts", ["event_type"], "user_id")
-    return SK.portable_hll_estimate(regs, ["event_type"])
+    regs = SK.portable_hll_registers(ev, "ts", ["event_type"], "user_id", p=_HLL_P)
+    return SK.portable_hll_estimate(regs, ["event_type"], p=_HLL_P)
 
 
 @register(

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from graph_db_spark.graph.algorithms import shortest_paths
 from graph_db_spark.graph.build import build_graph, cooccurrence_edges, cooccurrence_edges_sql
 from graph_db_spark.operators import aggregates as A
 from graph_db_spark.operators import dedup as D
@@ -27,7 +28,12 @@ from graph_db_spark.plans.families.q00_base import (
     ORACLE_SQL, _oriented_triangles, _oriented_triangles_sql, _poly_sql, _run_stream_to_table, r4,
     register,
 )
-from graph_db_spark.plans.families.q01_relational_pipeline import _graph_nparts
+from graph_db_spark.plans.families.q01_relational_pipeline import (
+    _EMB_DIM, _IVF_CENTROIDS, _IVF_ITERS, _IVF_NPROBE, _LSH_PLANES, _LSH_SEED, _LSH_TABLES,
+    _MINHASH_BANDS, _MINHASH_HASHES, _PQ_ITERS, _PQ_K_SUB, _PQ_M, _SIMHASH_BITS,
+    _SIMHASH_MAX_HAMMING, _graph_nparts,
+)
+from graph_db_spark.plans.families.q02_datetime_rollups import _HLL_P
 from graph_db_spark.streaming import jobs as STRM
 from graph_db_spark.tables import load_table
 from graph_db_spark.util import spread
@@ -163,8 +169,6 @@ def shortest_paths_from_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     topology lets SQL enumerate every path level (suppliers are reachable
     both directly at dist 2 and through lineitems at dist 5; min wins).
     Aggregated to (landmark, dist, count) so the check is compact."""
-    from graph_db_spark.graph.algorithms import shortest_paths
-
     g = build_graph(spark, sf_dir)
     lms = g.vertices.filter(
         (F.col("label") == "Region") & F.col("id").isin("R:0")
@@ -194,20 +198,22 @@ def _metric_rows(*dfs: DataFrame) -> DataFrame:
     return out
 
 
-_SHINGLE_TRUTH_SQL = """
+def _shingle_sql(docs: str) -> str:
+    """The 3-shingle sets of ``docs`` (D.shingles replayed in DuckDB)."""
+    return f"""
       SELECT doc_id,
              CASE WHEN len(t) >= 3
                   THEN list_distinct(list_transform(range(1, len(t) - 1),
                                                     i -> array_to_string(t[i:i+2], ' ')))
                   ELSE [array_to_string(t, ' ')] END AS s
-      FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents)
+      FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM {docs})
 """
 
 
 @register(
     "minhash_recall_bound",
     oracle=f"""
-    WITH sh AS ({_SHINGLE_TRUTH_SQL}),
+    WITH sh AS ({_shingle_sql("documents")}),
     ex AS MATERIALIZED (SELECT doc_id, len(s) AS z, unnest(s) AS g FROM sh),
     common AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.z AS za, b.z AS zb,
@@ -228,8 +234,6 @@ def minhash_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact all-pairs); 'recall_ge_080' is 1.0 iff LSH candidates cover ≥80%
     of true pairs (measured 0.96 at sf0.01 with 32 hashes × 8 bands — the
     theoretical band-collision floor at j=0.8 is 1-(1-0.8^4)^8 ≈ 0.985)."""
-    from graph_db_spark.util import spread
-
     docs = load_table(spark, sf_dir, "documents")
     # single-file fixture → one split: spread so shingling + posting-list
     # explode parallelize (SCALE.md §1 fixture artifact)
@@ -270,7 +274,9 @@ def minhash_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         # tiny — so materializing it is free at any corpus scale.
         .localCheckpoint(eager=True)
     )
-    cands = D.minhash_lsh_candidates(docs, "text", "doc_id")
+    cands = D.minhash_lsh_candidates(
+        docs, "text", "doc_id", num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS
+    )
     n_truth = truth.agg(F.count(F.lit(1)).alias("n"))
     hits = truth.join(cands, on=["id_a", "id_b"]).agg(F.count(F.lit(1)).alias("h"))
     contract = n_truth.crossJoin(hits).select(
@@ -318,7 +324,9 @@ def simhash_completeness_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("n")
     ).localCheckpoint(eager=True)
     found = (
-        D.simhash_near_dups(docs, "text", "doc_id", max_hamming=3)
+        D.simhash_near_dups(
+            docs, "text", "doc_id", max_hamming=_SIMHASH_MAX_HAMMING, bits=_SIMHASH_BITS
+        )
         .filter(F.col("hamming") == 0)
         .join(tset.select(F.col("id").alias("id_a"), F.col("tset").alias("ta")), on="id_a")
         .join(tset.select(F.col("id").alias("id_b"), F.col("tset").alias("tb")), on="id_b")
@@ -369,9 +377,9 @@ def ann_lsh_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=True)
     )
-    approx = SIM.cosine_topk_lsh(emb, q, dim=64, k=5, n_planes=4, n_tables=16).select(
-        "query_id", "neighbor_id"
-    )
+    approx = SIM.cosine_topk_lsh(
+        emb, q, dim=_EMB_DIM, k=5, n_planes=_LSH_PLANES, n_tables=_LSH_TABLES, seed=_LSH_SEED
+    ).select("query_id", "neighbor_id")
     n_exact = exact.agg(F.count(F.lit(1)).alias("n"))
     hits = exact.join(approx, on=["query_id", "neighbor_id"]).agg(F.count(F.lit(1)).alias("h"))
     facts = n_exact.select(
@@ -406,9 +414,9 @@ def ann_ivf_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=True)
     )
-    approx = SIM.cosine_topk_ivf(emb, q, k=5, n_centroids=16, nprobe=8).select(
-        "query_id", "neighbor_id"
-    )
+    approx = SIM.cosine_topk_ivf(
+        emb, q, k=5, n_centroids=_IVF_CENTROIDS, nprobe=_IVF_NPROBE, lloyd_iters=_IVF_ITERS
+    ).select("query_id", "neighbor_id")
     n_exact = exact.agg(F.count(F.lit(1)).alias("n"))
     hits = exact.join(approx, on=["query_id", "neighbor_id"]).agg(F.count(F.lit(1)).alias("h"))
     facts = n_exact.select(
@@ -459,7 +467,9 @@ def ann_pq_distortion_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = cc.join(F.broadcast(qq), F.col("query_id") != F.col("neighbor_id")).select(
         "query_id", "neighbor_id", SIM._l2sq(F.col("qv"), F.col("cv")).alias("d")
     )
-    approx = SIM.pq_topk(emb, q, k=2**31 - 1, m=4, k_sub=8, lloyd_iters=2).select(
+    approx = SIM.pq_topk(
+        emb, q, k=2**31 - 1, m=_PQ_M, k_sub=_PQ_K_SUB, lloyd_iters=_PQ_ITERS, dim=_EMB_DIM
+    ).select(
         "query_id", "neighbor_id", "approx_dist"
     )
     rel = exact.join(approx, on=["query_id", "neighbor_id"]).select(
@@ -503,8 +513,6 @@ def hll_error_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     the contract row is 1.0 iff every group's relative error ≤ 5% (the
     lgK=12 Datasketches RSE is ~0.8%, so this bound has wide margin;
     measured exact agreement at sf0.01/sf0.1 cardinalities)."""
-    from graph_db_spark.operators import sketches as SK
-
     ev = load_table(spark, sf_dir, "events")
     daily = SK.hll_day_sketches(ev, "ts", ["event_type"], "user_id")
     est = SK.hll_merge_estimate(daily, ["event_type"])
@@ -540,33 +548,31 @@ def near_dup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data dedup actually runs; every stage is the already-verified
     operator (minhash_lsh_dedup, ngram_jaccard_pairs,
     connected_components)."""
-    from graph_db_spark.operators.dedup import near_dup_clusters
-
     docs = load_table(spark, sf_dir, "documents")
-    return near_dup_clusters(docs, "text", "doc_id", threshold=0.6)
+    return D.near_dup_clusters(
+        docs, "text", "doc_id", threshold=0.6, num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS
+    )
 
 
 def _minhash_band_sql(
-    num_hashes: int = 32, bands: int = 8, cands_pred: str = "a.doc_id < b.doc_id"
+    cands_pred: str = "a.doc_id < b.doc_id", docs: str = "documents"
 ) -> str:
     """Shared CTE body reproducing minhash_lsh_candidates in DuckDB: the
     portable md5-window shingle hash (operators/dedup.py:portable_hash),
     the LCG-derived affine minhashes (minhash_params — emitted here as
     integer literals), and the banded bucket join. ``cands_pred`` selects
     which banded pairs qualify — the default is the full-corpus sweep;
-    the incremental query restricts to new-batch × index pairs. Exact,
-    not modeled."""
-    from graph_db_spark.operators.dedup import _MINHASH_P as P
-    from graph_db_spark.operators.dedup import minhash_params
-
-    rpb = num_hashes // bands
+    the incremental query restricts to new-batch × index pairs. ``docs``
+    names the corpus relation (the skew demo signs an augmented one).
+    Exact, not modeled."""
+    rpb = _MINHASH_HASHES // _MINHASH_BANDS
     mins = ",\n               ".join(
-        f"list_min(list_transform(h, x -> ({a} * x + {b}) % {P}))"
-        for a, b in minhash_params(num_hashes)
+        f"list_min(list_transform(h, x -> ({a} * x + {b}) % {D._MINHASH_P}))"
+        for a, b in D.minhash_params(_MINHASH_HASHES)
     )
-    band_vals = ", ".join(f"({i})" for i in range(bands))
+    band_vals = ", ".join(f"({i})" for i in range(_MINHASH_BANDS))
     return f"""
-    sh AS ({_SHINGLE_TRUTH_SQL}),
+    sh AS ({_shingle_sql(docs)}),
     ph AS (
       SELECT doc_id,
              list_transform(s, s1 -> {_poly_sql('s1')}) AS h
@@ -606,12 +612,13 @@ def _hex_window_sql(expr: str, off: int) -> str:
     )
 
 
-def _simhash_oracle_sql(bits: int = 64, max_hamming: int = 3) -> str:
+def _simhash_oracle_sql() -> str:
     """Reproduce simhash_near_dups in DuckDB: per distinct token the two
     32-bit md5 windows, 64 per-bit ±1 sums (unnest + GROUP BY — same
     explode-aggregate shape the Spark side runs), sign pack,
     block-rotation bucket join, Hamming verify. Bit semantics on negative
     BIGINTs (>>, &, xor, bit_count) verified identical."""
+    bits, max_hamming = _SIMHASH_BITS, _SIMHASH_MAX_HAMMING
     terms = []
     for i in range(bits):
         w, sh = ("w1", i) if i < 32 else ("w2", i - 32)
@@ -648,12 +655,13 @@ def _simhash_oracle_sql(bits: int = 64, max_hamming: int = 3) -> str:
 ORACLE_SQL["simhash_near_dups"] = _simhash_oracle_sql()
 
 
-def _portable_hll_oracle_sql(p: int = 12) -> str:
+def _portable_hll_oracle_sql() -> str:
     """Reproduce the portable-HLL pipeline in DuckDB: the same two-window
     md5 62-bit hash, register extraction, per-(type, day) sketch rows, max
     merge, and harmonic estimator with linear-counting correction. The
     alpha constant is computed with the SAME Python expression the Spark
     operator uses, so both engines parse the identical double literal."""
+    p = _HLL_P
     m = 1 << p
     alpha_m2 = (0.7213 / (1 + 1.079 / m)) * m * m
     rho_max = 63 - p
@@ -852,12 +860,17 @@ def pii_scrub_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cms_oracle_sql(depth: int = 4, width: int = 256, seed: int = 41) -> str:
-    from graph_db_spark.operators.dedup import _MINHASH_P as P
-    from graph_db_spark.operators.dedup import minhash_params
+# The Count-Min sketches the CMS queries share with their oracles: depth 4
+# rows of 256 counters from LCG seed 41 (heavy hitters, and q08's join-size
+# estimate); the per-day user sketches use 64 counters from seed 53.
+_CMS_DEPTH, _CMS_WIDTH, _CMS_SEED = 4, 256, 41
+_CMS_DAY_WIDTH, _CMS_DAY_SEED = 64, 53
 
+
+def _cms_oracle_sql() -> str:
     vals = ", ".join(
-        f"({j}, {a}, {b})" for j, (a, b) in enumerate(minhash_params(depth, seed=seed))
+        f"({j}, {a}, {b})"
+        for j, (a, b) in enumerate(D.minhash_params(_CMS_DEPTH, seed=_CMS_SEED))
     )
     return f"""
     WITH toks AS (
@@ -869,7 +882,7 @@ def _cms_oracle_sql(depth: int = 4, width: int = 256, seed: int = 41) -> str:
     ),
     h AS (SELECT token, exact_cnt, {_poly_sql('token')} AS hh FROM exact),
     rows_ AS (
-      SELECT token, exact_cnt, j, ((a * hh + b) % {P}) % {width} AS bucket
+      SELECT token, exact_cnt, j, ((a * hh + b) % {D._MINHASH_P}) % {_CMS_WIDTH} AS bucket
       FROM h CROSS JOIN (VALUES {vals}) t(j, a, b)
     ),
     cms AS (SELECT j, bucket, sum(exact_cnt) AS cnt FROM rows_ GROUP BY 1, 2),
@@ -905,8 +918,12 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Reused twice (sketch build + probe): materialize so the token
     # groupBy and the portable-hash stage execute once.
     exact = spread(exact).localCheckpoint()
-    cms = SK.count_min_table(exact, "token", "exact_cnt")
-    est = SK.count_min_lookup(cms, exact.select("token"), "token")
+    cms = SK.count_min_table(
+        exact, "token", "exact_cnt", depth=_CMS_DEPTH, width=_CMS_WIDTH, seed=_CMS_SEED
+    )
+    est = SK.count_min_lookup(
+        cms, exact.select("token"), "token", depth=_CMS_DEPTH, width=_CMS_WIDTH, seed=_CMS_SEED
+    )
     return (
         exact.join(est, on="token")
         .select(
@@ -920,12 +937,10 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cms_day_merge_oracle_sql(depth: int = 4, width: int = 64, seed: int = 53) -> str:
-    from graph_db_spark.operators.dedup import _MINHASH_P as P
-    from graph_db_spark.operators.dedup import minhash_params
-
+def _cms_day_merge_oracle_sql() -> str:
     vals = ", ".join(
-        f"({j}, {a}, {b})" for j, (a, b) in enumerate(minhash_params(depth, seed=seed))
+        f"({j}, {a}, {b})"
+        for j, (a, b) in enumerate(D.minhash_params(_CMS_DEPTH, seed=_CMS_DAY_SEED))
     )
     return f"""
     WITH items AS (
@@ -940,7 +955,7 @@ def _cms_day_merge_oracle_sql(depth: int = 4, width: int = 64, seed: int = 53) -
       FROM (SELECT DISTINCT item FROM daily)
     ),
     cells AS (
-      SELECT d.day, t.j, ((t.a * h.hh + t.b) % {P}) % {width} AS bucket,
+      SELECT d.day, t.j, ((t.a * h.hh + t.b) % {D._MINHASH_P}) % {_CMS_DAY_WIDTH} AS bucket,
              sum(d.n) AS cnt
       FROM daily d JOIN h USING (item) CROSS JOIN (VALUES {vals}) t(j, a, b)
       GROUP BY 1, 2, 3
@@ -958,7 +973,7 @@ def _cms_day_merge_oracle_sql(depth: int = 4, width: int = 64, seed: int = 53) -
       FROM exact e JOIN h USING (item)
       CROSS JOIN (VALUES {vals}) t(j, a, b)
       JOIN merged m
-        ON m.j = t.j AND m.bucket = ((t.a * h.hh + t.b) % {P}) % {width}
+        ON m.j = t.j AND m.bucket = ((t.a * h.hh + t.b) % {D._MINHASH_P}) % {_CMS_DAY_WIDTH}
       GROUP BY 1
     )
     SELECT CAST(e.item AS BIGINT) AS user_id,
@@ -992,7 +1007,8 @@ def cms_day_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()  # feeds the sketch build AND the exact rollup
     )
     cms_daily = SK.count_min_table(
-        daily, "item", "n", depth=4, width=64, seed=53, keys=["day"]
+        daily, "item", "n", depth=_CMS_DEPTH, width=_CMS_DAY_WIDTH, seed=_CMS_DAY_SEED,
+        keys=["day"],
     )
     merged = SK.count_min_merge(cms_daily.filter(F.col("day") <= "2024-01-15"))
     exact = (
@@ -1001,7 +1017,8 @@ def cms_day_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("n").cast("bigint").alias("exact_cnt"))
     )
     est = SK.count_min_lookup(
-        merged, exact.select("item"), "item", depth=4, width=64, seed=53
+        merged, exact.select("item"), "item",
+        depth=_CMS_DEPTH, width=_CMS_DAY_WIDTH, seed=_CMS_DAY_SEED,
     )
     return (
         exact.join(est, on="item")
@@ -1016,20 +1033,25 @@ def cms_day_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmv_oracle_sql(k: int = 32, seed: int = 83) -> str:
-    from graph_db_spark.operators.dedup import _MINHASH_P as P
-    from graph_db_spark.operators.dedup import minhash_params
+# The KMV sample size both overlap queries share with their oracles, and
+# the seed of sketches.portable_hash64 (its default), which the oracles
+# replay as two LCG affine maps.
+_KMV_K = 32
+_HASH64_SEED = 83
 
-    hash_range = float(P * 2**31)
-    (a1, b1), (a2, b2) = minhash_params(2, seed=seed)
+
+def _kmv_oracle_sql() -> str:
+    k = _KMV_K
+    hash_range = float(D._MINHASH_P * 2**31)
+    (a1, b1), (a2, b2) = D.minhash_params(2, seed=_HASH64_SEED)
     return f"""
     WITH du AS (
       SELECT DISTINCT event_type, CAST(user_id AS VARCHAR) AS item FROM events
     ),
     hs AS (
       SELECT DISTINCT event_type,
-             ((({a1} * {_poly_sql('item')} + {b1}) % {P}) * 2147483648
-              + ({a2} * {_poly_sql('item', 131)} + {b2}) % {P}) AS h
+             ((({a1} * {_poly_sql('item')} + {b1}) % {D._MINHASH_P}) * 2147483648
+              + ({a2} * {_poly_sql('item', 131)} + {b2}) % {D._MINHASH_P}) AS h
       FROM du
     ),
     r AS (
@@ -1088,7 +1110,7 @@ def kmv_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch-sized rows. Estimators are Beyer et al. 2007; with fewer than
     k distinct hashes the merged sample is the exact set (the sf0.001
     fixture exercises that regime, sf0.01+ the estimating one)."""
-    k = 32
+    k = _KMV_K
     ev = load_table(spark, sf_dir, "events")
     sk = SK.kmv_sketches(ev, "event_type", "user_id", k=k).localCheckpoint()
     a, b = sk.alias("a"), sk.alias("b")
@@ -1134,12 +1156,10 @@ def kmv_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmv_ngram_oracle_sql(k: int = 32, seed: int = 83) -> str:
-    from graph_db_spark.operators.dedup import _MINHASH_P as P
-    from graph_db_spark.operators.dedup import minhash_params
-
-    hash_range = float(P * 2**31)
-    (a1, b1), (a2, b2) = minhash_params(2, seed=seed)
+def _kmv_ngram_oracle_sql() -> str:
+    k = _KMV_K
+    hash_range = float(D._MINHASH_P * 2**31)
+    (a1, b1), (a2, b2) = D.minhash_params(2, seed=_HASH64_SEED)
     return f"""
     WITH words AS (
       SELECT source, string_split_regex(lower(trim(text)), '\\s+') AS w
@@ -1155,8 +1175,8 @@ def _kmv_ngram_oracle_sql(k: int = 32, seed: int = 83) -> str:
     ),
     hs AS (
       SELECT DISTINCT source,
-             ((({a1} * {_poly_sql('gram')} + {b1}) % {P}) * 2147483648
-              + ({a2} * {_poly_sql('gram', 131)} + {b2}) % {P}) AS h
+             ((({a1} * {_poly_sql('gram')} + {b1}) % {D._MINHASH_P}) * 2147483648
+              + ({a2} * {_poly_sql('gram', 131)} + {b2}) % {D._MINHASH_P}) AS h
       FROM g
     ),
     r AS (
@@ -1220,7 +1240,7 @@ def kmv_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor and estimate to 0 (measured: union rel-err 15% mean at k=32;
     the 2.6%-overlap fixture pairs read 0) — raise k, or use the exact
     `benchmark_decontamination` path, when small overlaps matter."""
-    k = 32
+    k = _KMV_K
     docs = spread(load_table(spark, sf_dir, "documents"))
     grams = docs.select(
         "source", F.explode(TX.word_ngrams(F.col("text"), 3)).alias("gram")
@@ -1268,11 +1288,13 @@ def kmv_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bloom_oracle_sql(m: int = 4096, k: int = 3, seed: int = 101) -> str:
-    from graph_db_spark.operators.dedup import _MINHASH_P as P
-    from graph_db_spark.operators.dedup import minhash_params
+# The Bloom filter bloom_semi_prune shares with its oracle: 4096 bits, 3
+# hashes from LCG seed 101.
+_BLOOM_M, _BLOOM_K, _BLOOM_SEED = 4096, 3, 101
 
-    vals = ", ".join(f"({a}, {b})" for a, b in minhash_params(k, seed=seed))
+
+def _bloom_oracle_sql() -> str:
+    vals = ", ".join(f"({a}, {b})" for a, b in D.minhash_params(_BLOOM_K, seed=_BLOOM_SEED))
     return f"""
     WITH bkeys AS (
       SELECT DISTINCT CAST(p_partkey AS VARCHAR) AS key
@@ -1280,14 +1302,14 @@ def _bloom_oracle_sql(m: int = 4096, k: int = 3, seed: int = 101) -> str:
     ),
     bh AS (SELECT key, {_poly_sql('key')} AS hh FROM bkeys),
     bbits AS (
-      SELECT DISTINCT ((a * hh + b) % {P}) % {m} AS bit
+      SELECT DISTINCT ((a * hh + b) % {D._MINHASH_P}) % {_BLOOM_M} AS bit
       FROM bh CROSS JOIN (VALUES {vals}) t(a, b)
     ),
     pk AS (SELECT DISTINCT CAST(l_partkey AS VARCHAR) AS key FROM lineitem),
     ph AS (SELECT key, {_poly_sql('key')} AS hh FROM pk),
     probe AS (
       SELECT key,
-             bool_and(((a * hh + b) % {P}) % {m} IN (SELECT bit FROM bbits))
+             bool_and(((a * hh + b) % {D._MINHASH_P}) % {_BLOOM_M} IN (SELECT bit FROM bbits))
                AS bloom_pass
       FROM ph CROSS JOIN (VALUES {vals}) t(a, b)
       GROUP BY key
@@ -1315,13 +1337,15 @@ def bloom_semi_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p_partkey").cast("string").alias("key"))
         .distinct()
     )
-    bits = SK.bloom_bits(part, "key")
+    bits = SK.bloom_bits(part, "key", m=_BLOOM_M, k=_BLOOM_K, seed=_BLOOM_SEED)
     keys = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_partkey").cast("string").alias("key"))
         .distinct()
     )
-    probed = SK.bloom_contains(spread(keys), "key", bits)
+    probed = SK.bloom_contains(
+        spread(keys), "key", bits, m=_BLOOM_M, k=_BLOOM_K, seed=_BLOOM_SEED
+    )
     truth = part.withColumn("_t", F.lit(1))
     return (
         probed.join(dim_hint(truth, bounded=False), on="key", how="left")
@@ -1660,8 +1684,6 @@ def order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel sorts. Deterministic tiebreak on o_orderkey; the oracle
     runs DuckDB's real ntile window — matching it pins the arithmetic
     to exact ANSI tile assignment."""
-    from graph_db_spark.operators.aggregates import ntile_of, with_global_rank
-
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     totals = (
@@ -1682,11 +1704,11 @@ def order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()  # ranked rows + the count scalar share one materialization
     )
-    ranked = with_global_rank(totals, [F.desc("total_u"), F.asc("o_orderkey")])
+    ranked = A.with_global_rank(totals, [F.desc("total_u"), F.asc("o_orderkey")])
     n_total = totals.agg(F.count(F.lit(1)).alias("_n"))
     return (
         ranked.crossJoin(F.broadcast(n_total))
-        .withColumn("decile", ntile_of(F.col("rank"), F.col("_n"), 10))
+        .withColumn("decile", A.ntile_of(F.col("rank"), F.col("_n"), 10))
         .groupBy("decile")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),

@@ -19,24 +19,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from graph_db_spark.graph.algorithms import k_core, personalized_pagerank, weighted_shortest_paths
 from graph_db_spark.graph.build import build_graph, edges_sql
 from graph_db_spark.operators import dedup as D
 from graph_db_spark.operators import joins as J
 from graph_db_spark.operators import profiling as PF
 from graph_db_spark.operators import similarity as SIM
 from graph_db_spark.operators import text as TX
+from graph_db_spark.operators.drift import cusum_drift
 from graph_db_spark.operators.joins import dim_hint
 from graph_db_spark.operators.sessionize import session_intervals
+from graph_db_spark.operators.sketches import portable_hash64
 from graph_db_spark.plans.families.q00_base import (
     _await_stream, _poly_sql, _scratch_dir, _touch_pairs_table, r4, register,
 )
 from graph_db_spark.plans.families.q01_relational_pipeline import (
-    _SW_SQL, _graph_nparts, _ivf_training_sql,
+    _IVF_CENTROIDS, _IVF_ITERS, _MINHASH_BANDS, _MINHASH_HASHES, _PR_ITERS, _PR_RESET, _SW_SQL,
+    _graph_nparts, _ivf_training_sql,
 )
-from graph_db_spark.plans.families.q03_dedup_bounds_gate import _metric_rows, _minhash_band_sql
+from graph_db_spark.plans.families.q03_dedup_bounds_gate import (
+    _HASH64_SEED, _metric_rows, _minhash_band_sql,
+)
 from graph_db_spark.streaming import jobs as STRM
 from graph_db_spark.tables import load_table
 from graph_db_spark.util import spread
+from graph_db_spark.writers.snapshots import SnapshotTable, apply_changes_to_aggregate
 
 
 def _session_iv_sql(event_type: str) -> str:
@@ -233,10 +240,8 @@ def source_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source HLL, same re-aggregation story as hll_user_reach) with the
     exact form as the audit path and ``profile_distinct_approx_bound``
     as the error contract."""
-    from graph_db_spark.operators.text import normalize_text
-
     docs = load_table(spark, sf_dir, "documents")
-    h = F.md5(normalize_text(F.col("text")))
+    h = F.md5(TX.normalize_text(F.col("text")))
     nu = PF.distinct_count(h, exact=True)  # exact=False → per-source HLL
     return docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -288,7 +293,12 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cusum_oracle_sql(k_sig: float = 0.5, h_sig: float = 4.0) -> str:
+# CUSUM's slack and decision threshold in per-key standard deviations,
+# shared with its oracle.
+_CUSUM_K_SIGMAS, _CUSUM_H_SIGMAS = 0.5, 4.0
+
+
+def _cusum_oracle_sql() -> str:
     """Replay the CUSUM fold in DuckDB with the IDENTICAL left-to-right
     arithmetic: list ordered by (ts, event_id); mean and variance as
     left folds over the same order, so every intermediate double is
@@ -326,9 +336,9 @@ def _cusum_oracle_sql(k_sig: float = 0.5, h_sig: float = 4.0) -> str:
              greatest(mx, sp1, sn1)
       FROM (
         SELECT r.key, r.i + 1 AS i, r.nd AS nd, r.mx AS mx,
-               {h_sig!r} * q.std AS h,
-               greatest(0.0, r.sp + (q.xs[r.i + 1] - q.mean - {k_sig!r} * q.std)) AS sp1,
-               greatest(0.0, r.sn + (q.mean - q.xs[r.i + 1] - {k_sig!r} * q.std)) AS sn1
+               {_CUSUM_H_SIGMAS!r} * q.std AS h,
+               greatest(0.0, r.sp + (q.xs[r.i + 1] - q.mean - {_CUSUM_K_SIGMAS!r} * q.std)) AS sp1,
+               greatest(0.0, r.sn + (q.mean - q.xs[r.i + 1] - {_CUSUM_K_SIGMAS!r} * q.std)) AS sn1
         FROM rec r JOIN seq q ON q.key = r.key AND r.i < q.n
       )
     )
@@ -348,10 +358,11 @@ def cusum_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence packing, with ``applyInPandasWithState`` as the streaming
     twin. EXACT oracle: DuckDB replays the identical left-to-right fold
     including the mean/variance arithmetic."""
-    from graph_db_spark.operators.drift import cusum_drift
-
     ev = spread(load_table(spark, sf_dir, "events"))
-    out = cusum_drift(ev, "user_id", "ts", "value", "event_id")
+    out = cusum_drift(
+        ev, "user_id", "ts", "value", "event_id",
+        k_sigmas=_CUSUM_K_SIGMAS, h_sigmas=_CUSUM_H_SIGMAS,
+    )
     return out.select(
         F.col("key").cast("bigint").alias("user_id"),
         "n_events",
@@ -360,18 +371,19 @@ def cusum_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _weighted_sample_oracle_sql(k: int = 100, seed: int = 83) -> str:
+# The Efraimidis-Spirakis sample size, shared with its oracle.
+_ES_K = 100
+
+
+def _weighted_sample_oracle_sql() -> str:
     """Replay the Efraimidis-Spirakis keys in DuckDB: same portable
     62-bit hash (md5-window polys + affine, sketches.portable_hash64),
     same u=(h+1)/(range+1) map, same ln(u)/w key."""
-    from graph_db_spark.operators.dedup import _MINHASH_P as P
-    from graph_db_spark.operators.dedup import minhash_params
-
-    (a1, b1), (a2, b2) = minhash_params(2, seed=seed)
-    rng = float(P * 2**31)
+    (a1, b1), (a2, b2) = D.minhash_params(2, seed=_HASH64_SEED)
+    rng = float(D._MINHASH_P * 2**31)
     h64 = (
-        f"((({a1} * {_poly_sql('CAST(doc_id AS VARCHAR)')} + {b1}) % {P}) * 2147483648"
-        f" + (({a2} * {_poly_sql('CAST(doc_id AS VARCHAR)', 131)} + {b2}) % {P}))"
+        f"((({a1} * {_poly_sql('CAST(doc_id AS VARCHAR)')} + {b1}) % {D._MINHASH_P}) * 2147483648"
+        f" + (({a2} * {_poly_sql('CAST(doc_id AS VARCHAR)', 131)} + {b2}) % {D._MINHASH_P}))"
     )
     return f"""
     WITH keyed AS (
@@ -380,7 +392,7 @@ def _weighted_sample_oracle_sql(k: int = 100, seed: int = 83) -> str:
       FROM documents
     )
     SELECT doc_id, n_chars, round(k, 4) + 0.0 AS es_key
-    FROM keyed ORDER BY k DESC, doc_id LIMIT {k}
+    FROM keyed ORDER BY k DESC, doc_id LIMIT {_ES_K}
     """
 
 
@@ -395,16 +407,16 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     extended to weighted selection. Top-k compiles to TakeOrdered
     (per-partition heaps + driver merge of k rows), never a global
     sort."""
-    from graph_db_spark.operators.sketches import portable_hash64
-
     docs = spread(load_table(spark, sf_dir, "documents"))
     rng = float(2147483647 * 2**31)
-    u = (portable_hash64(F.col("doc_id").cast("string")) + 1).cast("double") / F.lit(rng + 1.0)
+    u = (
+        portable_hash64(F.col("doc_id").cast("string"), seed=_HASH64_SEED) + 1
+    ).cast("double") / F.lit(rng + 1.0)
     key = F.log(u) / F.greatest(F.col("n_chars"), F.lit(1))
     return (
         docs.select("doc_id", "n_chars", key.alias("k"))
         .orderBy(F.desc("k"), "doc_id")
-        .limit(100)
+        .limit(_ES_K)
         .select("doc_id", "n_chars", r4(F.col("k")).alias("es_key"))
     )
 
@@ -637,7 +649,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ppr_oracle_sql(iters: int = 10, reset: float = 0.15) -> str:
+def _ppr_oracle_sql() -> str:
     """Unrolled power-iteration oracle for personalized PageRank with the
     5 Region vertices as the restart set — same conservation-based
     dangling recovery as graph/algorithms.personalized_pagerank, restart
@@ -652,11 +664,11 @@ def _ppr_oracle_sql(iters: int = 10, reset: float = 0.15) -> str:
         "pr0 AS (SELECT id, CASE WHEN id LIKE 'R:%' THEN 1.0 / (SELECT ns FROM sn) ELSE 0.0 END AS rank FROM verts)",
     ]
     final = "pr0"
-    for i in range(iters):
+    for i in range(_PR_ITERS):
         p, q = f"pr{i}", f"pr{i + 1}"
         parts += [
             f"c{i} AS (SELECT w.dst AS id, sum({p}.rank * w.wt) AS contrib FROM {p} JOIN w ON {p}.id = w.id GROUP BY w.dst)",
-            f"t{i} AS MATERIALIZED (SELECT v.id, {1 - reset} * coalesce(c{i}.contrib, 0) AS rank"
+            f"t{i} AS MATERIALIZED (SELECT v.id, {1 - _PR_RESET} * coalesce(c{i}.contrib, 0) AS rank"
             f" FROM verts v LEFT JOIN c{i} ON v.id = c{i}.id)",
             f"{q} AS MATERIALIZED (SELECT id, rank + CASE WHEN id LIKE 'R:%'"
             f" THEN (1.0 - (SELECT sum(rank) FROM t{i})) / (SELECT ns FROM sn) ELSE 0.0 END AS rank FROM t{i})",
@@ -699,12 +711,11 @@ def personalized_pagerank_regions(spark: SparkSession, sf_dir: str) -> DataFrame
     (pytest.ini filterwarnings) so any OTHER convergence warning —
     including uniform pagerank's, whose 10 rounds do settle below tol
     on this fixture — still fails loudly in review."""
-    from graph_db_spark.graph.algorithms import personalized_pagerank
-
     g = build_graph(spark, sf_dir)
     sources = g.vertices.filter(F.col("label") == "Region").select("id")
     pr = personalized_pagerank(
-        g.edges, sources, max_iter=10, n_partitions=_graph_nparts(sf_dir)
+        g.edges, sources, reset_prob=_PR_RESET, max_iter=_PR_ITERS,
+        n_partitions=_graph_nparts(sf_dir),
     )
     return (
         pr.groupBy(F.substring("id", 1, 1).alias("label"))
@@ -813,9 +824,13 @@ def quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _k_core_oracle_sql(k: int = 4, rounds: int = 14) -> str:
+# The core order k_core_4 peels to, shared with its oracle.
+_KCORE_K = 4
+
+
+def _k_core_oracle_sql() -> str:
     """Unrolled peel replay of graph/algorithms.py:k_core. The Spark side
-    iterates to a fixpoint; the oracle unrolls ``rounds`` peels — the
+    iterates to a fixpoint; the oracle unrolls 14 peels — the
     sf0.01 fixture converges in 9 (sf0.001 in 6, probed), and extra
     rounds are no-ops after the fixpoint, so 14 gives margin without
     changing the answer. MATERIALIZED so DuckDB doesn't inline the
@@ -826,9 +841,10 @@ def _k_core_oracle_sql(k: int = 4, rounds: int = 14) -> str:
         " SELECT src AS a, dst AS b FROM edges UNION ALL SELECT dst, src FROM edges)"
         " WHERE a <> b)",
     ]
+    rounds = 14
     for r in range(rounds):
         parts.append(
-            f"keep{r} AS MATERIALIZED (SELECT a FROM sym{r} GROUP BY a HAVING count(*) >= {k})"
+            f"keep{r} AS MATERIALIZED (SELECT a FROM sym{r} GROUP BY a HAVING count(*) >= {_KCORE_K})"
         )
         parts.append(
             f"sym{r + 1} AS MATERIALIZED (SELECT s.a, s.b FROM sym{r} s"
@@ -848,14 +864,12 @@ def k_core_4(spark: SparkSession, sf_dir: str) -> DataFrame:
     cascade (9 rounds at sf0.01). Each round is one degree aggregation +
     two semi-joins, shuffling on vertex id — the same per-round shape as
     connected components, with localCheckpoint bounding lineage."""
-    from graph_db_spark.graph.algorithms import k_core
-
     g = build_graph(spark, sf_dir)
     # the synthetic lineitem table has duplicate (orderkey, linenumber)
     # pairs, so the graph is a genuine multigraph and k_core's canonical-
     # pair dedup is semantically required (verified: skipping it inflates
     # the core by 30%)
-    return k_core(g.edges, 4)
+    return k_core(g.edges, _KCORE_K)
 
 
 @register(
@@ -965,8 +979,6 @@ def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _weighted_paths_oracle() -> str:
-    from graph_db_spark.graph.build import edges_sql
-
     w = _poly_sql("src || '|' || dst")
     return f"""
     WITH RECURSIVE e AS MATERIALIZED (
@@ -996,14 +1008,11 @@ def weighted_paths_from_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic end-to-end, so the oracle is EXACT: DuckDB re-derives the
     same weights and walks the DAG with a recursive CTE + min). Output
     is aggregated to (label, dist, n) to keep the comparison compact."""
-    from graph_db_spark.graph.algorithms import weighted_shortest_paths
-    from graph_db_spark.operators.dedup import portable_hash
-
     g = build_graph(spark, sf_dir)
     e = g.edges.select(
         "src",
         "dst",
-        (portable_hash(F.concat_ws("|", F.col("src"), F.col("dst"))) % 9 + 1).alias("weight"),
+        (D.portable_hash(F.concat_ws("|", F.col("src"), F.col("dst"))) % 9 + 1).alias("weight"),
     )
     lms = g.vertices.filter(F.col("id") == "R:0").select("id")
     sp = weighted_shortest_paths(e, lms, n_partitions=_graph_nparts(sf_dir))
@@ -1057,8 +1066,6 @@ def snapshot_table_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the state a direct computation produces. The reference's
     MERGE-everything write story (app/graph_fields.py:16-25) lands here
     as a transactional table, not a directory swap."""
-    from graph_db_spark.writers.snapshots import SnapshotTable
-
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -1123,11 +1130,6 @@ def incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deletes' retractions) reconstructs the direct answer exactly.
     At 100 TB this is the materialized-view story: maintenance cost ∝
     churn, never table size."""
-    from graph_db_spark.writers.snapshots import (
-        SnapshotTable,
-        apply_changes_to_aggregate,
-    )
-
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -1305,8 +1307,12 @@ def incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") < 400)
     new = docs.filter(F.col("doc_id") >= 400)
-    index = D.minhash_banded(corpus, "text", "doc_id")
-    return D.minhash_lsh_candidates_against(new, index, "text", "doc_id")
+    index = D.minhash_banded(
+        corpus, "text", "doc_id", num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS
+    )
+    return D.minhash_lsh_candidates_against(
+        new, index, "text", "doc_id", num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS
+    )
 
 
 @register(
@@ -1329,7 +1335,9 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") < 400)
     new = docs.filter(F.col("doc_id") >= 400)
     # index built once, materialized — every micro-batch reuses the rows
-    index = D.minhash_banded(corpus, "text", "doc_id").localCheckpoint()
+    index = D.minhash_banded(
+        corpus, "text", "doc_id", num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS
+    ).localCheckpoint()
     src = _scratch_dir("incdedup_src", sf_dir)
     out = _scratch_dir("incdedup_out", sf_dir)
     ckpt = _scratch_dir("incdedup_ckpt", sf_dir)
@@ -1466,11 +1474,14 @@ def embedding_diversity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _semantic_dedup_oracle_sql(n_centroids: int = 16, lloyd_iters: int = 3,
-                               dim: int = 64, threshold: float = 0.3) -> str:
+# SemDeDup's within-cluster cosine cut, shared with its oracle.
+_SEMDEDUP_THRESHOLD = 0.3
+
+
+def _semantic_dedup_oracle_sql() -> str:
     """SemDeDup oracle: the shared IVF training replay (same centroids,
     same assignment tiebreak), then the within-cluster keep-first rule."""
-    parts = _ivf_training_sql(n_centroids, lloyd_iters, dim)
+    parts = _ivf_training_sql()
     parts += [
         f"""dup AS (
       SELECT DISTINCT b.neighbor_id AS id
@@ -1479,7 +1490,7 @@ def _semantic_dedup_oracle_sql(n_centroids: int = 16, lloyd_iters: int = 3,
       WHERE CASE WHEN sqrt(list_dot_product(a.cv, a.cv)) * sqrt(list_dot_product(b.cv, b.cv)) > 0
                  THEN list_dot_product(a.cv, b.cv)
                       / (sqrt(list_dot_product(a.cv, a.cv)) * sqrt(list_dot_product(b.cv, b.cv)))
-                 ELSE 0.0 END >= {threshold!r})"""
+                 ELSE 0.0 END >= {_SEMDEDUP_THRESHOLD!r})"""
     ]
     return ",\n".join(parts) + """
     SELECT c.neighbor_id AS vec_id, CAST(c.cluster AS BIGINT) AS cluster,
@@ -1497,7 +1508,10 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the same big-block probe as the text dedup path. EXACT oracle via
     the shared unrolled-Lloyd centroid replay."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return SIM.semantic_dedup(emb, "embedding", "vec_id", threshold=0.3)
+    return SIM.semantic_dedup(
+        emb, "embedding", "vec_id", threshold=_SEMDEDUP_THRESHOLD,
+        n_centroids=_IVF_CENTROIDS, lloyd_iters=_IVF_ITERS,
+    )
 
 
 # ---------------------------------------------------------------------------

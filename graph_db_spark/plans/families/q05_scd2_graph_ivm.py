@@ -15,21 +15,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from graph_db_spark.graph.algorithms import connected_components, k_truss
+from graph_db_spark.graph.algorithms import connected_components, k_truss, prepartition_for_rounds
 from graph_db_spark.graph.build import (
     build_graph, cooccurrence_edges, cooccurrence_edges_sql, edges_sql, purchase_edges,
     purchase_edges_sql,
 )
 from graph_db_spark.operators import profiling as PF
+from graph_db_spark.operators.aggregates import with_global_rank
+from graph_db_spark.operators.dedup import guard_block_pairs, near_dup_clusters, portable_hash
 from graph_db_spark.operators.joins import dim_hint
 from graph_db_spark.plans import pipeline as P
 from graph_db_spark.plans.families.q00_base import (
     ORACLE_SQL, _fmt_ts, _poly_sql, _run_batched_stream, _scratch_dir, r4, register,
 )
-from graph_db_spark.plans.families.q01_relational_pipeline import _SW_SQL
+from graph_db_spark.plans.families.q01_relational_pipeline import (
+    _MINHASH_BANDS, _MINHASH_HASHES, _SW_SQL,
+)
 from graph_db_spark.plans.families.q03_dedup_bounds_gate import _metric_rows, _minhash_band_sql
 from graph_db_spark.streaming import jobs as STRM
 from graph_db_spark.tables import load_table
+from graph_db_spark.writers.snapshots import SnapshotTable, apply_changes_to_minmax
 
 
 @register(
@@ -103,8 +108,6 @@ def dataset_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     rand()) so the split is retry-safe, stable across runs and engines,
     and needs zero coordination — every executor computes membership
     locally; no shuffle until the per-(source, split) report agg."""
-    from graph_db_spark.operators.dedup import portable_hash
-
     docs = load_table(spark, sf_dir, "documents")
     bucket = portable_hash(F.col("doc_id").cast("string")) % 100
     split = (
@@ -129,8 +132,6 @@ def corpus_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (repartition(n, shard) → one output file per shard); the report is
     the pre-flight check that no shard is skewed. The corpus total rides
     a broadcast 1-row join, not a global window."""
-    from graph_db_spark.operators.dedup import portable_hash
-
     docs = load_table(spark, sf_dir, "documents")
     shard = (portable_hash(F.col("doc_id").cast("string")) % 8).alias("shard")
     per = (
@@ -256,10 +257,15 @@ def link_prediction_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lpa_cte(iters: int = 3) -> str:
+# Synchronous label-propagation rounds, shared by the Spark loop and the
+# unrolled oracle chain.
+_LPA_ROUNDS = 3
+
+
+def _lpa_cte() -> str:
     """Shared CTE chain: the part co-occurrence graph (`e` undirected
-    unique, `ed` both directions) and ``iters`` unrolled synchronous
-    label-propagation rounds ending at ``lab{iters}`` — one
+    unique, `ed` both directions) and ``_LPA_ROUNDS`` unrolled synchronous
+    label-propagation rounds ending at ``lab{_LPA_ROUNDS}`` — one
     (count, min-label) argmax CTE pair per iteration, same deterministic
     tie-break as the Spark loop. Reused by the LPA query and the
     modularity scorer so both replay the identical community assignment."""
@@ -268,7 +274,7 @@ def _lpa_cte(iters: int = 3) -> str:
     ed AS (SELECT u, v FROM e UNION ALL SELECT v AS u, u AS v FROM e),
     lab0 AS (SELECT DISTINCT u AS node, u AS label FROM ed)"""
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, _LPA_ROUNDS + 1):
         parts.append(
             f"""cnt{i} AS (
       SELECT ed.u AS node, l.label, count(*) AS c
@@ -282,27 +288,25 @@ def _lpa_cte(iters: int = 3) -> str:
     return ",\n    ".join(parts)
 
 
-def _lpa_oracle_sql(iters: int = 3) -> str:
+def _lpa_oracle_sql() -> str:
     return (
-        "WITH " + _lpa_cte(iters) + f"""
+        "WITH " + _lpa_cte() + f"""
     SELECT CAST(label AS BIGINT) AS community, CAST(count(*) AS BIGINT) AS size,
            CAST(min(node) AS BIGINT) AS min_node, CAST(max(node) AS BIGINT) AS max_node
-    FROM lab{iters} GROUP BY 1"""
+    FROM lab{_LPA_ROUNDS} GROUP BY 1"""
     )
 
 
 def _lpa_edges_labels(
-    spark: SparkSession, sf_dir: str, iters: int = 3, keep_edges: bool = False
+    spark: SparkSession, sf_dir: str, keep_edges: bool = False
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Build the part co-occurrence graph and run ``iters`` synchronous
+    """Build the part co-occurrence graph and run ``_LPA_ROUNDS`` synchronous
     LPA rounds. Returns (e, ed, labels): undirected unique edges, the
     bidirectional edge list (pre-partitioned on the per-round join key
     and checkpointed so every round reuses one exchange), and the final
     (node, label) table. Shared by label_propagation and
     modularity_communities — the modularity score must be computed on
     EXACTLY the assignment the LPA query reports."""
-    from graph_db_spark.graph.algorithms import prepartition_for_rounds
-
     e = cooccurrence_edges(load_table(spark, sf_dir, "lineitem"), "u", "v")
     if keep_edges:
         # only the modularity caller re-reads e; checkpointing it for the
@@ -314,7 +318,7 @@ def _lpa_edges_labels(
     labels = ed.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    for _ in range(iters):
+    for _ in range(_LPA_ROUNDS):
         cnt = (
             ed.join(labels, ed.v == labels.node)
             .groupBy(ed.u.alias("node"), "label")
@@ -343,7 +347,7 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     as connected_components (graph/algorithms.py). Fixed-round sync LPA
     is the scale-safe variant: async/converged LPA is order-dependent
     and irreproducible on a cluster."""
-    _, _, labels = _lpa_edges_labels(spark, sf_dir, iters=3)  # keep_edges off
+    _, _, labels = _lpa_edges_labels(spark, sf_dir)  # keep_edges off
     return labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("size"),
         F.min("node").cast("bigint").alias("min_node"),
@@ -824,8 +828,6 @@ def entity_resolution_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     before running the expensive compare. The pair join is guarded by
     the same big-block probe as the dedup path (`guard_block_pairs`) so
     a degenerate blocking key refuses instead of going quadratic."""
-    from graph_db_spark.operators.dedup import guard_block_pairs
-
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment"
     )
@@ -879,9 +881,6 @@ def corpus_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     #partitions parallel sorts + a broadcast offset join. Output is the
     head of the permutation (rank ≤ 100); the full table is what a
     writer would persist."""
-    from graph_db_spark.operators.aggregates import with_global_rank
-    from graph_db_spark.operators.dedup import portable_hash
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars",
         portable_hash(F.col("doc_id").cast("string")).alias("hkey"),
@@ -905,17 +904,21 @@ def corpus_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hits_oracle_sql(iters: int = 3) -> str:
+# HITS power-iteration rounds, shared by the Spark loop and the oracle.
+_HITS_ROUNDS = 3
+
+
+def _hits_oracle_sql() -> str:
     """Unrolled HITS power iteration on the customer→part edge list with
     sum-normalization each half-step — same arithmetic as the Spark loop."""
     parts = [
         purchase_edges_sql() + """,
     h0 AS (SELECT DISTINCT c, 1.0 AS h FROM cp)"""
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, _HITS_ROUNDS + 1):
         # MATERIALIZED pins each half-step: every score table is
         # referenced twice (by its normalizer and by the next half-step),
-        # so inlined CTEs re-evaluate the whole chain 2^(2·iters) times
+        # so inlined CTEs re-evaluate the whole chain 2^(2·rounds) times
         parts.append(
             f"""ar{i} AS MATERIALIZED (
       SELECT p, sum(h) AS r FROM cp JOIN h{i - 1} USING (c) GROUP BY 1),
@@ -931,11 +934,11 @@ def _hits_oracle_sql(iters: int = 3) -> str:
     , ranked AS (
       SELECT 'authority' AS role, CAST(p AS BIGINT) AS node_id, round(a, 4) AS score,
              row_number() OVER (ORDER BY round(a, 4) DESC, p) AS rnk
-      FROM a{iters}
+      FROM a{_HITS_ROUNDS}
       UNION ALL
       SELECT 'hub' AS role, CAST(c AS BIGINT) AS node_id, round(h, 4) AS score,
              row_number() OVER (ORDER BY round(h, 4) DESC, c) AS rnk
-      FROM h{iters}
+      FROM h{_HITS_ROUNDS}
     )
     SELECT role, node_id, score, CAST(rnk AS BIGINT) AS rnk
     FROM ranked WHERE rnk <= 10"""
@@ -955,7 +958,7 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     cp = purchase_edges(spark, sf_dir).localCheckpoint(eager=True)
     h = cp.select("c").distinct().withColumn("h", F.lit(1.0))
     a = None
-    for _ in range(3):
+    for _ in range(_HITS_ROUNDS):
         # checkpoint each half-step: the score table is referenced twice
         # (normalizer + next half-step), so an uncut lineage re-executes
         # the whole prior chain 2^(2·rounds) times (14s → 2s at sf0.01)
@@ -1144,7 +1147,7 @@ _SKEW_N = 200  # 200² = 40,000 pairs > max_task_pairs=2,000 → grid split g=5
       SELECT 10000000 + i AS doc_id, '{_SKEW_TEMPLATE}' AS text
       FROM range({_SKEW_N}) t(i)
     ),
-    {_minhash_band_sql().replace("FROM documents)", "FROM skewed_documents)")},
+    {_minhash_band_sql(docs="skewed_documents")},
     toks AS (
       SELECT doc_id,
              list_distinct(string_split_regex(lower(trim(text)), '\\s+')) AS t
@@ -1187,8 +1190,6 @@ def dedup_skewed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOTHING: every pair still meets in exactly one cell. Output is the
     cluster-size histogram, so the injected block must surface as one
     cluster of exactly 200."""
-    from graph_db_spark.operators.dedup import near_dup_clusters
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     skew = spark.range(_SKEW_N).select(
         (F.lit(10_000_000) + F.col("id")).cast("long").alias("doc_id"),
@@ -1196,7 +1197,8 @@ def dedup_skewed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = docs.unionByName(skew)
     out = near_dup_clusters(
-        corpus, "text", "doc_id", threshold=0.6, max_task_pairs=2000
+        corpus, "text", "doc_id", threshold=0.6, num_hashes=_MINHASH_HASHES,
+        bands=_MINHASH_BANDS, max_task_pairs=2000,
     )
     sizes = out.groupBy("canonical_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
@@ -1240,8 +1242,6 @@ def pipeline_snapshot_merge_rerun(spark: SparkSession, sf_dir: str) -> DataFrame
     would double the overlap rows and fail on n_stations. Bucket-level
     copy-on-write means run 2 rewrites only buckets its keys touch."""
     import os
-
-    from graph_db_spark.writers.snapshots import SnapshotTable
 
     path = os.path.join(_scratch_dir("snap_rerun", sf_dir), "weather_days")
     run1 = P.build(spark, sf_dir, only=["weather_days"],
@@ -1452,8 +1452,6 @@ def snapshot_range_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     iff the scan read strictly fewer files than the table holds."""
     import os
 
-    from graph_db_spark.writers.snapshots import SnapshotTable
-
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     n = cust.count()
     path = os.path.join(_scratch_dir("snap_range", sf_dir), "cust")
@@ -1512,11 +1510,6 @@ def ivm_minmax_rescan(spark: SparkSession, sf_dir: str) -> DataFrame:
     both the fold path and the rescan path execute, and the hash match
     against the direct SQL replay proves the maintained view equals the
     recompute."""
-    from graph_db_spark.writers.snapshots import (
-        SnapshotTable,
-        apply_changes_to_minmax,
-    )
-
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -1556,16 +1549,21 @@ def ivm_minmax_rescan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("c_mktsegment")
 
 
-def _k_truss_oracle_sql(k: int = 6, rounds: int = 8) -> str:
-    """Unrolled edge-peel replay of graph/algorithms.py:k_truss over the
-    p%4 part-co-occurrence graph. The fixture converges in 3-4 rounds at
-    every SF (probed 0.001/0.01/0.1); extra rounds are no-ops after the
-    fixpoint, so 8 gives margin. Triangles enumerate once per round via
-    the id-ordering (x<y<z); a final support pass over the converged
-    edge set yields the reported per-edge supports."""
+# The truss order both truss queries peel to, shared with their oracles.
+_TRUSS_K = 6
+
+
+def _k_truss_cte() -> str:
+    """CTE chain (for a ``WITH``) replaying graph/algorithms.py:k_truss
+    over the p%4 part-co-occurrence graph as unrolled edge peels. The
+    fixture converges in 3-4 rounds at every SF (probed
+    0.001/0.01/0.1); extra rounds are no-ops after the fixpoint, so 8
+    gives margin. Triangles enumerate once per round via the id-ordering
+    (x<y<z); a final support pass over the converged edge set leaves the
+    per-edge supports in ``fsupp(a, b, s)``."""
+    rounds = 8
     parts = [
-        "WITH "
-        + cooccurrence_edges_sql("(SELECT * FROM lineitem WHERE l_partkey % 4 = 0)", "a", "b"),
+        cooccurrence_edges_sql("(SELECT * FROM lineitem WHERE l_partkey % 4 = 0)", "a", "b"),
         "e0 AS (SELECT a, b FROM e)",
     ]
     for r in range(rounds):
@@ -1579,7 +1577,7 @@ def _k_truss_oracle_sql(k: int = 6, rounds: int = 8) -> str:
             f" SELECT x AS a, y AS b FROM tri{r}"
             f" UNION ALL SELECT y, z FROM tri{r}"
             f" UNION ALL SELECT x, z FROM tri{r})"
-            f" GROUP BY 1, 2 HAVING count(*) >= {k - 2})"
+            f" GROUP BY 1, 2 HAVING count(*) >= {_TRUSS_K - 2})"
         )
     r = rounds
     parts.append(
@@ -1593,13 +1591,16 @@ def _k_truss_oracle_sql(k: int = 6, rounds: int = 8) -> str:
         " UNION ALL SELECT y, z FROM ftri"
         " UNION ALL SELECT x, z FROM ftri) GROUP BY 1, 2)"
     )
-    return ",\n".join(parts) + """
+    return ",\n".join(parts)
+
+
+@register(
+    "k_truss_cooccurrence",
+    oracle="WITH " + _k_truss_cte() + """
     SELECT CAST(s AS BIGINT) AS support, CAST(count(*) AS BIGINT) AS n_edges
     FROM fsupp GROUP BY 1
-    """
-
-
-@register("k_truss_cooccurrence", oracle=_k_truss_oracle_sql())
+    """,
+)
 def k_truss_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics — the 6-truss of the p%4 part-co-occurrence graph
     (graph/algorithms.py:k_truss): the cohesive backbone where every
@@ -1610,7 +1611,7 @@ def k_truss_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the converged truss. Oracle: the peel unrolled round-by-round in SQL
     with a fixpoint margin."""
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_partkey") % 4 == 0)
-    t = k_truss(cooccurrence_edges(li, "src", "dst"), 6)
+    t = k_truss(cooccurrence_edges(li, "src", "dst"), _TRUSS_K)
     return t.groupBy(F.col("support").cast("bigint").alias("support")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_edges")
     )
@@ -1618,14 +1619,7 @@ def k_truss_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "truss_communities",
-    oracle=_k_truss_oracle_sql().replace(
-        "WITH op AS", "WITH RECURSIVE op AS", 1
-    ).replace(
-        """
-    SELECT CAST(s AS BIGINT) AS support, CAST(count(*) AS BIGINT) AS n_edges
-    FROM fsupp GROUP BY 1
-    """,
-        """,
+    oracle="WITH RECURSIVE " + _k_truss_cte() + """,
     tedges AS (
       SELECT a AS src, b AS dst FROM fsupp
       UNION ALL SELECT b, a FROM fsupp
@@ -1642,7 +1636,6 @@ def k_truss_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_communities
     FROM sizes GROUP BY 1
     """,
-    ),
 )
 def truss_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics — cohesive community detection by COMPOSITION:
@@ -1654,7 +1647,7 @@ def truss_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators; the oracle appends the recursive closure to the unrolled
     peel. Output: community-size histogram."""
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_partkey") % 4 == 0)
-    truss = k_truss(cooccurrence_edges(li, "src", "dst"), 6).select(
+    truss = k_truss(cooccurrence_edges(li, "src", "dst"), _TRUSS_K).select(
         F.col("a").cast("string").alias("src"), F.col("b").cast("string").alias("dst")
     )
     comp = connected_components(truss, n_partitions=4)

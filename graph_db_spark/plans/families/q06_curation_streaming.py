@@ -17,20 +17,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from graph_db_spark.graph.algorithms import (
+    shortest_path_tree, shortest_paths, strongly_connected_components,
+)
 from graph_db_spark.graph.build import (
     build_graph, cooccurrence_edges, cooccurrence_edges_sql, edges_sql,
 )
 from graph_db_spark.operators import profiling as PF
 from graph_db_spark.operators import text as TX
+from graph_db_spark.operators.dedup import near_dup_clusters, portable_hash
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.operators.similarity import _as_double, cosine
 from graph_db_spark.plans.families.q00_base import (
     _run_batched_stream, _scratch_dir, _touch_pairs_table, r4, register,
 )
-from graph_db_spark.plans.families.q01_relational_pipeline import _graph_nparts
+from graph_db_spark.plans.families.q01_relational_pipeline import (
+    _MINHASH_BANDS, _MINHASH_HASHES, _graph_nparts,
+)
 from graph_db_spark.plans.families.q03_dedup_bounds_gate import _metric_rows
 from graph_db_spark.plans.families.q05_scd2_graph_ivm import _CURATED_ORACLE, _PROVENANCE_ORACLE
 from graph_db_spark.streaming import jobs as STRM
 from graph_db_spark.tables import load_table
+from graph_db_spark.util import spread
+from graph_db_spark.writers.snapshots import AuditRejected, SnapshotTable, zorder_column
 
 
 @register("curation_provenance", oracle=_PROVENANCE_ORACLE)
@@ -44,10 +53,10 @@ def curation_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     one decision, and the counts reconcile to the input by construction
     (Σ stages = |docs| per source). Shares every verified stage operator
     with the capstone; the oracle shares its CTE prefix literally."""
-    from graph_db_spark.operators.dedup import near_dup_clusters, portable_hash
-
     docs = load_table(spark, sf_dir, "documents")
-    clusters = near_dup_clusters(docs, "text", "doc_id", threshold=0.6)
+    clusters = near_dup_clusters(
+        docs, "text", "doc_id", threshold=0.6, num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS
+    )
     drops = clusters.filter(~F.col("is_canonical")).select(
         F.col("id").cast("bigint").alias("doc_id"), F.lit(1).alias("_dropped")
     )
@@ -91,10 +100,10 @@ def curated_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     entire composition in SQL (recursive closure included), so the
     four-stage hand-off — including exactly WHICH docs each stage drops
     — is hash-checked end to end."""
-    from graph_db_spark.operators.dedup import near_dup_clusters, portable_hash
-
     docs = load_table(spark, sf_dir, "documents")
-    clusters = near_dup_clusters(docs, "text", "doc_id", threshold=0.6)
+    clusters = near_dup_clusters(
+        docs, "text", "doc_id", threshold=0.6, num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS
+    )
     drops = clusters.filter(~F.col("is_canonical")).select(
         F.col("id").cast("bigint").alias("doc_id")
     )
@@ -308,8 +317,6 @@ def shortest_path_routes(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertices against the previous level's routes. Output: the canonical
     route for every 37th supplier. Oracle: recursive-CTE BFS + the same
     min-parent rule + a recursive path walk."""
-    from graph_db_spark.graph.algorithms import shortest_path_tree
-
     g = build_graph(spark, sf_dir)
     tree = shortest_path_tree(g.edges, "R:0", n_partitions=_graph_nparts(sf_dir))
     maxd = tree.agg(F.max("dist").alias("m")).collect()[0]["m"]  # scalar probe
@@ -1014,8 +1021,6 @@ def zorder_clustering_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     rectangle at read time."""
     import os
 
-    from graph_db_spark.writers.snapshots import SnapshotTable, zorder_column
-
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
     )
@@ -1124,8 +1129,6 @@ def harmonic_centrality_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle's min(dist) proves the BFS settles each pair at its first
     frontier). At 100 TB landmark-set BFS is the standard centrality
     surrogate — state is |landmarks|×V pairs, never all-pairs."""
-    from graph_db_spark.graph.algorithms import shortest_paths
-
     g = build_graph(spark, sf_dir)
     lms = g.vertices.filter(F.col("label") == "Region").select("id")
     sp = shortest_paths(g.edges, lms, n_partitions=_graph_nparts(sf_dir))
@@ -1162,8 +1165,6 @@ def landmark_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
     to per-landmark max depth + the frontier population at that depth;
     the global max rides a broadcast 1-row aggregate onto the 5 output
     rows, never a global window."""
-    from graph_db_spark.graph.algorithms import shortest_paths
-
     g = build_graph(spark, sf_dir)
     lms = g.vertices.filter(F.col("label") == "Region").select("id")
     sp = shortest_paths(
@@ -1186,26 +1187,30 @@ def landmark_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _centroid_cte_sql(label: int = 0) -> str:
-    """Shared DuckDB CTE pair ending in ``centv(cv)`` — the label-``label``
-    embedding centroid as one list row (replays _label_centroid)."""
+# The embedding label whose centroid the rerank queries score against,
+# shared with their oracles.
+_CENTROID_LABEL = 0
+
+
+def _centroid_cte_sql() -> str:
+    """Shared DuckDB CTE pair ending in ``centv(cv)`` — the label-
+    ``_CENTROID_LABEL`` embedding centroid as one list row (replays
+    _label_centroid)."""
     return f"""cent AS (
       SELECT pos, avg(val) AS c FROM (
         SELECT generate_subscripts(CAST(embedding AS DOUBLE[]), 1) AS pos,
                unnest(CAST(embedding AS DOUBLE[])) AS val
-        FROM embeddings WHERE label = {label}) GROUP BY pos
+        FROM embeddings WHERE label = {_CENTROID_LABEL}) GROUP BY pos
     ),
     centv AS (SELECT list(c ORDER BY pos) AS cv FROM cent)"""
 
 
-def _label_centroid(emb: DataFrame, label: int = 0) -> DataFrame:
+def _label_centroid(emb: DataFrame) -> DataFrame:
     """1-row DataFrame ``(cv: array<double>)`` — the mean vector of the
-    ``label`` embeddings, computed in-plan (posexplode → per-position avg
+    ``_CENTROID_LABEL`` embeddings, computed in-plan (posexplode → per-position avg
     → packed array); broadcast it onto whatever needs scoring."""
-    from graph_db_spark.operators.similarity import _as_double
-
     return (
-        emb.filter(F.col("label") == label)
+        emb.filter(F.col("label") == _CENTROID_LABEL)
         .select(F.posexplode(_as_double(F.col("embedding"))).alias("pos", "val"))
         .groupBy("pos")
         .agg(F.avg("val").alias("c"))
@@ -1251,8 +1256,6 @@ def hybrid_retrieval_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation is the only corpus-wide pass; the rerank touches k rows.
     Both stages replay exactly in the oracle (same idf smoothing, same
     saturation structure, DuckDB list_cosine_similarity)."""
-    from graph_db_spark.operators.similarity import _as_double, cosine
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     cands = (
@@ -1352,9 +1355,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale path swaps the corpus scan for the IVF/LSH candidate
     generation exactly as in ann_*_topk — this query pins the exact
     semantics those approximations are graded against."""
-    from graph_db_spark.operators.similarity import _as_double, cosine
-    from graph_db_spark.util import spread
-
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
@@ -1414,8 +1414,6 @@ def snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     read NULL, doubled balances land); the ``__v1_has_tier__`` contract
     row pins that TIME TRAVEL to v1 still serves the pre-evolution
     schema — old snapshots never grow columns retroactively."""
-    from graph_db_spark.writers.snapshots import SnapshotTable
-
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -1502,8 +1500,6 @@ def rrf_fusion_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide single-partition sort). Both rankers quantize to
     discrete score levels (integer tf/doc-length grids), so ranking is
     reproducible across engines — the oracle replays ranks exactly."""
-    from graph_db_spark.operators.similarity import _as_double, cosine
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     lex = (
@@ -1727,8 +1723,6 @@ def scc_trade_partners(spark: SparkSession, sf_dir: str) -> DataFrame:
     count); the SCC loop then runs on a
     |nations|-sized edge list. The DuckDB oracle computes mutual
     reachability via a recursive closure — exact, per-node."""
-    from graph_db_spark.graph.algorithms import strongly_connected_components
-
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -1793,8 +1787,6 @@ def snapshot_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejected write left zero trace in reader-visible state); the
     contract rows pin that rejection kept version=1 and the good commit
     landed as version=2."""
-    from graph_db_spark.writers.snapshots import AuditRejected, SnapshotTable
-
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )

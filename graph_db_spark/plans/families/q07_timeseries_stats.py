@@ -16,13 +16,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graph_db_spark.operators import text as TX
+from graph_db_spark.operators.aggregates import ntile_of, with_global_rank
+from graph_db_spark.operators.dedup import portable_hash
 from graph_db_spark.operators.joins import dim_hint
 from graph_db_spark.plans.families.q00_base import (
     _drain_to_memory, _poly_sql, _scratch_dir, r4, register,
 )
 from graph_db_spark.plans.families.q03_dedup_bounds_gate import _metric_rows
-from graph_db_spark.plans.families.q05_scd2_graph_ivm import _lpa_cte, _lpa_edges_labels
-from graph_db_spark.tables import load_table
+from graph_db_spark.plans.families.q05_scd2_graph_ivm import (
+    _LPA_ROUNDS, _lpa_cte, _lpa_edges_labels,
+)
+from graph_db_spark.tables import load_table, register_views
+from graph_db_spark.util import spread
+from graph_db_spark.writers.snapshots import SnapshotTable
 
 
 @register(
@@ -394,9 +400,9 @@ def zipf_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "modularity_communities",
     oracle="WITH "
-    + _lpa_cte(3)
-    + """,
-    nl AS (SELECT node, label FROM lab3),
+    + _lpa_cte()
+    + f""",
+    nl AS (SELECT node, label FROM lab{_LPA_ROUNDS}),
     deg AS (SELECT u AS node, count(*) AS d FROM ed GROUP BY 1),
     m AS (SELECT count(*) AS m FROM e),
     internal AS (
@@ -436,7 +442,7 @@ def modularity_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(E) work to any community algorithm it audits. Per-community
     contribution rows plus a community=-1 total row (n_nodes=|V|,
     internal_edges=m, degree_sum=2m there — the handshake identity)."""
-    e, ed, labels = _lpa_edges_labels(spark, sf_dir, iters=3, keep_edges=True)
+    e, ed, labels = _lpa_edges_labels(spark, sf_dir, keep_edges=True)
     labels = labels.localCheckpoint(eager=True)  # u-join, v-join, degree agg
     m = e.count()  # 1-row scalar probe (total undirected edges)
     deg = ed.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("d"))
@@ -1119,8 +1125,6 @@ def sql_api_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     push the column prune into the scans exactly as the DataFrame API
     does. Four-table star join: region→nation broadcast down the
     customer→orders fact chain, one aggregate."""
-    from graph_db_spark.tables import register_views
-
     register_views(spark, sf_dir)
     return spark.sql(_SQL_API_TEXT)
 
@@ -1335,8 +1339,6 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     order_value_deciles pattern ×3. A billion customers rank as
     3 × #partitions parallel sorts; ties break on custkey so both
     engines assign identical quintiles."""
-    from graph_db_spark.operators.aggregates import ntile_of, with_global_rank
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
@@ -1435,8 +1437,6 @@ def snapshot_rebucket_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against the closed-form reconstruction. Cost truth:
     rebucketing is one full rewrite — priced like capacity planning,
     not like a merge; see writers/snapshots.py rebucket."""
-    from graph_db_spark.writers.snapshots import SnapshotTable
-
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -1498,8 +1498,6 @@ def snapshot_bloom_point_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     least one of the 8 buckets prunes with near-certainty at every SF.
     Filters are built in one distributed aggregate per commit and
     rebuilt only for rewritten buckets (carried entries keep theirs)."""
-    from graph_db_spark.writers.snapshots import SnapshotTable
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -1583,9 +1581,6 @@ def bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type, replicate) aggregate + a 32-row-per-type percentile — no
     driver loop, no global sort. The CI percentile interpolates
     identically (Spark `percentile` == DuckDB `quantile_cont`)."""
-    from graph_db_spark.operators.dedup import portable_hash
-    from graph_db_spark.util import spread
-
     # spread: events is one parquet file, and the x32 replicate explode +
     # md5 weight draw is the heavy PRE-shuffle stage — without this it
     # runs on a single task
@@ -1711,8 +1706,6 @@ def snapshot_tag_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries; see writers/snapshots.py create_tag/vacuum."""
     import os
 
-    from graph_db_spark.writers.snapshots import SnapshotTable
-
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
@@ -1807,8 +1800,6 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     back for the two directional ratios (pure int division — identical
     doubles both engines). Emits both directions per unordered pair,
     kept when either containment ≥ 0.5."""
-    from graph_db_spark.util import spread
-
     # spread: documents is one parquet file; without it the gram build
     # (the dominant expression cost) runs on a single task
     docs = spread(load_table(spark, sf_dir, "documents"))

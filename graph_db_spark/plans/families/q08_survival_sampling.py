@@ -14,20 +14,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from graph_db_spark.graph.algorithms import boruvka_forest, core_decomposition, luby_mis
 from graph_db_spark.graph.build import (
     cooccurrence_edges, cooccurrence_edges_sql, purchase_edges, purchase_edges_sql, trade_edges,
     trade_edges_sql,
 )
 from graph_db_spark.operators import profiling as PF
 from graph_db_spark.operators import similarity as SIM
-from graph_db_spark.operators.dedup import portable_hash
+from graph_db_spark.operators.aggregates import with_global_rank
+from graph_db_spark.operators.dedup import _MINHASH_P, minhash_params, portable_hash
+from graph_db_spark.operators.dedup import prefix_filter_jaccard as ppj  # a query shares the name
+from graph_db_spark.operators.drift import holt_linear
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.operators.sketches import count_min_inner_product, count_min_table
+from graph_db_spark.operators.text import wordpiece_vocab_segment as wps  # a query shares the name
 from graph_db_spark.plans.families.q00_base import (
     _cohort_risk, _cohort_risk_sql, _conversion_obs, _conversion_obs_sql, _oriented_triangles,
     _oriented_triangles_sql, _poly_sql, _scratch_dir, r4, register,
 )
-from graph_db_spark.plans.families.q01_relational_pipeline import _ivf_training_sql
+from graph_db_spark.plans.families.q01_relational_pipeline import (
+    _IVF_CENTROIDS, _IVF_ITERS, _ivf_training_sql,
+)
+from graph_db_spark.plans.families.q03_dedup_bounds_gate import _CMS_DEPTH, _CMS_SEED, _CMS_WIDTH
 from graph_db_spark.tables import load_table
+from graph_db_spark.util import spread
+from graph_db_spark.writers.snapshots import (
+    SnapshotTable, apply_dim_changes_to_join_view, apply_fact_changes_to_join_view,
+)
 
 
 @register(
@@ -71,8 +84,6 @@ def embedding_eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus) over the spread train side — the corpus never shuffles and
     never self-joins; the per-eval top-3 window partitions on the
     |eval|-sized key after a |train|×|eval| in-task score pass."""
-    from graph_db_spark.util import spread
-
     emb = load_table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     ev = emb.filter(F.col("vec_id") % 20 == 0).select(
@@ -396,17 +407,22 @@ def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _luby_sql(rounds: int = 6) -> str:
+# Luby MIS rounds, shared by the Spark run and the unrolled oracle.
+_LUBY_ROUNDS = 6
+
+
+def _luby_sql() -> str:
     """DuckDB replay of graph/algorithms.py:luby_mis on the
     customer–supplier bipartite trade graph: identical padded-string
     priority keys per round, identical active-neighborhood min and
-    deactivation steps, unrolled ``rounds`` times; per-round rows are
+    deactivation steps, unrolled ``_LUBY_ROUNDS`` times; per-round rows are
     emitted unconditionally (count 0 + hash-sum 0 for an empty round)
     so the shape never depends on convergence speed."""
     parts = [
         "WITH " + trade_edges_sql(),
         "act0 AS MATERIALIZED (SELECT DISTINCT src AS id FROM e)",
     ]
+    rounds = _LUBY_ROUNDS
     for r in range(1, rounds + 1):
         key = (
             f"lpad(CAST(({_poly_sql(f'''id || '#{r}' ''')}) AS VARCHAR), 10, '0')"
@@ -442,7 +458,7 @@ def _luby_sql(rounds: int = 6) -> str:
     return ",\n".join(parts) + "\n" + "\nUNION ALL\n".join(sels)
 
 
-@register("maximal_independent_set", oracle=_luby_sql(6))
+@register("maximal_independent_set", oracle=_luby_sql())
 def maximal_independent_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parallel symmetry breaking — Luby's maximal independent set with
     deterministic hash priorities (graph/algorithms.py:luby_mis) over
@@ -453,12 +469,10 @@ def maximal_independent_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlation-clustering pivots; hash priorities keep the whp
     O(log n) round bound while making every run (and the oracle replay)
     bit-identical."""
-    from graph_db_spark.graph.algorithms import luby_mis
-
     e = trade_edges(spark, sf_dir)
-    mis = luby_mis(e, rounds=6).localCheckpoint(eager=True)
+    mis = luby_mis(e, rounds=_LUBY_ROUNDS).localCheckpoint(eager=True)
     rows = []
-    for r in list(range(1, 7)) + [-1]:
+    for r in list(range(1, _LUBY_ROUNDS + 1)) + [-1]:
         sub = mis.filter(F.col("round") == r)
         rows.append(
             sub.agg(
@@ -515,13 +529,19 @@ def sampled_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _wordpiece_sql(max_len: int = 4, vocab_size: int = 200, topk: int = 30) -> str:
+# WordPiece's longest piece and vocab size, shared with its oracle, and
+# the number of top pieces the query reports.
+_WP_MAX_LEN, _WP_VOCAB, _WP_TOPK = 4, 200, 30
+
+
+def _wordpiece_sql() -> str:
     """DuckDB replay of text.wordpiece_vocab_segment: substring explode
     with the same clamped windows, same (weight DESC, piece) vocab cut,
     and the greedy longest-match walk as a jump-table recursion — the
     CASE checks window lengths in the same descending order, so the
     clamped-window-overshoot behavior at word ends matches the Python
     slice semantics exactly. Integer-only end to end."""
+    max_len = _WP_MAX_LEN
     in_vocab = "IN (SELECT piece FROM vocab)"
     case_jump = " ".join(
         f"WHEN substr(word, pos, {L}) {in_vocab} THEN {L}"
@@ -547,7 +567,7 @@ def _wordpiece_sql(max_len: int = 4, vocab_size: int = 200, topk: int = 30) -> s
     vocab AS MATERIALIZED (
       SELECT piece FROM (
         SELECT piece, sum(freq) AS weight FROM cand GROUP BY 1
-      ) ORDER BY weight DESC, piece LIMIT {vocab_size}
+      ) ORDER BY weight DESC, piece LIMIT {_WP_VOCAB}
     ),
     jt AS MATERIALIZED (
       SELECT word, pos,
@@ -568,7 +588,7 @@ def _wordpiece_sql(max_len: int = 4, vocab_size: int = 200, topk: int = 30) -> s
     )
     SELECT piece, CAST(sum(freq) AS BIGINT) AS usage
     FROM seg JOIN wf USING (word)
-    GROUP BY 1 ORDER BY usage DESC, piece LIMIT {topk}
+    GROUP BY 1 ORDER BY usage DESC, piece LIMIT {_WP_TOPK}
     """
 
 
@@ -583,27 +603,23 @@ def wordpiece_vocab_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     side; deterministic integer pipeline — the float-likelihood EM
     trainers (SentencePiece unigram) are out of scope by design (their
     argmax ties are not replayable cross-engine)."""
-    from graph_db_spark.operators.text import wordpiece_vocab_segment as wps
-
     docs = load_table(spark, sf_dir, "documents")
-    seg = wps(docs, "text", max_piece_len=4, vocab_size=200)
+    seg = wps(docs, "text", max_piece_len=_WP_MAX_LEN, vocab_size=_WP_VOCAB)
     return (
         seg.groupBy("piece")
         .agg(F.sum("freq").cast("bigint").alias("usage"))
         .orderBy(F.desc("usage"), "piece")
-        .limit(30)
+        .limit(_WP_TOPK)
     )
 
 
-def _cms_join_size_sql(depth: int = 4, width: int = 256, seed: int = 41) -> str:
+def _cms_join_size_sql() -> str:
     """DuckDB replay of sketches.count_min_inner_product over the
     events.user_id ⋈ orders.o_custkey key overlap: same portable hash,
     same LCG bucket maps, exact integer arithmetic end to end."""
-    from graph_db_spark.operators.dedup import _MINHASH_P as P
-    from graph_db_spark.operators.dedup import minhash_params
-
     vals = ", ".join(
-        f"({j}, {a}, {b})" for j, (a, b) in enumerate(minhash_params(depth, seed=seed))
+        f"({j}, {a}, {b})"
+        for j, (a, b) in enumerate(minhash_params(_CMS_DEPTH, seed=_CMS_SEED))
     )
     return f"""
     WITH ca AS (SELECT CAST(user_id AS VARCHAR) AS k, count(*) AS c
@@ -613,11 +629,11 @@ def _cms_join_size_sql(depth: int = 4, width: int = 256, seed: int = 41) -> str:
     exact AS (SELECT coalesce(sum(ca.c * cb.c), 0) AS v
               FROM ca JOIN cb USING (k)),
     ha AS (SELECT k, c, {_poly_sql('k')} AS hh FROM ca),
-    ra AS (SELECT j, ((a * hh + b) % {P}) % {width} AS bucket, c
+    ra AS (SELECT j, ((a * hh + b) % {_MINHASH_P}) % {_CMS_WIDTH} AS bucket, c
            FROM ha CROSS JOIN (VALUES {vals}) t(j, a, b)),
     cmsa AS (SELECT j, bucket, sum(c) AS cnt FROM ra GROUP BY 1, 2),
     hb AS (SELECT k, c, {_poly_sql('k')} AS hh FROM cb),
-    rb AS (SELECT j, ((a * hh + b) % {P}) % {width} AS bucket, c
+    rb AS (SELECT j, ((a * hh + b) % {_MINHASH_P}) % {_CMS_WIDTH} AS bucket, c
            FROM hb CROSS JOIN (VALUES {vals}) t(j, a, b)),
     cmsb AS (SELECT j, bucket, sum(c) AS cnt FROM rb GROUP BY 1, 2),
     prod AS (SELECT a.j, sum(a.cnt * b.cnt) AS p
@@ -643,11 +659,6 @@ def cms_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     and shuffle sizing get picked without scanning either table: the
     depth×width sketches come from ingest, the probe is sketch-sized.
     Exact size = Σ_k cA(k)·cB(k) (pure integers; driver-hash-immune)."""
-    from graph_db_spark.operators.sketches import (
-        count_min_inner_product,
-        count_min_table,
-    )
-
     ev = load_table(spark, sf_dir, "events")
     o = load_table(spark, sf_dir, "orders")
     ca = ev.groupBy(F.col("user_id").cast("string").alias("k")).agg(
@@ -660,8 +671,8 @@ def cms_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
         ca.join(cb.select(F.col("k"), F.col("c").alias("cb")), on="k")
         .agg(F.coalesce(F.sum(F.col("c") * F.col("cb")), F.lit(0)).alias("v"))
     )
-    cms_a = count_min_table(ca, "k", "c")
-    cms_b = count_min_table(cb, "k", "c")
+    cms_a = count_min_table(ca, "k", "c", depth=_CMS_DEPTH, width=_CMS_WIDTH, seed=_CMS_SEED)
+    cms_b = count_min_table(cb, "k", "c", depth=_CMS_DEPTH, width=_CMS_WIDTH, seed=_CMS_SEED)
     est = count_min_inner_product(cms_a, cms_b)
     return exact.crossJoin(est).select(
         F.col("v").cast("bigint").alias("exact_join_size"),
@@ -707,12 +718,6 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     (including dim-update fan-out patching) reconstructs the direct
     join exactly. Maintenance cost ∝ churn × fan-out; data volumes are
     SF-independent (commit-overhead-bound, like the aggregate IVM)."""
-    from graph_db_spark.writers.snapshots import (
-        SnapshotTable,
-        apply_dim_changes_to_join_view,
-        apply_fact_changes_to_join_view,
-    )
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -771,11 +776,16 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _holt_sql(alpha: float = 0.5, beta: float = 0.3, horizon: int = 3) -> str:
+# Holt's smoothing weights and forecast horizon, shared with its oracle.
+_HOLT_ALPHA, _HOLT_BETA, _HOLT_HORIZON = 0.5, 0.3, 3
+
+
+def _holt_sql() -> str:
     """Recursive-CTE replay of drift.holt_fold over the per-type daily
     series (the CUSUM-oracle pattern): identical coefficient doubles
     (one-minus constants precomputed in Python, injected via repr),
     identical expression shapes, l1 named once in a subquery."""
+    alpha, beta = _HOLT_ALPHA, _HOLT_BETA
     oma, omb = 1.0 - alpha, 1.0 - beta
     return f"""
     WITH RECURSIVE d AS MATERIALIZED (
@@ -797,7 +807,7 @@ def _holt_sql(alpha: float = 0.5, beta: float = 0.3, horizon: int = 3) -> str:
     )
     SELECT r.key AS event_type, CAST(o.n AS BIGINT) AS n_days,
            round(r.l, 4) + 0.0 AS level, round(r.b, 4) + 0.0 AS trend,
-           round(r.l + {horizon} * r.b, 4) + 0.0 AS forecast
+           round(r.l + {_HOLT_HORIZON} * r.b, 4) + 0.0 AS forecast
     FROM rec r JOIN ordered o ON o.key = r.key AND r.i = o.n
     """
 
@@ -811,13 +821,13 @@ def holt_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-state EWMA (closed-form window), two-state Holt (the honest
     Arrow fold — a 2x2 matrix chain no window expresses). Oracle =
     recursive-CTE replay of the identical fold."""
-    from graph_db_spark.operators.drift import holt_linear
-
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(
         "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
     ).agg(F.sum("value").alias("x"))
-    out = holt_linear(d, "event_type", "day", "x", alpha=0.5, beta=0.3, horizon=3)
+    out = holt_linear(
+        d, "event_type", "day", "x", alpha=_HOLT_ALPHA, beta=_HOLT_BETA, horizon=_HOLT_HORIZON
+    )
     return out.select(
         F.col("key").alias("event_type"),
         F.col("n_obs").alias("n_days"),
@@ -862,8 +872,6 @@ def prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-vocab fixture vs ~500k for 3-grams. Oracle = the naive
     all-pairs verify, exact at checker scale; output is pure integers
     (inter, uni) so the hash has no float surface at all."""
-    from graph_db_spark.operators.dedup import prefix_filter_jaccard as ppj
-
     docs = load_table(spark, sf_dir, "documents")
     out = ppj(docs, "text", "doc_id", num=7, den=10, shingle_n=3)
     return out.select(
@@ -915,8 +923,8 @@ def edit_distance_blocked_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _label_noise_sql(n_centroids: int = 16, lloyd_iters: int = 3) -> str:
-    parts = _ivf_training_sql(n_centroids, lloyd_iters, 64)
+def _label_noise_sql() -> str:
+    parts = _ivf_training_sql()
     # parts[0] already carries the WITH keyword (shared-helper contract)
     return (
         ",\n".join(parts)
@@ -948,7 +956,9 @@ def label_noise_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data pipeline runs before trusting its classification
     labels; cluster-bounded, no pair join — the SemDeDup cost shape."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = SIM.ivf_centroids(emb, "embedding", "vec_id", n_centroids=16, lloyd_iters=3)
+    cents = SIM.ivf_centroids(
+        emb, "embedding", "vec_id", n_centroids=_IVF_CENTROIDS, lloyd_iters=_IVF_ITERS
+    )
     asg = SIM.ivf_assign(emb, cents).select("id", "cluster")
     lab = asg.join(
         emb.select(F.col("vec_id").alias("id"), "label"), on="id"
@@ -1256,8 +1266,6 @@ def range_partition_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the helper requires leaves every emitted value unchanged).
     Boundary semantics: bucket = count of boundaries strictly below
     the key."""
-    from graph_db_spark.operators.aggregates import with_global_rank
-
     o = load_table(spark, sf_dir, "orders")
     keys = o.select(F.col("o_totalprice").alias("k"))
     smp = o.filter(
@@ -1418,7 +1426,11 @@ def moments_rollup_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _boruvka_sql(rounds: int = 4) -> str:
+# Borůvka rounds, shared by the Spark run and the unrolled oracle.
+_BORUVKA_ROUNDS = 4
+
+
+def _boruvka_sql() -> str:
     """DuckDB replay of graph/algorithms.py:boruvka_forest on the
     order-count-weighted trade graph: per round the contraction join,
     the (w, src, dst)-ordered per-component argmin, the canonical edge
@@ -1435,6 +1447,7 @@ def _boruvka_sql(rounds: int = 4) -> str:
         " UNION ALL SELECT s, c, w FROM eb)",
         "l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS comp FROM e)",
     ]
+    rounds = _BORUVKA_ROUNDS
     for r in range(1, rounds + 1):
         parts.append(
             f"ce{r} AS MATERIALIZED (SELECT e.src, e.dst, e.w,"
@@ -1480,7 +1493,7 @@ def _boruvka_sql(rounds: int = 4) -> str:
     return "WITH RECURSIVE " + ",\n".join(parts) + "\n" + "\nUNION ALL\n".join(sels)
 
 
-@register("boruvka_spanning_forest", oracle=_boruvka_sql(4))
+@register("boruvka_spanning_forest", oracle=_boruvka_sql())
 def boruvka_spanning_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed minimum spanning forest — Borůvka rounds
     (graph/algorithms.py:boruvka_forest) over the trade graph weighted
@@ -1491,8 +1504,6 @@ def boruvka_spanning_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     backbone/cost-rollout primitive the pointer-jumping CC family
     doesn't cover; determinism comes from the (w, src, dst) total edge
     order."""
-    from graph_db_spark.graph.algorithms import boruvka_forest
-
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     eb = (
@@ -1506,7 +1517,7 @@ def boruvka_spanning_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = eb.select(F.col("c").alias("src"), F.col("s").alias("dst"), "w").unionByName(
         eb.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
     )
-    rounds = 4
+    rounds = _BORUVKA_ROUNDS
     forest, lab = boruvka_forest(e, rounds=rounds)
     frames = []
     for r in range(1, rounds + 1):
@@ -1587,8 +1598,6 @@ def bitemporal_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     That divergence (same valid-time question, different answers by
     transaction time) is the bitemporal defining property, and the
     oracle replays both table states + all four probes exactly."""
-    from graph_db_spark.writers.snapshots import SnapshotTable
-
     ev = load_table(spark, sf_dir, "events")
 
     def spans(src: DataFrame) -> DataFrame:
@@ -1643,9 +1652,13 @@ def bitemporal_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res
 
 
-def _coreness_sql(rounds: int = 8) -> str:
+# Core-decomposition rounds, shared by the Spark run and the unrolled oracle.
+_CORENESS_ROUNDS = 8
+
+
+def _coreness_sql() -> str:
     """DuckDB replay of graph/algorithms.py:core_decomposition: degree
-    init, ``rounds`` unrolled h-index contractions (rank-desc window +
+    init, ``_CORENESS_ROUNDS`` unrolled h-index contractions (rank-desc window +
     max(least(rank, est))), the round -1 changed-count row proving the
     fixpoint landed inside the truncation."""
     parts = [
@@ -1653,6 +1666,7 @@ def _coreness_sql(rounds: int = 8) -> str:
         "cor0 AS MATERIALIZED (SELECT dst AS id, count(*) AS cor,"
         " FALSE AS chg FROM e GROUP BY 1)",
     ]
+    rounds = _CORENESS_ROUNDS
     for r in range(1, rounds + 1):
         parts.append(
             f"h{r} AS MATERIALIZED (SELECT id, max(least(rk, ncor)) AS h FROM ("
@@ -1677,7 +1691,7 @@ def _coreness_sql(rounds: int = 8) -> str:
     )
 
 
-@register("core_decomposition_histogram", oracle=_coreness_sql(8))
+@register("core_decomposition_histogram", oracle=_coreness_sql())
 def core_decomposition_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL core decomposition — every vertex's coreness in one run
     (graph/algorithms.py:core_decomposition, h-index propagation), vs
@@ -1685,10 +1699,8 @@ def core_decomposition_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade graph plus the round -1 changed-count row, which the oracle
     pins to 0 — machine-checked proof the truncated propagation REACHED
     the fixpoint, not an assumed convergence."""
-    from graph_db_spark.graph.algorithms import core_decomposition
-
     e = trade_edges(spark, sf_dir)
-    cd = core_decomposition(e, rounds=8).localCheckpoint(eager=True)
+    cd = core_decomposition(e, rounds=_CORENESS_ROUNDS).localCheckpoint(eager=True)
     hist = cd.groupBy(F.col("coreness").cast("bigint").alias("coreness")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes")
     )

@@ -15,22 +15,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from graph_db_spark.graph.algorithms import (
+    brandes_betweenness, deterministic_walks, prepartition_for_rounds, shortest_paths,
+)
 from graph_db_spark.graph.build import trade_edges, trade_edges_sql
 from graph_db_spark.operators import similarity as SIM
+from graph_db_spark.operators.aggregates import with_global_rank
+from graph_db_spark.operators.dedup import _MINHASH_P, minhash_params, portable_hash
+from graph_db_spark.operators.hierarchy import subtree_rollup
+from graph_db_spark.operators.joins import grid_distance_join
 from graph_db_spark.plans.families.q00_base import _poly_sql, r4, register
 from graph_db_spark.plans.families.q01_relational_pipeline import _pq_d2
 from graph_db_spark.tables import load_table
 
 
-def _hyperanf_sql(p: int = 4, rounds: int = 3) -> str:
+# HyperANF's per-node HLL precision (2^4 = 16 registers) and propagation
+# rounds, shared by the Spark run and the oracle, with the register count,
+# estimator constant and rank bound both sides derive from them.
+_ANF_P, _ANF_ROUNDS = 4, 3
+_ANF_M = 1 << _ANF_P
+_ANF_ALPHA_M2 = (0.7213 / (1 + 1.079 / _ANF_M)) * _ANF_M * _ANF_M
+_ANF_RHO_MAX = 63 - _ANF_P
+
+
+def _hyperanf_sql() -> str:
     """DuckDB replay of the HyperANF register propagation: same 62-bit
     portable hash → (idx, rho) initial registers, same per-round
     (edge-join + max-merge), same per-node HLL estimator (identical
     alpha literal via repr), rounded per node BEFORE the global sum so
     fold-order ulps can't reach the emitted value."""
-    m = 1 << p
-    alpha_m2 = (0.7213 / (1 + 1.079 / m)) * m * m
-    rho_max = 63 - p
+    p, m, alpha_m2, rho_max = _ANF_P, _ANF_M, _ANF_ALPHA_M2, _ANF_RHO_MAX
     parts = [
         "WITH " + trade_edges_sql(),
         "nodes AS MATERIALIZED (SELECT DISTINCT src AS id FROM e)",
@@ -41,7 +55,7 @@ def _hyperanf_sql(p: int = 4, rounds: int = 3) -> str:
         f" CASE WHEN (h64 >> {p}) = 0 THEN {rho_max}"
         f" ELSE {rho_max} - length(bin(h64 >> {p})) END AS r FROM h)",
     ]
-    for t in range(1, rounds + 1):
+    for t in range(1, _ANF_ROUNDS + 1):
         parts.append(
             f"reg{t} AS MATERIALIZED (SELECT id, idx, max(r) AS r FROM ("
             f"SELECT id, idx, r FROM reg{t - 1}"
@@ -55,7 +69,7 @@ def _hyperanf_sql(p: int = 4, rounds: int = 3) -> str:
         f" ELSE {alpha_m2!r} / (({m} - c) + s) END"
     )
     sels = []
-    for t in range(rounds + 1):
+    for t in range(_ANF_ROUNDS + 1):
         sels.append(
             f"SELECT CAST({t} AS BIGINT) AS t,"
             f" round(sum(round({est}, 4)), 4) + 0.0 AS neighborhood_fn FROM ("
@@ -65,7 +79,7 @@ def _hyperanf_sql(p: int = 4, rounds: int = 3) -> str:
     return ",\n".join(parts) + "\n" + "\nUNION ALL\n".join(sels)
 
 
-@register("hyperanf_neighborhood", oracle=_hyperanf_sql(4, 3))
+@register("hyperanf_neighborhood", oracle=_hyperanf_sql())
 def hyperanf_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperANF (Boldi-Rosa-Vigna, WWW'11): the graph's neighborhood
     function N(t) = Σ_v |ball(v, t)| estimated by propagating per-node
@@ -77,13 +91,7 @@ def hyperanf_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     form, sketches.py:portable_hll_registers) so DuckDB replays them
     exactly; m=16 keeps the fixture fan-out small (rsd ~26% — accuracy
     is the paper's concern, the oracle checks the COMPUTATION)."""
-    from graph_db_spark.graph.algorithms import prepartition_for_rounds
-    from graph_db_spark.operators.dedup import portable_hash
-
-    p, rounds = 4, 3
-    m = 1 << p
-    alpha_m2 = (0.7213 / (1 + 1.079 / m)) * m * m
-    rho_max = 63 - p
+    p, m, alpha_m2, rho_max = _ANF_P, _ANF_M, _ANF_ALPHA_M2, _ANF_RHO_MAX
     e = prepartition_for_rounds(
         trade_edges(spark, sf_dir), spark.sparkContext.defaultParallelism, "src"
     )
@@ -97,7 +105,7 @@ def hyperanf_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id", h64.bitwiseAND(F.lit(m - 1)).alias("idx"), rho.alias("r")
     ).localCheckpoint(eager=True)
     per_round = [regs]
-    for _ in range(rounds):
+    for _ in range(_ANF_ROUNDS):
         prev = per_round[-1]
         grown = (
             prev.join(e, prev["id"] == e["src"])
@@ -131,10 +139,14 @@ def hyperanf_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res
 
 
-def _distoracle_sql(depth: int = 8) -> str:
+# BFS depth of the landmark distance oracle, shared with its replay.
+_LANDMARK_DEPTH = 8
+
+
+def _distoracle_sql() -> str:
     """DuckDB replay of the landmark distance oracle: multi-source BFS
     (both the 5 landmarks and the 8 sample endpoints as sources)
-    unrolled ``depth`` levels — the same settle-once frontier the Spark
+    unrolled ``_LANDMARK_DEPTH`` levels — the same settle-once frontier the Spark
     shortest_paths loop runs, truncated identically — then the
     triangle-inequality sandwich per sample pair."""
     parts = [
@@ -148,6 +160,7 @@ def _distoracle_sql(depth: int = 8) -> str:
         "d0 AS MATERIALIZED (SELECT id AS landmark, id, 0 AS dist FROM lmk"
         " UNION SELECT id, id, 0 FROM smp)",
     ]
+    depth = _LANDMARK_DEPTH
     for t in range(1, depth + 1):
         parts.append(
             f"g{t} AS MATERIALIZED (SELECT c.landmark, c.id, {t} AS dist FROM ("
@@ -186,7 +199,7 @@ def _distoracle_sql(depth: int = 8) -> str:
     return ",\n".join(parts)
 
 
-@register("landmark_distance_oracle", oracle=_distoracle_sql(8))
+@register("landmark_distance_oracle", oracle=_distoracle_sql())
 def landmark_distance_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distance oracle (Bourgain-style landmark embedding): precompute
     BFS distances from 5 landmarks, then answer ANY pairwise distance
@@ -198,8 +211,6 @@ def landmark_distance_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     available for the sandwich check — emitted per pair as a flag.
     Shares graph/algorithms.py:shortest_paths (one multi-source frontier
     run, both landmark sets together)."""
-    from graph_db_spark.graph.algorithms import shortest_paths
-
     e = trade_edges(spark, sf_dir)
     lmk = load_table(spark, sf_dir, "customer").filter(
         F.col("c_custkey").isin(20, 40)
@@ -217,7 +228,7 @@ def landmark_distance_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     dist = shortest_paths(
-        e, lmk.unionByName(smp), max_iter=8
+        e, lmk.unionByName(smp), max_iter=_LANDMARK_DEPTH
     ).localCheckpoint(eager=True)
     pairs = (
         smp.select(F.col("id").alias("u"))
@@ -258,7 +269,11 @@ def landmark_distance_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _brandes_sql(depth: int = 4) -> str:
+# Brandes BFS depth, shared with its replay.
+_BRANDES_DEPTH = 4
+
+
+def _brandes_sql() -> str:
     """DuckDB replay of graph/algorithms.py:brandes_betweenness on the
     customer–supplier bipartite trade graph, sources C:{1,7,13}: forward
     sigma CTEs (settle-once anti via NOT EXISTS), backward dependency
@@ -274,6 +289,7 @@ def _brandes_sql(depth: int = 4) -> str:
         " FROM customer WHERE c_custkey IN (1, 7, 13))",
         "set0 AS MATERIALIZED (SELECT source, id FROM lev0)",
     ]
+    depth = _BRANDES_DEPTH
     for t in range(1, depth + 1):
         parts.append(
             f"lev{t} AS MATERIALIZED (SELECT c.source, c.id, c.sigma FROM ("
@@ -313,7 +329,7 @@ def _brandes_sql(depth: int = 4) -> str:
     )
 
 
-@register("betweenness_landmarks", oracle=_brandes_sql(4))
+@register("betweenness_landmarks", oracle=_brandes_sql())
 def betweenness_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate betweenness centrality: exact Brandes dependency
     accumulation from a 3-landmark source sample
@@ -323,18 +339,20 @@ def betweenness_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     level-synchronous join passes; the sample size, not |V|, sets the
     multiplier). Top-20 brokers by sampled centrality; ordering on the
     ROUNDED score (ties → id) so cross-engine ulps cannot flip ranks."""
-    from graph_db_spark.graph.algorithms import brandes_betweenness
-
     e = trade_edges(spark, sf_dir)
     sources = load_table(spark, sf_dir, "customer").filter(
         F.col("c_custkey").isin(1, 7, 13)
     ).select(F.concat(F.lit("C:"), F.col("c_custkey").cast("string")).alias("id"))
-    bc = brandes_betweenness(e, sources, depth=4)
+    bc = brandes_betweenness(e, sources, depth=_BRANDES_DEPTH)
     scored = bc.select("id", r4(F.col("bc")).alias("bc"))
     return scored.orderBy(F.desc("bc"), "id").limit(20)
 
 
-def _walks_sql(length: int = 4) -> str:
+# Steps per deterministic walk, shared with its replay.
+_WALK_LENGTH = 4
+
+
+def _walks_sql() -> str:
     """DuckDB replay of graph/algorithms.py:deterministic_walks on the
     customer–supplier bipartite trade graph: same dst-sorted edge ranks,
     same portable md5-window hash (_poly_sql) choosing
@@ -348,7 +366,7 @@ def _walks_sql(length: int = 4) -> str:
         " FROM orders WHERE o_custkey < 50)",
         "s0 AS (SELECT start, start AS cur, start AS path FROM w0)",
     ]
-    for t in range(1, length + 1):
+    for t in range(1, _WALK_LENGTH + 1):
         h = _poly_sql(f"w.start || '#{t}'")
         parts.append(
             f"s{t} AS MATERIALIZED (SELECT w.start, r.dst AS cur,"
@@ -358,11 +376,11 @@ def _walks_sql(length: int = 4) -> str:
         )
     return (
         ",\n".join(parts)
-        + f"\nSELECT start, path, cur AS end_node FROM s{length}"
+        + f"\nSELECT start, path, cur AS end_node FROM s{_WALK_LENGTH}"
     )
 
 
-@register("random_walk_sampling", oracle=_walks_sql(4))
+@register("random_walk_sampling", oracle=_walks_sql())
 def random_walk_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph-embedding preprocessing: deterministic node2vec-style walks
     (graph/algorithms.py:deterministic_walks) over the customer–supplier
@@ -372,8 +390,6 @@ def random_walk_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's Cypher traversals are the same family of typed-edge
     hops; SURVEY §2 motif/Kleene notes). One equi-join per step,
     degree-resolved BEFORE the edge join so hubs never fan out."""
-    from graph_db_spark.graph.algorithms import deterministic_walks
-
     e = trade_edges(spark, sf_dir)
     starts = (
         load_table(spark, sf_dir, "orders")
@@ -381,7 +397,7 @@ def random_walk_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.concat(F.lit("C:"), F.col("o_custkey").cast("string")).alias("start"))
         .distinct()
     )
-    return deterministic_walks(e, starts, length=4)
+    return deterministic_walks(e, starts, length=_WALK_LENGTH)
 
 
 @register(
@@ -418,8 +434,6 @@ def hierarchy_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/hierarchy.py:ancestor_closure) and the rollup is ONE
     groupBy over the contribution pairs — no per-level rounds, no driver
     walk. The oracle is the textbook recursive CTE."""
-    from graph_db_spark.operators.hierarchy import subtree_rollup
-
     c = load_table(spark, sf_dir, "customer")
     nodes = c.select(F.col("c_custkey").alias("node"), F.col("c_acctbal").alias("v"))
     edges = c.filter(F.col("c_custkey") >= 10).select(
@@ -432,9 +446,13 @@ def hierarchy_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kcenter_sql(k: int = 8) -> str:
+# Centers the greedy k-center coreset picks, shared with its replay.
+_KCENTER_K = 8
+
+
+def _kcenter_sql() -> str:
     """DuckDB replay of similarity.kcenter_select: seed = smallest id,
-    then ``k`` chained (argmax, fold-min) CTE pairs using the SAME
+    then ``_KCENTER_K`` chained (argmax, fold-min) CTE pairs using the SAME
     expanded-form squared-L2 (_pq_d2 == similarity._l2sq) so every md is
     bit-identical; argmax orders (md DESC, id) with the md > 0
     chosen-duplicate guard mirrored. MATERIALIZED throughout (the
@@ -446,6 +464,7 @@ def _kcenter_sql(k: int = 8) -> str:
         f"m0 AS MATERIALIZED (SELECT b.id, b.v, {_pq_d2('b.v', 'seed.v')} AS md"
         f" FROM base b CROSS JOIN seed)",
     ]
+    k = _KCENTER_K
     for t in range(1, k + 1):
         parts.append(
             f"c{t} AS MATERIALIZED (SELECT id, v, md FROM m{t - 1}"
@@ -468,7 +487,7 @@ def _kcenter_sql(k: int = 8) -> str:
     return ",\n".join(parts) + "\n" + "\nUNION ALL\n".join(selects)
 
 
-@register("kcenter_coreset", oracle=_kcenter_sql(8))
+@register("kcenter_coreset", oracle=_kcenter_sql())
 def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diversity-first data selection: greedy k-center (farthest-point)
     coreset over the embeddings table
@@ -479,7 +498,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone radii that certify the 2-approximation. k+1 narrow scans,
     no shuffle; the oracle replays every fold exactly."""
     emb = load_table(spark, sf_dir, "embeddings")
-    out = SIM.kcenter_select(emb, "embedding", "vec_id", k=8)
+    out = SIM.kcenter_select(emb, "embedding", "vec_id", k=_KCENTER_K)
     return out.select("round", "id", r4(F.col("sep")).alias("sep"))
 
 
@@ -516,8 +535,6 @@ def geo_grid_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     radius-qualifying pair, so results are identical while shuffle stays
     O(n) at 100 TB. sqrt/multiply are correctly-rounded IEEE ops —
     bit-identical across engines; round AFTER the min fold."""
-    from graph_db_spark.operators.joins import grid_distance_join
-
     sup = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey",
         ((F.col("s_suppkey") * 53 % 1000).cast("double") / 10.0).alias("sx"),
@@ -881,16 +898,19 @@ def kruskal_wallis_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ams_f2_sql(n_est: int = 32, per_group: int = 8, seed: int = 17) -> str:
+# AMS F2 sketch: 32 estimators in groups of 8 from LCG seed 17, shared by
+# the Spark sketch and its replay.
+_AMS_N_EST, _AMS_PER_GROUP, _AMS_SEED = 32, 8, 17
+
+
+def _ams_f2_sql() -> str:
     """DuckDB replay of the AMS F2 (second frequency moment) sketch:
     ±1 four-wise-style signs from the portable hash + the LCG affine
     family (dedup.py:minhash_params, emitted as integer literals),
-    median-of-means over ``n_est`` estimators in groups of
-    ``per_group``. Every intermediate is integer or an exact
+    median-of-means over ``_AMS_N_EST`` estimators in groups of
+    ``_AMS_PER_GROUP``. Every intermediate is integer or an exact
     power-of-two division, so the estimate is bit-identical."""
-    from graph_db_spark.operators.dedup import _MINHASH_P as P
-    from graph_db_spark.operators.dedup import minhash_params
-
+    n_est, per_group, seed = _AMS_N_EST, _AMS_PER_GROUP, _AMS_SEED
     vals = ", ".join(
         f"({i}, {i // per_group}, {a}, {b})"
         for i, (a, b) in enumerate(minhash_params(n_est, seed=seed))
@@ -902,7 +922,7 @@ def _ams_f2_sql(n_est: int = 32, per_group: int = 8, seed: int = 17) -> str:
                FROM events GROUP BY 1),
     h AS (SELECT k, c, {_poly_sql('k')} AS hh FROM f),
     s AS (SELECT t.i, t.g,
-                 sum(CASE WHEN ((t.a * hh + t.b) % {P}) % 2 = 0
+                 sum(CASE WHEN ((t.a * hh + t.b) % {_MINHASH_P}) % 2 = 0
                           THEN c ELSE -c END) AS sk
           FROM h CROSS JOIN (VALUES {vals}) t(i, g, a, b) GROUP BY 1, 2),
     means AS (SELECT g, sum(CAST(sk AS HUGEINT) * sk) / {per_group}.0 AS m
@@ -928,10 +948,7 @@ def ams_f2_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
     than 32 rows; pair it with cms_join_cardinality for two-sided join
     sizing. Signs/means/median are integer or power-of-two exact —
     the estimate hashes bit-identically (see _ams_f2_sql)."""
-    from graph_db_spark.operators.dedup import _MINHASH_P as P
-    from graph_db_spark.operators.dedup import minhash_params, portable_hash
-
-    n_est, per_group, seed = 32, 8, 17
+    n_est, per_group, seed = _AMS_N_EST, _AMS_PER_GROUP, _AMS_SEED
     f = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.col("user_id").cast("string").alias("k"))
@@ -951,7 +968,7 @@ def ams_f2_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(
                 F.when(
-                    ((F.col("a") * F.col("hh") + F.col("b")) % P) % 2 == 0,
+                    ((F.col("a") * F.col("hh") + F.col("b")) % _MINHASH_P) % 2 == 0,
                     F.col("c"),
                 ).otherwise(-F.col("c"))
             ).alias("sk")
@@ -1569,23 +1586,25 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _dp_noisy_counts_sql(eps: float = 1.0) -> str:
+# The DP release's privacy budget, shared with its replay.
+_DP_EPS = 1.0
+
+
+def _dp_noisy_counts_sql() -> str:
     """DuckDB replay of the deterministic-Laplace DP release: uniform
     u ∈ (0,1) from the portable hash of the group key, inverse-CDF
     Laplace noise at sensitivity 1. Same hash, same ln — the 'noise' is
     a pure function of the key, so both engines emit identical rows."""
-    from graph_db_spark.operators.dedup import _MINHASH_P as P
-
     return f"""
     WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
     u AS (SELECT source, n,
-                 ({_poly_sql('source')} + 1.0) / {P + 1}.0 AS u
+                 ({_poly_sql('source')} + 1.0) / {_MINHASH_P + 1}.0 AS u
           FROM c)
     SELECT source, CAST(n AS BIGINT) AS true_count,
-           round(n - (1.0 / {eps}) * sign(u - 0.5)
+           round(n - (1.0 / {_DP_EPS}) * sign(u - 0.5)
                      * ln(1.0 - 2.0 * abs(u - 0.5)), 4) + 0.0
              AS noisy_count,
-           round(CAST({eps} AS DOUBLE), 4) + 0.0 AS epsilon
+           round(CAST({_DP_EPS} AS DOUBLE), 4) + 0.0 AS epsilon
     FROM u
     """
 
@@ -1601,16 +1620,13 @@ def dp_noisy_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     perturbs. u ∈ (0,1) by construction ((h+1)/(P+1)), so the ln
     argument never hits 0. One aggregate + scalar math — shuffle is
     |groups| rows at any scale."""
-    from graph_db_spark.operators.dedup import _MINHASH_P as P
-    from graph_db_spark.operators.dedup import portable_hash
-
-    eps = 1.0
+    eps = _DP_EPS
     c = (
         load_table(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    u = (portable_hash(F.col("source")) + 1.0) / float(P + 1)
+    u = (portable_hash(F.col("source")) + 1.0) / float(_MINHASH_P + 1)
     noise = (1.0 / eps) * F.signum(u - 0.5) * F.log(1.0 - 2.0 * F.abs(u - 0.5))
     return c.select(
         "source",
@@ -1747,7 +1763,6 @@ def curriculum_phase_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``with_global_rank``) and the doc count arrives as a 1-row
     broadcast — a billion-doc curriculum ranks as #partitions parallel
     sorts."""
-    from graph_db_spark.operators.aggregates import with_global_rank
     toks = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("token"),
@@ -1824,8 +1839,6 @@ def quantile_normalize_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix sum (``with_global_rank``) and the corpus count a 1-row
     broadcast; only the per-SOURCE rank windows remain, and those are
     key-partitioned. One prefix-sum ranking + one index equi-join."""
-    from graph_db_spark.operators.aggregates import with_global_rank
-
     docs = load_table(spark, sf_dir, "documents")
     g = with_global_rank(
         docs.select(F.col("n_chars").alias("v"), "doc_id"),

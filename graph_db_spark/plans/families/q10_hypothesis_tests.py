@@ -16,10 +16,13 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from graph_db_spark.graph.build import edges_sql
+from graph_db_spark.graph.algorithms import checkpoint_keep_partitioning, prepartition_for_rounds
+from graph_db_spark.graph.build import build_graph, edges_sql
 from graph_db_spark.operators import similarity as SIM
+from graph_db_spark.operators.aggregates import with_global_rank
 from graph_db_spark.operators.joins import dim_hint
 from graph_db_spark.plans.families.q00_base import r4, register
+from graph_db_spark.plans.families.q01_relational_pipeline import _EMB_DIM
 from graph_db_spark.tables import load_table
 
 
@@ -215,8 +218,6 @@ def sprt_sequential_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary-crossing distance of ±ln 19 on the fixtures. The global
     order is the test's semantics (one experiment = one sequence; a
     real deployment partitions by experiment key)."""
-    from graph_db_spark.operators.aggregates import with_global_rank
-
     ev = load_table(spark, sf_dir, "events")
     trials = ev.select(
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("x"),
@@ -257,13 +258,21 @@ def sprt_sequential_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Katz's α^k weights for walk lengths k = 1..4 (α = 0.1), emitted as the
+# same double literals on both engines.
+_KATZ_WEIGHTS = tuple(0.1**k for k in range(1, 5))
+
+
 def _katz_oracle_sql() -> str:
     """Truncated-series Katz oracle: integer walk counts w_k (k ≤ 4) by
     repeated edge joins, combined with the SAME python-emitted α^k
     double literals the Spark side uses, in the same fixed summation
     order — per-label masses round(,4) far above summation noise."""
+    c = "\n             + ".join(
+        f"CAST({a!r} AS DOUBLE) * coalesce(w{k}.w, 0)" for k, a in enumerate(_KATZ_WEIGHTS, 1)
+    )
     return f"""
-    WITH edges AS MATERIALIZED ({{edges}}),
+    WITH edges AS MATERIALIZED ({edges_sql()}),
     verts AS MATERIALIZED (SELECT DISTINCT id FROM
       (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges)),
     w1 AS MATERIALIZED (SELECT dst AS id, count(*) AS w FROM edges GROUP BY 1),
@@ -275,10 +284,7 @@ def _katz_oracle_sql() -> str:
                         FROM edges e JOIN w3 ON e.src = w3.id GROUP BY 1),
     katz AS (
       SELECT v.id,
-             CAST(0.1 AS DOUBLE) * coalesce(w1.w, 0)
-             + CAST(0.010000000000000002 AS DOUBLE) * coalesce(w2.w, 0)
-             + CAST(0.0010000000000000002 AS DOUBLE) * coalesce(w3.w, 0)
-             + CAST(0.00010000000000000002 AS DOUBLE) * coalesce(w4.w, 0) AS c
+             {c} AS c
       FROM verts v
       LEFT JOIN w1 ON v.id = w1.id
       LEFT JOIN w2 ON v.id = w2.id
@@ -292,7 +298,7 @@ def _katz_oracle_sql() -> str:
     """
 
 
-@register("katz_walk_centrality", oracle=_katz_oracle_sql().format(edges=edges_sql()))
+@register("katz_walk_centrality", oracle=_katz_oracle_sql())
 def katz_walk_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph — truncated-series Katz centrality (α=0.1, 4 terms):
     c(v) = Σ α^k · #walks_k→v with INTEGER walk counts, so unlike the
@@ -304,12 +310,6 @@ def katz_walk_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge table prepartitions ONCE on src (prepartition_for_rounds),
     each of the 4 rounds shuffles only the |V|-sized walk-count table —
     the standard iterative-join discipline of this engine at 100 TB."""
-    from graph_db_spark.graph.algorithms import (
-        checkpoint_keep_partitioning,
-        prepartition_for_rounds,
-    )
-    from graph_db_spark.graph.build import build_graph
-
     g = build_graph(spark, sf_dir)
     nparts = spark.sparkContext.defaultParallelism
     e = prepartition_for_rounds(
@@ -320,7 +320,7 @@ def katz_walk_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_cur = verts.select("id", F.lit(1).cast("long").alias("w"))
     walks = []
-    for _k in range(4):
+    for _ in _KATZ_WEIGHTS:
         w_cur = checkpoint_keep_partitioning(
             e.join(w_cur, on="id")
             .groupBy(F.col("dst").alias("id"))
@@ -330,14 +330,12 @@ def katz_walk_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     katz = verts
     for i, wk in enumerate(walks, 1):
         katz = katz.join(
-            wk.select("id", F.col("w").alias(f"w{i}".format(i=i))), on="id", how="left"
+            wk.select("id", F.col("w").alias(f"w{i}")), on="id", how="left"
         )
-    c = (
-        F.lit(0.1) * F.coalesce("w1", F.lit(0))
-        + F.lit(0.010000000000000002) * F.coalesce("w2", F.lit(0))
-        + F.lit(0.0010000000000000002) * F.coalesce("w3", F.lit(0))
-        + F.lit(0.00010000000000000002) * F.coalesce("w4", F.lit(0))
-    )
+    c = None
+    for k, a in enumerate(_KATZ_WEIGHTS, 1):
+        term = F.lit(a) * F.coalesce(f"w{k}", F.lit(0))
+        c = term if c is None else c + term
     return katz.select(F.substring("id", 1, 1).alias("label"), c.alias("c")).groupBy(
         "label"
     ).agg(
@@ -719,12 +717,17 @@ def markov_absorption_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return v.select(F.col("s").alias("start_state"), r4(F.col("v")).alias("p_absorb_8"))
 
 
-def _pca_power_sql(dim: int = 64, rounds: int = 6) -> str:
+# Power-iteration rounds of pca_power_iteration, shared with its oracle.
+_PCA_ROUNDS = 6
+
+
+def _pca_power_sql() -> str:
     """Unrolled power iteration on the embedding covariance matrix: the
     (i,j) entries are avg(xi·xj) − mi·mj from one dimension-pair
     aggregate; v0 = e1; each round is a matrix-vector product plus an
     L2 normalize. All folds are grouped sums whose cross-engine drift
     is relative (~1e−14) and the Rayleigh quotient is a ratio — r4-safe."""
+    dim, rounds = _EMB_DIM, _PCA_ROUNDS
     parts = [f"""
     WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     dims AS MATERIALIZED (
@@ -811,14 +814,14 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.flatten(
                 F.expr(
                     "transform(v, (x, i0) -> concat(array(x),"
-                    " transform(slice(v, i0 + 1, 64 - i0), y -> x * y)))"
+                    f" transform(slice(v, i0 + 1, {_EMB_DIM} - i0), y -> x * y)))"
                 )
             )
         ).alias("pos", "p")
     )
     grid = terms.groupBy("pos").agg(F.avg("p").alias("exy"))
     got = {r["pos"]: r["exy"] for r in grid.collect()}  # dim²-sized
-    dim = 64
+    dim = _EMB_DIM
     mu = [0.0] * dim
     exy = [[0.0] * dim for _ in range(dim)]
     pos = 0
@@ -830,7 +833,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             pos += 1
     c = [[exy[i][j] - mu[i] * mu[j] for j in range(dim)] for i in range(dim)]
     v = [1.0 if i == 0 else 0.0 for i in range(dim)]
-    for _ in range(6):
+    for _ in range(_PCA_ROUNDS):
         w = [sum(c[i][j] * v[j] for j in range(dim)) for i in range(dim)]
         nrm = math.sqrt(sum(x * x for x in w))
         v = [x / nrm for x in w]
@@ -1044,8 +1047,6 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     helper's ``cumsum_cols`` — a billion-doc corpus ranks and
     accumulates as #partitions parallel sorts, and integer cumsums stay
     exact under any partition split."""
-    from graph_db_spark.operators.aggregates import with_global_rank
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("w")
     )
@@ -1843,8 +1844,6 @@ def rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership is a degree-table filter; induced-subgraph edges come
     from two semi-join-shaped hash joins of the edge list against the
     (small) club tables — never an N² scan."""
-    from graph_db_spark.graph.build import build_graph
-
     g = build_graph(spark, sf_dir)
     edges = (
         g.edges.filter(F.col("src") != F.col("dst"))

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graph_db_spark.operators import similarity as SIM
+from graph_db_spark.operators import text as TX
 from graph_db_spark.operators.joins import dim_hint
 from graph_db_spark.plans.families.q00_base import (
     _cohort_risk, _cohort_risk_sql, _conversion_obs, _conversion_obs_sql, r4, register,
@@ -531,8 +532,6 @@ def cohens_kappa_raters(spark: SparkSession, sf_dir: str) -> DataFrame:
     majority-class rater — κ does not). The 2×2 table is one aggregate;
     κ is scalar algebra on its margins. The labeling-pipeline QA row
     beside k_anonymity_audit and label_noise_screen."""
-    from graph_db_spark.operators import text as TX
-
     docs = load_table(spark, sf_dir, "documents")
     sw = [F.lit(w) for w in TX.STOPWORDS["en"]]
     pred = (
@@ -770,10 +769,15 @@ def bland_altman_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ljung_box_sql(max_lag: int = 10) -> str:
+# Ljung-Box lags (1..10), shared with its oracle.
+_LB_MAX_LAG = 10
+
+
+def _ljung_box_sql() -> str:
     """Ljung-Box on the daily revenue series using the pairwise-corr ACF
     variant (matching autocorrelation_lags): lag columns from one
     window sort, one corr() per lag, Q = n(n+2)·Σ r_k²/(n−k)."""
+    max_lag = _LB_MAX_LAG
     lags = ",\n             ".join(
         f"lag(y, {k}) OVER (ORDER BY day) AS y{k}" for k in range(1, max_lag + 1)
     )
@@ -812,19 +816,20 @@ def ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wo = Window.orderBy("day")
     cols = ["day", "y"] + [
-        F.lag("y", k).over(wo).alias(f"y{k}") for k in range(1, 11)
+        F.lag("y", k).over(wo).alias(f"y{k}") for k in range(1, _LB_MAX_LAG + 1)
     ]
     l = daily.select(*cols)
     aggs = [(F.count(F.lit(1)) * 1.0).alias("n")] + [
-        F.corr("y", f"y{k}").alias(f"c{k}") for k in range(1, 11)
+        F.corr("y", f"y{k}").alias(f"c{k}") for k in range(1, _LB_MAX_LAG + 1)
     ]
     a = l.agg(*aggs)
     q = F.col("n") * (F.col("n") + 2.0) * sum(
-        F.col(f"c{k}") * F.col(f"c{k}") / (F.col("n") - k) for k in range(1, 11)
+        F.col(f"c{k}") * F.col(f"c{k}") / (F.col("n") - k)
+        for k in range(1, _LB_MAX_LAG + 1)
     )
     return a.select(
         F.col("n").cast("bigint").alias("n_days"),
-        F.lit(10).cast("bigint").alias("df"),
+        F.lit(_LB_MAX_LAG).cast("bigint").alias("df"),
         r4(q).alias("ljung_box_q"),
     )
 

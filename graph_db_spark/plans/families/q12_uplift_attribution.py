@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from graph_db_spark.operators.aggregates import ntile_of, with_global_rank
 from graph_db_spark.operators.joins import dim_hint
 from graph_db_spark.plans.families.q00_base import (
     _conversion_obs, _conversion_obs_sql, _fmt_ts, r4, register,
@@ -66,8 +67,6 @@ def cumulative_gains_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form ntile (the order_value_deciles pattern), and the
     cumulative is a 10x10 triangular self-join on the decile grid —
     integer counts only, so both engines agree exactly."""
-    from graph_db_spark.operators.aggregates import ntile_of, with_global_rank
-
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     resp = (
         load_table(spark, sf_dir, "orders")
@@ -358,8 +357,6 @@ def abc_inventory_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the total, and every cumulative share are exact integer arithmetic
     — the A/B/C boundary comparisons are bit-identical across engines
     and partition layouts (the rfm cent-count convention)."""
-    from graph_db_spark.operators.aggregates import with_global_rank
-
     li = load_table(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     pr = li.groupBy(F.col("l_partkey").alias("pk")).agg(
@@ -385,10 +382,14 @@ def abc_inventory_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bh_z_thresholds(m: int = 25, q: float = 0.10) -> list[tuple[int, float]]:
+# Benjamini-Hochberg: m = 25 hypotheses at false-discovery rate q = 0.10.
+_BH_M, _BH_Q = 25, 0.10
+
+
+def _bh_z_thresholds() -> list[tuple[int, float]]:
     """Benjamini-Hochberg rejection thresholds on the |z| scale: for rank
     i (p-values ascending = |z| descending), the step-up rule rejects
-    when p(i) <= i*q/m, i.e. |z| >= Phi^-1(1 - i*q/(2m)) for a two-sided
+    when p(i) <= i*q/m (m = _BH_M, q = _BH_Q), i.e. |z| >= Phi^-1(1 - i*q/(2m)) for a two-sided
     z test. Computed ONCE in Python with math.erf + bisection and
     injected as identical double literals into BOTH engines — neither
     engine needs erf at runtime, which neither Spark SQL nor portable
@@ -398,6 +399,7 @@ def _bh_z_thresholds(m: int = 25, q: float = 0.10) -> list[tuple[int, float]]:
     def phi(z: float) -> float:
         return 0.5 * (1.0 + math.erf(z / math.sqrt(2.0)))
 
+    m, q = _BH_M, _BH_Q
     out = []
     for i in range(1, m + 1):
         target = 1.0 - (q * i / m) / 2.0
@@ -580,8 +582,6 @@ def quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     #partitions parallel sorts and move 18 rows. Quantile values are
     raw data cells (never aggregated), hence identical doubles both
     engines; qte differences round inside the guard band."""
-    from graph_db_spark.operators.aggregates import with_global_rank
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",

@@ -11,10 +11,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from graph_db_spark.operators import similarity as SIM
 from graph_db_spark.plans.families.q00_base import (
     _conversion_obs, _conversion_obs_sql, r4, register,
 )
-from graph_db_spark.plans.families.q01_relational_pipeline import _ivf_training_sql
+from graph_db_spark.plans.families.q01_relational_pipeline import (
+    _IVF_ITERS, _IVF_NPROBE, _ivf_training_sql,
+)
 from graph_db_spark.tables import load_table
 
 
@@ -1701,8 +1704,6 @@ def mrr_hit_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     count ratios; MRR sums exact reciprocals 1/1..1/10 per class (the
     NDCG float precedent). Broadcast-side brute force is the baseline
     shape — the ANN family holds the scale path."""
-    from graph_db_spark.operators import similarity as SIM
-
     # r13: the 1-in-5 query sample fans out to one partition per core
     # before streaming the broadcast — the sample is a single parquet
     # split, so the whole pair scoring otherwise ran in ONE task (a
@@ -1771,29 +1772,28 @@ def mrr_hit_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mrr_ivf_oracle_sql(
-    n_centroids: int = 16,
-    nprobe: int = 8,
-    k: int = 10,
-    lloyd_iters: int = 3,
-    dim: int = 64,
-) -> str:
+# The rank cutoff of mrr_hit_at_k_ivf (MRR@10), shared with its oracle.
+_MRR_K = 10
+
+
+def _mrr_ivf_oracle_sql() -> str:
     """mrr_hit_at_k_ivf oracle: the shared IVF training replay
-    (`_ivf_training_sql`), the 1-in-5 query sample probing ``nprobe``
-    lists, first-relevant positions within the IVF top-k, the exact
+    (`_ivf_training_sql`), the 1-in-5 query sample probing
+    ``_IVF_NPROBE`` lists, first-relevant positions within the IVF
+    top-``_MRR_K``, the exact
     brute-force first-relevant positions (the `mrr_hit_at_k` leg,
     verbatim discipline), per-label aggregation over the sample spine —
     and the contract flag PINNED to 1.0 (the hll_user_reach idiom): the
     Spark side computes whether the IVF MRR holds ≥70% of the exact MRR
     overall, so a quantizer/probe regression fails the driver gate."""
-    parts = _ivf_training_sql(n_centroids, lloyd_iters, dim)
-    cur = f"cent{lloyd_iters}"
+    parts = _ivf_training_sql()
+    cur = f"cent{_IVF_ITERS}"
     parts += [
         f"qpro AS MATERIALIZED (SELECT id AS query_id, cluster, rawv AS qv FROM ("
         f"  SELECT uv.id, uv.rawv, c.cluster,"
         f"         row_number() OVER (PARTITION BY uv.id"
         f"           ORDER BY list_dot_product(uv.rawv, c.cvec) DESC, c.cluster DESC) AS rn"
-        f"  FROM uv CROSS JOIN {cur} c WHERE uv.id % 5 = 0) WHERE rn <= {nprobe})",
+        f"  FROM uv CROSS JOIN {cur} c WHERE uv.id % 5 = 0) WHERE rn <= {_IVF_NPROBE})",
         "iscored AS (SELECT q.query_id, c.neighbor_id,"
         " CASE WHEN sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.cv, c.cv)) > 0"
         "      THEN list_dot_product(q.qv, c.cv)"
@@ -1804,7 +1804,7 @@ def _mrr_ivf_oracle_sql(
         f"  SELECT query_id, neighbor_id,"
         f"         row_number() OVER (PARTITION BY query_id"
         f"           ORDER BY sim DESC, neighbor_id) AS rn"
-        f"  FROM iscored) WHERE rn <= {k})",
+        f"  FROM iscored) WHERE rn <= {_MRR_K})",
         "lab AS (SELECT vec_id AS id, CAST(label AS BIGINT) AS label FROM embeddings)",
         "fri AS (SELECT r.query_id,"
         " min(CASE WHEN nl.label = ql.label THEN r.rn END) AS fr"
@@ -1822,7 +1822,7 @@ def _mrr_ivf_oracle_sql(
         f" FROM q2 a JOIN e2 b ON a.vec_id <> b.vec_id)",
         f"fre AS (SELECT vec_id AS query_id,"
         f" min(CASE WHEN nlabel = label THEN rn END) AS fr"
-        f" FROM eranked WHERE rn <= {k} GROUP BY 1)",
+        f" FROM eranked WHERE rn <= {_MRR_K} GROUP BY 1)",
         "spine AS (SELECT vec_id AS query_id, CAST(label AS BIGINT) AS label"
         " FROM embeddings WHERE vec_id % 5 = 0)",
         "per AS (SELECT s.label, count(*) AS n_queries,"

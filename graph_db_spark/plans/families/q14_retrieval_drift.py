@@ -10,9 +10,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from graph_db_spark.operators import similarity as SIM
 from graph_db_spark.operators.joins import dim_hint
 from graph_db_spark.plans.families.q00_base import r4, register
-from graph_db_spark.plans.families.q13_tsa_retrieval import _mrr_ivf_oracle_sql
+from graph_db_spark.plans.families.q01_relational_pipeline import (
+    _IVF_CENTROIDS, _IVF_ITERS, _IVF_NPROBE,
+)
+from graph_db_spark.plans.families.q13_tsa_retrieval import _MRR_K, _mrr_ivf_oracle_sql
 from graph_db_spark.tables import load_table
 
 
@@ -34,11 +38,12 @@ def mrr_hit_at_k_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics themselves are EXACT-oracled: the LCG seed pick and Lloyd
     rounds replay in DuckDB (`_ivf_training_sql`), so the driver
     hash-checks the approximate result end to end."""
-    from graph_db_spark.operators import similarity as SIM
-
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") % 5 == 0)
-    ivf = SIM.cosine_topk_ivf(emb, qs, k=10, n_centroids=16, nprobe=8)
+    ivf = SIM.cosine_topk_ivf(
+        emb, qs, k=_MRR_K, n_centroids=_IVF_CENTROIDS, nprobe=_IVF_NPROBE,
+        lloyd_iters=_IVF_ITERS,
+    )
     lab = emb.select(
         F.col("vec_id").alias("nid2"), F.col("label").alias("nlabel2")
     )
@@ -92,7 +97,7 @@ def mrr_hit_at_k_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "nid")
     fre = (
         pairs.select("*", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= 10)
+        .filter(F.col("rn") <= _MRR_K)
         .groupBy("query_id")
         .agg(
             F.min(

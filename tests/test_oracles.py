@@ -207,7 +207,8 @@ def test_family_imports_name_their_defining_module():
     """No re-export shims: every name a family module imports from another
     family module is defined there (def, class or assignment), not merely
     imported into it — pyspark and library names come from their own
-    modules."""
+    modules. Library names are imported once, at the module top: no
+    function-local ``graph_db_spark`` import."""
     import ast
     import pathlib
 
@@ -220,7 +221,12 @@ def test_family_imports_name_their_defining_module():
                 names.add(node.name)
             elif isinstance(node, (ast.Assign, ast.AnnAssign)):
                 targets = node.targets if isinstance(node, ast.Assign) else [node.target]
-                names |= {t.id for t in targets if isinstance(t, ast.Name)}
+                names |= {
+                    t.id
+                    for tg in targets
+                    for t in (tg.elts if isinstance(tg, ast.Tuple) else [tg])
+                    if isinstance(t, ast.Name)
+                }
         return names
 
     trees = {
@@ -237,4 +243,72 @@ def test_family_imports_name_their_defining_module():
         for a in node.names
         if a.name not in defs[node.module[len(prefix):]]
     ]
+    bad += [
+        f"{name}:{node.lineno} imports {node.module} inside a function"
+        for name, tree in trees.items()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+        and node not in tree.body
+        and (node.module or "").startswith("graph_db_spark")
+    ]
     assert len(trees) == 15 and not bad, bad
+
+
+def test_family_defaults_have_two_values_in_use():
+    """Every defaulted parameter of a family function is an option some
+    caller sets: across the call sites under graph_db_spark/ (a call that
+    omits the argument passes the default) it takes at least two distinct
+    values. A number only one value of which is in use is a module
+    constant, read by the oracle builder and passed by the Spark side."""
+    import ast
+    import pathlib
+
+    import graph_db_spark
+    from graph_db_spark.plans import families
+
+    prefix = "graph_db_spark.plans.families."
+    fams = {
+        p.stem: ast.parse(p.read_text())
+        for p in pathlib.Path(families.__file__).parent.glob("q*.py")
+    }
+    # (module, function) -> positional names and {param: default text}
+    funcs = {}
+    for mod, tree in fams.items():
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            pos = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+            defaults = list(map(ast.unparse, fn.args.defaults))
+            d = dict(zip(pos[len(pos) - len(defaults):], defaults))
+            d.update(
+                (a.arg, ast.unparse(v))
+                for a, v in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+                if v is not None
+            )
+            if d:
+                funcs[mod, fn.name] = (pos, d)
+    values = {(mod, fn, p): set() for (mod, fn), (_, d) in funcs.items() for p in d}
+    root = pathlib.Path(graph_db_spark.__file__).parent
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        # the family functions this module can call by name
+        callable_here = {fn: path.stem for (mod, fn) in funcs if mod == path.stem}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(prefix):
+                for a in node.names:
+                    if (node.module[len(prefix):], a.name) in funcs:
+                        callable_here[a.asname or a.name] = node.module[len(prefix):]
+        for call in ast.walk(tree):
+            if not (isinstance(call, ast.Call) and isinstance(call.func, ast.Name)):
+                continue
+            mod = callable_here.get(call.func.id)
+            if mod is None:
+                continue
+            pos, d = funcs[mod, call.func.id]
+            kw = {k.arg: ast.unparse(k.value) for k in call.keywords if k.arg}
+            for p, default in d.items():
+                i = pos.index(p) if p in pos else len(call.args)
+                v = kw.get(p, ast.unparse(call.args[i]) if i < len(call.args) else default)
+                values[mod, call.func.id, p].add(v)
+    single = sorted(f"{m}.{f}({p}): {sorted(v)}" for (m, f, p), v in values.items() if len(v) < 2)
+    assert not single, single
