@@ -31,10 +31,9 @@ def sanitize_prop_name(col: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def depth_from_label(label: Column | str, fallback: Column | None = None, unknown: int = -1) -> Column:
+def depth_from_label(label: Column | str) -> Column:
     """Extract the first 1-3 digit number (decimal comma tolerated, e.g.
-    ``"22,5"``) from a sensor label, round to int; else use ``fallback``;
-    else ``unknown``.
+    ``"22,5"``) from a sensor label, round to int; else -1.
 
     Parity: ``_depth_from_label`` /root/reference/app/graph_soil_layer.py:28-42
     and the sensor_detail fallback at :142-151.
@@ -45,11 +44,7 @@ def depth_from_label(label: Column | str, fallback: Column | None = None, unknow
     # bround = half-even, matching the reference's Python int(round(x))
     # (banker's rounding: 22.5→22, 23.5→24); F.round would be HALF_UP.
     depth = F.bround(num).cast("int")
-    branches = [depth]
-    if fallback is not None:
-        branches.append(F.bround(fallback.try_cast("double")).cast("int"))
-    branches.append(F.lit(unknown))
-    return F.coalesce(*branches)
+    return F.coalesce(depth, F.lit(-1))
 
 
 # ---------------------------------------------------------------------------
@@ -289,8 +284,8 @@ def mineral_norm(col: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def first_non_empty(*cols: Column | str, default: str = "unknown") -> Column:
-    """First non-null, non-empty (after trim) of ``cols``, else ``default``.
+def first_non_empty(*cols: Column | str) -> Column:
+    """First non-null, non-empty (after trim) of ``cols``, else ``"unknown"``.
 
     Parity: ``_app_type`` /root/reference/app/graph_application_event.py:30-36
     (also covers F17 ``_safe_get`` alias-column coalescing).
@@ -299,7 +294,7 @@ def first_non_empty(*cols: Column | str, default: str = "unknown") -> Column:
         F.nullif(F.trim((F.col(c) if isinstance(c, str) else c).cast("string")), F.lit(""))
         for c in cols
     ]
-    return F.coalesce(*normed, F.lit(default))
+    return F.coalesce(*normed, F.lit("unknown"))
 
 
 # ---------------------------------------------------------------------------
@@ -352,9 +347,9 @@ def depth_diff(ending: Column | str, beginning: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def iso_z_timestamp(col: Column | str, fallback_day: Column | None = None) -> Column:
-    """Parse ISO timestamps tolerating a ``Z`` suffix; fall back to midnight
-    of ``fallback_day``.
+def iso_z_timestamp(col: Column | str) -> Column:
+    """Parse ISO timestamps tolerating a ``Z`` suffix; NULL when none of
+    the formats parse.
 
     Parity: ``_to_datetime`` /root/reference/app/graph_product_application.py:26-38.
     """
@@ -365,8 +360,6 @@ def iso_z_timestamp(col: Column | str, fallback_day: Column | None = None) -> Co
         F.try_to_timestamp(cleaned, F.lit("yyyy-MM-dd'T'HH:mm:ss")),
         F.try_to_timestamp(cleaned),
     )
-    if fallback_day is not None:
-        parsed = F.coalesce(parsed, F.date_trunc("day", fallback_day.cast("timestamp")))
     return parsed
 
 

@@ -80,9 +80,10 @@ def checkpoint_keep_partitioning(df: DataFrame) -> DataFrame:
     Co-partitioned reuse needs MATCHING partition counts: per-round
     tables exit their join/agg at ``spark.sql.shuffle.partitions``, so
     the exchange-free round holds when the static table's ``nparts``
-    equals it (the default — ``defaultParallelism`` — does on this
-    harness; callers passing a small ``n_partitions`` for tiny inputs
-    knowingly trade the reuse for lower task overhead)."""
+    equals it (``defaultParallelism``, which ``_parts`` falls back to,
+    does on this harness; a query whose ``_graph_nparts`` probe picks 8
+    partitions for a tiny fixture knowingly trades the reuse for lower
+    task overhead)."""
     with _aqe_off(df.sparkSession):
         return df.localCheckpoint(eager=True)
 
@@ -129,13 +130,26 @@ def _until_quiet(step, state, max_rounds: int, name: str, at_limit: str = "raise
 # connected_components runs this many rounds of plain propagation; a
 # pointer-jump step precedes every later round
 _JUMP_AFTER = 8
+# Round bounds of the frontier loops: exhausting one raises "did not
+# converge" (a truncated loop returns silently wrong rows)
+_CC_MAX_ROUNDS = 20
+_SPT_MAX_ROUNDS = 20
+_WSP_MAX_ROUNDS = 20
+_KCORE_MAX_ROUNDS = 50
+_TRUSS_MAX_ROUNDS = 30
+_SCC_MAX_ROUNDS = 40
+# PageRank and personalized PageRank: teleport probability, round budget
+# and the L1 movement above which the final round warns. The DuckDB
+# oracles replay the same reset and rounds.
+_PR_RESET, _PR_ITERS, _PR_TOL = 0.15, 10, 0.01
+# Fixed round counts (depths) the DuckDB oracles unroll
+_BRANDES_DEPTH = 4
+_LUBY_ROUNDS = 6
+_CORENESS_ROUNDS = 8
+_BORUVKA_ROUNDS = 4
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 20,
-    n_partitions: int | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, n_partitions: int | None = None) -> DataFrame:
     """Connected components via iterative min-label propagation
     (large-star/small-star style: each round every vertex adopts the minimum
     component id among itself and its neighbors).
@@ -156,9 +170,10 @@ def connected_components(
     O(d) — the cheap path never pays for it, the deep path always
     converges.
 
-    Convergence is verified, never assumed: exhausting ``max_iter`` without
-    a fixed point raises — silently returning half-propagated labels would
-    split clusters downstream (e.g. near-dup canonical ids) with no signal.
+    Convergence is verified, never assumed: exhausting ``_CC_MAX_ROUNDS``
+    without a fixed point raises — silently returning half-propagated
+    labels would split clusters downstream (e.g. near-dup canonical ids)
+    with no signal.
     """
     raw = edges.select(
         F.col("src").cast("string").alias("a"), F.col("dst").cast("string").alias("b")
@@ -256,7 +271,7 @@ def connected_components(
         comp = merged.select("id", F.col("new_component").alias("component"))
         return (comp, frontier, merged), frontier
 
-    return _until_quiet(step, (comp, comp, None), max_iter, "connected_components")[0]
+    return _until_quiet(step, (comp, comp, None), _CC_MAX_ROUNDS, "connected_components")[0]
 
 
 def _out_weighted(e: DataFrame, n_partitions: int | None) -> DataFrame:
@@ -277,12 +292,12 @@ def _out_weighted(e: DataFrame, n_partitions: int | None) -> DataFrame:
     )
 
 
-def _warn_if_moving(name: str, max_iter: int, last_delta: float, tol: float) -> None:
-    if last_delta > tol:
+def _warn_if_moving(name: str, rounds: int, budget: str, last_delta: float) -> None:
+    if last_delta > _PR_TOL:
         warnings.warn(
-            f"{name} still moving after max_iter={max_iter} rounds "
-            f"(final L1 delta bound {last_delta:.3g} > tol={tol:g}) — ranks "
-            "are plausible but unconverged; raise max_iter",
+            f"{name} still moving after {rounds} rounds "
+            f"(final L1 delta bound {last_delta:.3g} > _PR_TOL={_PR_TOL:g}) — "
+            f"ranks are plausible but unconverged; raise {budget}",
             RuntimeWarning,
             stacklevel=3,
         )
@@ -290,10 +305,8 @@ def _warn_if_moving(name: str, max_iter: int, last_delta: float, tol: float) -> 
 
 def pagerank(
     edges: DataFrame,
-    reset_prob: float = 0.15,
-    max_iter: int = 10,
+    max_iter: int = _PR_ITERS,
     n_partitions: int | None = None,
-    tol: float = 0.01,
 ) -> DataFrame:
     """PageRank with uniform reset; dangling mass redistributed uniformly.
 
@@ -310,7 +323,7 @@ def pagerank(
     previous rank rides through the round's existing vertex-side join,
     so the L1 movement Σ|rank_t − rank_{t−1}| comes out of the SAME
     one-row mass scan each round (one extra abs-sum column, no extra
-    job). If the final round still moved more than ``tol`` (an upper
+    job). If the final round still moved more than ``_PR_TOL`` (an upper
     bound: raw pre-shift delta + the round-over-round CHANGE of the
     uniform dangling shift, by the triangle inequality — both terms
     vanish at a fixed point) a ``RuntimeWarning`` is emitted — output is
@@ -374,8 +387,8 @@ def pagerank(
                 "id",
                 "_prev",
                 (
-                    F.lit(reset_prob / n)
-                    + F.lit(1 - reset_prob)
+                    F.lit(_PR_RESET / n)
+                    + F.lit(1 - _PR_RESET)
                     * F.coalesce(F.col("in_contrib"), F.lit(0.0))
                 ).alias("rank"),
             )
@@ -395,17 +408,12 @@ def pagerank(
         ranks = partial.select(
             "id", (F.col("rank") + F.lit((1.0 - mass) / n)).alias("rank")
         )
-    _warn_if_moving("pagerank", max_iter, last_delta, tol)
+    _warn_if_moving("pagerank", max_iter, "max_iter", last_delta)
     return ranks
 
 
 def personalized_pagerank(
-    edges: DataFrame,
-    sources: DataFrame,
-    reset_prob: float = 0.15,
-    max_iter: int = 10,
-    n_partitions: int | None = None,
-    tol: float = 0.01,
+    edges: DataFrame, sources: DataFrame, n_partitions: int | None
 ) -> DataFrame:
     """Personalized PageRank: random walk with restart to a SOURCE set —
     teleport (and recovered dangling mass) goes to the sources uniformly
@@ -432,7 +440,8 @@ def personalized_pagerank(
     movement bound (raw partial delta + the restart-deposit shift
     |missing_t − missing_{t−1}|) comes from the existing one-row mass
     scan, and a ``RuntimeWarning`` fires if the final round still moved
-    more than ``tol``. Output bit-identical; never an early exit."""
+    more than ``_PR_TOL`` after ``_PR_ITERS`` rounds. Output
+    bit-identical; never an early exit."""
     e = _str_edges(edges)
     s = sources.select(F.col("id").cast("string").alias("id")).distinct().localCheckpoint(eager=True)
     ns = s.count()
@@ -470,7 +479,7 @@ def personalized_pagerank(
     )
     missing = 1.0
     last_delta = float("inf")
-    for _ in range(max_iter):
+    for _ in range(_PR_ITERS):
         # effective rank = partial + restart deposit, as TWO contribution
         # row sets the aggregation sums: the partitioned rank table joins
         # co-located, and the seed deposit is a literal-scaled scan of
@@ -500,7 +509,7 @@ def personalized_pagerank(
                 "id",
                 "_prev",
                 (
-                    F.lit(1 - reset_prob)
+                    F.lit(1 - _PR_RESET)
                     * F.coalesce(F.col("in_contrib"), F.lit(0.0))
                 ).alias("rank"),
             )
@@ -517,7 +526,7 @@ def personalized_pagerank(
         # Σ|emit_t − emit_{t−1}| ≤ raw partial delta + |missing shift|
         last_delta = raw_delta + abs(missing - prev_missing)
         partial = partial.select("id", "rank")
-    _warn_if_moving("personalized_pagerank", max_iter, last_delta, tol)
+    _warn_if_moving("personalized_pagerank", _PR_ITERS, "_PR_ITERS", last_delta)
     # deposit the final round's restart mass once, after the loop
     is_src = F.col("_src").isNotNull()
     src_flag = s.withColumn("_src", F.lit(1))
@@ -584,7 +593,7 @@ def shortest_paths(
     return _until_quiet(step, (dist, dist), max_iter, "shortest_paths", at_limit="return")[0]
 
 
-def k_core(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
+def k_core(edges: DataFrame, k: int) -> DataFrame:
     """The k-core of an undirected graph: iteratively peel vertices with
     degree < ``k`` until a fixpoint; returns the surviving vertices as
     ``(id, degree)`` (degree WITHIN the core). The k-core is unique, so
@@ -594,7 +603,7 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
     drop edges touching peeled vertices — shuffle on vertex id, the same
     per-round shape as connected components; ``localCheckpoint`` bounds
     lineage. Rounds needed = longest peeling chain, typically ≪ rounds
-    available; raises if ``max_rounds`` is hit without converging (a
+    available; raises if ``_KCORE_MAX_ROUNDS`` is hit without converging (a
     silent partial peel would report a superset of the core).
 
     ``edges``: ``src``/``dst``. Duplicate and reverse pairs are folded by
@@ -640,7 +649,7 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
     # next round's first join then rides for free. Fixed ordering paid the
     # edge-sized exchange twice per round.
     part_key = "a"
-    for _ in range(max_rounds):
+    for _ in range(_KCORE_MAX_ROUNDS):
         # one materialization (the keep set) + one count on the
         # materialized rows per round; convergence = vertex count stable
         keep = degrees(canon).filter(F.col("deg") >= k).select("id").localCheckpoint()
@@ -661,15 +670,12 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 50) -> DataFrame:
             .select("a", "b")
         )
         part_key = second
-    raise RuntimeError(f"k_core did not converge within {max_rounds} rounds")
+    raise RuntimeError(
+        f"k_core did not converge within {_KCORE_MAX_ROUNDS} rounds; raise _KCORE_MAX_ROUNDS"
+    )
 
 
-def shortest_path_tree(
-    edges: DataFrame,
-    source: str,
-    max_iter: int = 20,
-    n_partitions: int | None = None,
-) -> DataFrame:
+def shortest_path_tree(edges: DataFrame, source: str, n_partitions: int | None) -> DataFrame:
     """Single-source BFS tree WITH parent pointers: ``(id, dist,
     parent)`` for every vertex reachable from ``source`` (the source row
     carries a null parent). Deterministic: when a vertex is first
@@ -681,7 +687,7 @@ def shortest_path_tree(
     table pre-partitioned on src + checkpointed once; per-round shuffle
     is the frontier only; anti-join settles each vertex exactly once at
     its minimal depth). BFS terminates when the frontier empties; raises
-    "did not converge" if ``max_iter`` rounds elapse first — a truncated
+    "did not converge" if ``_SPT_MAX_ROUNDS`` rounds elapse first — a truncated
     tree would silently miss reachable vertices. Path RECONSTRUCTION is a
     level-by-level join over the tree (depth-bounded, see
     ``shortest_path_routes``), never a driver-side walk.
@@ -709,16 +715,12 @@ def shortest_path_tree(
         )
         return (tree.unionByName(new), new.select("id")), new
 
-    return _until_quiet(step, (tree, tree.select("id")), max_iter, "shortest_path_tree")[0]
+    return _until_quiet(
+        step, (tree, tree.select("id")), _SPT_MAX_ROUNDS, "shortest_path_tree"
+    )[0]
 
 
-def k_truss(
-    edges: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 30,
-) -> DataFrame:
+def k_truss(edges: DataFrame, k: int) -> DataFrame:
     """The k-truss of an undirected graph: the maximal subgraph in which
     every edge participates in ≥ k−2 triangles (support) WITHIN the
     subgraph. Returns canonical surviving edges ``(a, b, support)`` with
@@ -730,7 +732,7 @@ def k_truss(
     once — fold the three edge participations into a support table, and
     keep edges with support ≥ k−2; converged when the edge count is
     stable (supports are monotone non-increasing under edge removal, so
-    count-stable ⇒ set-stable). Raises if ``max_rounds`` elapse without
+    count-stable ⇒ set-stable). Raises if ``_TRUSS_MAX_ROUNDS`` elapse without
     convergence — a partial peel would report a superset of the truss.
 
     Scale shape: each round is two self-equi-joins + one vertex-ish
@@ -743,14 +745,14 @@ def k_truss(
     if k < 3:
         raise ValueError("k_truss needs k >= 3 (k-2 >= 1 triangle per edge)")
     canon = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
         .localCheckpoint()
     )
     n_prev = -1
-    for _ in range(max_rounds):
+    for _ in range(_TRUSS_MAX_ROUNDS):
         e = canon
         xy = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
         yz = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
@@ -772,19 +774,16 @@ def k_truss(
             return supp.limit(0)
         n_prev = n_keep
         canon = supp.select("a", "b").localCheckpoint()
-    raise RuntimeError(f"k_truss did not converge within {max_rounds} rounds")
+    raise RuntimeError(f"k_truss did not converge within {_TRUSS_MAX_ROUNDS} rounds")
 
 
 def weighted_shortest_paths(
-    edges: DataFrame,
-    landmarks: DataFrame,
-    weight_col: str = "weight",
-    max_iter: int = 20,
-    n_partitions: int | None = None,
+    edges: DataFrame, landmarks: DataFrame, n_partitions: int | None
 ) -> DataFrame:
     """Weighted single/multi-source shortest paths (Bellman-Ford rounds):
-    ``(id, landmark, dist)`` for reachable pairs, integer weights so the
-    result is exact in any engine.
+    ``(id, landmark, dist)`` for reachable pairs over ``edges``'
+    ``weight`` column, integer weights so the result is exact in any
+    engine.
 
     Per round: relax every edge out of the CURRENT tentative frontier
     (the rows that improved last round — not the whole dist table), fold
@@ -798,7 +797,7 @@ def weighted_shortest_paths(
     pre-partitioned on ``src`` once; negative weights are rejected
     (negative-cycle detection is a different contract).
     """
-    e = _round_edges(edges, n_partitions, F.col(weight_col).cast("bigint").alias("w"))
+    e = _round_edges(edges, n_partitions, F.col("weight").cast("bigint").alias("w"))
     neg = e.filter(F.col("w") < 0).limit(1).count()
     if neg:
         raise ValueError("weighted_shortest_paths requires non-negative weights")
@@ -844,12 +843,12 @@ def weighted_shortest_paths(
         return (merged.select("id", "landmark", "dist"), frontier), frontier
 
     # a truncated relax loop would return silently inflated distances (any
-    # vertex whose lightest path spans > max_iter edges still carries a
-    # heavier tentative dist), so _until_quiet raises at the bound
-    return _until_quiet(step, (dist, dist), max_iter, "weighted_shortest_paths")[0]
+    # vertex whose lightest path spans > _WSP_MAX_ROUNDS edges still
+    # carries a heavier tentative dist), so _until_quiet raises at the bound
+    return _until_quiet(step, (dist, dist), _WSP_MAX_ROUNDS, "weighted_shortest_paths")[0]
 
 
-def strongly_connected_components(edges: DataFrame, max_rounds: int = 40) -> DataFrame:
+def strongly_connected_components(edges: DataFrame) -> DataFrame:
     """Strongly connected components of a directed graph by TRIM +
     forward-backward decomposition (Fleischer/Hendrickson/Pinar 2000 —
     the standard distributed SCC scheme; Tarjan's stack walk is
@@ -873,7 +872,7 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 40) -> Dat
     #multi-vertex SCCs + trim depth — the right tool when big graphs
     have few large SCCs (the common case: one giant SCC plus a DAG
     shell, which trim absorbs). A graph that is a long
-    chain of small cycles degrades to the ``max_rounds`` guard and
+    chain of small cycles degrades to the ``_SCC_MAX_ROUNDS`` guard and
     raises — the production fix at that shape is recursing on the three
     partitions (F∖B, B∖F, remainder) in parallel, noted here rather than
     silently looping."""
@@ -891,7 +890,7 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 40) -> Dat
         .localCheckpoint(eager=True)
     )
     assigned = spark.createDataFrame([], "id string, scc string")
-    for _ in range(max_rounds):
+    for _ in range(_SCC_MAX_ROUNDS):
         if verts.limit(1).count() == 0:
             return assigned
         # TRIM: no out-edge or no in-edge within the unassigned set
@@ -931,8 +930,8 @@ def strongly_connected_components(edges: DataFrame, max_rounds: int = 40) -> Dat
             .localCheckpoint(eager=True)
         )
     raise RuntimeError(
-        f"strongly_connected_components did not converge within {max_rounds} "
-        "rounds — many small SCCs; raise max_rounds or use the recursive "
+        f"strongly_connected_components did not converge within {_SCC_MAX_ROUNDS} "
+        "rounds — many small SCCs; raise _SCC_MAX_ROUNDS or use the recursive "
         "FW-BW partition scheme"
     )
 
@@ -989,12 +988,7 @@ def deterministic_walks(edges: DataFrame, starts: DataFrame, length: int) -> Dat
     return cur.select("start", "path", F.col("cur").alias("end_node"))
 
 
-def brandes_betweenness(
-    edges: DataFrame,
-    sources: DataFrame,
-    depth: int = 4,
-    n_partitions: int | None = None,
-) -> DataFrame:
+def brandes_betweenness(edges: DataFrame, sources: DataFrame) -> DataFrame:
     """Landmark-sampled betweenness centrality (Brandes 2001): exact
     single-source dependency accumulation from each node in ``sources``,
     summed — the standard unbiased sample estimator (scaled by |V|/|S|
@@ -1007,14 +1001,15 @@ def brandes_betweenness(
     an anti-join against the settled set; backward — level t's
     delta(v) = sum over DAG successors w of sigma(v)/sigma(w) *
     (1 + delta(w)), so each level is ONE join + groupBy. Depth is fixed
-    (``depth`` rounds) so the replayed oracle is a static CTE chain;
+    (``_BRANDES_DEPTH`` rounds) so the replayed oracle is a static CTE chain;
     levels past the true eccentricity are empty and cost nothing.
 
     Scale: per-source-per-level frontier rows, O(E) join work per round;
     sigma/delta ride as narrow doubles (path counts are exact in a
     double's 53-bit mantissa well past trillions). Returns (id, bc) for
     every non-source vertex reached from at least one source."""
-    e = _round_edges(edges, n_partitions)
+    depth = _BRANDES_DEPTH
+    e = _round_edges(edges, None)
     lev0 = (
         sources.select(F.col("id").cast("string").alias("id"))
         .distinct()
@@ -1074,7 +1069,7 @@ def brandes_betweenness(
     return alld.groupBy("id").agg(F.sum("delta").alias("bc"))
 
 
-def luby_mis(edges: DataFrame, rounds: int = 6, n_partitions: int | None = None) -> DataFrame:
+def luby_mis(edges: DataFrame) -> DataFrame:
     """Maximal independent set via Luby's algorithm with DETERMINISTIC
     symmetry breaking: round r gives every active vertex the priority
     key lpad(portable_hash(id || '#r')) || '|' || id (a total order —
@@ -1084,9 +1079,9 @@ def luby_mis(edges: DataFrame, rounds: int = 6, n_partitions: int | None = None)
     maximality are the classic invariants; hash priorities make runs
     replayable (no RNG state) while keeping the O(log n) expected round
     count of the randomized original. Returns (id, round) for MIS
-    members plus (id, -1) for vertices still active after ``rounds``
-    (deterministic partial result — callers bound the oracle replay by
-    fixing ``rounds``; pass more for full convergence).
+    members plus (id, -1) for vertices still active after
+    ``_LUBY_ROUNDS`` (deterministic partial result — the oracle replays
+    the same fixed round count).
 
     Scale: per round one equi-join of the (shrinking) active-priority
     table against the once-partitioned edge list + one min-groupBy +
@@ -1095,12 +1090,12 @@ def luby_mis(edges: DataFrame, rounds: int = 6, n_partitions: int | None = None)
     directions of each undirected edge."""
     from graph_db_spark.operators.dedup import portable_hash
 
-    e = _round_edges(edges, n_partitions)
+    e = _round_edges(edges, None)
     active = (
         e.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
     )
     out = []
-    for r in range(1, rounds + 1):
+    for r in range(1, _LUBY_ROUNDS + 1):
         key = F.concat(
             F.lpad(portable_hash(F.concat(F.col("id"), F.lit(f"#{r}"))).cast("string"), 10, "0"),
             F.lit("|"),
@@ -1135,7 +1130,7 @@ def luby_mis(edges: DataFrame, rounds: int = 6, n_partitions: int | None = None)
     return res.unionByName(active.withColumn("round", F.lit(-1).cast("bigint")))
 
 
-def core_decomposition(edges: DataFrame, rounds: int = 8, n_partitions: int | None = None) -> DataFrame:
+def core_decomposition(edges: DataFrame) -> DataFrame:
     """Full core decomposition (every vertex's coreness) by h-index
     propagation (Montresor-De Pellegrini-Miorandi, 2013): start from
     degrees; each round every vertex replaces its estimate with the
@@ -1143,8 +1138,8 @@ def core_decomposition(edges: DataFrame, rounds: int = 8, n_partitions: int | No
     converges to the exact coreness — k_core(k) above answers one fixed
     k, this answers all of them in one run). Returns (id, coreness,
     changed) where ``changed`` marks vertices whose estimate still moved
-    in the FINAL round — a nonzero count means ``rounds`` truncated the
-    fixpoint and the caller must raise it (the emitted estimates are
+    in the FINAL round — a nonzero count means ``_CORENESS_ROUNDS``
+    truncated the fixpoint and must be raised (the emitted estimates are
     still valid upper bounds).
 
     Scale: per round ONE edge join against the once-partitioned edge
@@ -1154,7 +1149,7 @@ def core_decomposition(edges: DataFrame, rounds: int = 8, n_partitions: int | No
     convergence is a few rounds (measured: 4 on the fixture's bipartite
     trade graph; the bound is the graph's degeneracy ordering depth).
     ``edges`` must contain both directions."""
-    e = _round_edges(edges, n_partitions)
+    e = _round_edges(edges, None)
     cur = (
         e.groupBy(F.col("dst").alias("id"))
         .agg(F.count(F.lit(1)).cast("long").alias("cor"))
@@ -1162,7 +1157,7 @@ def core_decomposition(edges: DataFrame, rounds: int = 8, n_partitions: int | No
     )
     w = Window.partitionBy("id").orderBy(F.desc("ncor"))
     changed = None
-    for _ in range(rounds):
+    for _ in range(_CORENESS_ROUNDS):
         nbr = (
             cur.join(e, cur["id"] == e["src"])
             .select(F.col("dst").alias("id"), F.col("cor").alias("ncor"))
@@ -1188,16 +1183,14 @@ def core_decomposition(edges: DataFrame, rounds: int = 8, n_partitions: int | No
     )
 
 
-def boruvka_forest(
-    edges: DataFrame, rounds: int = 5, n_partitions: int | None = None
-):
+def boruvka_forest(edges: DataFrame):
     """Minimum spanning forest by Borůvka rounds — THE distributed MST
     (each round every component picks its minimum outgoing edge, then
     touching components contract): deterministic via the total edge
     order (w, src, dst). ``edges``: (src, dst, w) with BOTH directions
     present. Returns (forest, labels): forest = (a, b, w, round) with
     canonical a < b (an edge chosen by both endpoints' components
-    appears once), labels = (id, comp) after ``rounds``; components
+    appears once), labels = (id, comp) after ``_BORUVKA_ROUNDS``; components
     count > connected-component count means the fixed rounds truncated
     contraction (each round at least halves components, so log2|V|
     always suffices; dense graphs contract in 3-4).
@@ -1207,7 +1200,7 @@ def boruvka_forest(
     window + a COMPONENT-sized min-label closure (the chosen edges form
     a pseudo-forest over components — vanishingly small next to E), so
     round cost is O(E) with log-bounded round count."""
-    e = _round_edges(edges, n_partitions, F.col("w").cast("long").alias("w"))
+    e = _round_edges(edges, None, F.col("w").cast("long").alias("w"))
     lab = (
         e.select(F.col("src").alias("id")).distinct()
         .select("id", F.col("id").alias("comp"))
@@ -1225,7 +1218,7 @@ def boruvka_forest(
     # within hash partitions with codegen'd comparators.
     wnd = Window.partitionBy("ca").orderBy("w", "src", "dst")
     forest = None
-    for r in range(1, rounds + 1):
+    for r in range(1, _BORUVKA_ROUNDS + 1):
         la = lab.select(F.col("id").alias("src"), F.col("comp").alias("ca"))
         lb = lab.select(F.col("id").alias("dst"), F.col("comp").alias("cb"))
         ce = (

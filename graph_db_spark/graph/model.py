@@ -205,9 +205,7 @@ class PropertyGraph:
         return out
 
     @staticmethod
-    def _kleene_pairs(
-        e: DataFrame, mn: int, mx: int, seed: DataFrame | None = None
-    ) -> DataFrame:
+    def _kleene_pairs(e: DataFrame, mn: int, mx: int, seed: DataFrame | None) -> DataFrame:
         """Distinct ``(s, d)`` pairs connected by a directed path of
         length in ``[mn, mx]`` over the (pre-filtered) edge set ``e``.
 
@@ -215,8 +213,8 @@ class PropertyGraph:
         from level mn. Each level is one equi-join on the frontier's far
         endpoint + one distinct — shuffle is O(reachable pairs), and the
         per-level dedup is what keeps a diamond-shaped DAG from
-        enumerating exponentially many paths. ``seed`` (optional start
-        ids, e.g. a label-constrained anchor) restricts level 1 via a
+        enumerating exponentially many paths. ``seed`` (start ids, e.g. a
+        label-constrained anchor, or None) restricts level 1 via a
         semi-join so the whole expansion is proportional to the anchored
         reachable set, not the graph. Levels are localCheckpointed —
         bounded-depth lineage, same discipline as the iterative graph

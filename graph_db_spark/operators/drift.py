@@ -55,24 +55,21 @@ def cusum_fold(values: list[float], mean: float, std: float, k_sigmas: float, h_
     return nd, mx
 
 
-def cusum_drift(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_tiebreak: str = "event_id",
-    k_sigmas: float = 0.5,
-    h_sigmas: float = 4.0,
-) -> DataFrame:
-    """Per-key two-sided CUSUM over time-ordered values: returns
-    ``(key, n_events, n_drifts, max_cusum)`` with μ/σ taken per key (the
-    self-calibrating form). Deterministic: ordering is (ts, tiebreak),
-    and the fold is a pure function of that sequence."""
+# CUSUM slack k and decision threshold h, in per-key sigmas; the
+# cusum_drift_detection oracle replays the same fold
+_CUSUM_K_SIGMAS, _CUSUM_H_SIGMAS = 0.5, 4.0
+
+
+def cusum_drift(events: DataFrame) -> DataFrame:
+    """Per-``user_id`` two-sided CUSUM over time-ordered ``value``s:
+    returns ``(key, n_events, n_drifts, max_cusum)`` with μ/σ taken per
+    key (the self-calibrating form). Deterministic: ordering is (ts,
+    event_id), and the fold is a pure function of that sequence."""
     rows = events.select(
-        F.col(key_col).alias("key"),
-        F.col(ts_col).alias("ts"),
-        F.col(order_tiebreak).alias("tb"),
-        F.col(value_col).cast("double").alias("x"),
+        F.col("user_id").alias("key"),
+        F.col("ts").alias("ts"),
+        F.col("event_id").alias("tb"),
+        F.col("value").cast("double").alias("x"),
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -83,7 +80,7 @@ def cusum_drift(
         n = len(xs)
         mean = sum(xs) / n
         var = sum((x - mean) ** 2 for x in xs) / (n - 1) if n > 1 else 0.0
-        nd, mx = cusum_fold(xs, mean, var ** 0.5, k_sigmas, h_sigmas)
+        nd, mx = cusum_fold(xs, mean, var ** 0.5, _CUSUM_K_SIGMAS, _CUSUM_H_SIGMAS)
         return pd.DataFrame(
             {"key": [pdf["key"].iloc[0]], "n_events": [n], "n_drifts": [nd], "max_cusum": [mx]}
         )
@@ -118,17 +115,15 @@ def holt_fold(xs: list[float], alpha: float, beta: float):
     return l, b
 
 
-def holt_linear(
-    series: DataFrame,
-    key_col: str,
-    order_col: str,
-    value_col: str,
-    alpha: float = 0.5,
-    beta: float = 0.3,
-    horizon: int = 3,
-) -> DataFrame:
-    """Per-key Holt double-exponential smoothing (level + trend) with an
-    ``horizon``-step-ahead forecast l + h·b. Unlike EWMA (whose one-state
+# Holt smoothing weights and forecast horizon, replayed by the
+# holt_linear_forecast oracle
+_HOLT_ALPHA, _HOLT_BETA, _HOLT_HORIZON = 0.5, 0.3, 3
+
+
+def holt_linear(series: DataFrame, key_col: str, order_col: str, value_col: str) -> DataFrame:
+    """Per-key Holt double-exponential smoothing (level + trend, weights
+    ``_HOLT_ALPHA``/``_HOLT_BETA``) with an h-step-ahead forecast l + h·b,
+    h = ``_HOLT_HORIZON``. Unlike EWMA (whose one-state
     recurrence has the rescaled-cumsum closed form — see
     ewma_smoothing), the two-state Holt recurrence is a 2x2 matrix
     product chain no window function expresses, so this is the honest
@@ -145,14 +140,14 @@ def holt_linear(
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("o", kind="mergesort")
         xs = pdf["x"].tolist()
-        lvl, tr = holt_fold(xs, alpha, beta)
+        lvl, tr = holt_fold(xs, _HOLT_ALPHA, _HOLT_BETA)
         return pd.DataFrame(
             {
                 "key": [pdf["key"].iloc[0]],
                 "n_obs": [len(xs)],
                 "level": [lvl],
                 "trend": [tr],
-                "forecast": [lvl + horizon * tr],
+                "forecast": [lvl + _HOLT_HORIZON * tr],
             }
         )
 

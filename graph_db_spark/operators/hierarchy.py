@@ -22,14 +22,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def ancestor_closure(edges: DataFrame, max_depth: int = 32) -> DataFrame:
+# ancestor_closure's doubling-round bound: deeper chains (or a cycle) raise
+_MAX_DEPTH = 32
+
+
+def ancestor_closure(edges: DataFrame) -> DataFrame:
     """All (node, ancestor, steps) pairs of a parent-pointer forest.
 
     ``edges``: (node, parent) — one row per non-root node. Pointer
     doubling: round i holds every ancestor pair with steps < 2^i plus a
     frontier of exact-2^i jumps; composing frontier x frontier doubles
     the horizon. Terminates when the frontier empties (raises if
-    ``max_depth`` rounds pass first — a cycle or a deeper tree than the
+    ``_MAX_DEPTH`` rounds pass first — a cycle or a deeper tree than the
     caller promised)."""
     acc = edges.select(
         F.col("node"), F.col("parent").alias("anc"), F.lit(1).alias("steps")
@@ -37,8 +41,8 @@ def ancestor_closure(edges: DataFrame, max_depth: int = 32) -> DataFrame:
     frontier = acc
     jump = 1
     while True:
-        if jump > max_depth:
-            raise RuntimeError(f"hierarchy deeper than max_depth={max_depth} (cycle?)")
+        if jump > _MAX_DEPTH:
+            raise RuntimeError(f"hierarchy deeper than _MAX_DEPTH={_MAX_DEPTH} (cycle?)")
         # compose: frontier (exact 2^i) x acc (1..2^i) -> steps in (2^i, 2^(i+1)]
         nxt = (
             frontier.select(F.col("node"), F.col("anc").alias("mid"), "steps")

@@ -61,11 +61,11 @@ def edge_join(
     )
 
 
-def broadcast_lookup(fact: DataFrame, dim: DataFrame, on: list[str], how: str = "inner") -> DataFrame:
+def broadcast_lookup(fact: DataFrame, dim: DataFrame, on: list[str]) -> DataFrame:
     """J2 — dimension lookup (parity: ``stations_by_field`` /
     ``timezone_by_field`` dicts, /root/reference/main_graph_topraq.py:108-111).
     Explicit ``broadcast()`` so the fact side never shuffles."""
-    return fact.join(F.broadcast(dim), on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how="inner")
 
 
 def asof_join(
@@ -202,7 +202,7 @@ def asof_join_bucketed(
     left_ts: str,
     right_ts: str,
     tolerance_seconds: float,
-    tiebreak_cols: list[str] | None = None,
+    tiebreak_cols: list[str],
 ) -> DataFrame:
     """J3 at scale — tolerance-bounded nearest as-of via coarse time
     bucketing (SURVEY §7.4.2: "naive join-then-rank explodes on skewed
@@ -249,7 +249,7 @@ def asof_join_bucketed(
     # cross-branch row-id consistency concerns.
     candidates = left2.join(right2, on=cond, how="left")
     order = [diff.asc_nulls_last()]
-    for c in tiebreak_cols or []:
+    for c in tiebreak_cols:
         order.append(right2[c].asc_nulls_last())
     w = Window.partitionBy(F.col("__lid")).orderBy(*order)
     right_payload = [c for c in right.columns if c not in set(on) | set(left.columns)]
@@ -260,32 +260,29 @@ def asof_join_bucketed(
     )
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-buster equi-join: identical results to ``left.join(right, on,
-    how)``, but a hot key's rows spread over ``n_salts`` reduce tasks.
+# salted_join spreads each key over this many reduce tasks
+_N_SALTS = 8
+
+
+def salted_join(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
+    """Skew-buster inner equi-join: identical results to
+    ``left.join(right, on)``, but a hot key's rows spread over
+    ``_N_SALTS`` reduce tasks.
 
     Left rows get a deterministic salt from a hash of their whole row
     (uniform, reproducible — no rand()); the right side is replicated
-    ``n_salts``× so every (key, salt) bucket finds its match. Use when ONE
+    ``_N_SALTS``× so every (key, salt) bucket finds its match. Use when ONE
     side is skewed and the other is too big to broadcast yet small enough
     to replicate; AQE's skew-split handles the milder cases without any of
-    this. Supports inner and left joins (right/full would need the salt on
-    the other side).
+    this.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
+    n_salts = _N_SALTS
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(n_salts))
     lsalted = left.withColumn("_salt", salt)
     rsalted = right.crossJoin(
         right.sparkSession.range(n_salts).select(F.col("id").cast("int").alias("_salt"))
     )
-    out = lsalted.join(rsalted, on=[*on, "_salt"], how=how)
+    out = lsalted.join(rsalted, on=[*on, "_salt"], how="inner")
     return out.drop("_salt")
 
 

@@ -183,7 +183,7 @@ _IMAGE_FORMATS = (
 )
 
 
-def decode_image_batch(content: "pd.Series", fake: bool = False) -> "pd.DataFrame":
+def decode_image_batch(content: "pd.Series", fake: bool) -> "pd.DataFrame":
     """Decode a batch of image bytes → (n_bytes, content_hash, width,
     height, mean_px, feature_ok).
 
@@ -349,8 +349,17 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, schema=AUDIO_FEATURE_SCHEMA)
 
 
-def synthesize_wav_media(docs: DataFrame, n_samples: int = 64, rate: int = 8000) -> DataFrame:
-    """Synthesize a real PCM16 WAV per document — sample i of doc d is
+# Synthetic media sizes the media queries' oracles recompute: 4×4-pixel
+# PNG images and video frames, 6 frames per video sampled every 2nd, and
+# 64 audio samples at 8 kHz
+_SYNTH_WIDTH, _SYNTH_HEIGHT = 4, 4
+_RAWV_FRAMES, _FRAME_EVERY = 6, 2
+_WAV_SAMPLES, _WAV_RATE = 64, 8000
+
+
+def synthesize_wav_media(docs: DataFrame) -> DataFrame:
+    """Synthesize a real PCM16 WAV per document (``_WAV_SAMPLES`` samples
+    at ``_WAV_RATE`` Hz) — sample i of doc d is
     ``((d*31 + i*17) % 201) - 100`` (sign-alternating, closed form), so
     RMS and zero-crossings are independently computable in plain SQL and
     the oracle closes the loop on the REAL decoder."""
@@ -359,8 +368,8 @@ def synthesize_wav_media(docs: DataFrame, n_samples: int = 64, rate: int = 8000)
         for pdf in batches:
             blobs = [
                 encode_wav(
-                    rate,
-                    [((int(d) * 31 + i * 17) % 201) - 100 for i in range(n_samples)],
+                    _WAV_RATE,
+                    [((int(d) * 31 + i * 17) % 201) - 100 for i in range(_WAV_SAMPLES)],
                 )
                 for d in pdf["doc_id"]
             ]
@@ -406,9 +415,9 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def sample_video_frames(media: DataFrame, every: int = 2) -> DataFrame:
-    """Frame sampling: one output row per kept frame (every ``every``-th,
-    starting at 0) with per-frame mean pixel value — ``mapInPandas`` with
+def sample_video_frames(media: DataFrame) -> DataFrame:
+    """Frame sampling: one output row per kept frame (every
+    ``_FRAME_EVERY``-th, starting at 0) with per-frame mean pixel value — ``mapInPandas`` with
     row-EXPANDING batches (n_out ≠ n_in is the point: frame extraction is
     a generator, not a map). Undecodable payloads yield a single
     ``feature_ok=0`` row so no media id silently disappears."""
@@ -435,7 +444,7 @@ def sample_video_frames(media: DataFrame, every: int = 2) -> DataFrame:
                 if len(b) < 16 + nf * fsz:
                     emit(int(mid), -1, -1, -1, 0.0, 0)
                     continue
-                for f in range(0, nf, every):
+                for f in range(0, nf, _FRAME_EVERY):
                     frame = b[16 + f * fsz : 16 + (f + 1) * fsz]
                     emit(int(mid), f, w, h, sum(frame) / fsz if fsz else 0.0, 1)
             yield pd.DataFrame(rows)
@@ -443,12 +452,12 @@ def sample_video_frames(media: DataFrame, every: int = 2) -> DataFrame:
     return media.mapInPandas(run, schema=FRAME_SCHEMA)
 
 
-def synthesize_rawv_media(
-    docs: DataFrame, width: int = 4, height: int = 4, n_frames: int = 6
-) -> DataFrame:
-    """Synthesize a raw-frame video per document — pixel i of frame f of
-    doc d is ``(d*11 + f*5 + i*13) % 256`` (closed form ⇒ per-frame means
-    are SQL-recomputable)."""
+def synthesize_rawv_media(docs: DataFrame) -> DataFrame:
+    """Synthesize a raw-frame video per document (``_RAWV_FRAMES`` frames
+    of ``_SYNTH_WIDTH``×``_SYNTH_HEIGHT``) — pixel i of frame f of doc d
+    is ``(d*11 + f*5 + i*13) % 256`` (closed form ⇒ per-frame means are
+    SQL-recomputable)."""
+    width, height = _SYNTH_WIDTH, _SYNTH_HEIGHT
     n_px = width * height
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -459,7 +468,7 @@ def synthesize_rawv_media(
                     height,
                     [
                         bytes((int(d) * 11 + f * 5 + i * 13) % 256 for i in range(n_px))
-                        for f in range(n_frames)
+                        for f in range(_RAWV_FRAMES)
                     ],
                 )
                 for d in pdf["doc_id"]
@@ -562,13 +571,15 @@ def synthesize_media_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def synthesize_png_media(docs: DataFrame, width: int = 4, height: int = 4) -> DataFrame:
-    """Synthesize a real 8-bit grayscale PNG per document — pixel i of
+def synthesize_png_media(docs: DataFrame) -> DataFrame:
+    """Synthesize a real 8-bit grayscale ``_SYNTH_WIDTH``×``_SYNTH_HEIGHT``
+    PNG per document — pixel i of
     doc d is ``(d*7 + i*13) % 256``, so the decoded mean is independently
     computable in plain SQL (the DuckDB oracle closes the loop on the REAL
     decoder, not just the plumbing). PNG bytes are built in the same
     Arrow-batched ``mapInPandas`` pass that a production encode/resize
     stage would use."""
+    width, height = _SYNTH_WIDTH, _SYNTH_HEIGHT
     n_px = width * height
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -30,29 +30,24 @@ DEFAULT_RSD = 0.05
 DEFAULT_PERCENTILE_ACCURACY = 10_000
 
 
-def distinct_count(col: Column | str, exact: bool = True, rsd: float = DEFAULT_RSD) -> Column:
+def distinct_count(col: Column | str, exact: bool = True) -> Column:
     """``count(DISTINCT col)`` or its mergeable HLL++ estimate.
 
     Measured on the fixture tables (sf0.001-0.1, cardinalities 3-6e5):
-    max relative error 6.4% at rsd=0.05 — the contract bound in
+    max relative error 6.4% at DEFAULT_RSD=0.05 — the contract bound in
     ``profile_distinct_approx_bound`` is 15% (3·rsd)."""
     if exact:
         return F.countDistinct(col)
-    return F.approx_count_distinct(col, rsd)
+    return F.approx_count_distinct(col, DEFAULT_RSD)
 
 
-def percentile(
-    col: Column | str,
-    p: float,
-    exact: bool = True,
-    accuracy: int = DEFAULT_PERCENTILE_ACCURACY,
-) -> Column:
+def percentile(col: Column | str, p: float, exact: bool = True) -> Column:
     """Exact interpolated percentile or the single-pass mergeable
-    approximation (rank error ≤ 1/accuracy).
+    approximation (rank error ≤ 1/DEFAULT_PERCENTILE_ACCURACY).
 
     Measured on the fixture value distributions: max relative value error
-    0.62% at accuracy=10000 — the contract bound in
+    0.62% at accuracy 10000 — the contract bound in
     ``quantile_approx_bound`` is 2%."""
     if exact:
         return F.percentile(col, F.lit(p))
-    return F.percentile_approx(col, F.lit(p), F.lit(accuracy))
+    return F.percentile_approx(col, F.lit(p), F.lit(DEFAULT_PERCENTILE_ACCURACY))

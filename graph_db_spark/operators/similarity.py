@@ -21,6 +21,21 @@ from pyspark.sql import functions as F
 
 from graph_db_spark.util import spread
 
+# The ANN settings the retrieval queries share with their DuckDB oracles
+# (q01's `_ivf_training_sql`, LSH plane table and PQ replays): 64-dim
+# ``embedding`` vectors keyed by ``vec_id``, top-5 neighbours; LSH with 16
+# tables of 4 planes; IVF with 16 centroids, 3 Lloyd rounds and 8 probes;
+# PQ with 4 subspaces of 8 codewords, 2 Lloyd rounds.
+_EMB_DIM, _ANN_K = 64, 5
+_LSH_PLANES, _LSH_TABLES, _LSH_SEED = 4, 16, 42
+_IVF_CENTROIDS, _IVF_ITERS, _IVF_NPROBE = 16, 3, 8
+_PQ_M, _PQ_K_SUB, _PQ_ITERS = 4, 8, 2
+# semantic_dedup drops a vector at cosine >= this to a lower-id member of
+# its cluster, and refuses a cluster with more candidate pairs than the bound
+_SEMDEDUP_THRESHOLD, _MAX_CLUSTER_PAIRS = 0.3, 25_000_000
+# kcenter_select picks this many centers after the seed
+_KCENTER_K = 8
+
 
 def _as_double(col: Column) -> Column:
     return col.cast("array<double>")
@@ -53,15 +68,9 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-) -> DataFrame:
-    """Brute-force cosine top-k: for each query vector, the k nearest
-    corpus vectors (excluding itself when ids collide). Returns
+def cosine_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Brute-force cosine top-k: for each query vector, the ``_ANN_K``
+    nearest corpus vectors (excluding itself when ids collide). Returns
     ``(query_id, neighbor_id, cosine_sim, rank)``.
 
     The corpus side stays partitioned; the query side is broadcast — the
@@ -69,10 +78,10 @@ def cosine_topk(
     then a single shuffle on query_id for the global top-k.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
+        F.col("vec_id").alias("query_id"), _as_double(F.col("embedding")).alias("q_vec")
     )
     c = spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), _as_double(F.col("embedding")).alias("c_vec")
     )
     scored = (
         c.join(F.broadcast(q), on=F.col("query_id") != F.col("neighbor_id"))
@@ -81,11 +90,11 @@ def cosine_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _ANN_K)
     )
 
 
-def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
+def hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     """Deterministic pseudo-random unit hyperplanes (pure-Python LCG so the
     planes are reproducible without numpy state)."""
     state = seed
@@ -149,40 +158,31 @@ def lsh_buckets_all(vec: Column, planes_col: Column, n_tables: int, n_planes: in
     )[0]
 
 
-def cosine_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """ANN top-k: multi-table random-hyperplane LSH.
+def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """ANN top-``_ANN_K``: multi-table random-hyperplane LSH.
 
-    Each of ``n_tables`` hash tables buckets vectors by ``n_planes`` sign
-    bits (independent plane sets); candidates = corpus vectors sharing a
-    bucket with the query in ANY table; exact cosine re-rank on the
-    candidate union. Recall rises with ``n_tables`` (union of probes),
-    selectivity with ``n_planes`` (smaller buckets).
+    Each of ``_LSH_TABLES`` hash tables buckets vectors by ``_LSH_PLANES``
+    sign bits (independent plane sets); candidates = corpus vectors sharing
+    a bucket with the query in ANY table; exact cosine re-rank on the
+    candidate union. Recall rises with the table count (union of probes),
+    selectivity with the plane count (smaller buckets).
 
     Scale shape: each table contributes one bucket-id column; the explode
-    to (table, bucket) rows keeps shuffle volume O(n·n_tables) and the
+    to (table, bucket) rows keeps shuffle volume O(n·tables) and the
     per-bucket joins never approach O(n²). Candidate dedup happens before
     the exact re-rank, so each candidate is scored once.
     """
+    n_planes, n_tables = _LSH_PLANES, _LSH_TABLES
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
+        F.col("vec_id").alias("query_id"), _as_double(F.col("embedding")).alias("q_vec")
     )
     c = spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), _as_double(F.col("embedding")).alias("c_vec")
     )
     stacked = [
         plane
         for t in range(n_tables)
-        for plane in hyperplanes(dim, n_planes, seed + 1000 * t)
+        for plane in hyperplanes(_EMB_DIM, n_planes, _LSH_SEED + 1000 * t)
     ]
     buckets = lambda v: lsh_buckets_all(v, F.col("_planes"), n_tables, n_planes)  # noqa: E731
     qb = with_matrix(q, stacked, "_planes").select(
@@ -201,7 +201,7 @@ def cosine_topk_lsh(
         "query_id", "neighbor_id", cosine(F.col("q_vec"), F.col("c_vec")).alias("cosine_sim")
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= _ANN_K)
 
 
 def _centroid_sims(vec: Column, centroids_col: Column) -> Column:
@@ -222,16 +222,11 @@ def _top_clusters(sims: Column, nprobe: int) -> Column:
     return F.transform(F.slice(ranked, 1, nprobe), lambda st: st["i"])
 
 
-def ivf_centroids(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_centroids: int = 16,
-    lloyd_iters: int = 3,
-) -> list[list[float]]:
-    """Deterministic spherical-k-means centroids (unit-normalized).
+def ivf_centroids(corpus: DataFrame) -> list[list[float]]:
+    """Deterministic spherical-k-means centroids (unit-normalized) of the
+    ``embedding`` column, ``_IVF_ITERS`` Lloyd rounds.
 
-    Seeds = the ``n_centroids`` corpus vectors with the smallest LCG mix
+    Seeds = the ``_IVF_CENTROIDS`` corpus vectors with the smallest LCG mix
     ``(id·1103515245 + 12345) mod 2³¹`` — a deterministic pseudo-random
     sample that needs no driver-side randomness and no full sort
     (TakeOrdered top-k). The mix is plain bounded integer arithmetic (no
@@ -240,25 +235,25 @@ def ivf_centroids(
     round is: broadcast-literal argmax assignment (narrow) + posexplode →
     ``groupBy(cluster, pos).avg`` (one shuffle whose map-side combine
     reduces O(n·dim) values to O(centroids·dim) per task). Only the
-    centroid matrix itself — n_centroids × dim doubles — ever reaches the
+    centroid matrix itself — centroids × dim doubles — ever reaches the
     driver, so the procedure holds at 100 TB corpus scale.
     """
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     # bind norm(v) once via the 1-element-array lambda trick — the naive
     # transform(v, x -> x/norm(v)) re-evaluates the norm fold per ELEMENT
     # (O(d²) interpreted ops per row)
     unitvec = F.transform(F.array(norm(v)), lambda nv: F.transform(v, lambda x: x / nv))[0]
-    lcg = (F.col(id_col).cast("bigint") * 1103515245 + 12345) % 2147483648
+    lcg = (F.col("vec_id").cast("bigint") * 1103515245 + 12345) % 2147483648
     unit = corpus.select(
-        unitvec.alias("v"), lcg.alias("h"), F.col(id_col).alias("_sid")
+        unitvec.alias("v"), lcg.alias("h"), F.col("vec_id").alias("_sid")
     # materialize the normalized vectors once — every Lloyd round reuses
     # them instead of re-scanning + re-normalizing the corpus (at cluster
-    # scale this is one persisted copy amortized over lloyd_iters passes)
+    # scale this is one persisted copy amortized over the Lloyd passes)
     ).localCheckpoint(eager=True)
     # deterministic tiebreak on id so an LCG collision can't reorder seeds
-    seeds = unit.orderBy("h", "_sid").limit(n_centroids).select("v").collect()
+    seeds = unit.orderBy("h", "_sid").limit(_IVF_CENTROIDS).select("v").collect()
     centroids = [list(r["v"]) for r in seeds]
-    for _ in range(lloyd_iters):
+    for _ in range(_IVF_ITERS):
         assigned = with_matrix(unit, centroids, "_cents").select(
             "v",
             _top_clusters(_centroid_sims(F.col("v"), F.col("_cents")), 1)[0].alias("cluster"),
@@ -285,36 +280,23 @@ def ivf_centroids(
     return centroids
 
 
-def cosine_topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    lloyd_iters: int = 3,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
+def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, k: int = _ANN_K) -> DataFrame:
     """ANN top-k via an IVF coarse quantizer: spherical k-means partitions
-    the corpus into ``n_centroids`` inverted lists; each query probes its
-    ``nprobe`` nearest centroids and exact-cosine re-ranks only those
-    lists' members. Returns ``(query_id, neighbor_id, cosine_sim, rank)``.
+    the corpus into ``_IVF_CENTROIDS`` inverted lists; each query probes
+    its ``_IVF_NPROBE`` nearest centroids and exact-cosine re-ranks only
+    those lists' members. Returns ``(query_id, neighbor_id, cosine_sim,
+    rank)``.
 
     Scale shape vs LSH: one equi-join on ``cluster`` (candidates ≈
-    n·nprobe/n_centroids per query, tunable directly), and the trained
-    centroid matrix is reusable across query batches — pass ``centroids``
-    to skip re-training. Cluster sizes follow the data distribution, so a
-    skewed corpus concentrates lists: raise ``n_centroids`` (finer lists)
-    rather than salting, which would defeat the pruning.
+    n·nprobe/centroids per query, tunable directly). Cluster sizes follow
+    the data distribution, so a skewed corpus concentrates lists: raise
+    ``_IVF_CENTROIDS`` (finer lists) rather than salting, which would
+    defeat the pruning.
     """
-    if centroids is None:
-        centroids = ivf_centroids(
-            corpus, vec_col, id_col, n_centroids=n_centroids, lloyd_iters=lloyd_iters
-        )
+    centroids = ivf_centroids(corpus)
     c = with_matrix(
         spread(corpus).select(
-            F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("c_vec")
+            F.col("vec_id").alias("neighbor_id"), _as_double(F.col("embedding")).alias("c_vec")
         ),
         centroids,
         "_cents",
@@ -325,7 +307,7 @@ def cosine_topk_ivf(
     )
     q = with_matrix(
         queries.select(
-            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
+            F.col("vec_id").alias("query_id"), _as_double(F.col("embedding")).alias("q_vec")
         ),
         centroids,
         "_cents",
@@ -333,7 +315,7 @@ def cosine_topk_ivf(
         "query_id",
         "q_vec",
         F.explode(
-            _top_clusters(_centroid_sims(F.col("q_vec"), F.col("_cents")), nprobe)
+            _top_clusters(_centroid_sims(F.col("q_vec"), F.col("_cents")), _IVF_NPROBE)
         ).alias("cluster"),
     )
     scored = (
@@ -347,19 +329,14 @@ def cosine_topk_ivf(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def ivf_assign(corpus: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Cluster assignment ``(id, v, cluster)`` — argmax cosine against the
     broadcast centroid matrix over raw vectors (scale-invariant; same
     larger-index tiebreak as ``cosine_topk_ivf``'s corpus side). One
     narrow pass; nothing but the centroid matrix is broadcast."""
     return with_matrix(
         spread(corpus).select(
-            F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
+            F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("v")
         ),
         centroids,
         "_cents",
@@ -370,43 +347,31 @@ def ivf_assign(
     )
 
 
-def semantic_dedup(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.3,
-    n_centroids: int = 16,
-    lloyd_iters: int = 3,
-    centroids: list[list[float]] | None = None,
-    max_cluster_pairs: int = 25_000_000,
-) -> DataFrame:
+def semantic_dedup(corpus: DataFrame) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): cluster
     embeddings with the IVF coarse quantizer, then inside each cluster
-    drop every vector whose cosine to a LOWER-id member is ≥ ``threshold``
-    (keep-first, deterministic). Returns ``(vec_id, cluster, is_kept)``.
+    drop every vector whose cosine to a LOWER-id member is ≥
+    ``_SEMDEDUP_THRESHOLD`` (keep-first, deterministic). Returns
+    ``(vec_id, cluster, is_kept)``.
 
     Scale shape: the pairwise comparison never crosses clusters — the
     pair space is Σ per-cluster n², bounded by the quantizer, and
     :func:`graph_db_spark.operators.dedup.guard_block_pairs` raises if a
-    degenerate corpus concentrates one cluster past ``max_cluster_pairs``
-    (remedy: raise ``n_centroids`` — finer lists shrink every cluster,
+    degenerate corpus concentrates one cluster past ``_MAX_CLUSTER_PAIRS``
+    (remedy: raise ``_IVF_CENTROIDS`` — finer lists shrink every cluster,
     which is the SemDeDup paper's own scaling knob). Centroid training
-    touches the driver only with the k×dim matrix; pass ``centroids`` to
-    reuse a trained quantizer across corpus shards."""
+    touches the driver only with the k×dim matrix."""
     from graph_db_spark.operators.dedup import guard_block_pairs
 
-    if centroids is None:
-        centroids = ivf_centroids(
-            corpus, vec_col, id_col, n_centroids=n_centroids, lloyd_iters=lloyd_iters
-        )
-    assigned = ivf_assign(corpus, centroids, vec_col, id_col).localCheckpoint()
-    guard_block_pairs(assigned, "cluster", max_cluster_pairs)
+    centroids = ivf_centroids(corpus)
+    assigned = ivf_assign(corpus, centroids).localCheckpoint()
+    guard_block_pairs(assigned, "cluster", _MAX_CLUSTER_PAIRS)
     a = assigned.select(F.col("id").alias("id_a"), F.col("v").alias("va"), "cluster")
     b = assigned.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), "cluster")
     dups = (
         a.join(b, on="cluster")
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(cosine(F.col("va"), F.col("vb")) >= threshold)
+        .filter(cosine(F.col("va"), F.col("vb")) >= _SEMDEDUP_THRESHOLD)
         .select(F.col("id_b").alias("id"))
         .distinct()
         .withColumn("_dup", F.lit(True))
@@ -418,12 +383,8 @@ def semantic_dedup(
     )
 
 
-def embedding_diversity(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    key_cols: list[str] | None = None,
-) -> DataFrame:
-    """Per-group embedding diversity: mean pairwise cosine similarity,
+def embedding_diversity(corpus: DataFrame) -> DataFrame:
+    """Per-``label`` embedding diversity: mean pairwise cosine similarity,
     computed WITHOUT the O(n²) pair join via the sum-vector identity —
     for unit vectors uᵢ, Σᵢ≠ⱼ uᵢ·uⱼ = ‖Σu‖² − n, so
 
@@ -432,10 +393,10 @@ def embedding_diversity(
     One explode + two key-partitioned aggregations: O(n·dim) work, one
     shuffle of (key, pos) partial sums — the curation metric that tells a
     mixture planner how redundant a source is, at any corpus size.
-    Returns ``(keys..., n_vectors, mean_pairwise_cosine)``; groups with a
+    Returns ``(label, n_vectors, mean_pairwise_cosine)``; groups with a
     single vector have no pairs and return NULL."""
-    keys = key_cols or ["label"]
-    v = _as_double(F.col(vec_col))
+    keys = ["label"]
+    v = _as_double(F.col("embedding"))
     # bind norm once (1-element-array trick); zero vectors contribute zeros
     unit = F.transform(
         F.array(norm(v)),
@@ -487,17 +448,10 @@ def _argmin_code(sub: Column, book: Column) -> Column:
     return ranked[0]["i"]
 
 
-def pq_codebooks(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    m: int = 4,
-    k_sub: int = 8,
-    lloyd_iters: int = 2,
-    dim: int = 64,
-) -> list[list[list[float]]]:
-    """Train ``m`` per-subspace codebooks of ``k_sub`` codewords each —
-    plain (non-spherical) L2 k-means over each subvector block.
+def pq_codebooks(corpus: DataFrame) -> list[list[list[float]]]:
+    """Train ``m = _PQ_M`` per-subspace codebooks of ``k_sub = _PQ_K_SUB``
+    codewords each over the ``embedding`` column — plain (non-spherical)
+    L2 k-means over each subvector block, ``_PQ_ITERS`` Lloyd rounds.
 
     Same engine-portable determinism contract as :func:`ivf_centroids`:
     seeds are the ``k_sub`` corpus rows with the smallest LCG mix
@@ -509,18 +463,19 @@ def pq_codebooks(
     round: one narrow argmin pass + one posexplode/groupBy-avg shuffle
     covering ALL subspaces at once; only m·k_sub·(dim/m) = dim·k_sub
     doubles ever reach the driver, so training holds at corpus scale."""
-    subdim = dim // m
-    v = _as_double(F.col(vec_col))
-    lcg = (F.col(id_col).cast("bigint") * 1103515245 + 12345) % 2147483648
+    m, k_sub = _PQ_M, _PQ_K_SUB
+    subdim = _EMB_DIM // m
+    v = _as_double(F.col("embedding"))
+    lcg = (F.col("vec_id").cast("bigint") * 1103515245 + 12345) % 2147483648
     base = corpus.select(
-        v.alias("v"), lcg.alias("h"), F.col(id_col).alias("_sid")
+        v.alias("v"), lcg.alias("h"), F.col("vec_id").alias("_sid")
     ).localCheckpoint(eager=True)
     seed_rows = base.orderBy("h", "_sid").limit(k_sub).select("v").collect()
     books = [
         [list(r["v"])[s * subdim : (s + 1) * subdim] for r in seed_rows]
         for s in range(m)
     ]
-    for _ in range(lloyd_iters):
+    for _ in range(_PQ_ITERS):
         with_books = with_matrix(
             base, [c for book in books for c in book], "_flat"
         )  # m·k_sub codewords stacked; subspace s owns rows [s·k_sub, (s+1)·k_sub)
@@ -569,12 +524,7 @@ def pq_codebooks(
     return books
 
 
-def pq_encode(
-    df: DataFrame,
-    books: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def pq_encode(df: DataFrame, books: list[list[list[float]]]) -> DataFrame:
     """Encode each vector as ``codes: array<int>`` (length m) — its
     nearest codeword per subspace. The compressed corpus this produces is
     the PQ scale story: m small ints per vector instead of ``dim``
@@ -585,7 +535,7 @@ def pq_encode(
     flat = [c for book in books for c in book]
     return with_matrix(
         spread(df).select(
-            F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
+            F.col("vec_id").alias("id"), _as_double(F.col("embedding")).alias("v")
         ),
         flat,
         "_flat",
@@ -603,18 +553,7 @@ def pq_encode(
     )
 
 
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    m: int = 4,
-    k_sub: int = 8,
-    lloyd_iters: int = 2,
-    dim: int = 64,
-    books: list[list[list[float]]] | None = None,
-) -> DataFrame:
+def pq_topk(corpus: DataFrame, queries: DataFrame, k: int = _ANN_K) -> DataFrame:
     """ANN top-k by asymmetric distance computation over PQ codes: each
     query precomputes its m×k_sub distance table against the broadcast
     codebooks, then every corpus vector's approximate distance is m table
@@ -628,13 +567,11 @@ def pq_topk(
     coarse quantizer (restrict the scan to ``ivf_assign`` probe lists)
     exactly as IVF-PQ does; the full ADC scan here is the Jégou et al.
     baseline and the honest recall ceiling."""
-    if books is None:
-        books = pq_codebooks(corpus, vec_col, id_col, m, k_sub, lloyd_iters, dim)
-    subdim = dim // m
+    m, k_sub = _PQ_M, _PQ_K_SUB
+    books = pq_codebooks(corpus)
+    subdim = _EMB_DIM // m
     flat = [c for book in books for c in book]
-    codes = pq_encode(corpus, books, vec_col, id_col).withColumnRenamed(
-        "id", "neighbor_id"
-    )
+    codes = pq_encode(corpus, books).withColumnRenamed("id", "neighbor_id")
     def _dtab_row(s: int) -> Column:
         # NOTE: the codeword lambda must stay unary — a second Python arg
         # (even a defaulted one) makes pyspark pass the ELEMENT INDEX as
@@ -646,7 +583,7 @@ def pq_topk(
 
     q = with_matrix(
         queries.select(
-            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
+            F.col("vec_id").alias("query_id"), _as_double(F.col("embedding")).alias("qv")
         ),
         flat,
         "_flat",
@@ -669,24 +606,9 @@ def pq_topk(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def cosine_topk_ivf_pq(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 8,
-    ivf_iters: int = 3,
-    m: int = 4,
-    k_sub: int = 8,
-    pq_iters: int = 2,
-    dim: int = 64,
-    centroids: list[list[float]] | None = None,
-    books: list[list[list[float]]] | None = None,
-) -> DataFrame:
-    """IVF-PQ: the IVF coarse quantizer prunes candidates to ``nprobe``
-    inverted lists, then the re-rank inside those lists is COMPRESSED —
+def cosine_topk_ivf_pq(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF-PQ: the IVF coarse quantizer prunes candidates to
+    ``_IVF_NPROBE`` inverted lists, then the re-rank inside those lists is COMPRESSED —
     approximate cosine from PQ codes alone:
 
         cos(q, v) ≈ (Σ_s 〈q_s, cw_s〉) / (‖q‖ · √(Σ_s ‖cw_s‖²))
@@ -699,15 +621,15 @@ def cosine_topk_ivf_pq(
     compression). Codebooks are GLOBAL, not per-list residual codebooks
     (FAISS ``by_residual=False`` flavor) — the residual variant needs a
     cosine-consistent residual space and is the documented upgrade.
-    Returns ``(query_id, neighbor_id, approx_cos, rank)``."""
-    if centroids is None:
-        centroids = ivf_centroids(corpus, vec_col, id_col, n_centroids, ivf_iters)
-    if books is None:
-        books = pq_codebooks(corpus, vec_col, id_col, m, k_sub, pq_iters, dim)
-    subdim = dim // m
+    Returns ``(query_id, neighbor_id, approx_cos, rank)`` for the top
+    ``_ANN_K``."""
+    m, k_sub = _PQ_M, _PQ_K_SUB
+    centroids = ivf_centroids(corpus)
+    books = pq_codebooks(corpus)
+    subdim = _EMB_DIM // m
     flat = [c for book in books for c in book]
-    assigned = ivf_assign(corpus, centroids, vec_col, id_col)
-    codes = pq_encode(corpus, books, vec_col, id_col)
+    assigned = ivf_assign(corpus, centroids)
+    codes = pq_encode(corpus, books)
     cand = (
         assigned.select(F.col("id").alias("neighbor_id"), "cluster")
         .join(codes.withColumnRenamed("id", "neighbor_id"), on="neighbor_id")
@@ -715,7 +637,7 @@ def cosine_topk_ivf_pq(
     q = with_matrix(
         with_matrix(
             queries.select(
-                F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
+                F.col("vec_id").alias("query_id"), _as_double(F.col("embedding")).alias("qv")
             ),
             centroids,
             "_cents",
@@ -725,7 +647,7 @@ def cosine_topk_ivf_pq(
     ).select(
         "query_id",
         F.explode(
-            _top_clusters(_centroid_sims(F.col("qv"), F.col("_cents")), nprobe)
+            _top_clusters(_centroid_sims(F.col("qv"), F.col("_cents")), _IVF_NPROBE)
         ).alias("cluster"),
         # dot table dt[s][j] = 〈q_s, books[s][j]〉 — unary lambda (see
         # pq_topk note on transform's index argument)
@@ -771,12 +693,13 @@ def cosine_topk_ivf_pq(
         # ids collide across lists — assignment is unique, so no dedup
     )
     w = Window.partitionBy("query_id").orderBy(F.col("approx_cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= _ANN_K)
 
 
-def kcenter_select(df: DataFrame, vec_col: str, id_col: str, k: int = 8) -> DataFrame:
+def kcenter_select(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
     """Greedy k-center (Gonzalez farthest-point) coreset selection: start
-    from the smallest-id vector, then ``k`` times pick the point farthest
+    from the smallest-id vector, then k = ``_KCENTER_K`` times pick the
+    point farthest
     from every center chosen so far. Returns (round, id, sep) — ``sep``
     is the selected point's distance to its nearest prior center, a
     monotone non-increasing sequence that IS the 2-approximation bound on
@@ -790,6 +713,7 @@ def kcenter_select(df: DataFrame, vec_col: str, id_col: str, k: int = 8) -> Data
     TakeOrdered). The per-round 1-row collect is the sanctioned k-sized
     driver probe. Distances use the expanded-form squared L2 (_l2sq) so
     the DuckDB oracle replays bit-identical float folds."""
+    k = _KCENTER_K
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     emb = df.select(

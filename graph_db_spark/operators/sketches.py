@@ -19,37 +19,37 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# Sketch sizes and seeds the sketch queries share with their DuckDB
+# oracles: Datasketches HLL lgK; portable HLL with 2^12 registers; a
+# 4-row Count-Min (width and seed vary per query); a 4096-bit Bloom
+# filter probed by 3 hashes; 32-value KMV samples over portable_hash64
+_HLL_LG_K, _HLL_P = 12, 12
+_CMS_DEPTH = 4
+_BLOOM_M, _BLOOM_K, _BLOOM_SEED = 4096, 3, 101
+_KMV_K = 32
+_HASH64_SEED = 83
 
-def hll_day_sketches(
-    df: DataFrame,
-    ts_col: str,
-    keys: list[str],
-    value_col: str,
-    lg_k: int = 12,
-) -> DataFrame:
+
+def hll_day_sketches(df: DataFrame, ts_col: str, keys: list[str], value_col: str) -> DataFrame:
     """One HLL sketch per (keys..., day): ``(keys..., day, sketch)``.
 
     This is the ingest-time pre-aggregation: a day of raw rows collapses to
-    one ~2^lg_k-byte binary per group. Map-side partial aggregation does
+    one ~2^_HLL_LG_K-byte binary per group. Map-side partial aggregation does
     most of the collapse before the single key shuffle.
     """
     day = F.date_format(F.to_date(F.col(ts_col)), "yyyy-MM-dd").alias("day")
     return df.groupBy(*keys, day).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("sketch")
+        F.hll_sketch_agg(F.col(value_col), F.lit(_HLL_LG_K)).alias("sketch")
     )
 
 
-def hll_merge_estimate(
-    sketches: DataFrame,
-    keys: list[str],
-    estimate_col: str = "distinct_est",
-) -> DataFrame:
+def hll_merge_estimate(sketches: DataFrame, keys: list[str]) -> DataFrame:
     """Merge per-day sketches up to ``keys`` and estimate the distinct
     count: ``(keys..., distinct_est)``. The input is sketch rows (tiny),
     so arbitrary re-rollups never touch the raw data again.
     """
     return sketches.groupBy(*keys).agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sketch")).cast("bigint").alias(estimate_col)
+        F.hll_sketch_estimate(F.hll_union_agg("sketch")).cast("bigint").alias("distinct_est")
     )
 
 
@@ -106,12 +106,11 @@ def count_min_table(
     counts: DataFrame,
     item_col: str,
     count_col: str,
-    depth: int = 4,
     width: int = 256,
     seed: int = 41,
     keys: list[str] | None = None,
 ) -> DataFrame:
-    """Count-Min sketch as ``depth × width`` rows ``(j, bucket, cnt)``.
+    """Count-Min sketch as ``_CMS_DEPTH × width`` rows ``(j, bucket, cnt)``.
 
     Built from PRE-AGGREGATED ``(item, count)`` rows — identical to
     incrementing per occurrence (bucket cnt = Σ counts of items mapping
@@ -126,7 +125,7 @@ def count_min_table(
     up afterwards without touching raw data again.
     """
     keys = keys or []
-    buckets = _portable_buckets(F.col(item_col), depth, width, seed)
+    buckets = _portable_buckets(F.col(item_col), _CMS_DEPTH, width, seed)
     return (
         counts.select(
             *keys, F.col(count_col).alias("_c"), F.posexplode(buckets).alias("j", "bucket")
@@ -147,85 +146,70 @@ def count_min_lookup(
     cms: DataFrame,
     items: DataFrame,
     item_col: str,
-    depth: int = 4,
     width: int = 256,
     seed: int = 41,
-    estimate_col: str = "est_cnt",
 ) -> DataFrame:
     """Point-query the sketch for every row of ``items``: adds
-    ``estimate_col`` = min over the ``depth`` counters. The sketch side is
+    ``est_cnt`` = min over the ``depth = _CMS_DEPTH`` counters. The sketch side is
     depth·width rows → broadcast; one narrow groupBy on the item restores
     the row shape. CMS guarantee: estimate ≥ true count always (merge of
     non-negative counters), ≤ true + ε·N with prob 1−δ for ε=e/width,
     δ=e^−depth — deterministic here, so the oracle reproduces it exactly.
     """
-    buckets = _portable_buckets(F.col(item_col), depth, width, seed)
+    buckets = _portable_buckets(F.col(item_col), _CMS_DEPTH, width, seed)
     exploded = items.select(
         F.col(item_col).alias("_item"), F.posexplode(buckets).alias("j", "bucket")
     )
     return (
         exploded.join(F.broadcast(cms), on=["j", "bucket"], how="left")
         .groupBy("_item")
-        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).cast("bigint").alias(estimate_col))
+        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).cast("bigint").alias("est_cnt"))
         .withColumnRenamed("_item", item_col)
     )
 
 
-def bloom_bits(df: DataFrame, col: str, m: int = 4096, k: int = 3, seed: int = 101) -> DataFrame:
+def bloom_bits(df: DataFrame, col: str) -> DataFrame:
     """Bloom filter of a key set as its DISTINCT set bit positions:
-    one row per set bit (≤ m rows; ≤ k·|keys| before dedup). The build
-    side of a pruning semi-join is dimension-sized by assumption, so the
-    bit table broadcasts."""
-    buckets = _portable_buckets(F.col(col), k, m, seed)
+    one row per set bit (≤ m = ``_BLOOM_M`` rows; ≤ k·|keys| before
+    dedup, k = ``_BLOOM_K``). The build side of a pruning semi-join is
+    dimension-sized by assumption, so the bit table broadcasts."""
+    buckets = _portable_buckets(F.col(col), _BLOOM_K, _BLOOM_M, _BLOOM_SEED)
     return df.select(F.explode(buckets).alias("bit")).distinct()
 
 
-def bloom_contains(
-    df: DataFrame,
-    col: str,
-    bits: DataFrame,
-    m: int = 4096,
-    k: int = 3,
-    seed: int = 101,
-    flag_col: str = "bloom_pass",
-) -> DataFrame:
-    """Adds ``flag_col``: true iff all ``k`` bit positions of ``col`` are
-    set — the classic pre-shuffle semi-join pruning (Spark's own runtime
+def bloom_contains(df: DataFrame, col: str, bits: DataFrame) -> DataFrame:
+    """Adds ``bloom_pass``: true iff all k = ``_BLOOM_K`` bit positions of
+    ``col`` are set — the classic pre-shuffle semi-join pruning (Spark's own runtime
     bloom-filter join is the JVM-native version of this). No false
     negatives ever; false-positive rate ≈ (1−e^{−k·n/m})^k.
 
     The probe is a NARROW map: the bit set is densified to an m-length
-    0/1 array in a one-row DataFrame (executor-side aggregation — the
+    0/1 array (m = ``_BLOOM_M``) in a one-row DataFrame (executor-side aggregation — the
     driver never holds it) and attached via broadcast cross join (the
     ``with_matrix`` pattern, similarity.py:92); each row then does k
     O(1) ``element_at`` probes. The 100 TB fact side neither shuffles
     nor joins to discover it doesn't match."""
     dense = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.sequence(F.lit(0), F.lit(_BLOOM_M - 1)),
         lambda i: F.array_contains(F.col("_set"), i).cast("int"),
     )
     one = bits.agg(F.collect_set(F.col("bit")).alias("_set")).select(
         dense.alias("_bloom_dense")
     )
-    buckets = _portable_buckets(F.col(col), k, m, seed)
+    buckets = _portable_buckets(F.col(col), _BLOOM_K, _BLOOM_M, _BLOOM_SEED)
     probe = F.forall(
         buckets,
         lambda b: F.element_at(F.col("_bloom_dense"), (b + 1).cast("int")) == 1,
     )
     return (
         df.crossJoin(F.broadcast(one))
-        .withColumn(flag_col, probe)
+        .withColumn("bloom_pass", probe)
         .drop("_bloom_dense")
     )
 
 
-def kmv_sketches(
-    df: DataFrame,
-    set_col: str,
-    item_col: str,
-    k: int = 32,
-) -> DataFrame:
-    """KMV (k-minimum-values) sketch per set: the ``k`` smallest portable
+def kmv_sketches(df: DataFrame, set_col: str, item_col: str) -> DataFrame:
+    """KMV (k-minimum-values) sketch per set: the k = ``_KMV_K`` smallest portable
     hashes of the set's distinct items, as a sorted ``array<long>``
     (``sample``) plus the true distinct count of hashes (``n_hashes``).
 
@@ -246,7 +230,7 @@ def kmv_sketches(
         h.withColumn("rn", F.row_number().over(w))
         .groupBy("s")
         .agg(
-            F.sort_array(F.collect_list(F.when(F.col("rn") <= k, F.col("h")))).alias(
+            F.sort_array(F.collect_list(F.when(F.col("rn") <= _KMV_K, F.col("h")))).alias(
                 "sample"
             ),
             F.count(F.lit(1)).cast("bigint").alias("n_hashes"),
@@ -255,7 +239,7 @@ def kmv_sketches(
     )
 
 
-def portable_hash64(col: Column, seed: int = 83) -> Column:
+def portable_hash64(col: Column) -> Column:
     """62-bit engine-portable UNIFORM hash: two independent polynomial
     char hashes, each passed through an LCG-derived affine map mod
     2^31−1, combined as hi·2^31 + lo. The affine maps are what make it
@@ -263,29 +247,26 @@ def portable_hash64(col: Column, seed: int = 83) -> Column:
     integer, so k-minimum ordering and range-scaled estimators would see
     a grossly non-uniform distribution without them (measured: KMV union
     estimate off by 5 orders of magnitude on 1-3 char ids). Value range
-    [0, (2^31−1)·2^31 + 2^31−1) — KMV_HASH_RANGE."""
+    [0, (2^31−1)·2^31 + 2^31−1) — KMV_HASH_RANGE. The affine maps are
+    drawn from ``minhash_params(2, seed=_HASH64_SEED)``."""
     from graph_db_spark.operators.dedup import _MINHASH_P, minhash_params, portable_hash
 
-    (a1, b1), (a2, b2) = minhash_params(2, seed=seed)
+    (a1, b1), (a2, b2) = minhash_params(2, seed=_HASH64_SEED)
     hi = (F.lit(a1) * portable_hash(col, 31) + F.lit(b1)) % _MINHASH_P
     lo = (F.lit(a2) * portable_hash(col, 131) + F.lit(b2)) % _MINHASH_P
     return hi * F.lit(2**31).cast("long") + lo
 
 
-def kmv_union_intersection(
-    pairs: DataFrame,
-    a_sample: str,
-    b_sample: str,
-    k: int = 32,
-) -> DataFrame:
+def kmv_union_intersection(pairs: DataFrame, a_sample: str, b_sample: str) -> DataFrame:
     """Adds KMV union/intersection distinct estimates for two sketches.
 
-    Merged sketch = k smallest of the union of samples. Estimators
+    Merged sketch = k = ``_KMV_K`` smallest of the union of samples. Estimators
     (Beyer et al. 2007): union_est = (k−1)·H / kth-min for the hash range
     H when the merged sample is full, else the exact merged-sample size;
     jaccard_est = |merged ∩ A ∩ B| / |merged|; intersection_est =
     jaccard_est · union_est. Pure array Column exprs — the sketch rows
     are tiny, the work is O(k log k) per pair."""
+    k = _KMV_K
     hash_range = float(2147483647 * 2**31)  # portable_hash64 value bound
     merged_all = F.array_sort(
         F.array_distinct(F.array_union(F.col(a_sample), F.col(b_sample)))
@@ -307,14 +288,10 @@ def kmv_union_intersection(
 
 
 def portable_hll_registers(
-    df: DataFrame,
-    ts_col: str,
-    keys: list[str],
-    value_col: str,
-    p: int = 12,
+    df: DataFrame, ts_col: str, keys: list[str], value_col: str
 ) -> DataFrame:
     """Engine-portable HLL: per (keys..., day) the sketch is ``2^p``
-    register ROWS ``(idx, r)`` — idx = low p bits of a 62-bit portable
+    (p = ``_HLL_P``) register ROWS ``(idx, r)`` — idx = low p bits of a 62-bit portable
     hash, r = leading-zero rank of the remaining bits. Mergeable by
     ``max(r)`` per (key, idx), exactly like binary sketches but with
     every step (two polynomial char hashes, shift, bin-length rank)
@@ -323,6 +300,7 @@ def portable_hll_registers(
     above stay as the compact-binary production variant."""
     from graph_db_spark.operators.dedup import portable_hash
 
+    p = _HLL_P
     m = 1 << p
     day = F.date_format(F.to_date(F.col(ts_col)), "yyyy-MM-dd").alias("day")
     v = F.col(value_col).cast("string")
@@ -337,16 +315,12 @@ def portable_hll_registers(
     )
 
 
-def portable_hll_estimate(
-    regs: DataFrame,
-    keys: list[str],
-    p: int = 12,
-    estimate_col: str = "distinct_est",
-) -> DataFrame:
+def portable_hll_estimate(regs: DataFrame, keys: list[str]) -> DataFrame:
     """Merge portable register rows up to ``keys`` and apply the standard
     HLL estimator (harmonic mean + linear-counting small-range
-    correction). Closed-form floating math — identical in DuckDB."""
-    m = 1 << p
+    correction) as ``distinct_est``. Closed-form floating math —
+    identical in DuckDB."""
+    m = 1 << _HLL_P
     alpha_m2 = (0.7213 / (1 + 1.079 / m)) * m * m
     merged = regs.groupBy(*keys, "idx").agg(F.max("r").alias("r"))
     agg = merged.groupBy(*keys).agg(
@@ -359,7 +333,7 @@ def portable_hll_estimate(
         (raw <= 2.5 * m) & (F.col("c") < m),
         F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
     ).otherwise(raw)
-    return agg.select(*keys, F.round(est, 4).alias(estimate_col))
+    return agg.select(*keys, F.round(est, 4).alias("distinct_est"))
 
 
 def count_min_inner_product(a: DataFrame, b: DataFrame) -> DataFrame:

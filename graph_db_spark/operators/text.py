@@ -220,10 +220,12 @@ def _merge_pair(syms: Column, p1: str, p2: str) -> Column:
     )
 
 
-def bpe_learn(
-    df: DataFrame, text_col: str, n_merges: int = 8
-) -> list[tuple[int, str, int]]:
-    """Distributed BPE tokenizer training: learn ``n_merges`` merge rules
+# bpe_learn's merge-rule count
+_BPE_MERGES = 8
+
+
+def bpe_learn(df: DataFrame, text_col: str) -> list[tuple[int, str, int]]:
+    """Distributed BPE tokenizer training: learn ``_BPE_MERGES`` merge rules
     from a corpus. Returns ``[(merge_idx, 'left right', freq), ...]`` in
     learned order (deterministic: frequency desc, pair asc tie-break).
 
@@ -240,7 +242,7 @@ def bpe_learn(
         .localCheckpoint()
     )
     merges: list[tuple[int, str, int]] = []
-    for r in range(n_merges):
+    for r in range(_BPE_MERGES):
         top = pair_stats(vocab, k=1).collect()
         if not top or top[0]["freq"] <= 0:
             break
@@ -253,14 +255,15 @@ def bpe_learn(
     return merges
 
 
-def wordpiece_vocab_segment(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_piece_len: int = 4,
-    vocab_size: int = 200,
-) -> DataFrame:
-    """WordPiece-style subword pipeline: induce a subword vocabulary
-    (top ``vocab_size`` substrings of length <= ``max_piece_len`` by
+# WordPiece vocabulary: the top _WP_VOCAB pieces of at most _WP_MAX_LEN
+# characters; the wordpiece_tokenize oracle replays both
+_WP_MAX_LEN, _WP_VOCAB = 4, 200
+
+
+def wordpiece_vocab_segment(docs: DataFrame) -> DataFrame:
+    """WordPiece-style subword pipeline over ``docs.text``: induce a
+    subword vocabulary (top ``_WP_VOCAB`` substrings of length <=
+    ``_WP_MAX_LEN`` by
     corpus-frequency-weighted occurrence count, ties to the
     lexicographically smaller piece), then segment every distinct word
     by GREEDY LONGEST-MATCH-FIRST (the WordPiece inference rule) —
@@ -273,14 +276,15 @@ def wordpiece_vocab_segment(
     Scale: candidate counting is one explode + groupBy over DISTINCT
     words (corpus multiplicity arrives as a pre-aggregated freq weight,
     the same collapse the BPE trainer uses); the vocab is a
-    vocab_size-row driver list (the sanctioned k-sized collect);
+    _WP_VOCAB-row driver list (the sanctioned k-sized collect);
     segmentation is mapInPandas over distinct words — zero shuffles,
     vocab broadcast in the closure. Returns one row per (word, piece)
     occurrence in segmentation order multiplicity."""
     import pandas as pd
 
+    max_piece_len = _WP_MAX_LEN
     wf = (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("word"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
         .filter(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -305,7 +309,7 @@ def wordpiece_vocab_segment(
         pieces.groupBy("piece")
         .agg(F.sum("freq").alias("weight"))
         .orderBy(F.desc("weight"), "piece")
-        .limit(vocab_size)
+        .limit(_WP_VOCAB)
         .collect()
     )
     vocab = {r["piece"] for r in vocab_rows}

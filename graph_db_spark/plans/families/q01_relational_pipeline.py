@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graph_db_spark.functions import scalars as S
-from graph_db_spark.graph.algorithms import connected_components, pagerank
+from graph_db_spark.graph.algorithms import _PR_ITERS, _PR_RESET, connected_components, pagerank
 from graph_db_spark.graph.build import build_graph, edges_sql
 from graph_db_spark.operators import aggregates as A
 from graph_db_spark.operators import dedup as D
@@ -33,6 +33,10 @@ from graph_db_spark.operators import joins as J
 from graph_db_spark.operators import similarity as SIM
 from graph_db_spark.operators import text as TX
 from graph_db_spark.operators.sessionize import session_intervals
+from graph_db_spark.operators.similarity import (
+    _ANN_K, _EMB_DIM, _IVF_CENTROIDS, _IVF_ITERS, _IVF_NPROBE, _LSH_PLANES, _LSH_SEED, _LSH_TABLES,
+    _PQ_ITERS, _PQ_K_SUB, _PQ_M,
+)
 from graph_db_spark.plans import pipeline as P
 from graph_db_spark.plans.families.q00_base import _fmt_ts, r4, register
 from graph_db_spark.tables import load_table
@@ -997,12 +1001,6 @@ def connected_components_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(g.edges, n_partitions=_graph_nparts(sf_dir))
 
 
-# The fixed PageRank budget both engines run: 10 power iterations with
-# reset probability 0.15 (uniform here, to the Region sources in q04's
-# personalized variant).
-_PR_ITERS, _PR_RESET = 10, 0.15
-
-
 def _pagerank_oracle_sql() -> str:
     """Generate the DuckDB power-iteration oracle — the same algorithm as
     graph/algorithms.pagerank (uniform init, per-edge 1/out_degree weights
@@ -1048,9 +1046,7 @@ def pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     a wrong damping factor, dangling handling, or degree normalization
     shifts label masses at the 3rd-4th decimal and fails the gate."""
     g = build_graph(spark, sf_dir)
-    pr = pagerank(
-        g.edges, reset_prob=_PR_RESET, max_iter=_PR_ITERS, n_partitions=_graph_nparts(sf_dir)
-    )
+    pr = pagerank(g.edges, n_partitions=_graph_nparts(sf_dir))
     return (
         pr.groupBy(F.substring("id", 1, 1).alias("label"))
         .agg(
@@ -1172,17 +1168,10 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (guard_block_pairs), delegating huge corpora to the LSH-propose path
     (near_dup_clusters)."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.jaccard_pairs(docs, "text", "doc_id", block_col="lang", threshold=0.8)
+    pairs = D.jaccard_pairs(docs, "text", "doc_id")
     # jaccard_pairs filters on the RAW value (as the oracle does); rounding
     # first would admit raw values in [0.79995, 0.8).
     return pairs.select("id_a", "id_b", r4(F.col("jaccard")).alias("jaccard"))
-
-
-# The MinHash-LSH and SimHash settings the dedup queries share with their
-# oracles (q03's `_minhash_band_sql` and `_simhash_oracle_sql`): 32
-# minhashes in 8 bands; 64-bit signatures, Hamming distance at most 3.
-_MINHASH_HASHES, _MINHASH_BANDS = 32, 8
-_SIMHASH_BITS, _SIMHASH_MAX_HAMMING = 64, 3
 
 
 @register("minhash_lsh_dedup")  # EXACT oracle assigned post-def (portable hash)
@@ -1194,9 +1183,7 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucket join EXACTLY (oracle at module bottom). Recall/precision vs
     exact Jaccard also unit-tested (tests/test_llm_ops.py)."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.minhash_lsh_candidates(
-        docs, "text", "doc_id", num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS
-    )
+    return D.minhash_lsh_candidates(docs, "text", "doc_id")
 
 
 @register("simhash_near_dups")  # EXACT oracle assigned post-def (portable hash)
@@ -1207,9 +1194,7 @@ def simhash_near_dups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB recomputes signatures, blocks, and Hamming verify EXACTLY
     (oracle at module bottom)."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.simhash_near_dups(
-        docs, "text", "doc_id", max_hamming=_SIMHASH_MAX_HAMMING, bits=_SIMHASH_BITS
-    )
+    return D.simhash_near_dups(docs, "text", "doc_id")
 
 
 @register(
@@ -1236,7 +1221,7 @@ def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-    out = SIM.cosine_topk(emb, q, k=5)
+    out = SIM.cosine_topk(emb, q)
     return out.select(
         "query_id", "neighbor_id", r4(F.col("cosine_sim")).alias("cosine_sim"),
         F.col("rank").cast("bigint").alias("rank"),
@@ -1271,15 +1256,6 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The ANN indexes every approximate top-k query shares with its oracle:
-# 64-dim embeddings and the top 5 neighbours per query; LSH = 16 tables
-# of 4 hyperplanes from LCG seed 42; IVF = 16 spherical-k-means lists
-# after 3 Lloyd rounds, 8 probed per query; PQ = 4 subspace codebooks of
-# 8 codewords after 2 Lloyd rounds.
-_EMB_DIM, _ANN_K = 64, 5
-_LSH_PLANES, _LSH_TABLES, _LSH_SEED = 4, 16, 42
-_IVF_CENTROIDS, _IVF_ITERS, _IVF_NPROBE = 16, 3, 8
-_PQ_M, _PQ_K_SUB, _PQ_ITERS = 4, 8, 2
 
 
 def _lsh_planes_sql() -> str:
@@ -1347,10 +1323,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate result itself, not just its quality bound."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-    out = SIM.cosine_topk_lsh(
-        emb, q, dim=_EMB_DIM, k=_ANN_K, n_planes=_LSH_PLANES, n_tables=_LSH_TABLES,
-        seed=_LSH_SEED,
-    )
+    out = SIM.cosine_topk_lsh(emb, q)
     return out.select(
         "query_id", "neighbor_id", r4(F.col("cosine_sim")).alias("cosine_sim"),
         F.col("rank").cast("bigint").alias("rank"),
@@ -1589,8 +1562,8 @@ def _ivf_pq_oracle_sql() -> str:
 @register("ann_ivf_pq_topk", oracle=_ivf_pq_oracle_sql())
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity — IVF-PQ: the production-shape ANN at 100 TB. The IVF
-    coarse quantizer prunes candidates to nprobe inverted lists
-    (corpus·nprobe/n_centroids per query) AND the in-list re-rank is
+    coarse quantizer prunes candidates to _IVF_NPROBE inverted lists
+    (corpus·_IVF_NPROBE/_IVF_CENTROIDS per query) AND the in-list re-rank is
     compressed — approximate cosine from PQ codes via m table lookups
     per pair, never touching a raw corpus vector (FAISS IVFADC with
     ``by_residual=False``; the residual variant is the documented
@@ -1602,10 +1575,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     compressed-cosine scoring, and re-rank reproduced end to end."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-    out = SIM.cosine_topk_ivf_pq(
-        emb, q, k=_ANN_K, n_centroids=_IVF_CENTROIDS, nprobe=_IVF_NPROBE, ivf_iters=_IVF_ITERS,
-        m=_PQ_M, k_sub=_PQ_K_SUB, pq_iters=_PQ_ITERS, dim=_EMB_DIM,
-    )
+    out = SIM.cosine_topk_ivf_pq(emb, q)
     return out.select(
         "query_id", "neighbor_id", r4(F.col("approx_cos")).alias("approx_cos"),
         F.col("rank").cast("bigint").alias("rank"),
@@ -1630,9 +1600,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the approximate result itself."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-    out = SIM.pq_topk(
-        emb, q, k=_ANN_K, m=_PQ_M, k_sub=_PQ_K_SUB, lloyd_iters=_PQ_ITERS, dim=_EMB_DIM
-    )
+    out = SIM.pq_topk(emb, q)
     return out.select(
         "query_id", "neighbor_id", r4(F.col("approx_dist")).alias("approx_dist"),
         F.col("rank").cast("bigint").alias("rank"),
@@ -1646,17 +1614,16 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixture embeddings are near-uniform, so recall tracks the probed
     fraction (8/16 lists ≈ 0.87 recall@3); on clustered real embeddings
     the same plan prunes much harder at the same recall. Scale shape: one
-    equi-join on cluster id — candidates per query are corpus/n_centroids
-    × nprobe, tuned without touching the plan.
+    equi-join on cluster id — candidates per query are
+    corpus/_IVF_CENTROIDS × _IVF_NPROBE (operators/similarity.py constants,
+    which the oracle reads too).
 
     EXACT oracle (was rows-only through round 2): the LCG seed pick is
     plain integer arithmetic, so DuckDB re-trains the SAME centroids with
     unrolled Lloyd rounds and reproduces the probe + re-rank end to end."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-    out = SIM.cosine_topk_ivf(
-        emb, q, k=_ANN_K, n_centroids=_IVF_CENTROIDS, nprobe=_IVF_NPROBE, lloyd_iters=_IVF_ITERS
-    )
+    out = SIM.cosine_topk_ivf(emb, q)
     return out.select(
         "query_id", "neighbor_id", r4(F.col("cosine_sim")).alias("cosine_sim"),
         F.col("rank").cast("bigint").alias("rank"),

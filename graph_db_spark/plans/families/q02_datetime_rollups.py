@@ -393,17 +393,17 @@ def area_normalized_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "capped_label_sample",
-    oracle="""
+    oracle=f"""
     SELECT CAST(user_id AS BIGINT) AS user_id,
-           array_to_string(list_sort(list_distinct(list(event_type)))[1:3], ',') AS sample
+           array_to_string(list_sort(list_distinct(list(event_type)))[1:{A._SAMPLE_CAP}], ',') AS sample
     FROM events GROUP BY 1
     """,
 )
 def capped_label_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9/W3 — capped distinct sample per group (label samples capped at 20,
-    graph_soil_layer.py:64-68; cap=3 here)."""
+    graph_soil_layer.py:64-68; ``_SAMPLE_CAP`` here)."""
     ev = load_table(spark, sf_dir, "events")
-    out = A.capped_sample(ev, ["user_id"], "event_type", cap=3)
+    out = A.capped_sample(ev, ["user_id"], "event_type")
     return out.select(
         F.col("user_id").cast("bigint").alias("user_id"),
         F.array_join("sample", ",").alias("sample"),
@@ -600,7 +600,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies the DECODER, not just the plumbing. Binary column never
     shuffles (features extracted in the same stage that synthesized it)."""
     docs = load_table(spark, sf_dir, "documents")
-    media = MM.synthesize_png_media(docs, width=4, height=4)
+    media = MM.synthesize_png_media(docs)
     feats = MM.extract_features(media, fake=False)
     return feats.select(
         "media_id", "width", "height", r4(F.col("mean_px")).alias("mean_px"), "feature_ok"
@@ -642,7 +642,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (JSON props columns, graph_fields.py) is the same bytes-stay-opaque
     contract."""
     docs = load_table(spark, sf_dir, "documents")
-    media = MM.synthesize_wav_media(docs, n_samples=64, rate=8000)
+    media = MM.synthesize_wav_media(docs)
     feats = MM.extract_audio_features(media)
     return feats.select(
         "media_id",
@@ -680,8 +680,8 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⇒ exact oracle. Real containers (MP4) need codec libs absent here; the
     container is synthetic, the distributed sampling plumbing is real."""
     docs = load_table(spark, sf_dir, "documents")
-    media = MM.synthesize_rawv_media(docs, width=4, height=4, n_frames=6)
-    frames = MM.sample_video_frames(media, every=2)
+    media = MM.synthesize_rawv_media(docs)
+    frames = MM.sample_video_frames(media)
     return frames.select(
         "media_id",
         "frame_idx",
@@ -714,7 +714,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched ``mapInPandas`` stages, with the resized mean recomputed
     analytically by the oracle."""
     docs = load_table(spark, sf_dir, "documents")
-    media = MM.synthesize_png_media(docs, width=4, height=4)
+    media = MM.synthesize_png_media(docs)
     small = MM.resize_png_batch(media, out_w=2, out_h=2)
     feats = MM.extract_features(small, fake=False)
     return feats.select(
@@ -1721,10 +1721,6 @@ def hll_user_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Portable-HLL precision (2^12 registers), shared with the oracle in q03.
-_HLL_P = 12
-
-
 @register("hll_user_reach_portable")  # oracle assigned post-def (shared literals)
 def hll_user_reach_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per event_type from MERGED per-day PORTABLE-HLL
@@ -1735,8 +1731,8 @@ def hll_user_reach_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays as the compact-binary production path; this one closes the last
     rows-only gap with a hash-matched oracle."""
     ev = load_table(spark, sf_dir, "events")
-    regs = SK.portable_hll_registers(ev, "ts", ["event_type"], "user_id", p=_HLL_P)
-    return SK.portable_hll_estimate(regs, ["event_type"], p=_HLL_P)
+    regs = SK.portable_hll_registers(ev, "ts", ["event_type"], "user_id")
+    return SK.portable_hll_estimate(regs, ["event_type"])
 
 
 @register(

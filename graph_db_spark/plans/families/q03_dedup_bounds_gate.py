@@ -23,17 +23,18 @@ from graph_db_spark.operators import quality as QL
 from graph_db_spark.operators import similarity as SIM
 from graph_db_spark.operators import sketches as SK
 from graph_db_spark.operators import text as TX
+from graph_db_spark.operators.dedup import (
+    _MINHASH_BANDS, _MINHASH_HASHES, _SIMHASH_BITS, _SIMHASH_MAX_HAMMING,
+)
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.operators.sketches import (
+    _BLOOM_K, _BLOOM_M, _BLOOM_SEED, _CMS_DEPTH, _HASH64_SEED, _HLL_P, _KMV_K,
+)
 from graph_db_spark.plans.families.q00_base import (
     ORACLE_SQL, _oriented_triangles, _oriented_triangles_sql, _poly_sql, _run_stream_to_table, r4,
     register,
 )
-from graph_db_spark.plans.families.q01_relational_pipeline import (
-    _EMB_DIM, _IVF_CENTROIDS, _IVF_ITERS, _IVF_NPROBE, _LSH_PLANES, _LSH_SEED, _LSH_TABLES,
-    _MINHASH_BANDS, _MINHASH_HASHES, _PQ_ITERS, _PQ_K_SUB, _PQ_M, _SIMHASH_BITS,
-    _SIMHASH_MAX_HAMMING, _graph_nparts,
-)
-from graph_db_spark.plans.families.q02_datetime_rollups import _HLL_P
+from graph_db_spark.plans.families.q01_relational_pipeline import _graph_nparts
 from graph_db_spark.streaming import jobs as STRM
 from graph_db_spark.tables import load_table
 from graph_db_spark.util import spread
@@ -88,7 +89,7 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"), "o_totalprice", "o_orderpriority"
     )
-    return J.salted_join(li, o, on=["l_orderkey"], n_salts=8).select(
+    return J.salted_join(li, o, on=["l_orderkey"]).select(
         F.col("l_orderkey").cast("bigint").alias("orderkey"),
         F.col("l_linenumber").cast("bigint").alias("linenumber"),
         r4(F.col("o_totalprice")).alias("totalprice"),
@@ -238,7 +239,7 @@ def minhash_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file fixture → one split: spread so shingling + posting-list
     # explode parallelize (SCALE.md §1 fixture artifact)
     sh = spread(docs).select(
-        F.col("doc_id").alias("id"), D.shingles(F.col("text"), 3).alias("s")
+        F.col("doc_id").alias("id"), D.shingles(F.col("text")).alias("s")
     )
     # EXACT truth via inverted index (posting-list self-join), not all-pairs:
     # a jaccard≥0.8 pair shares ≥1 shingle, so joining exploded shingles and
@@ -274,9 +275,7 @@ def minhash_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         # tiny — so materializing it is free at any corpus scale.
         .localCheckpoint(eager=True)
     )
-    cands = D.minhash_lsh_candidates(
-        docs, "text", "doc_id", num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS
-    )
+    cands = D.minhash_lsh_candidates(docs, "text", "doc_id")
     n_truth = truth.agg(F.count(F.lit(1)).alias("n"))
     hits = truth.join(cands, on=["id_a", "id_b"]).agg(F.count(F.lit(1)).alias("h"))
     contract = n_truth.crossJoin(hits).select(
@@ -324,9 +323,7 @@ def simhash_completeness_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("n")
     ).localCheckpoint(eager=True)
     found = (
-        D.simhash_near_dups(
-            docs, "text", "doc_id", max_hamming=_SIMHASH_MAX_HAMMING, bits=_SIMHASH_BITS
-        )
+        D.simhash_near_dups(docs, "text", "doc_id")
         .filter(F.col("hamming") == 0)
         .join(tset.select(F.col("id").alias("id_a"), F.col("tset").alias("ta")), on="id_a")
         .join(tset.select(F.col("id").alias("id_b"), F.col("tset").alias("tb")), on="id_b")
@@ -373,13 +370,11 @@ def ann_lsh_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact feeds both the fact row and the recall join — checkpoint so the
     # brute-force pass runs once (k·|q| rows, tiny at any corpus scale)
     exact = (
-        SIM.cosine_topk(emb, q, k=5)
+        SIM.cosine_topk(emb, q)
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=True)
     )
-    approx = SIM.cosine_topk_lsh(
-        emb, q, dim=_EMB_DIM, k=5, n_planes=_LSH_PLANES, n_tables=_LSH_TABLES, seed=_LSH_SEED
-    ).select("query_id", "neighbor_id")
+    approx = SIM.cosine_topk_lsh(emb, q).select("query_id", "neighbor_id")
     n_exact = exact.agg(F.count(F.lit(1)).alias("n"))
     hits = exact.join(approx, on=["query_id", "neighbor_id"]).agg(F.count(F.lit(1)).alias("h"))
     facts = n_exact.select(
@@ -410,13 +405,11 @@ def ann_ivf_recall_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 20)
     # same double-reference as the LSH bound — one brute-force pass
     exact = (
-        SIM.cosine_topk(emb, q, k=5)
+        SIM.cosine_topk(emb, q)
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=True)
     )
-    approx = SIM.cosine_topk_ivf(
-        emb, q, k=5, n_centroids=_IVF_CENTROIDS, nprobe=_IVF_NPROBE, lloyd_iters=_IVF_ITERS
-    ).select("query_id", "neighbor_id")
+    approx = SIM.cosine_topk_ivf(emb, q).select("query_id", "neighbor_id")
     n_exact = exact.agg(F.count(F.lit(1)).alias("n"))
     hits = exact.join(approx, on=["query_id", "neighbor_id"]).agg(F.count(F.lit(1)).alias("h"))
     facts = n_exact.select(
@@ -467,9 +460,7 @@ def ann_pq_distortion_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = cc.join(F.broadcast(qq), F.col("query_id") != F.col("neighbor_id")).select(
         "query_id", "neighbor_id", SIM._l2sq(F.col("qv"), F.col("cv")).alias("d")
     )
-    approx = SIM.pq_topk(
-        emb, q, k=2**31 - 1, m=_PQ_M, k_sub=_PQ_K_SUB, lloyd_iters=_PQ_ITERS, dim=_EMB_DIM
-    ).select(
+    approx = SIM.pq_topk(emb, q, k=2**31 - 1).select(
         "query_id", "neighbor_id", "approx_dist"
     )
     rel = exact.join(approx, on=["query_id", "neighbor_id"]).select(
@@ -549,9 +540,7 @@ def near_dup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator (minhash_lsh_dedup, ngram_jaccard_pairs,
     connected_components)."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.near_dup_clusters(
-        docs, "text", "doc_id", threshold=0.6, num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS
-    )
+    return D.near_dup_clusters(docs, "text", "doc_id")
 
 
 def _minhash_band_sql(
@@ -860,10 +849,11 @@ def pii_scrub_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The Count-Min sketches the CMS queries share with their oracles: depth 4
-# rows of 256 counters from LCG seed 41 (heavy hitters, and q08's join-size
-# estimate); the per-day user sketches use 64 counters from seed 53.
-_CMS_DEPTH, _CMS_WIDTH, _CMS_SEED = 4, 256, 41
+# The Count-Min sketches the CMS queries share with their oracles:
+# sketches._CMS_DEPTH rows of 256 counters from LCG seed 41 (heavy
+# hitters, and q08's join-size estimate); the per-day user sketches use
+# 64 counters from seed 53.
+_CMS_WIDTH, _CMS_SEED = 256, 41
 _CMS_DAY_WIDTH, _CMS_DAY_SEED = 64, 53
 
 
@@ -918,11 +908,9 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Reused twice (sketch build + probe): materialize so the token
     # groupBy and the portable-hash stage execute once.
     exact = spread(exact).localCheckpoint()
-    cms = SK.count_min_table(
-        exact, "token", "exact_cnt", depth=_CMS_DEPTH, width=_CMS_WIDTH, seed=_CMS_SEED
-    )
+    cms = SK.count_min_table(exact, "token", "exact_cnt", width=_CMS_WIDTH, seed=_CMS_SEED)
     est = SK.count_min_lookup(
-        cms, exact.select("token"), "token", depth=_CMS_DEPTH, width=_CMS_WIDTH, seed=_CMS_SEED
+        cms, exact.select("token"), "token", width=_CMS_WIDTH, seed=_CMS_SEED
     )
     return (
         exact.join(est, on="token")
@@ -1007,8 +995,7 @@ def cms_day_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()  # feeds the sketch build AND the exact rollup
     )
     cms_daily = SK.count_min_table(
-        daily, "item", "n", depth=_CMS_DEPTH, width=_CMS_DAY_WIDTH, seed=_CMS_DAY_SEED,
-        keys=["day"],
+        daily, "item", "n", width=_CMS_DAY_WIDTH, seed=_CMS_DAY_SEED, keys=["day"]
     )
     merged = SK.count_min_merge(cms_daily.filter(F.col("day") <= "2024-01-15"))
     exact = (
@@ -1017,8 +1004,7 @@ def cms_day_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("n").cast("bigint").alias("exact_cnt"))
     )
     est = SK.count_min_lookup(
-        merged, exact.select("item"), "item",
-        depth=_CMS_DEPTH, width=_CMS_DAY_WIDTH, seed=_CMS_DAY_SEED,
+        merged, exact.select("item"), "item", width=_CMS_DAY_WIDTH, seed=_CMS_DAY_SEED
     )
     return (
         exact.join(est, on="item")
@@ -1031,13 +1017,6 @@ def cms_day_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("exact_cnt"), "user_id")
         .limit(10)
     )
-
-
-# The KMV sample size both overlap queries share with their oracles, and
-# the seed of sketches.portable_hash64 (its default), which the oracles
-# replay as two LCG affine maps.
-_KMV_K = 32
-_HASH64_SEED = 83
 
 
 def _kmv_oracle_sql() -> str:
@@ -1110,9 +1089,8 @@ def kmv_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch-sized rows. Estimators are Beyer et al. 2007; with fewer than
     k distinct hashes the merged sample is the exact set (the sf0.001
     fixture exercises that regime, sf0.01+ the estimating one)."""
-    k = _KMV_K
     ev = load_table(spark, sf_dir, "events")
-    sk = SK.kmv_sketches(ev, "event_type", "user_id", k=k).localCheckpoint()
+    sk = SK.kmv_sketches(ev, "event_type", "user_id").localCheckpoint()
     a, b = sk.alias("a"), sk.alias("b")
     pairs = (
         a.join(b, F.col("a.event_type") < F.col("b.event_type"))
@@ -1123,7 +1101,7 @@ def kmv_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.sample").alias("sb"),
         )
     )
-    est = SK.kmv_union_intersection(pairs, "sa", "sb", k=k)
+    est = SK.kmv_union_intersection(pairs, "sa", "sb")
     du = ev.select("event_type", "user_id").distinct().localCheckpoint()
     xa, xb = du.alias("xa"), du.alias("xb")
     ex = (
@@ -1240,12 +1218,11 @@ def kmv_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor and estimate to 0 (measured: union rel-err 15% mean at k=32;
     the 2.6%-overlap fixture pairs read 0) — raise k, or use the exact
     `benchmark_decontamination` path, when small overlaps matter."""
-    k = _KMV_K
     docs = spread(load_table(spark, sf_dir, "documents"))
     grams = docs.select(
         "source", F.explode(TX.word_ngrams(F.col("text"), 3)).alias("gram")
     )
-    sk = SK.kmv_sketches(grams, "source", "gram", k=k).localCheckpoint()
+    sk = SK.kmv_sketches(grams, "source", "gram").localCheckpoint()
     a, b = sk.alias("a"), sk.alias("b")
     pairs = a.join(b, F.col("a.source") < F.col("b.source")).select(
         F.col("a.source").alias("source_a"),
@@ -1253,7 +1230,7 @@ def kmv_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.sample").alias("sa"),
         F.col("b.sample").alias("sb"),
     )
-    est = SK.kmv_union_intersection(pairs, "sa", "sb", k=k)
+    est = SK.kmv_union_intersection(pairs, "sa", "sb")
     du = grams.distinct().localCheckpoint()
     xa, xb = du.alias("xa"), du.alias("xb")
     ex = (
@@ -1286,11 +1263,6 @@ def kmv_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             r4(F.col("intersection_est")).alias("intersection_est"),
         )
     )
-
-
-# The Bloom filter bloom_semi_prune shares with its oracle: 4096 bits, 3
-# hashes from LCG seed 101.
-_BLOOM_M, _BLOOM_K, _BLOOM_SEED = 4096, 3, 101
 
 
 def _bloom_oracle_sql() -> str:
@@ -1337,15 +1309,13 @@ def bloom_semi_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p_partkey").cast("string").alias("key"))
         .distinct()
     )
-    bits = SK.bloom_bits(part, "key", m=_BLOOM_M, k=_BLOOM_K, seed=_BLOOM_SEED)
+    bits = SK.bloom_bits(part, "key")
     keys = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_partkey").cast("string").alias("key"))
         .distinct()
     )
-    probed = SK.bloom_contains(
-        spread(keys), "key", bits, m=_BLOOM_M, k=_BLOOM_K, seed=_BLOOM_SEED
-    )
+    probed = SK.bloom_contains(spread(keys), "key", bits)
     truth = part.withColumn("_t", F.lit(1))
     return (
         probed.join(dim_hint(truth, bounded=False), on="key", how="left")

@@ -29,7 +29,7 @@ from graph_db_spark.plans.families.q00_base import (
     ORACLE_SQL, _fmt_ts, _poly_sql, _run_batched_stream, _scratch_dir, r4, register,
 )
 from graph_db_spark.plans.families.q01_relational_pipeline import (
-    _MINHASH_BANDS, _MINHASH_HASHES, _SW_SQL,
+    _SW_SQL,
 )
 from graph_db_spark.plans.families.q03_dedup_bounds_gate import _metric_rows, _minhash_band_sql
 from graph_db_spark.streaming import jobs as STRM
@@ -1196,10 +1196,7 @@ def dedup_skewed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_SKEW_TEMPLATE).alias("text"),
     )
     corpus = docs.unionByName(skew)
-    out = near_dup_clusters(
-        corpus, "text", "doc_id", threshold=0.6, num_hashes=_MINHASH_HASHES,
-        bands=_MINHASH_BANDS, max_task_pairs=2000,
-    )
+    out = near_dup_clusters(corpus, "text", "doc_id", max_task_pairs=2000)
     sizes = out.groupBy("canonical_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
@@ -1657,7 +1654,12 @@ def truss_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_communities"))
 
 
-_CURATED_ORACLE = f"""
+def _curation_oracle(tail: str) -> str:
+    """The CTEs both curation oracles share: MinHash-LSH candidates, the
+    Jaccard verify and recursive closure that pick the near-dup drops,
+    and the quality score with its per-source median. ``tail`` holds the
+    CTEs and final SELECT that read them."""
+    return f"""
     WITH RECURSIVE {_minhash_band_sql()},
     vtoks AS (
       SELECT doc_id,
@@ -1695,13 +1697,13 @@ _CURATED_ORACLE = f"""
       SELECT doc_id, source, n_chars, text,
              len(list_distinct(list_intersect(
                list_distinct(string_split_regex(lower(trim(text)), '\\s+')),
-               {{sw_en}}))) AS h_en,
+               {_SW_SQL['en']}))) AS h_en,
              len(list_distinct(list_intersect(
                list_distinct(string_split_regex(lower(trim(text)), '\\s+')),
-               {{sw_es}}))) AS h_es,
+               {_SW_SQL['es']}))) AS h_es,
              len(list_distinct(list_intersect(
                list_distinct(string_split_regex(lower(trim(text)), '\\s+')),
-               {{sw_de}}))) AS h_de,
+               {_SW_SQL['de']}))) AS h_de,
              len(string_split_regex(lower(trim(text)), '\\s+')) AS n_tok
       FROM keepd
     ),
@@ -1714,7 +1716,10 @@ _CURATED_ORACLE = f"""
       FROM hq
     ),
     med AS (SELECT source, quantile_cont(quality, 0.5) AS m FROM q GROUP BY 1),
-    kept AS (
+{tail}"""
+
+
+_CURATED_ORACLE = _curation_oracle(f"""    kept AS (
       SELECT q.* FROM q JOIN med ON med.source = q.source WHERE q.quality >= med.m
     ),
     final AS (
@@ -1728,10 +1733,10 @@ _CURATED_ORACLE = f"""
     SELECT source, split, CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS sum_chars
     FROM final GROUP BY 1, 2
-""".replace("{sw_en}", _SW_SQL["en"]).replace("{sw_es}", _SW_SQL["es"]).replace("{sw_de}", _SW_SQL["de"])
+""")
 
 
-_PROVENANCE_ORACLE = _CURATED_ORACLE[: _CURATED_ORACLE.index("    kept AS (")] + f"""    cls AS (
+_PROVENANCE_ORACLE = _curation_oracle(f"""    cls AS (
       SELECT d.doc_id, d.source,
              CASE
                WHEN d.doc_id IN (SELECT id FROM drops) THEN 'near_dup'
@@ -1745,6 +1750,6 @@ _PROVENANCE_ORACLE = _CURATED_ORACLE[: _CURATED_ORACLE.index("    kept AS (")] +
     )
     SELECT source, stage, CAST(count(*) AS BIGINT) AS n_docs
     FROM cls GROUP BY 1, 2
-"""
+""")
 
 

@@ -32,7 +32,7 @@ from graph_db_spark.plans.families.q00_base import (
     _run_batched_stream, _scratch_dir, _touch_pairs_table, r4, register,
 )
 from graph_db_spark.plans.families.q01_relational_pipeline import (
-    _MINHASH_BANDS, _MINHASH_HASHES, _graph_nparts,
+    _graph_nparts,
 )
 from graph_db_spark.plans.families.q03_dedup_bounds_gate import _metric_rows
 from graph_db_spark.plans.families.q05_scd2_graph_ivm import _CURATED_ORACLE, _PROVENANCE_ORACLE
@@ -54,9 +54,7 @@ def curation_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Σ stages = |docs| per source). Shares every verified stage operator
     with the capstone; the oracle shares its CTE prefix literally."""
     docs = load_table(spark, sf_dir, "documents")
-    clusters = near_dup_clusters(
-        docs, "text", "doc_id", threshold=0.6, num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS
-    )
+    clusters = near_dup_clusters(docs, "text", "doc_id")
     drops = clusters.filter(~F.col("is_canonical")).select(
         F.col("id").cast("bigint").alias("doc_id"), F.lit(1).alias("_dropped")
     )
@@ -101,9 +99,7 @@ def curated_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     four-stage hand-off — including exactly WHICH docs each stage drops
     — is hash-checked end to end."""
     docs = load_table(spark, sf_dir, "documents")
-    clusters = near_dup_clusters(
-        docs, "text", "doc_id", threshold=0.6, num_hashes=_MINHASH_HASHES, bands=_MINHASH_BANDS
-    )
+    clusters = near_dup_clusters(docs, "text", "doc_id")
     drops = clusters.filter(~F.col("is_canonical")).select(
         F.col("id").cast("bigint").alias("doc_id")
     )

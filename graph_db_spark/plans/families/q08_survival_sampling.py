@@ -14,7 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from graph_db_spark.graph.algorithms import boruvka_forest, core_decomposition, luby_mis
+from graph_db_spark.graph.algorithms import (
+    _BORUVKA_ROUNDS, _CORENESS_ROUNDS, _LUBY_ROUNDS, boruvka_forest, core_decomposition, luby_mis,
+)
 from graph_db_spark.graph.build import (
     cooccurrence_edges, cooccurrence_edges_sql, purchase_edges, purchase_edges_sql, trade_edges,
     trade_edges_sql,
@@ -24,18 +26,17 @@ from graph_db_spark.operators import similarity as SIM
 from graph_db_spark.operators.aggregates import with_global_rank
 from graph_db_spark.operators.dedup import _MINHASH_P, minhash_params, portable_hash
 from graph_db_spark.operators.dedup import prefix_filter_jaccard as ppj  # a query shares the name
-from graph_db_spark.operators.drift import holt_linear
+from graph_db_spark.operators.drift import _HOLT_ALPHA, _HOLT_BETA, _HOLT_HORIZON, holt_linear
 from graph_db_spark.operators.joins import dim_hint
-from graph_db_spark.operators.sketches import count_min_inner_product, count_min_table
+from graph_db_spark.operators.sketches import _CMS_DEPTH, count_min_inner_product, count_min_table
+from graph_db_spark.operators.text import _WP_MAX_LEN, _WP_VOCAB
 from graph_db_spark.operators.text import wordpiece_vocab_segment as wps  # a query shares the name
 from graph_db_spark.plans.families.q00_base import (
     _cohort_risk, _cohort_risk_sql, _conversion_obs, _conversion_obs_sql, _oriented_triangles,
     _oriented_triangles_sql, _poly_sql, _scratch_dir, r4, register,
 )
-from graph_db_spark.plans.families.q01_relational_pipeline import (
-    _IVF_CENTROIDS, _IVF_ITERS, _ivf_training_sql,
-)
-from graph_db_spark.plans.families.q03_dedup_bounds_gate import _CMS_DEPTH, _CMS_SEED, _CMS_WIDTH
+from graph_db_spark.plans.families.q01_relational_pipeline import _ivf_training_sql
+from graph_db_spark.plans.families.q03_dedup_bounds_gate import _CMS_SEED, _CMS_WIDTH
 from graph_db_spark.tables import load_table
 from graph_db_spark.util import spread
 from graph_db_spark.writers.snapshots import (
@@ -407,10 +408,6 @@ def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Luby MIS rounds, shared by the Spark run and the unrolled oracle.
-_LUBY_ROUNDS = 6
-
-
 def _luby_sql() -> str:
     """DuckDB replay of graph/algorithms.py:luby_mis on the
     customer–supplier bipartite trade graph: identical padded-string
@@ -470,7 +467,7 @@ def maximal_independent_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(log n) round bound while making every run (and the oracle replay)
     bit-identical."""
     e = trade_edges(spark, sf_dir)
-    mis = luby_mis(e, rounds=_LUBY_ROUNDS).localCheckpoint(eager=True)
+    mis = luby_mis(e).localCheckpoint(eager=True)
     rows = []
     for r in list(range(1, _LUBY_ROUNDS + 1)) + [-1]:
         sub = mis.filter(F.col("round") == r)
@@ -529,9 +526,8 @@ def sampled_triangle_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# WordPiece's longest piece and vocab size, shared with its oracle, and
-# the number of top pieces the query reports.
-_WP_MAX_LEN, _WP_VOCAB, _WP_TOPK = 4, 200, 30
+# The number of top WordPiece pieces the query reports.
+_WP_TOPK = 30
 
 
 def _wordpiece_sql() -> str:
@@ -604,7 +600,7 @@ def wordpiece_vocab_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainers (SentencePiece unigram) are out of scope by design (their
     argmax ties are not replayable cross-engine)."""
     docs = load_table(spark, sf_dir, "documents")
-    seg = wps(docs, "text", max_piece_len=_WP_MAX_LEN, vocab_size=_WP_VOCAB)
+    seg = wps(docs)
     return (
         seg.groupBy("piece")
         .agg(F.sum("freq").cast("bigint").alias("usage"))
@@ -671,8 +667,8 @@ def cms_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
         ca.join(cb.select(F.col("k"), F.col("c").alias("cb")), on="k")
         .agg(F.coalesce(F.sum(F.col("c") * F.col("cb")), F.lit(0)).alias("v"))
     )
-    cms_a = count_min_table(ca, "k", "c", depth=_CMS_DEPTH, width=_CMS_WIDTH, seed=_CMS_SEED)
-    cms_b = count_min_table(cb, "k", "c", depth=_CMS_DEPTH, width=_CMS_WIDTH, seed=_CMS_SEED)
+    cms_a = count_min_table(ca, "k", "c", width=_CMS_WIDTH, seed=_CMS_SEED)
+    cms_b = count_min_table(cb, "k", "c", width=_CMS_WIDTH, seed=_CMS_SEED)
     est = count_min_inner_product(cms_a, cms_b)
     return exact.crossJoin(est).select(
         F.col("v").cast("bigint").alias("exact_join_size"),
@@ -776,10 +772,6 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Holt's smoothing weights and forecast horizon, shared with its oracle.
-_HOLT_ALPHA, _HOLT_BETA, _HOLT_HORIZON = 0.5, 0.3, 3
-
-
 def _holt_sql() -> str:
     """Recursive-CTE replay of drift.holt_fold over the per-type daily
     series (the CUSUM-oracle pattern): identical coefficient doubles
@@ -825,9 +817,7 @@ def holt_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ev.groupBy(
         "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
     ).agg(F.sum("value").alias("x"))
-    out = holt_linear(
-        d, "event_type", "day", "x", alpha=_HOLT_ALPHA, beta=_HOLT_BETA, horizon=_HOLT_HORIZON
-    )
+    out = holt_linear(d, "event_type", "day", "x")
     return out.select(
         F.col("key").alias("event_type"),
         F.col("n_obs").alias("n_days"),
@@ -873,7 +863,7 @@ def prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs verify, exact at checker scale; output is pure integers
     (inter, uni) so the hash has no float surface at all."""
     docs = load_table(spark, sf_dir, "documents")
-    out = ppj(docs, "text", "doc_id", num=7, den=10, shingle_n=3)
+    out = ppj(docs)
     return out.select(
         "doc_a", "doc_b",
         F.col("inter").cast("bigint").alias("inter"),
@@ -956,9 +946,7 @@ def label_noise_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data pipeline runs before trusting its classification
     labels; cluster-bounded, no pair join — the SemDeDup cost shape."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = SIM.ivf_centroids(
-        emb, "embedding", "vec_id", n_centroids=_IVF_CENTROIDS, lloyd_iters=_IVF_ITERS
-    )
+    cents = SIM.ivf_centroids(emb)
     asg = SIM.ivf_assign(emb, cents).select("id", "cluster")
     lab = asg.join(
         emb.select(F.col("vec_id").alias("id"), "label"), on="id"
@@ -1426,10 +1414,6 @@ def moments_rollup_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Borůvka rounds, shared by the Spark run and the unrolled oracle.
-_BORUVKA_ROUNDS = 4
-
-
 def _boruvka_sql() -> str:
     """DuckDB replay of graph/algorithms.py:boruvka_forest on the
     order-count-weighted trade graph: per round the contraction join,
@@ -1518,7 +1502,7 @@ def boruvka_spanning_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
         eb.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
     )
     rounds = _BORUVKA_ROUNDS
-    forest, lab = boruvka_forest(e, rounds=rounds)
+    forest, lab = boruvka_forest(e)
     frames = []
     for r in range(1, rounds + 1):
         sub = forest.filter(F.col("round") == r)
@@ -1652,10 +1636,6 @@ def bitemporal_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res
 
 
-# Core-decomposition rounds, shared by the Spark run and the unrolled oracle.
-_CORENESS_ROUNDS = 8
-
-
 def _coreness_sql() -> str:
     """DuckDB replay of graph/algorithms.py:core_decomposition: degree
     init, ``_CORENESS_ROUNDS`` unrolled h-index contractions (rank-desc window +
@@ -1700,7 +1680,7 @@ def core_decomposition_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins to 0 — machine-checked proof the truncated propagation REACHED
     the fixpoint, not an assumed convergence."""
     e = trade_edges(spark, sf_dir)
-    cd = core_decomposition(e, rounds=_CORENESS_ROUNDS).localCheckpoint(eager=True)
+    cd = core_decomposition(e).localCheckpoint(eager=True)
     hist = cd.groupBy(F.col("coreness").cast("bigint").alias("coreness")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes")
     )

@@ -16,10 +16,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graph_db_spark.graph.algorithms import (
-    brandes_betweenness, deterministic_walks, prepartition_for_rounds, shortest_paths,
+    _BRANDES_DEPTH, brandes_betweenness, deterministic_walks, prepartition_for_rounds,
+    shortest_paths,
 )
 from graph_db_spark.graph.build import trade_edges, trade_edges_sql
 from graph_db_spark.operators import similarity as SIM
+from graph_db_spark.operators.similarity import _KCENTER_K
 from graph_db_spark.operators.aggregates import with_global_rank
 from graph_db_spark.operators.dedup import _MINHASH_P, minhash_params, portable_hash
 from graph_db_spark.operators.hierarchy import subtree_rollup
@@ -269,10 +271,6 @@ def landmark_distance_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Brandes BFS depth, shared with its replay.
-_BRANDES_DEPTH = 4
-
-
 def _brandes_sql() -> str:
     """DuckDB replay of graph/algorithms.py:brandes_betweenness on the
     customer–supplier bipartite trade graph, sources C:{1,7,13}: forward
@@ -343,7 +341,7 @@ def betweenness_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources = load_table(spark, sf_dir, "customer").filter(
         F.col("c_custkey").isin(1, 7, 13)
     ).select(F.concat(F.lit("C:"), F.col("c_custkey").cast("string")).alias("id"))
-    bc = brandes_betweenness(e, sources, depth=_BRANDES_DEPTH)
+    bc = brandes_betweenness(e, sources)
     scored = bc.select("id", r4(F.col("bc")).alias("bc"))
     return scored.orderBy(F.desc("bc"), "id").limit(20)
 
@@ -446,10 +444,6 @@ def hierarchy_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Centers the greedy k-center coreset picks, shared with its replay.
-_KCENTER_K = 8
-
-
 def _kcenter_sql() -> str:
     """DuckDB replay of similarity.kcenter_select: seed = smallest id,
     then ``_KCENTER_K`` chained (argmax, fold-min) CTE pairs using the SAME
@@ -498,7 +492,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone radii that certify the 2-approximation. k+1 narrow scans,
     no shuffle; the oracle replays every fold exactly."""
     emb = load_table(spark, sf_dir, "embeddings")
-    out = SIM.kcenter_select(emb, "embedding", "vec_id", k=_KCENTER_K)
+    out = SIM.kcenter_select(emb, "embedding", "vec_id")
     return out.select("round", "id", r4(F.col("sep")).alias("sep"))
 
 

@@ -21,8 +21,8 @@ from graph_db_spark.graph.build import build_graph, edges_sql
 from graph_db_spark.operators import similarity as SIM
 from graph_db_spark.operators.aggregates import with_global_rank
 from graph_db_spark.operators.joins import dim_hint
+from graph_db_spark.operators.similarity import _EMB_DIM
 from graph_db_spark.plans.families.q00_base import r4, register
-from graph_db_spark.plans.families.q01_relational_pipeline import _EMB_DIM
 from graph_db_spark.tables import load_table
 
 

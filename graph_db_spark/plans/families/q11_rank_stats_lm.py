@@ -502,7 +502,7 @@ def ndcg_label_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS gold,
              CASE WHEN len(list_distinct(list_intersect(
                     list_distinct(string_split_regex(lower(trim(text)), '\\s+')),
-                    {{sw_en}}))) >= 2 THEN 1 ELSE 0 END AS pred
+                    {_SW_SQL['en']}))) >= 2 THEN 1 ELSE 0 END AS pred
       FROM documents
     ),
     ct AS (
@@ -522,7 +522,7 @@ def ndcg_label_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / (1.0 - ((a + b) * (a + c) + (c + d) * (b + d)) / (n * n)),
                  4) + 0.0 AS cohens_kappa
     FROM ct
-    """.format(sw_en=_SW_SQL["en"]),
+    """,
 )
 def cohens_kappa_raters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Annotation QA — Cohen's κ between the gold language label and the

@@ -12,12 +12,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graph_db_spark.operators import similarity as SIM
+from graph_db_spark.operators.similarity import _IVF_ITERS, _IVF_NPROBE
 from graph_db_spark.plans.families.q00_base import (
     _conversion_obs, _conversion_obs_sql, r4, register,
 )
-from graph_db_spark.plans.families.q01_relational_pipeline import (
-    _IVF_ITERS, _IVF_NPROBE, _ivf_training_sql,
-)
+from graph_db_spark.plans.families.q01_relational_pipeline import _ivf_training_sql
 from graph_db_spark.tables import load_table
 
 

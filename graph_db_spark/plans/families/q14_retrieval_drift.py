@@ -13,9 +13,6 @@ from pyspark.sql import functions as F
 from graph_db_spark.operators import similarity as SIM
 from graph_db_spark.operators.joins import dim_hint
 from graph_db_spark.plans.families.q00_base import r4, register
-from graph_db_spark.plans.families.q01_relational_pipeline import (
-    _IVF_CENTROIDS, _IVF_ITERS, _IVF_NPROBE,
-)
 from graph_db_spark.plans.families.q13_tsa_retrieval import _MRR_K, _mrr_ivf_oracle_sql
 from graph_db_spark.tables import load_table
 
@@ -28,7 +25,7 @@ def mrr_hit_at_k_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the retrieval-eval family, like dedup, now holds BOTH an exact
     baseline and a bucketed scale path (r10 verdict item 6). The eval
     pair space is one equi-join on cluster id — candidates per query
-    are corpus·nprobe/n_centroids, tuned without touching the plan —
+    are corpus·_IVF_NPROBE/_IVF_CENTROIDS (operators/similarity.py) —
     where the brute baseline's is corpus². The exact brute leg is kept
     ONLY to certify the contract: `mrr_bound_ok` asserts the IVF MRR
     keeps ≥70% of the exact MRR overall (bound chosen under the
@@ -40,10 +37,7 @@ def mrr_hit_at_k_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checks the approximate result end to end."""
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") % 5 == 0)
-    ivf = SIM.cosine_topk_ivf(
-        emb, qs, k=_MRR_K, n_centroids=_IVF_CENTROIDS, nprobe=_IVF_NPROBE,
-        lloyd_iters=_IVF_ITERS,
-    )
+    ivf = SIM.cosine_topk_ivf(emb, qs, k=_MRR_K)
     lab = emb.select(
         F.col("vec_id").alias("nid2"), F.col("label").alias("nlabel2")
     )

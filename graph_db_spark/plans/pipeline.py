@@ -415,9 +415,7 @@ def product_applications(ctx: Context, application_events: DataFrame) -> DataFra
     matched = inv.join(ae, inv["order_ref"] == ae["ae_order_ref"], "inner")
     # full deterministic order: the fixtures contain duplicate (order, line)
     # rows, so linenumber alone would assign idx arbitrarily among dups
-    out = A.running_index(
-        matched, ["application_event_id"], ["line_no", "partkey", "amount"], idx_name="idx"
-    )
+    out = A.running_index(matched, ["application_event_id"], ["line_no", "partkey", "amount"])
     return out.select(
         "application_event_id", "idx", "partkey", "amount",
         node_id("product_applications").alias("product_application_id"),

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from graph_db_spark.graph import algorithms
 from graph_db_spark.graph.algorithms import (
     connected_components,
     pagerank,
@@ -30,23 +31,25 @@ def test_connected_components_chain_converges(spark):
     assert out == {"n0"}
 
 
-def test_connected_components_unconverged_raises(spark):
+def test_connected_components_unconverged_raises(spark, monkeypatch):
     # a 3-hop chain cannot converge in one round → raises (VERDICT r2 #5:
     # never silent)
     import pytest
 
     e = edges_of(spark, [("n0", "n1"), ("n1", "n2"), ("n2", "n3")])
+    monkeypatch.setattr(algorithms, "_CC_MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(e, max_iter=1)
+        connected_components(e)
 
 
-def test_connected_components_pointer_jump_deep_chain(spark):
+def test_connected_components_pointer_jump_deep_chain(spark, monkeypatch):
     # 40-hop chain: after 8 plain rounds, pointer jumping doubles the
     # horizon per round, so it converges well before 40 plain-propagation
     # rounds
     pairs = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(40)]
     e = edges_of(spark, pairs)
-    out = {r["component"] for r in connected_components(e, max_iter=12).collect()}
+    monkeypatch.setattr(algorithms, "_CC_MAX_ROUNDS", 12)
+    out = {r["component"] for r in connected_components(e).collect()}
     assert out == {"n00"}
 
 
@@ -82,7 +85,7 @@ def test_pagerank_dangling_mass(spark):
     assert abs(sum(ranks.values()) - 1.0) < 1e-6
 
 
-def test_pagerank_warns_when_unconverged(spark):
+def test_pagerank_warns_when_unconverged(spark, monkeypatch):
     """r11 verdict item 1: a deliberately deep graph cut off early must
     emit the CC-style warn (plausible-but-unconverged ranks), and the
     SAME graph with enough rounds must stay silent — and the emitted
@@ -99,13 +102,12 @@ def test_pagerank_warns_when_unconverged(spark):
         isinstance(x.message, RuntimeWarning) and "still moving" in str(x.message)
         for x in w
     ), [str(x.message) for x in w]
-    # tightening tol to force the warn must not perturb a single value
-    with warnings.catch_warnings(record=True):
+    # loosening the tolerance to silence the warn must not perturb a
+    # single value
+    with warnings.catch_warnings(record=True), monkeypatch.context() as m:
+        m.setattr(algorithms, "_PR_TOL", 1e12)
         warnings.simplefilter("always")
-        early2 = {
-            r["id"]: r["rank"]
-            for r in pagerank(e, max_iter=2, tol=1e12).collect()
-        }
+        early2 = {r["id"]: r["rank"] for r in pagerank(e, max_iter=2).collect()}
     assert early == early2
     # a converged run (star graph, plenty of rounds) stays silent
     star = edges_of(spark, [("a", "hub"), ("b", "hub"), ("c", "hub"), ("hub", "a")])
@@ -117,7 +119,7 @@ def test_pagerank_warns_when_unconverged(spark):
     ]
 
 
-def test_ppr_warns_when_unconverged(spark):
+def test_ppr_warns_when_unconverged(spark, monkeypatch):
     import warnings
 
     pairs = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(60)]
@@ -125,14 +127,16 @@ def test_ppr_warns_when_unconverged(spark):
     src = e.sparkSession.createDataFrame([("n00",)], "id string")
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        personalized_pagerank(e, src, max_iter=2).collect()
+        monkeypatch.setattr(algorithms, "_PR_ITERS", 2)
+        personalized_pagerank(e, src, None).collect()
     assert any(
         isinstance(x.message, RuntimeWarning) and "still moving" in str(x.message)
         for x in w
     ), [str(x.message) for x in w]
     with warnings.catch_warnings(record=True) as w2:
         warnings.simplefilter("always")
-        personalized_pagerank(e, src, max_iter=90).collect()
+        monkeypatch.setattr(algorithms, "_PR_ITERS", 90)
+        personalized_pagerank(e, src, None).collect()
     assert not [x for x in w2 if isinstance(x.message, RuntimeWarning)], [
         str(x.message) for x in w2
     ]
@@ -224,7 +228,7 @@ def test_k_core_peels_cascade(spark):
     assert k_core(e, 1).count() == 6
 
 
-def test_personalized_pagerank_localizes_to_sources(spark):
+def test_personalized_pagerank_localizes_to_sources(spark, monkeypatch):
     """Restarting at a source set keeps rank near it: mass sums to 1,
     sources outrank a far-away sink, and unreachable vertices get 0."""
     from graph_db_spark.graph.algorithms import personalized_pagerank
@@ -232,24 +236,27 @@ def test_personalized_pagerank_localizes_to_sources(spark):
     # two islands: a->b->c cycle-ish, and x->y disconnected from sources
     e = edges_of(spark, [("a", "b"), ("b", "c"), ("c", "a"), ("x", "y")])
     src = spark.createDataFrame([("a",)], "id string")
-    ranks = {r["id"]: r["rank"] for r in personalized_pagerank(e, src, max_iter=20).collect()}
+    monkeypatch.setattr(algorithms, "_PR_ITERS", 20)
+    ranks = {r["id"]: r["rank"] for r in personalized_pagerank(e, src, None).collect()}
     assert abs(sum(ranks.values()) - 1.0) < 1e-6
     assert ranks["x"] == 0.0 and ranks["y"] == 0.0  # unreachable from a
     assert ranks["a"] > ranks["c"] > 0  # proximity ordering from the seed
     import pytest
 
     with pytest.raises(ValueError, match="non-empty"):
-        personalized_pagerank(e, src.filter("id = 'zz'"))
+        personalized_pagerank(e, src.filter("id = 'zz'"), None)
     # a seed absent from the edge list is a dangling vertex that must
     # still hold its restart mass (review finding: it was silently
     # dropped, returning all-zero ranks)
     lone = spark.createDataFrame([("ghost",)], "id string")
-    ranks = {r["id"]: r["rank"] for r in personalized_pagerank(e, lone, max_iter=5).collect()}
+    monkeypatch.setattr(algorithms, "_PR_ITERS", 5)
+    ranks = {r["id"]: r["rank"] for r in personalized_pagerank(e, lone, None).collect()}
     assert abs(ranks["ghost"] - 1.0) < 1e-9
     assert abs(sum(ranks.values()) - 1.0) < 1e-9
     # mixed set: half the restart mass sits on the edgeless seed
     mixed = spark.createDataFrame([("a",), ("ghost",)], "id string")
-    ranks = {r["id"]: r["rank"] for r in personalized_pagerank(e, mixed, max_iter=10).collect()}
+    monkeypatch.setattr(algorithms, "_PR_ITERS", 10)
+    ranks = {r["id"]: r["rank"] for r in personalized_pagerank(e, mixed, None).collect()}
     assert abs(sum(ranks.values()) - 1.0) < 1e-6
     assert ranks["ghost"] > 0
 
@@ -271,7 +278,7 @@ def test_weighted_paths_bounded_by_hops(spark, sf_dir):
         (portable_hash(F.concat_ws("|", F.col("src"), F.col("dst"))) % 9 + 1).alias("weight"),
     )
     hops = shortest_paths(g.edges, lms).select("id", F.col("dist").alias("hops"))
-    wdist = weighted_shortest_paths(e, lms).select("id", "dist")
+    wdist = weighted_shortest_paths(e, lms, None).select("id", "dist")
     j = hops.join(wdist, on="id", how="full_outer")
     assert j.filter(F.col("hops").isNull() | F.col("dist").isNull()).count() == 0
     bad = j.filter((F.col("dist") < F.col("hops")) | (F.col("dist") > 9 * F.col("hops"))).count()
@@ -344,7 +351,7 @@ def test_find_props_projection(spark):
         g.find("(x)-[:R]->(y)", props={"z": ["name"]})
 
 
-def test_shortest_path_tree_min_parent_deterministic(spark):
+def test_shortest_path_tree_min_parent_deterministic(spark, monkeypatch):
     """Parent = min id among same-depth predecessors; unreachable nodes
     absent; non-converging raises."""
     import pytest
@@ -355,14 +362,15 @@ def test_shortest_path_tree_min_parent_deterministic(spark):
         spark,
         [("s", "a"), ("s", "b"), ("a", "t"), ("b", "t"), ("t", "z"), ("x", "y")],
     )
-    tree = {r["id"]: (r["dist"], r["parent"]) for r in shortest_path_tree(e, "s").collect()}
+    tree = {r["id"]: (r["dist"], r["parent"]) for r in shortest_path_tree(e, "s", None).collect()}
     assert tree == {
         "s": (0, None), "a": (1, "s"), "b": (1, "s"),
         "t": (2, "a"),  # min("a","b") deterministic
         "z": (3, "t"),
     }
+    monkeypatch.setattr(algorithms, "_SPT_MAX_ROUNDS", 2)
     with pytest.raises(RuntimeError, match="did not converge"):
-        shortest_path_tree(e, "s", max_iter=2)
+        shortest_path_tree(e, "s", None)
 
 
 def test_harmonic_centrality_matches_bruteforce(spark):
@@ -453,7 +461,7 @@ def test_scc_trim_and_fwbw_match_bruteforce(spark):
     assert got == want, (got, want)
 
 
-def test_scc_raises_past_max_rounds(spark):
+def test_scc_raises_past_max_rounds(spark, monkeypatch):
     """A chain of disjoint 2-cycles peels one SCC per round — exceeding
     max_rounds must raise, not return a partial labeling."""
     import pytest
@@ -465,9 +473,11 @@ def test_scc_raises_past_max_rounds(spark):
         a, b = f"x{i}", f"y{i}"
         pairs += [(a, b), (b, a)]
     e = spark.createDataFrame(pairs, "src string, dst string")
+    monkeypatch.setattr(algorithms, "_SCC_MAX_ROUNDS", 2)
     with pytest.raises(RuntimeError, match="did not converge"):
-        strongly_connected_components(e, max_rounds=2)
-    got = {r["id"]: r["scc"] for r in strongly_connected_components(e, max_rounds=10).collect()}
+        strongly_connected_components(e)
+    monkeypatch.setattr(algorithms, "_SCC_MAX_ROUNDS", 10)
+    got = {r["id"]: r["scc"] for r in strongly_connected_components(e).collect()}
     assert len(set(got.values())) == 5
 
 
@@ -515,7 +525,7 @@ def test_deterministic_walks_follow_hash_rule(spark):
     assert again == got
 
 
-def test_brandes_betweenness_matches_textbook(spark):
+def test_brandes_betweenness_matches_textbook(spark, monkeypatch):
     """Sampled-source betweenness == a plain-Python Brandes (BFS sigma +
     dependency accumulation) on a small undirected graph, for the same
     source set."""
@@ -557,15 +567,14 @@ def test_brandes_betweenness_matches_textbook(spark):
 
     e = spark.createDataFrame(sym, "src string, dst string")
     sdf = spark.createDataFrame([(s,) for s in srcs], "id string")
-    got = {
-        r["id"]: r["bc"] for r in brandes_betweenness(e, sdf, depth=6).collect()
-    }
+    monkeypatch.setattr(algorithms, "_BRANDES_DEPTH", 6)
+    got = {r["id"]: r["bc"] for r in brandes_betweenness(e, sdf).collect()}
     assert set(got) == {k for k in expect}
     for k, v in expect.items():
         assert abs(got[k] - v) < 1e-9, (k, got[k], v)
 
 
-def test_luby_mis_is_independent_and_maximal(spark):
+def test_luby_mis_is_independent_and_maximal(spark, monkeypatch):
     """MIS invariants on a random graph: no two members adjacent, every
     non-member (after convergence) has a member neighbor; matches the
     pure-python replay with the same hash priorities."""
@@ -582,7 +591,8 @@ def test_luby_mis_is_independent_and_maximal(spark):
     }
     sym = [(a, b) for a, b in und] + [(b, a) for a, b in und]
     e = spark.createDataFrame(sym, "src string, dst string")
-    got = {r["id"]: r["round"] for r in luby_mis(e, rounds=10).collect()}
+    monkeypatch.setattr(algorithms, "_LUBY_ROUNDS", 10)
+    got = {r["id"]: r["round"] for r in luby_mis(e).collect()}
     adj = {}
     for a, b in sym:
         adj.setdefault(a, set()).add(b)
@@ -614,7 +624,7 @@ def test_luby_mis_is_independent_and_maximal(spark):
     assert {v: r for v, r in got.items() if r != -1} == expect
 
 
-def test_core_decomposition_matches_exact_peel(spark):
+def test_core_decomposition_matches_exact_peel(spark, monkeypatch):
     """h-index propagation coreness == the textbook min-degree peel on a
     small graph; changed flags all False once converged."""
     from graph_db_spark.graph.algorithms import core_decomposition
@@ -627,9 +637,10 @@ def test_core_decomposition_matches_exact_peel(spark):
     ]
     sym = und + [(y, x) for x, y in und]
     e = spark.createDataFrame(sym, "src string, dst string")
+    monkeypatch.setattr(algorithms, "_CORENESS_ROUNDS", 10)
     got = {
         r["id"]: (r["coreness"], r["changed"])
-        for r in core_decomposition(e, rounds=10).collect()
+        for r in core_decomposition(e).collect()
     }
     # exact peel
     adj = {}
@@ -664,7 +675,7 @@ def test_boruvka_forest_matches_kruskal(spark):
     ]
     sym = und + [(b, a, w) for a, b, w in und]
     e = spark.createDataFrame(sym, "src string, dst string, w long")
-    forest, lab = boruvka_forest(e, rounds=4)
+    forest, lab = boruvka_forest(e)
     got = {(r["a"], r["b"], r["w"]) for r in forest.collect()}
 
     # Kruskal

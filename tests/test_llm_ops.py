@@ -44,21 +44,27 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert (1, 4) not in pairs and (4, 5) not in pairs  # unrelated docs don't
 
 
-def test_jaccard_pairs_exact_values(spark):
-    out = D.jaccard_pairs(docs_df(spark), "text", "doc_id", threshold=0.99)
+def test_jaccard_pairs_exact_values(spark, monkeypatch):
+    monkeypatch.setattr(D, "_JACCARD_THRESHOLD", 0.99)
+    # one block: jaccard_pairs blocks by lang
+    out = D.jaccard_pairs(docs_df(spark).withColumn("lang", F.lit("en")), "text", "doc_id")
     exact = {(r["id_a"], r["id_b"]) for r in out.collect()}
     assert exact == {(1, 2)}
 
 
-def test_jaccard_pairs_guard_trips_on_quadratic_block(spark):
+def test_jaccard_pairs_guard_trips_on_quadratic_block(spark, monkeypatch):
     # single-block corpus whose pair count exceeds the bound → refuse with
     # a pointer at the LSH-propose path (VERDICT r2 #6)
-    rows = [(i, f"doc number {i} words") for i in range(10)]  # 45 pairs
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    rows = [(i, f"doc number {i} words", "en") for i in range(10)]  # 45 pairs
+    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    monkeypatch.setattr(D, "_JACCARD_THRESHOLD", 0.5)
+    monkeypatch.setattr(D, "_MAX_BLOCK_PAIRS", 10)
     with pytest.raises(ValueError, match="minhash_lsh_candidates"):
-        D.jaccard_pairs(df, "text", "doc_id", threshold=0.5, max_block_pairs=10)
+        D.jaccard_pairs(df, "text", "doc_id")
     # same corpus under the bound still runs
-    assert D.jaccard_pairs(df, "text", "doc_id", threshold=0.99, max_block_pairs=100).count() == 0
+    monkeypatch.setattr(D, "_JACCARD_THRESHOLD", 0.99)
+    monkeypatch.setattr(D, "_MAX_BLOCK_PAIRS", 100)
+    assert D.jaccard_pairs(df, "text", "doc_id").count() == 0
 
 
 def test_simhash_identical_and_near(spark):
@@ -70,7 +76,7 @@ def test_simhash_identical_and_near(spark):
     assert ham_near < ham_far  # near-dup closer in Hamming space
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in D.simhash_near_dups(docs_df(spark), "text", "doc_id", max_hamming=3).collect()
+        for r in D.simhash_near_dups(docs_df(spark), "text", "doc_id").collect()
     }
     assert pairs[(1, 2)] == 0
 
@@ -86,25 +92,27 @@ def emb_df(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_cosine_topk_bruteforce(spark):
+def test_cosine_topk_bruteforce(spark, monkeypatch):
     df = emb_df(spark)
-    out = SIM.cosine_topk(df, df.filter(F.col("vec_id") == 0), k=2).collect()
+    monkeypatch.setattr(SIM, "_ANN_K", 2)
+    out = SIM.cosine_topk(df, df.filter(F.col("vec_id") == 0)).collect()
     ranked = [r["neighbor_id"] for r in sorted(out, key=lambda r: r["rank"])]
     assert ranked == [1, 2]  # nearest is 1; 4 (opposite) must be last, not in top2
 
 
-def test_lsh_ann_recall_against_bruteforce(spark, sf_dir):
+def test_lsh_ann_recall_against_bruteforce(spark, sf_dir, monkeypatch):
     from graph_db_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
+    monkeypatch.setattr(SIM, "_ANN_K", 3)
     exact = {
         (r["query_id"], r["neighbor_id"])
-        for r in SIM.cosine_topk(emb, q, k=3).collect()
+        for r in SIM.cosine_topk(emb, q).collect()
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in SIM.cosine_topk_lsh(emb, q, dim=64, k=3, n_planes=4, n_tables=16).collect()
+        for r in SIM.cosine_topk_lsh(emb, q).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.6  # 16-table 4-plane LSH (measured 0.93 on fixtures)
@@ -112,63 +120,54 @@ def test_lsh_ann_recall_against_bruteforce(spark, sf_dir):
     assert all(qid < 5 for qid, _ in approx)
 
 
-def test_ivf_ann_recall_against_bruteforce(spark, sf_dir):
+def test_ivf_ann_recall_against_bruteforce(spark, sf_dir, monkeypatch):
     from graph_db_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
+    monkeypatch.setattr(SIM, "_ANN_K", 3)
     exact = {
         (r["query_id"], r["neighbor_id"])
-        for r in SIM.cosine_topk(emb, q, k=3).collect()
+        for r in SIM.cosine_topk(emb, q).collect()
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in SIM.cosine_topk_ivf(emb, q, k=3, n_centroids=16, nprobe=8).collect()
+        for r in SIM.cosine_topk_ivf(emb, q, k=3).collect()
     }
     recall = len(exact & approx) / len(exact)
     # near-uniform fixture vectors: recall ≈ probed fraction (measured 0.87
     # at 8/16 lists); clustered real embeddings prune harder at same recall
     assert recall >= 0.6
     assert all(qid < 5 for qid, _ in approx)
-    # trained centroids are reusable across query batches — same results
-    cents = SIM.ivf_centroids(emb, n_centroids=16)
-    again = {
-        (r["query_id"], r["neighbor_id"])
-        for r in SIM.cosine_topk_ivf(
-            emb, q, k=3, n_centroids=16, nprobe=8, centroids=cents
-        ).collect()
-    }
-    assert again == approx
 
 
-def test_pq_codec_properties(spark, sf_dir):
+def test_pq_codec_properties(spark, sf_dir, monkeypatch):
     """PQ (similarity.py:pq_codebooks/pq_encode/pq_topk): codes stay in
-    range, trained codebooks are reusable (bit-identical results), ADC
-    distances are non-negative, and distortion falls as the codec grows
-    (m=8×16 strictly beats m=4×8 in mean relative error — measured
-    0.28 vs 0.41 on the fixture)."""
+    range, ADC distances are non-negative, and distortion falls as the
+    codec grows (m=8×16 strictly beats m=4×8 in mean relative error —
+    measured 0.28 vs 0.41 on the fixture)."""
     from graph_db_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    books = SIM.pq_codebooks(emb, m=4, k_sub=8, lloyd_iters=2)
+    books = SIM.pq_codebooks(emb)
     assert len(books) == 4 and all(len(b) == 8 for b in books)
     assert all(len(c) == 16 for b in books for c in b)
     codes = SIM.pq_encode(emb, books).collect()
     assert all(0 <= c < 8 for r in codes for c in r["codes"])
-    out = SIM.pq_topk(emb, q, k=3, m=4, k_sub=8, lloyd_iters=2).collect()
+    out = SIM.pq_topk(emb, q, k=3).collect()
     assert all(r["approx_dist"] >= 0 for r in out)
-    again = SIM.pq_topk(emb, q, k=3, books=books).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
     def mean_rel_err(m, k_sub):
+        monkeypatch.setattr(SIM, "_PQ_M", m)
+        monkeypatch.setattr(SIM, "_PQ_K_SUB", k_sub)
         qq = q.select(F.col("vec_id").alias("query_id"),
                       F.col("embedding").cast("array<double>").alias("qv"))
         cc = emb.select(F.col("vec_id").alias("neighbor_id"),
                         F.col("embedding").cast("array<double>").alias("cv"))
         exact = cc.join(F.broadcast(qq), F.col("query_id") != F.col("neighbor_id")).select(
             "query_id", "neighbor_id", SIM._l2sq(F.col("qv"), F.col("cv")).alias("d"))
-        approx = SIM.pq_topk(emb, q, k=2**31 - 1, m=m, k_sub=k_sub, lloyd_iters=2).select(
+        approx = SIM.pq_topk(emb, q, k=2**31 - 1).select(
             "query_id", "neighbor_id", "approx_dist")
         return (
             exact.join(approx, on=["query_id", "neighbor_id"])
@@ -182,7 +181,7 @@ def test_pq_codec_properties(spark, sf_dir):
     assert coarse <= 0.5, coarse
 
 
-def test_pq_ranks_clustered_data(spark):
+def test_pq_ranks_clustered_data(spark, monkeypatch):
     """The fixture's uniform vectors concentrate distances (recall is the
     wrong metric there — see ann_pq_distortion_bound); on SEPARATED
     clusters the same codec must rank correctly: every query's top
@@ -200,13 +199,14 @@ def test_pq_ranks_clustered_data(spark):
             )
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>, label int")
     q = df.filter(F.col("vec_id").isin(0, 10, 20, 30))
-    out = SIM.pq_topk(df, q, k=3, m=2, k_sub=4, lloyd_iters=3, dim=16).collect()
+    for name, value in [("_EMB_DIM", 16), ("_PQ_M", 2), ("_PQ_K_SUB", 4), ("_PQ_ITERS", 3),
+                        ("_ANN_K", 3), ("_IVF_CENTROIDS", 4), ("_IVF_NPROBE", 2)]:
+        monkeypatch.setattr(SIM, name, value)
+    out = SIM.pq_topk(df, q, k=3).collect()
     assert len(out) == 12
     for r in out:
         assert r["neighbor_id"] // 10 == r["query_id"] // 10, r
-    out2 = SIM.cosine_topk_ivf_pq(
-        df, q, k=3, n_centroids=4, nprobe=2, m=2, k_sub=4, pq_iters=3, dim=16
-    ).collect()
+    out2 = SIM.cosine_topk_ivf_pq(df, q).collect()
     assert len(out2) == 12
     for r in out2:
         assert r["neighbor_id"] // 10 == r["query_id"] // 10, r
@@ -381,7 +381,7 @@ def test_multimodal_real_decode_in_spark(spark, sf_dir):
     from graph_db_spark.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").limit(10)
-    feats = extract_features(synthesize_png_media(docs, 4, 4), fake=False).collect()
+    feats = extract_features(synthesize_png_media(docs), fake=False).collect()
     assert len(feats) == 10
     for r in feats:
         assert r["feature_ok"] == 1 and r["width"] == 4 and r["height"] == 4
@@ -390,7 +390,7 @@ def test_multimodal_real_decode_in_spark(spark, sf_dir):
         assert abs(r["mean_px"] - expect) < 1e-9
 
 
-def test_near_dup_clusters_transitive(spark):
+def test_near_dup_clusters_transitive(spark, monkeypatch):
     import graph_db_spark.operators.dedup as D
 
     base = "the quick brown fox jumps over the lazy dog near the quiet river bank at dawn every single day"
@@ -401,11 +401,12 @@ def test_near_dup_clusters_transitive(spark):
         (4, "completely unrelated text about spark shuffles and partitions and codegen"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(D, "_NEAR_DUP_THRESHOLD", 0.5)
+    monkeypatch.setattr(D, "_MINHASH_BANDS", 16)
+    monkeypatch.setattr(D, "_SHINGLE_K", 2)
     out = {
         r["id"]: (r["canonical_id"], r["is_canonical"])
-        for r in D.near_dup_clusters(
-            df, "text", "doc_id", threshold=0.5, num_hashes=32, bands=16, k=2
-        ).collect()
+        for r in D.near_dup_clusters(df, "text", "doc_id").collect()
     }
     # 1,2,3 form one transitive cluster with canonical min id; 4 is absent
     assert set(out) == {"1", "2", "3"}
@@ -465,8 +466,8 @@ def test_multimodal_rawv_frame_sampling(spark):
     )
 
     docs = spark.createDataFrame([(7,), (9,)], "doc_id long")
-    media = synthesize_rawv_media(docs, width=4, height=4, n_frames=6)
-    out = sample_video_frames(media, every=2).collect()
+    media = synthesize_rawv_media(docs)
+    out = sample_video_frames(media).collect()
     # 2 docs × frames {0, 2, 4}
     assert sorted((r["media_id"], r["frame_idx"]) for r in out) == [
         (7, 0), (7, 2), (7, 4), (9, 0), (9, 2), (9, 4),
@@ -585,15 +586,17 @@ def test_guarded_bucket_join_split_path_is_exact(spark):
     assert top * top > 500  # the 2-D cell split path was genuinely active
 
 
-def test_guarded_simhash_split_path_is_exact(spark):
+def test_guarded_simhash_split_path_is_exact(spark, monkeypatch):
     df = skewed_docs_df(spark, n=80)
+    monkeypatch.setattr(D, "_MAX_TASK_PAIRS", 10**12)
     plain = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in D.simhash_near_dups(df, "text", "doc_id", max_task_pairs=10**12).collect()
+        for r in D.simhash_near_dups(df, "text", "doc_id").collect()
     }
+    monkeypatch.setattr(D, "_MAX_TASK_PAIRS", 300)
     split = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in D.simhash_near_dups(df, "text", "doc_id", max_task_pairs=300).collect()
+        for r in D.simhash_near_dups(df, "text", "doc_id").collect()
     }
     assert split == plain and len(plain) >= 80 * 79 // 2
 
@@ -611,12 +614,12 @@ def test_simhash_column_equals_table(spark):
     assert col_sigs == tbl_sigs
 
 
-def test_planted_near_dup_recall(spark):
+def test_planted_near_dup_recall(spark, monkeypatch):
     """MinHash-LSH clustering and SimHash must both recover every planted
     near-dup pair end-to-end."""
     df = skewed_docs_df(spark, n=3, n_near=8)  # 8 planted near-dup pairs + 1 dup-triple
     planted = {(1000 + 2 * j, 1001 + 2 * j) for j in range(8)}
-    clusters = D.near_dup_clusters(df, "text", "doc_id", threshold=0.6)
+    clusters = D.near_dup_clusters(df, "text", "doc_id")
     canon = {int(r["id"]): r["canonical_id"] for r in clusters.collect()}
     for x, y in planted:  # planted near-dups may transitively merge
         assert x in canon and y in canon and canon[x] == canon[y], (
@@ -625,9 +628,10 @@ def test_planted_near_dup_recall(spark):
     # max_hamming=7 → 8 blocks × 8 bits: full 64-bit coverage, and wide
     # enough that a 1-token edit of a ~55-token doc stays inside
     # (deterministic — no flake)
+    monkeypatch.setattr(D, "_SIMHASH_MAX_HAMMING", 7)
     sim_pairs = {
         (r["id_a"], r["id_b"])
-        for r in D.simhash_near_dups(df, "text", "doc_id", max_hamming=7).collect()
+        for r in D.simhash_near_dups(df, "text", "doc_id").collect()
     }
     for pair in planted:
         assert pair in sim_pairs, f"simhash missed planted pair {pair}"
@@ -665,7 +669,7 @@ def test_embedding_diversity_matches_bruteforce(spark):
         (5, [0.5, 0.5], 2),  # singleton group → NULL
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
-    out = {r["label"]: r for r in SIM.embedding_diversity(df, "embedding", ["label"]).collect()}
+    out = {r["label"]: r for r in SIM.embedding_diversity(df).collect()}
 
     def brute(vs):
         us = [[x / math.sqrt(sum(y * y for y in v)) for x in v] for v in vs]
@@ -679,7 +683,7 @@ def test_embedding_diversity_matches_bruteforce(spark):
     assert out[2]["mean_pairwise_cosine"] is None and out[2]["n_vectors"] == 1
 
 
-def test_semantic_dedup_drops_planted_near_identical(spark):
+def test_semantic_dedup_drops_planted_near_identical(spark, monkeypatch):
     import math
 
     # 8 well-separated base directions in 4-d + near-identical copies of two
@@ -692,9 +696,10 @@ def test_semantic_dedup_drops_planted_near_identical(spark):
     rows.append((100, [0.99, 0.01, 0.0, 0.0], 0))   # near-dup of vec 0
     rows.append((101, [0.0, 0.98, 0.02, 0.0], 0))   # near-dup of vec 1
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
-    out = {r["vec_id"]: r for r in SIM.semantic_dedup(
-        df, "embedding", "vec_id", threshold=0.95, n_centroids=4, lloyd_iters=2
-    ).collect()}
+    monkeypatch.setattr(SIM, "_SEMDEDUP_THRESHOLD", 0.95)
+    monkeypatch.setattr(SIM, "_IVF_CENTROIDS", 4)
+    monkeypatch.setattr(SIM, "_IVF_ITERS", 2)
+    out = {r["vec_id"]: r for r in SIM.semantic_dedup(df).collect()}
     assert len(out) == 10
     assert not out[100]["is_kept"] and not out[101]["is_kept"]  # copies dropped
     assert out[0]["is_kept"] and out[1]["is_kept"]  # originals kept (lower id)
@@ -705,15 +710,17 @@ def test_semantic_dedup_drops_planted_near_identical(spark):
     assert kept == 8
 
 
-def test_semantic_dedup_guard_trips_on_one_cluster(spark):
+def test_semantic_dedup_guard_trips_on_one_cluster(spark, monkeypatch):
     # all vectors identical → one cluster holds everything; a tiny pair cap
     # must refuse (the SemDeDup remedy is more centroids, not a bigger join)
     import pytest as _pytest
 
     rows = [(i, [1.0, 0.0, 0.0], 0) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
+    monkeypatch.setattr(SIM, "_IVF_CENTROIDS", 4)
+    monkeypatch.setattr(SIM, "_MAX_CLUSTER_PAIRS", 100)
     with _pytest.raises(ValueError, match="max_block_pairs"):
-        SIM.semantic_dedup(df, "embedding", "vec_id", n_centroids=4, max_cluster_pairs=100)
+        SIM.semantic_dedup(df)
 
 
 def test_incremental_lsh_agrees_with_full_sweep(spark):
@@ -737,24 +744,22 @@ def test_incremental_lsh_agrees_with_full_sweep(spark):
     assert inc == expect and inc  # non-empty: planted near-dups straddle the split
 
 
-def test_incremental_lsh_split_path_is_exact(spark):
+def test_incremental_lsh_split_path_is_exact(spark, monkeypatch):
     """Oversized new-side buckets take the cross-join skew split; results
     must equal the plain join's."""
     df = skewed_docs_df(spark, n=200, n_near=2)
     corpus = df.filter(F.col("doc_id") < 100)   # 100 identical boilerplate docs
     new = df.filter(F.col("doc_id") >= 100)     # 100 more + planted pairs
     index = D.minhash_banded(corpus, "text", "doc_id")
+    monkeypatch.setattr(D, "_MAX_TASK_PAIRS", 10**12)
     plain = {
         (r["new_id"], r["corpus_id"])
-        for r in D.minhash_lsh_candidates_against(
-            new, index, "text", "doc_id", max_task_pairs=10**12
-        ).collect()
+        for r in D.minhash_lsh_candidates_against(new, index, "text", "doc_id").collect()
     }
+    monkeypatch.setattr(D, "_MAX_TASK_PAIRS", 400)
     split = {
         (r["new_id"], r["corpus_id"])
-        for r in D.minhash_lsh_candidates_against(
-            new, index, "text", "doc_id", max_task_pairs=400
-        ).collect()
+        for r in D.minhash_lsh_candidates_against(new, index, "text", "doc_id").collect()
     }
     assert split == plain and len(plain) >= 100 * 100  # bomb bucket fully paired
 
@@ -827,7 +832,7 @@ def test_bpe_learn_matches_canonical_python(spark):
         return merges
 
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    assert bpe_learn(df, "text", n_merges=8) == canonical(texts, 8)
+    assert bpe_learn(df, "text") == canonical(texts, 8)
 
 
 def test_bm25_matches_python_reference(spark):
@@ -906,8 +911,8 @@ def test_rrf_fusion_semantics(spark):
 
 def test_prefix_filter_jaccard_complete_vs_naive(spark):
     """PPJoin candidate prefixes are COMPLETE: the filtered join finds
-    exactly the naive all-pairs Jaccard >= 0.7 set, on a corpus salted
-    with true near-dups."""
+    exactly the naive all-pairs word-3-gram Jaccard >= 0.7 set, on a
+    corpus salted with true near-dups."""
     import random
 
     from graph_db_spark.operators.dedup import prefix_filter_jaccard
@@ -924,13 +929,18 @@ def test_prefix_filter_jaccard_complete_vs_naive(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         (r["doc_a"], r["doc_b"], r["inter"], r["uni"])
-        for r in prefix_filter_jaccard(df, "text", "doc_id", 7, 10).collect()
+        for r in prefix_filter_jaccard(df).collect()
     }
-    sets = {i: set(t.lower().split()) for i, t in docs}
+
+    def grams(t):
+        w = t.lower().split()
+        return {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}
+
+    sets = {i: grams(t) for i, t in docs}
     expect = set()
     for a in sets:
         for b in sets:
-            if a < b:
+            if a < b and sets[a] and sets[b]:
                 inter = len(sets[a] & sets[b])
                 uni = len(sets[a] | sets[b])
                 if inter * 10 >= uni * 7:
@@ -939,7 +949,7 @@ def test_prefix_filter_jaccard_complete_vs_naive(spark):
     assert got == expect
 
 
-def test_wordpiece_greedy_segmentation_rules(spark):
+def test_wordpiece_greedy_segmentation_rules(spark, monkeypatch):
     """Vocab induction picks the highest-weight substrings; greedy
     longest-match segments with them; characters outside the vocab emit
     <unk> and advance one position."""
@@ -949,7 +959,8 @@ def test_wordpiece_greedy_segmentation_rules(spark):
     docs = spark.createDataFrame(
         [(1, "abab abab abab zq"), (2, "abab ab")], "doc_id long, text string"
     )
-    seg = wordpiece_vocab_segment(docs, "text", max_piece_len=4, vocab_size=3)
+    monkeypatch.setattr(TX, "_WP_VOCAB", 3)
+    seg = wordpiece_vocab_segment(docs)
     rows = [(r["word"], r["piece"], r["freq"]) for r in seg.collect()]
     by_word = {}
     for w, p, f in rows:
@@ -979,8 +990,8 @@ def test_cms_inner_product_upper_bounds_true_join_size(spark):
         [("k1", 4), ("k3", 6), ("zz", 9)], "k string, c long"
     )
     exact = 3 * 4 + 2 * 6
-    cms_a = count_min_table(a, "k", "c", depth=4, width=256)
-    cms_b = count_min_table(b, "k", "c", depth=4, width=256)
+    cms_a = count_min_table(a, "k", "c", width=256)
+    cms_b = count_min_table(b, "k", "c", width=256)
     est = count_min_inner_product(cms_a, cms_b).collect()[0]["est"]
     assert est >= exact
     # 5 distinct keys in 256 buckets x 4 rows: collisions would need two
@@ -1002,8 +1013,8 @@ def test_cms_inner_product_disjoint_sketches_is_zero(spark):
     b = spark.createDataFrame([("b1", 4), ("b2", 6)], "k string, c long")
     # width large enough that the two key sets share no buckets in at
     # least one depth row (deterministic for this fixed hash family)
-    cms_a = count_min_table(a, "k", "c", depth=4, width=4096)
-    cms_b = count_min_table(b, "k", "c", depth=4, width=4096)
+    cms_a = count_min_table(a, "k", "c", width=4096)
+    cms_b = count_min_table(b, "k", "c", width=4096)
     rows = count_min_inner_product(cms_a, cms_b).collect()
     assert len(rows) == 1
     assert rows[0]["est"] == 0

@@ -138,12 +138,6 @@ def test_running_index(spark):
     assert out == {(1, 10): 1, (1, 20): 2, (1, 30): 3, (2, 5): 1}
 
 
-def test_metrics_map_unbounded_keys(spark):
-    df = spark.createDataFrame([(1, "a", 1.0), (1, "b", 2.0)], "k int, m string, v double")
-    out = A.metrics_map(df, ["k"], "m", "v").collect()[0]
-    assert out["metrics"] == {"a": 1.0, "b": 2.0}
-
-
 def test_hll_sketch_merge_error_bound(spark, sf_dir):
     from graph_db_spark.operators import sketches as SK
     from graph_db_spark.tables import load_table
@@ -176,7 +170,7 @@ def test_exact_percentiles_interpolation(spark):
     assert out["p_0_5"] == 2.5  # continuous interpolation between 2 and 3
 
 
-def test_salted_join_equals_plain(spark):
+def test_salted_join_equals_plain(spark, monkeypatch):
     from graph_db_spark.operators import joins as J2
 
     left = spark.createDataFrame(
@@ -186,20 +180,12 @@ def test_salted_join_equals_plain(spark):
     plain = sorted(
         (r["k"], r["v"], r["w"]) for r in left.join(right, on="k").collect()
     )
+    monkeypatch.setattr(J2, "_N_SALTS", 4)
     salted = sorted(
         (r["k"], r["v"], r["w"])
-        for r in J2.salted_join(left, right, on=["k"], n_salts=4).collect()
+        for r in J2.salted_join(left, right, on=["k"]).collect()
     )
     assert salted == plain
-    # left join keeps unmatched rows exactly once
-    lplain = sorted(
-        (r["k"], r["v"], r["w"]) for r in left.join(right, on="k", how="left").collect()
-    )
-    lsalted = sorted(
-        (r["k"], r["v"], r["w"])
-        for r in J2.salted_join(left, right, on=["k"], n_salts=4, how="left").collect()
-    )
-    assert lsalted == lplain
 
 
 def test_portable_hll_accuracy(spark, sf_dir):
@@ -286,20 +272,22 @@ def test_grid_distance_join_equals_naive(spark):
     assert got == expect
 
 
-def test_kcenter_select_matches_bruteforce(spark):
+def test_kcenter_select_matches_bruteforce(spark, monkeypatch):
     """Greedy farthest-point selection == the textbook Gonzalez loop in
     plain Python: same picks, same order, same separations; sep sequence
     non-increasing (the 2-approximation certificate)."""
     import random
 
+    from graph_db_spark.operators import similarity
     from graph_db_spark.operators.similarity import kcenter_select
 
+    monkeypatch.setattr(similarity, "_KCENTER_K", 5)
     rng = random.Random(11)
     pts = [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(40)]
     df = spark.createDataFrame(pts, "vid long, emb array<double>")
     got = [
         (r["round"], r["id"], r["sep"])
-        for r in kcenter_select(df, "emb", "vid", k=5).orderBy("round").collect()
+        for r in kcenter_select(df, "emb", "vid").orderBy("round").collect()
     ]
 
     def d2(a, b):
@@ -321,7 +309,7 @@ def test_kcenter_select_matches_bruteforce(spark):
     assert all(a >= b - 1e-12 for a, b in zip(seps[1:], seps[2:]))
 
 
-def test_ancestor_closure_and_subtree_rollup(spark):
+def test_ancestor_closure_and_subtree_rollup(spark, monkeypatch):
     """Pointer-doubling closure == the obvious parent-chain walk; rollup
     sums every descendant exactly once; cycles raise."""
     from graph_db_spark.operators.hierarchy import ancestor_closure, subtree_rollup
@@ -359,20 +347,24 @@ def test_ancestor_closure_and_subtree_rollup(spark):
     assert roll[7] == (3, 1, 7.0)
 
     cyc = spark.createDataFrame([(1, 2), (2, 1)], "node long, parent long")
+    from graph_db_spark.operators import hierarchy
+
+    monkeypatch.setattr(hierarchy, "_MAX_DEPTH", 8)
     try:
-        ancestor_closure(cyc, max_depth=8)
+        ancestor_closure(cyc)
         raised = False
     except RuntimeError:
         raised = True
     assert raised
 
 
-def test_new_operator_guards(spark):
+def test_new_operator_guards(spark, monkeypatch):
     """Contract guards: invalid radius / k / walk length raise loudly
     instead of producing silently-wrong plans."""
     import pytest as _pt
 
     from graph_db_spark.graph.algorithms import deterministic_walks
+    from graph_db_spark.operators import similarity
     from graph_db_spark.operators.joins import grid_distance_join
     from graph_db_spark.operators.similarity import kcenter_select
 
@@ -380,11 +372,13 @@ def test_new_operator_guards(spark):
     with _pt.raises(ValueError):
         grid_distance_join(pts, pts, ("x", "y"), ("x", "y"), 0.0)
     emb = spark.createDataFrame([(1, [0.0, 1.0])], "vid long, e array<double>")
-    with _pt.raises(ValueError):
-        kcenter_select(emb, "e", "vid", k=0)
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "_KCENTER_K", 0)
+        with _pt.raises(ValueError):
+            kcenter_select(emb, "e", "vid")
     empty = emb.filter("vid < 0")
     with _pt.raises(ValueError):
-        kcenter_select(empty, "e", "vid", k=2)
+        kcenter_select(empty, "e", "vid")
     e = spark.createDataFrame([("a", "b")], "src string, dst string")
     s = spark.createDataFrame([("a",)], "start string")
     with _pt.raises(ValueError):
@@ -401,7 +395,7 @@ def test_kcenter_select_exhausts_distinct_vectors_gracefully(spark):
         [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 0.0]), (4, [1.0, 0.0])],
         "vid long, emb array<double>",
     )
-    got = kcenter_select(df, "emb", "vid", k=5).orderBy("round").collect()
+    got = kcenter_select(df, "emb", "vid").orderBy("round").collect()
     # 2 distinct vectors -> seed + 1 selection, then clean stop
     assert [(r["round"], r["id"]) for r in got] == [(0, 1), (1, 2)]
 

@@ -254,30 +254,41 @@ def test_family_imports_name_their_defining_module():
     assert len(trees) == 15 and not bad, bad
 
 
-def test_family_defaults_have_two_values_in_use():
-    """Every defaulted parameter of a family function is an option some
-    caller sets: across the call sites under graph_db_spark/ (a call that
-    omits the argument passes the default) it takes at least two distinct
-    values. A number only one value of which is in use is a module
-    constant, read by the oracle builder and passed by the Spark side."""
+def _defaults_in_use(packages: list[str]) -> dict[str, set[str]]:
+    """``"mod.f(param)"`` -> the argument texts the defaulted ``param`` of
+    every function (or method) defined under ``graph_db_spark/<package>``
+    receives across its non-test callers: every module under
+    graph_db_spark/ plus perfbench's. A call that omits the argument
+    passes the default. Calls resolve through same-module names,
+    ``from … import f as g``, module aliases (``from pkg import mod as
+    X`` then ``X.f(...)``) and, for methods, ``obj.method(...)`` by the
+    method's name."""
     import ast
     import pathlib
 
     import graph_db_spark
-    from graph_db_spark.plans import families
 
-    prefix = "graph_db_spark.plans.families."
-    fams = {
-        p.stem: ast.parse(p.read_text())
-        for p in pathlib.Path(families.__file__).parent.glob("q*.py")
+    root = pathlib.Path(graph_db_spark.__file__).parent
+
+    def modname(path):
+        return ".".join(path.relative_to(root.parent).with_suffix("").parts)
+
+    targets = {
+        modname(p): ast.parse(p.read_text())
+        for pkg in packages
+        for p in sorted((root / pkg).glob("*.py"))
     }
-    # (module, function) -> positional names and {param: default text}
-    funcs = {}
-    for mod, tree in fams.items():
+    funcs, methods = {}, {}  # (module, name) -> (positional names, {param: default})
+    for mod, tree in targets.items():
+        in_class = {
+            fn: "staticmethod" not in {ast.unparse(d) for d in fn.decorator_list}
+            for cls in ast.walk(tree) if isinstance(cls, ast.ClassDef)
+            for fn in cls.body if isinstance(fn, ast.FunctionDef)
+        }
         for fn in ast.walk(tree):
             if not isinstance(fn, ast.FunctionDef):
                 continue
-            pos = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+            pos = [a.arg for a in fn.args.posonlyargs + fn.args.args][in_class.get(fn, False):]
             defaults = list(map(ast.unparse, fn.args.defaults))
             d = dict(zip(pos[len(pos) - len(defaults):], defaults))
             d.update(
@@ -285,30 +296,82 @@ def test_family_defaults_have_two_values_in_use():
                 for a, v in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
                 if v is not None
             )
-            if d:
-                funcs[mod, fn.name] = (pos, d)
-    values = {(mod, fn, p): set() for (mod, fn), (_, d) in funcs.items() for p in d}
-    root = pathlib.Path(graph_db_spark.__file__).parent
-    for path in root.rglob("*.py"):
+            (methods if fn in in_class else funcs)[mod, fn.name] = (pos, d)
+    by_method = {name: (mod, name) for mod, name in methods}
+    values = {
+        f"{mod.split('.', 1)[1]}.{fn}({p})": set()
+        for (mod, fn), (_, d) in {**funcs, **methods}.items()
+        for p in d
+    }
+    callers = [p for p in root.rglob("*.py")]
+    callers += [
+        p for p in (root.parent / "perfbench").glob("*.py") if not p.name.startswith("test_")
+    ]
+    for path in callers:
         tree = ast.parse(path.read_text())
-        # the family functions this module can call by name
-        callable_here = {fn: path.stem for (mod, fn) in funcs if mod == path.stem}
+        here = modname(path)
+        names = {fn: (here, fn) for (mod, fn) in funcs if mod == here}
+        aliases = {}
         for node in ast.walk(tree):
-            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(prefix):
+            if isinstance(node, ast.ImportFrom) and node.module:
                 for a in node.names:
-                    if (node.module[len(prefix):], a.name) in funcs:
-                        callable_here[a.asname or a.name] = node.module[len(prefix):]
+                    if (node.module, a.name) in funcs:
+                        names[a.asname or a.name] = (node.module, a.name)
+                    if f"{node.module}.{a.name}" in targets:
+                        aliases[a.asname or a.name] = f"{node.module}.{a.name}"
+            elif isinstance(node, ast.Import):
+                aliases.update(
+                    (a.asname, a.name) for a in node.names if a.asname and a.name in targets
+                )
         for call in ast.walk(tree):
-            if not (isinstance(call, ast.Call) and isinstance(call.func, ast.Name)):
+            if not isinstance(call, ast.Call):
                 continue
-            mod = callable_here.get(call.func.id)
-            if mod is None:
+            f = call.func
+            key = None
+            if isinstance(f, ast.Name):
+                key = names.get(f.id)
+            elif isinstance(f, ast.Attribute):
+                base = f.value.id if isinstance(f.value, ast.Name) else None
+                key = (aliases[base], f.attr) if base in aliases else by_method.get(f.attr)
+            if key not in funcs and key not in methods:
                 continue
-            pos, d = funcs[mod, call.func.id]
+            pos, d = funcs.get(key) or methods[key]
             kw = {k.arg: ast.unparse(k.value) for k in call.keywords if k.arg}
             for p, default in d.items():
                 i = pos.index(p) if p in pos else len(call.args)
                 v = kw.get(p, ast.unparse(call.args[i]) if i < len(call.args) else default)
-                values[mod, call.func.id, p].add(v)
-    single = sorted(f"{m}.{f}({p}): {sorted(v)}" for (m, f, p), v in values.items() if len(v) < 2)
+                values[f"{key[0].split('.', 1)[1]}.{key[1]}({p})"].add(v)
+    return values
+
+
+def test_family_defaults_have_two_values_in_use():
+    """Every defaulted parameter of a family function is an option some
+    caller sets: across the call sites under graph_db_spark/ (a call that
+    omits the argument passes the default) it takes at least two distinct
+    values. A number only one value of which is in use is a module
+    constant, read by the oracle builder and passed by the Spark side."""
+    values = _defaults_in_use(["plans/families"])
+    single = sorted(f"{k}: {sorted(v)}" for k, v in values.items() if len(v) < 2)
     assert not single, single
+
+
+# Library options whose second value comes from a caller the walk cannot
+# see, each with that caller.
+_LIBRARY_DEFAULT_EXEMPTIONS = {
+    "graph.algorithms.pagerank(max_iter)":
+        "perfbench/workloads.py:_fixed_rounds passes PAGERANK_ROUNDS",
+    "graph.algorithms.pagerank(n_partitions)":
+        "perfbench/workloads.py:_fixed_rounds leaves it at None",
+}
+
+
+def test_library_defaults_have_two_values_in_use():
+    """The same rule for the library the queries call — operators/,
+    graph/ and functions/: a setting no caller varies is a module
+    constant of the module that uses it. Every exemption must still be
+    single-valued to the walk, so a stale entry fails too."""
+    values = _defaults_in_use(["operators", "graph", "functions"])
+    single = {k for k, v in values.items() if len(v) < 2}
+    assert set(_LIBRARY_DEFAULT_EXEMPTIONS) <= single, set(_LIBRARY_DEFAULT_EXEMPTIONS) - single
+    left = sorted(f"{k}: {sorted(values[k])}" for k in single - set(_LIBRARY_DEFAULT_EXEMPTIONS))
+    assert not left, (len(left), left)

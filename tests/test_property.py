@@ -305,7 +305,8 @@ def test_guarded_self_join_equals_plain_on_random_buckets(spark, case):
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 @given(case=bucket_case, cut=st.integers(1, 20))
-def test_guarded_cross_join_equals_plain_on_random_buckets(spark, case, cut):
+def test_guarded_cross_join_equals_plain_on_random_buckets(spark, monkeypatch, case, cut):
+    from graph_db_spark.operators import dedup
     from graph_db_spark.operators.dedup import (
         minhash_banded,
         minhash_lsh_candidates_against,
@@ -318,10 +319,12 @@ def test_guarded_cross_join_equals_plain_on_random_buckets(spark, case, cut):
     if corpus.count() == 0 or new.count() == 0:
         return
     index = minhash_banded(corpus, "text", "doc_id")
+    monkeypatch.setattr(dedup, "_MAX_TASK_PAIRS", 10**12)
     plain = {(r["new_id"], r["corpus_id"]) for r in minhash_lsh_candidates_against(
-        new, index, "text", "doc_id", max_task_pairs=10**12).collect()}
+        new, index, "text", "doc_id").collect()}
+    monkeypatch.setattr(dedup, "_MAX_TASK_PAIRS", budget)
     split = {(r["new_id"], r["corpus_id"]) for r in minhash_lsh_candidates_against(
-        new, index, "text", "doc_id", max_task_pairs=budget).collect()}
+        new, index, "text", "doc_id").collect()}
     assert split == plain
 
 
@@ -622,10 +625,9 @@ def test_scc_matches_bruteforce_on_random_digraphs(spark, edges):
     want = {u: min(v for v in nodes if v in R[u] and u in R[v]) for u in nodes}
 
     e = spark.createDataFrame(pairs, "src string, dst string")
-    got = {
-        r["id"]: r["scc"]
-        for r in strongly_connected_components(e, max_rounds=60).collect()
-    }
+    # every round assigns at least one of the <= 7 vertices, so the
+    # production round bound is never the limit here
+    got = {r["id"]: r["scc"] for r in strongly_connected_components(e).collect()}
     assert got == want, (pairs, got, want)
 
 

@@ -51,10 +51,8 @@ def _items_df(spark):
 def test_count_min_never_undercounts_and_is_tight(spark):
     df, truth = _items_df(spark)
     exact = df.groupBy("item").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    cms = SK.count_min_table(exact, "item", "n", depth=4, width=64)
-    est = SK.count_min_lookup(
-        cms, exact.select("item"), "item", depth=4, width=64
-    )
+    cms = SK.count_min_table(exact, "item", "n", width=64)
+    est = SK.count_min_lookup(cms, exact.select("item"), "item", width=64)
     got = {r.item: r.est_cnt for r in est.collect()}
     n_total = sum(truth.values())
     for item, cnt in truth.items():
@@ -66,7 +64,7 @@ def test_count_min_never_undercounts_and_is_tight(spark):
 def test_count_min_table_shape_and_merge(spark):
     df, _ = _items_df(spark)
     exact = df.groupBy("item").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    cms = SK.count_min_table(exact, "item", "n", depth=4, width=64)
+    cms = SK.count_min_table(exact, "item", "n", width=64)
     rows = cms.collect()
     assert len(rows) <= 4 * 64
     # every depth row sums to the total item count (sketch invariant —
@@ -77,34 +75,36 @@ def test_count_min_table_shape_and_merge(spark):
     assert set(per_j.values()) == {exact.agg(F.sum("n")).collect()[0][0]}
 
 
-def test_count_min_keyed_build_then_merge_equals_direct(spark):
+def test_count_min_keyed_build_then_merge_equals_direct(spark, monkeypatch):
     """Per-key sketches merged with count_min_merge must equal the sketch
     built directly over the whole input — the re-aggregation contract."""
     rows = [("d1", f"w{i % 5}", i + 1) for i in range(10)] + [
         ("d2", f"w{i % 3}", i + 2) for i in range(6)
     ]
     df = spark.createDataFrame(rows, "day string, item string, n long")
-    keyed = SK.count_min_table(df, "item", "n", depth=3, width=32, keys=["day"])
+    monkeypatch.setattr(SK, "_CMS_DEPTH", 3)
+    keyed = SK.count_min_table(df, "item", "n", width=32, keys=["day"])
     merged = {
         (r.j, r.bucket): r.cnt for r in SK.count_min_merge(keyed).collect()
     }
     total = df.groupBy("item").agg(F.sum("n").cast("bigint").alias("n"))
     direct = {
         (r.j, r.bucket): r.cnt
-        for r in SK.count_min_table(total, "item", "n", depth=3, width=32).collect()
+        for r in SK.count_min_table(total, "item", "n", width=32).collect()
     }
     assert merged == direct
 
 
-def test_bloom_no_false_negatives(spark):
+def test_bloom_no_false_negatives(spark, monkeypatch):
     members = spark.createDataFrame(
         [(f"k{i}",) for i in range(0, 50)], "key string"
     )
     probes = spark.createDataFrame(
         [(f"k{i}",) for i in range(0, 100)], "key string"
     )
-    bits = SK.bloom_bits(members, "key", m=1024, k=3)
-    out = SK.bloom_contains(probes, "key", bits, m=1024, k=3)
+    monkeypatch.setattr(SK, "_BLOOM_M", 1024)
+    bits = SK.bloom_bits(members, "key")
+    out = SK.bloom_contains(probes, "key", bits)
     got = {r.key: r.bloom_pass for r in out.collect()}
     for i in range(50):
         assert got[f"k{i}"], "bloom dropped a true member"
@@ -118,13 +118,13 @@ def test_kmv_union_intersection_estimates(spark):
         ("B", f"u{i}") for i in range(50, 150)
     ]
     df = spark.createDataFrame(rows, "grp string, item string")
-    sk = SK.kmv_sketches(df, "grp", "item", k=32)
+    sk = SK.kmv_sketches(df, "grp", "item")
     a = sk.filter(F.col("grp") == "A").select(
         F.col("sample").alias("sa")
     )
     b = sk.filter(F.col("grp") == "B").select(F.col("sample").alias("sb"))
     pair = a.crossJoin(b)
-    out = SK.kmv_union_intersection(pair, "sa", "sb", k=32).collect()[0]
+    out = SK.kmv_union_intersection(pair, "sa", "sb").collect()[0]
     # truth: union 150, intersection 50; k=32 → RSE ~18%, allow 2.5σ
     assert abs(out.union_est - 150) / 150 < 0.45
     assert abs(out.intersection_est - 50) / 50 < 0.75
@@ -135,30 +135,31 @@ def test_kmv_exact_regime_below_k(spark):
         ("B", f"u{i}") for i in range(5, 15)
     ]
     df = spark.createDataFrame(rows, "grp string, item string")
-    sk = SK.kmv_sketches(df, "grp", "item", k=32)
+    sk = SK.kmv_sketches(df, "grp", "item")
     a = sk.filter(F.col("grp") == "A").select(F.col("sample").alias("sa"))
     b = sk.filter(F.col("grp") == "B").select(F.col("sample").alias("sb"))
-    out = SK.kmv_union_intersection(a.crossJoin(b), "sa", "sb", k=32).collect()[0]
+    out = SK.kmv_union_intersection(a.crossJoin(b), "sa", "sb").collect()[0]
     # fewer than k distinct hashes: the sketch IS the set — exact answers
     assert out.union_est == 15.0
     assert out.intersection_est == 5.0
 
 
-def test_kmv_merge_equals_direct_build(spark):
+def test_kmv_merge_equals_direct_build(spark, monkeypatch):
     """Union-merging two KMV samples (keep the k smallest of the
     concatenation) must equal the sketch built directly over the union of
     the two item sets — the mergeability contract that lets shards
     sketch independently."""
     k = 16
+    monkeypatch.setattr(SK, "_KMV_K", k)
     rows_a = [("A", f"u{i}") for i in range(40)]
     rows_b = [("B", f"u{i}") for i in range(20, 60)]
     df = spark.createDataFrame(rows_a + rows_b, "grp string, item string")
-    sk = {r.grp: r.sample for r in SK.kmv_sketches(df, "grp", "item", k=k).collect()}
+    sk = {r.grp: r.sample for r in SK.kmv_sketches(df, "grp", "item").collect()}
     merged = sorted(set(sk["A"]) | set(sk["B"]))[:k]
     union_df = spark.createDataFrame(
         [("U", f"u{i}") for i in range(60)], "grp string, item string"
     )
-    direct = SK.kmv_sketches(union_df, "grp", "item", k=k).collect()[0].sample
+    direct = SK.kmv_sketches(union_df, "grp", "item").collect()[0].sample
     assert merged == sorted(direct)
 
 
@@ -180,7 +181,7 @@ def test_cusum_fold_detects_planted_shift(spark):
     rows = [(1, i, i, x) for i, x in enumerate(shifted)]
     rng.shuffle(rows)  # arrival order must not matter — (ts, tiebreak) sorts
     df = spark.createDataFrame(rows, "user_id long, ts long, event_id long, value double")
-    out = cusum_drift(df, "user_id", "ts", "value", "event_id").collect()[0]
+    out = cusum_drift(df).collect()[0]
     # self-calibrating variant computes its own mu/sigma; the planted
     # shift dominates, so it still fires
     assert out["n_drifts"] >= 1 and out["n_events"] == 60

@@ -149,11 +149,13 @@ def test_global_shuffle_prefix_is_stable_and_dense(spark, sf_dir):
         assert r["chars_through"] == run  # running budget is a true prefix sum
 
 
-def test_holt_linear_matches_reference_fold(spark):
+def test_holt_linear_matches_reference_fold(spark, monkeypatch):
     """holt_linear == the pure-python reference fold per key, ordered by
     the order column; single-point series keeps level=x, trend=0."""
+    from graph_db_spark.operators import drift
     from graph_db_spark.operators.drift import holt_fold, holt_linear
 
+    monkeypatch.setattr(drift, "_HOLT_HORIZON", 2)
     rows = [
         ("a", 1, 10.0), ("a", 2, 12.0), ("a", 3, 15.0), ("a", 4, 13.0),
         ("b", 1, 5.0), ("b", 2, 5.0),
@@ -162,7 +164,7 @@ def test_holt_linear_matches_reference_fold(spark):
     df = spark.createDataFrame(rows, "k string, t int, x double")
     got = {
         r["key"]: (r["n_obs"], r["level"], r["trend"], r["forecast"])
-        for r in holt_linear(df, "k", "t", "x", alpha=0.5, beta=0.3, horizon=2).collect()
+        for r in holt_linear(df, "k", "t", "x").collect()
     }
     series = {}
     for k, t, x in sorted(rows, key=lambda r: (r[0], r[1])):
