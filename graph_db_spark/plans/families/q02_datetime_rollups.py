@@ -578,15 +578,28 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("media_id", "kind", "n_bytes", "content_hash", "feature_ok")
 
 
+# The synthetic media geometry the media oracles recompute: pixel indices
+# of one image or frame, the sampled frame indices, and the source pixel
+# each pixel of the 2×2 resize reads (nearest neighbour).
+_PX_LAST = MM._SYNTH_WIDTH * MM._SYNTH_HEIGHT - 1
+_SAMPLED_FRAMES = ", ".join(f"({f})" for f in range(0, MM._RAWV_FRAMES, MM._FRAME_EVERY))
+_RESIZE_W = _RESIZE_H = 2
+_RESIZE_SRC = ", ".join(
+    f"({y * MM._SYNTH_HEIGHT // _RESIZE_H * MM._SYNTH_WIDTH + x * MM._SYNTH_WIDTH // _RESIZE_W})"
+    for y in range(_RESIZE_H)
+    for x in range(_RESIZE_W)
+)
+
+
 @register(
     "multimodal_png_decode",
-    oracle="""
+    oracle=f"""
     SELECT d.doc_id AS media_id,
-           CAST(4 AS BIGINT) AS width,
-           CAST(4 AS BIGINT) AS height,
+           CAST({MM._SYNTH_WIDTH} AS BIGINT) AS width,
+           CAST({MM._SYNTH_HEIGHT} AS BIGINT) AS height,
            round(avg(CAST((d.doc_id * 7 + t.i * 13) % 256 AS DOUBLE)), 4) AS mean_px,
            CAST(1 AS BIGINT) AS feature_ok
-    FROM documents d CROSS JOIN generate_series(0, 15) t(i)
+    FROM documents d CROSS JOIN generate_series(0, {_PX_LAST}) t(i)
     GROUP BY d.doc_id
     """,
 )
@@ -609,20 +622,20 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_audio_features",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT d.doc_id, t.i,
              ((d.doc_id * 31 + t.i * 17) % 201) - 100 AS v
-      FROM documents d CROSS JOIN generate_series(0, 63) t(i)
+      FROM documents d CROSS JOIN generate_series(0, {MM._WAV_SAMPLES - 1}) t(i)
     ), z AS (
       SELECT doc_id, i, v,
              lag(v) OVER (PARTITION BY doc_id ORDER BY i) AS pv
       FROM s
     )
     SELECT doc_id AS media_id,
-           CAST(8000 AS BIGINT) AS sample_rate,
-           CAST(64 AS BIGINT) AS n_samples,
-           CAST(8 AS BIGINT) AS duration_ms,
+           CAST({MM._WAV_RATE} AS BIGINT) AS sample_rate,
+           CAST({MM._WAV_SAMPLES} AS BIGINT) AS n_samples,
+           CAST({MM._WAV_SAMPLES * 1000 // MM._WAV_RATE} AS BIGINT) AS duration_ms,
            round(sqrt(avg(CAST(v * v AS DOUBLE))), 4) AS rms,
            CAST(sum(CASE WHEN (v >= 0) <> (pv >= 0) THEN 1 ELSE 0 END) AS BIGINT)
              AS zero_crossings,
@@ -657,17 +670,17 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_frame_sample",
-    oracle="""
+    oracle=f"""
     SELECT d.doc_id AS media_id,
            CAST(f.f AS BIGINT) AS frame_idx,
-           CAST(4 AS BIGINT) AS width,
-           CAST(4 AS BIGINT) AS height,
+           CAST({MM._SYNTH_WIDTH} AS BIGINT) AS width,
+           CAST({MM._SYNTH_HEIGHT} AS BIGINT) AS height,
            round(avg(CAST((d.doc_id * 11 + f.f * 5 + t.i * 13) % 256 AS DOUBLE)), 4)
              AS mean_px,
            CAST(1 AS BIGINT) AS feature_ok
     FROM documents d
-    CROSS JOIN (VALUES (0), (2), (4)) f(f)
-    CROSS JOIN generate_series(0, 15) t(i)
+    CROSS JOIN (VALUES {_SAMPLED_FRAMES}) f(f)
+    CROSS JOIN generate_series(0, {_PX_LAST}) t(i)
     GROUP BY d.doc_id, f.f
     """,
 )
@@ -694,13 +707,13 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_resize",
-    oracle="""
+    oracle=f"""
     SELECT d.doc_id AS media_id,
-           CAST(2 AS BIGINT) AS width,
-           CAST(2 AS BIGINT) AS height,
+           CAST({_RESIZE_W} AS BIGINT) AS width,
+           CAST({_RESIZE_H} AS BIGINT) AS height,
            round(avg(CAST((d.doc_id * 7 + t.i * 13) % 256 AS DOUBLE)), 4) AS mean_px,
            CAST(1 AS BIGINT) AS feature_ok
-    FROM documents d CROSS JOIN (VALUES (0), (2), (8), (10)) t(i)
+    FROM documents d CROSS JOIN (VALUES {_RESIZE_SRC}) t(i)
     GROUP BY d.doc_id
     """,
 )
@@ -715,7 +728,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytically by the oracle."""
     docs = load_table(spark, sf_dir, "documents")
     media = MM.synthesize_png_media(docs)
-    small = MM.resize_png_batch(media, out_w=2, out_h=2)
+    small = MM.resize_png_batch(media, out_w=_RESIZE_W, out_h=_RESIZE_H)
     feats = MM.extract_features(small, fake=False)
     return feats.select(
         "media_id",
@@ -1166,7 +1179,7 @@ def streaming_daily_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same DuckDB oracle applies."""
     out = _run_stream_to_table(
         spark, sf_dir, "daily_stats",
-        lambda s: STRM.stream_daily_stats(s, watermark="3650 days"),
+        lambda s: STRM.stream_daily_stats(s, STRM._REPLAY_WATERMARK),
     )
     return out.select(
         "day",
@@ -1209,7 +1222,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Tumbling (streaming_daily_stats) is the s = w special case."""
     out = _run_stream_to_table(
         spark, sf_dir, "sliding_counts",
-        lambda s: STRM.stream_sliding_counts(s, watermark="3650 days"),
+        STRM.stream_sliding_counts,
     )
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -1237,7 +1250,7 @@ def streaming_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic part."""
     out = _run_stream_to_table(
         spark, sf_dir, "exact_dedup",
-        lambda s: STRM.stream_exact_dedup(s, "text"),
+        STRM.stream_exact_dedup,
         table="documents", mode="append",
     )
     return out.select("content_hash")
@@ -1388,7 +1401,7 @@ def streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     which streaming doesn't number)."""
     out = _run_stream_to_table(
         spark, sf_dir, "sessions",
-        lambda s: STRM.stream_sessions(s, gap="30 minutes", watermark="3650 days"),
+        STRM.stream_sessions,
     )
     return out.select(
         F.col("user_id").cast("bigint").alias("user_id"),

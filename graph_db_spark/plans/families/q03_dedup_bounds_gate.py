@@ -60,9 +60,7 @@ def streaming_enriched_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = load_table(spark, sf_dir, "customer")
     out = _run_stream_to_table(
         spark, sf_dir, "enriched_daily",
-        lambda s: STRM.stream_enriched_daily(
-            s, dim, "c_custkey", "c_mktsegment", watermark="3650 days"
-        ),
+        lambda s: STRM.stream_enriched_daily(s, dim, "c_custkey", "c_mktsegment"),
     )
     return out.select(
         "day", "c_mktsegment", r4(F.col("total")).alias("total"),
@@ -200,12 +198,14 @@ def _metric_rows(*dfs: DataFrame) -> DataFrame:
 
 
 def _shingle_sql(docs: str) -> str:
-    """The 3-shingle sets of ``docs`` (D.shingles replayed in DuckDB)."""
+    """The ``D._SHINGLE_K``-shingle sets of ``docs`` (D.shingles replayed
+    in DuckDB)."""
+    k = D._SHINGLE_K
     return f"""
       SELECT doc_id,
-             CASE WHEN len(t) >= 3
-                  THEN list_distinct(list_transform(range(1, len(t) - 1),
-                                                    i -> array_to_string(t[i:i+2], ' ')))
+             CASE WHEN len(t) >= {k}
+                  THEN list_distinct(list_transform(range(1, len(t) - {k - 2}),
+                                                    i -> array_to_string(t[i:i+{k - 1}], ' ')))
                   ELSE [array_to_string(t, ' ')] END AS s
       FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM {docs})
 """
@@ -699,7 +699,7 @@ ORACLE_SQL["near_dup_clusters"] = f"""
       JOIN toks a ON a.doc_id = c.id_a
       JOIN toks b ON b.doc_id = c.id_b
       WHERE len(list_intersect(a.t, b.t)) * 1.0
-            / (len(a.t) + len(b.t) - len(list_intersect(a.t, b.t))) >= 0.6
+            / (len(a.t) + len(b.t) - len(list_intersect(a.t, b.t))) >= {D._NEAR_DUP_THRESHOLD}
     ),
     edges AS (
       SELECT id_a AS src, id_b AS dst FROM verified

@@ -22,7 +22,9 @@ from graph_db_spark.graph.build import (
 )
 from graph_db_spark.operators import profiling as PF
 from graph_db_spark.operators.aggregates import with_global_rank
-from graph_db_spark.operators.dedup import guard_block_pairs, near_dup_clusters, portable_hash
+from graph_db_spark.operators.dedup import (
+    _NEAR_DUP_THRESHOLD, guard_block_pairs, near_dup_clusters, portable_hash,
+)
 from graph_db_spark.operators.joins import dim_hint
 from graph_db_spark.plans import pipeline as P
 from graph_db_spark.plans.families.q00_base import (
@@ -1159,7 +1161,7 @@ _SKEW_N = 200  # 200² = 40,000 pairs > max_task_pairs=2,000 → grid split g=5
       JOIN toks a ON a.doc_id = c.id_a
       JOIN toks b ON b.doc_id = c.id_b
       WHERE len(list_intersect(a.t, b.t)) * 1.0
-            / (len(a.t) + len(b.t) - len(list_intersect(a.t, b.t))) >= 0.6
+            / (len(a.t) + len(b.t) - len(list_intersect(a.t, b.t))) >= {_NEAR_DUP_THRESHOLD}
     ),
     edges AS (
       SELECT id_a AS src, id_b AS dst FROM verified
@@ -1317,7 +1319,7 @@ def streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = ev.filter((mod == 7) | ((mod != 7) & (F.col("ts") >= cut)))
     out = _run_batched_stream(
         spark, sf_dir, "late_data", [b0, b1, b2],
-        lambda s: STRM.stream_daily_stats(s, watermark="2 days"),
+        lambda s: STRM.stream_daily_stats(s, "2 days"),
     )
     return out.select(
         "day",
@@ -1672,7 +1674,7 @@ def _curation_oracle(tail: str) -> str:
       JOIN vtoks a ON a.doc_id = c.id_a
       JOIN vtoks b ON b.doc_id = c.id_b
       WHERE len(list_intersect(a.t, b.t)) * 1.0
-            / (len(a.t) + len(b.t) - len(list_intersect(a.t, b.t))) >= 0.6
+            / (len(a.t) + len(b.t) - len(list_intersect(a.t, b.t))) >= {_NEAR_DUP_THRESHOLD}
     ),
     dedges AS (
       SELECT id_a AS src, id_b AS dst FROM verified

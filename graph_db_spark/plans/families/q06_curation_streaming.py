@@ -1598,9 +1598,7 @@ def streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "wm_dedup",
         [base, base, b2],
-        lambda s: STRM.dedupe_within_watermark(
-            s, ["event_id"], ts_col="ts", watermark="2 days"
-        ),
+        lambda s: STRM.dedupe_within_watermark(s, ["event_id"]),
     )
     return out.groupBy(F.col("event_id").cast("bigint").alias("event_id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_emitted")

@@ -24,7 +24,9 @@ from graph_db_spark.graph.build import (
 from graph_db_spark.operators import profiling as PF
 from graph_db_spark.operators import similarity as SIM
 from graph_db_spark.operators.aggregates import with_global_rank
-from graph_db_spark.operators.dedup import _MINHASH_P, minhash_params, portable_hash
+from graph_db_spark.operators.dedup import (
+    _MINHASH_P, _PPJ_DEN, _PPJ_NUM, _PPJ_SHINGLE_N, minhash_params, portable_hash,
+)
 from graph_db_spark.operators.dedup import prefix_filter_jaccard as ppj  # a query shares the name
 from graph_db_spark.operators.drift import _HOLT_ALPHA, _HOLT_BETA, _HOLT_HORIZON, holt_linear
 from graph_db_spark.operators.joins import dim_hint
@@ -829,15 +831,15 @@ def holt_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "prefix_filter_jaccard",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w
       FROM documents
     ),
     t AS MATERIALIZED (
       SELECT doc_id,
-             list_distinct(list_transform(range(0, greatest(len(w) - 2, 0)),
-                           i -> array_to_string(w[i+1:i+3], ' '))) AS toks
+             list_distinct(list_transform(range(0, greatest(len(w) - {_PPJ_SHINGLE_N - 1}, 0)),
+                           i -> array_to_string(w[i+1:i+{_PPJ_SHINGLE_N}], ' '))) AS toks
       FROM w
     )
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -846,8 +848,8 @@ def holt_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - len(list_intersect(a.toks, b.toks)) AS BIGINT) AS uni
     FROM t a JOIN t b ON a.doc_id < b.doc_id
     WHERE len(a.toks) > 0 AND len(b.toks) > 0
-      AND len(list_intersect(a.toks, b.toks)) * 10
-          >= (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) * 7
+      AND len(list_intersect(a.toks, b.toks)) * {_PPJ_DEN}
+          >= (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) * {_PPJ_NUM}
     """,
 )
 def prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,67 +18,69 @@ same Catalyst plans as the batch versions — one definition, two runners.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Event-time horizon of the replay jobs: longer than the fixtures' whole
+# event span, so on a static replay no row is late and the stream result
+# equals the batch aggregation.
+_REPLAY_WATERMARK = "3650 days"
+# Silence that closes a session (the batch sessionizer's gap).
+_SESSION_GAP_MIN = 30
+# Horizon inside which a replayed event_id is a duplicate.
+_DEDUP_WATERMARK = "2 days"
+# Word n-gram length of the decontamination overlap test.
+_DECONTAM_N = 3
+# A touch pairs with the purchases of the next 24 hours; each side's
+# watermark bounds how long its rows wait in state for the other side.
+_TOUCH_WINDOW_HOURS = 24
+_PURCHASE_WATERMARK = "1 day"
+_TOUCH_WATERMARK = "2 days"
 
-def stream_daily_stats(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_cols: Sequence[str] = ("user_id", "event_type"),
-    value_col: str = "value",
-    watermark: str = "1 day",
-) -> DataFrame:
+
+def stream_daily_stats(events: DataFrame, watermark: str) -> DataFrame:
     """Streaming A1: tumbling 1-day window per key with min/max/avg/sum/count
     — the daily sensor aggregation (graph_weather_day.py:74-117) as an
     incremental job. Late rows beyond the watermark are dropped (the batch
     re-run-with-widened-window pattern, graph_irrigation_event.py:52-53,
     becomes the watermark horizon)."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, "1 day").alias("win"), *key_cols)
+        events.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", "1 day").alias("win"), "user_id", "event_type")
         .agg(
-            F.avg(value_col).alias("data"),
-            F.min(value_col).alias("min"),
-            F.max(value_col).alias("max"),
-            F.avg(value_col).alias("avg"),
-            F.sum(value_col).alias("sum"),
-            F.count(value_col).alias("n"),
+            F.avg("value").alias("data"),
+            F.min("value").alias("min"),
+            F.max("value").alias("max"),
+            F.avg("value").alias("avg"),
+            F.sum("value").alias("sum"),
+            F.count("value").alias("n"),
         )
         .select(
             F.date_format(F.col("win.start"), "yyyy-MM-dd").alias("day"),
-            *key_cols,
+            "user_id", "event_type",
             "data", "min", "max", "avg", "sum", "n",
         )
     )
 
 
-def stream_sessions(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_cols: list[str] = ("user_id",),
-    gap: str = "30 minutes",
-    watermark: str = "1 day",
-) -> DataFrame:
+def stream_sessions(events: DataFrame) -> DataFrame:
     """Streaming sessionization: ``session_window`` with the same gap
     semantics as the batch lag+cumsum program (operators/sessionize.py) —
     the GET_IRRIGATIONS interval stream."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("win"), *key_cols)
+        events.withWatermark("ts", _REPLAY_WATERMARK)
+        .groupBy(F.session_window("ts", f"{_SESSION_GAP_MIN} minutes").alias("win"), "user_id")
         .agg(
-            F.min(ts_col).alias("start_at"),
-            F.max(ts_col).alias("end_at"),
+            F.min("ts").alias("start_at"),
+            F.max("ts").alias("end_at"),
             # exact integer-µs difference over a double divisor — double
             # epoch-seconds arithmetic is 1-ulp engine-dependent and the
             # sf0.1 sweep caught a duration rounding 4.5198 vs the
             # oracle's 4.5199 (same fix as operators/sessionize.py)
             (
                 (
-                    F.max(F.unix_micros(F.col(ts_col).cast("timestamp")))
-                    - F.min(F.unix_micros(F.col(ts_col).cast("timestamp")))
+                    F.max(F.unix_micros(F.col("ts").cast("timestamp")))
+                    - F.min(F.unix_micros(F.col("ts").cast("timestamp")))
                 )
                 / F.lit(60000000.0)
             ).alias("duration_min"),
@@ -88,15 +90,7 @@ def stream_sessions(
     )
 
 
-def stream_sliding_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_cols: Sequence[str] = ("event_type",),
-    value_col: str = "value",
-    window: str = "6 hours",
-    slide: str = "2 hours",
-    watermark: str = "1 day",
-) -> DataFrame:
+def stream_sliding_counts(events: DataFrame) -> DataFrame:
     """Streaming SLIDING-window aggregation — ``window(ts, w, s)`` with
     s < w, the overlapping-horizon variant the tumbling jobs above can't
     express (a 6h window every 2h: each event lands in w/s = 3 windows).
@@ -105,32 +99,30 @@ def stream_sliding_counts(
     aligned window starts floor(t/s)·s − k·s inside codegen, so the
     fan-out is an in-task explode, not a join."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("win"), *key_cols)
+        events.withWatermark("ts", _REPLAY_WATERMARK)
+        .groupBy(F.window("ts", "6 hours", "2 hours").alias("win"), "event_type")
         .agg(
-            F.count(value_col).alias("n"),
-            F.sum(value_col).alias("sum_value"),
+            F.count("value").alias("n"),
+            F.sum("value").alias("sum_value"),
         )
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
-            *key_cols,
+            "event_type",
             "n",
             "sum_value",
         )
     )
 
 
-def dedupe_within_watermark(
-    events: DataFrame, keys: list[str], ts_col: str = "ts", watermark: str = "1 day"
-) -> DataFrame:
+def dedupe_within_watermark(events: DataFrame, keys: list[str]) -> DataFrame:
     """Keyed dedupe inside the watermark horizon — the streaming form of the
     idempotent-MERGE contract for replayed rows
     (``dropDuplicatesWithinWatermark``)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+    return events.withWatermark("ts", _DEDUP_WATERMARK).dropDuplicatesWithinWatermark(keys)
 
 
-def stream_exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def stream_exact_dedup(docs: DataFrame) -> DataFrame:
     """Streaming exact dedup — the in-flight form of
     ``operators.dedup.exact_dedup``: documents arriving on a stream are
     keyed by the md5 of their normalized text and only the first copy of
@@ -147,17 +139,11 @@ def stream_exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     from graph_db_spark.operators.text import normalize_text
 
     return docs.withColumn(
-        "content_hash", F.md5(normalize_text(F.col(text_col)))
+        "content_hash", F.md5(normalize_text(F.col("text")))
     ).dropDuplicates(["content_hash"])
 
 
-def stream_decontaminate(
-    docs: DataFrame,
-    eval_grams: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def stream_decontaminate(docs: DataFrame, eval_grams: DataFrame) -> DataFrame:
     """Ingest-time benchmark decontamination — the streaming half of the
     batch ``benchmark_decontamination`` query: each arriving document is
     flagged if any of its word n-grams appears in the held-out eval set.
@@ -175,25 +161,20 @@ def stream_decontaminate(
     one = eval_grams.withColumn("_k", F.lit(1))
     joined = docs.withColumn("_k", F.lit(1)).join(F.broadcast(one), on="_k")
     return joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.arrays_overlap(
-            word_ngrams(F.col(text_col), n), F.col("eval_grams")
+            word_ngrams(F.col("text"), _DECONTAM_N), F.col("eval_grams")
         ).alias("contaminated"),
     )
 
 
-def stateful_sessions(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 1800,
-) -> DataFrame:
+def stateful_sessions(events: DataFrame) -> DataFrame:
     """Custom stateful sessionization via ``applyInPandasWithState`` — the
     escape hatch for operators ``session_window`` can't express (per-key
     custom state machines; SURVEY §2.8 "flatMapGroupsWithState-equivalent").
 
     Same gap semantics as the batch ``session_intervals`` (a strictly
-    greater-than-``gap`` silence starts a new session,
+    greater-than-``_SESSION_GAP_MIN`` silence starts a new session,
     operators/sessionize.py): state per key = (start, last, n) of the open
     session; each closed session is emitted as
     ``(key, start_at, end_at, duration_min, n_events)``. The open tail
@@ -205,7 +186,7 @@ def stateful_sessions(
     import pandas as pd  # noqa: F401 — required by the worker closure
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    gap_us = int(gap_seconds) * 1_000_000
+    gap_us = _SESSION_GAP_MIN * 60_000_000
 
     def fn(key, pdfs, state: GroupState):
         import pandas as pd
@@ -214,7 +195,7 @@ def stateful_sessions(
             start_us, last_us, n = state.get
         else:
             start_us, last_us, n = None, None, 0
-        ts_all = pd.concat([pdf[ts_col] for pdf in pdfs]).sort_values()
+        ts_all = pd.concat([pdf["ts"] for pdf in pdfs]).sort_values()
         closed: list[tuple] = []
         for t in ts_all:
             tus = pd.Timestamp(t).value // 1000  # ns → µs
@@ -229,18 +210,18 @@ def stateful_sessions(
             state.update((int(start_us), int(last_us), int(n)))
         if closed:
             yield pd.DataFrame(
-                closed, columns=[key_col, "start_us", "end_us", "n_events"]
+                closed, columns=["user_id", "start_us", "end_us", "n_events"]
             )
 
-    raw = events.select(key_col, ts_col).groupBy(key_col).applyInPandasWithState(
+    raw = events.select("user_id", "ts").groupBy("user_id").applyInPandasWithState(
         fn,
-        outputStructType=f"{key_col} bigint, start_us bigint, end_us bigint, n_events bigint",
+        outputStructType="user_id bigint, start_us bigint, end_us bigint, n_events bigint",
         stateStructType="start_us bigint, last_us bigint, n bigint",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     return raw.select(
-        key_col,
+        "user_id",
         F.timestamp_micros(F.col("start_us")).alias("start_at"),
         F.timestamp_micros(F.col("end_us")).alias("end_at"),
         ((F.col("end_us") - F.col("start_us")) / F.lit(60_000_000.0)).alias("duration_min"),
@@ -253,10 +234,6 @@ def stream_enriched_daily(
     dim: DataFrame,
     dim_key: str,
     seg_col: str,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    value_col: str = "value",
-    watermark: str = "1 day",
 ) -> DataFrame:
     """§2.8 stream-static enrichment: the per-event enrichment the reference
     performs after an event closes (vwc before/after,
@@ -274,13 +251,13 @@ def stream_enriched_daily(
     shuffle-hash join once it outgrows the threshold, instead of a
     forced hint aborting the stream at cluster scale."""
     enriched = events.join(
-        dim.select(F.col(dim_key).alias(user_col), F.col(seg_col)),
-        on=user_col,
+        dim.select(F.col(dim_key).alias("user_id"), F.col(seg_col)),
+        on="user_id",
     )
     return (
-        enriched.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, "1 day").alias("win"), seg_col)
-        .agg(F.sum(value_col).alias("total"), F.count(F.lit(1)).alias("n"))
+        enriched.withWatermark("ts", _REPLAY_WATERMARK)
+        .groupBy(F.window("ts", "1 day").alias("win"), seg_col)
+        .agg(F.sum("value").alias("total"), F.count(F.lit(1)).alias("n"))
         .select(
             F.date_format(F.col("win.start"), "yyyy-MM-dd").alias("day"),
             F.col(seg_col),
@@ -295,8 +272,6 @@ def stream_incremental_dedup(
     index_banded: DataFrame,
     out_path: str,
     checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ):
     """Ingest-time APPROXIMATE dedup: each micro-batch of new documents
     is LSH-checked against the persisted banded index of the existing
@@ -313,7 +288,7 @@ def stream_incremental_dedup(
     from graph_db_spark.operators.dedup import minhash_lsh_candidates_against
 
     def batch(bdf: DataFrame, batch_id: int) -> None:
-        cands = minhash_lsh_candidates_against(bdf, index_banded, text_col, id_col)
+        cands = minhash_lsh_candidates_against(bdf, index_banded, "text", "doc_id")
         # per-batch OVERWRITE subdir, not a blind append: a micro-batch
         # replayed after a crash-between-commit-and-checkpoint rewrites
         # its own partition instead of duplicating pairs (replay-safe,
@@ -329,16 +304,9 @@ def stream_incremental_dedup(
     )
 
 
-def stream_touch_pairs(
-    purchases: DataFrame,
-    touches: DataFrame,
-    window_hours: int = 24,
-    p_watermark: str = "1 day",
-    t_watermark: str = "2 days",
-    how: str = "inner",
-) -> DataFrame:
+def stream_touch_pairs(purchases: DataFrame, touches: DataFrame, how: str) -> DataFrame:
     """STREAM-STREAM inner join: each purchase pairs with every
-    view/click by the same user in the preceding ``window_hours`` — the
+    view/click by the same user in the preceding ``_TOUCH_WINDOW_HOURS`` — the
     ingest-time half of touch attribution (the batch `asof_join` picks
     the LAST touch; per-group ranking isn't append-expressible, so the
     stream emits the pair set and the last-touch pick stays batch/
@@ -347,7 +315,7 @@ def stream_touch_pairs(
     This is the one stateful shape the other §2.8 jobs don't cover:
     BOTH sides buffer in the state store, and the watermarks + the
     time-interval join condition bound that state — a touch can only
-    match purchases up to ``window_hours`` ahead, so rows age out of
+    match purchases up to ``_TOUCH_WINDOW_HOURS`` ahead, so rows age out of
     state once the other side's watermark passes their match horizon.
     Without the interval condition the state would grow unboundedly;
     with it, state ≈ each side's watermark horizon of rows.
@@ -363,15 +331,15 @@ def stream_touch_pairs(
     p = purchases.select(
         F.col("user_id").alias("p_user"), F.col("ts").alias("pts"),
         F.col("event_id").alias("pid"), F.col("value").alias("pvalue"),
-    ).withWatermark("pts", p_watermark)
+    ).withWatermark("pts", _PURCHASE_WATERMARK)
     t = touches.select(
         F.col("user_id").alias("t_user"), F.col("ts").alias("tts"),
         F.col("event_type").alias("touch"),
-    ).withWatermark("tts", t_watermark)
+    ).withWatermark("tts", _TOUCH_WATERMARK)
     return p.join(
         t,
         F.expr(
-            f"p_user = t_user AND tts <= pts AND tts >= pts - INTERVAL {window_hours} HOURS"
+            f"p_user = t_user AND tts <= pts AND tts >= pts - INTERVAL {_TOUCH_WINDOW_HOURS} HOURS"
         ),
         how,
     )

@@ -367,10 +367,10 @@ _LIBRARY_DEFAULT_EXEMPTIONS = {
 
 def test_library_defaults_have_two_values_in_use():
     """The same rule for the library the queries call — operators/,
-    graph/ and functions/: a setting no caller varies is a module
+    graph/, functions/ and streaming/: a setting no caller varies is a module
     constant of the module that uses it. Every exemption must still be
     single-valued to the walk, so a stale entry fails too."""
-    values = _defaults_in_use(["operators", "graph", "functions"])
+    values = _defaults_in_use(["operators", "graph", "functions", "streaming"])
     single = {k for k, v in values.items() if len(v) < 2}
     assert set(_LIBRARY_DEFAULT_EXEMPTIONS) <= single, set(_LIBRARY_DEFAULT_EXEMPTIONS) - single
     left = sorted(f"{k}: {sorted(values[k])}" for k in single - set(_LIBRARY_DEFAULT_EXEMPTIONS))

@@ -1,81 +1,39 @@
 """Physical-plan regression tests — pin the SCALE.md §1 audit.
 
-These assert plan *properties* (pushdown, broadcast choice, no accidental
-cartesian products), not plan shapes, so Catalyst/AQE remain free to
-re-plan within the contract.
+Two kinds of check. Plan *properties* (pushdown, broadcast choice, one
+exchange per iterative round) are asserted on single plans. Plan
+*shapes* — node counts per query — are pinned for the whole inventory by
+the ledger plans/shape.json, which one run of tools/dump_plans.py
+re-derives; the no-global-window and no-Cartesian rules read the same
+sweep.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
+import json
+import os
+import pathlib
+import subprocess
+import sys
 
 import pytest
 
 from graph_db_spark.plans.queries import QUERIES
+from tools.dump_plans import (
+    BUILDTIME_ACTIONS,
+    _capture_buildtime,
+    _explain_str,
+    format_ledger,
+    ledger_diff,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = pathlib.Path(__file__).resolve().parents[1]
+LEDGER = REPO / "plans" / "shape.json"
 
 
 def plan_of(spark, name: str) -> str:
-    df = QUERIES[name](spark, SF_DIR)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    return buf.getvalue()
-
-
-def plans_of(spark, name: str) -> list[str]:
-    """The final plan PLUS the plan of every frame the build EXECUTES
-    on its own — the r10-verdict blind spot: a global window that runs
-    at build time behind an eager ``localCheckpoint`` (or inside a
-    ``collect``/``count`` driver probe, the same hole one layer down)
-    never appears in the final plan, so the inventory sweep silently
-    skipped it (page_hinkley_drift was enforcement-by-comment only).
-    Each patch captures the frame's formatted plan and then delegates
-    to the REAL method, so iterative builds keep their lineage cuts
-    and build-time behavior is unchanged. ``take``/``head``/``first``
-    route through ``collect`` in the classic DataFrame, so patching
-    collect + count + localCheckpoint covers every build-time action
-    the non-test source uses (writer paths are exercised by their own
-    plan/oracle tests, not this sweep)."""
-    # patch the CONCRETE class: pyspark 4 routes DataFrame method calls
-    # through pyspark.sql.classic.dataframe.DataFrame, which overrides
-    # these methods — patching only the abstract parent never fires
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:  # pragma: no cover - pre-4.0 layout
-        from pyspark.sql import DataFrame
-
-    captured: list[str] = []
-
-    def wrap(orig):
-        def capturing(self, *args, **kwargs):
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                self.explain(mode="formatted")
-            captured.append(buf.getvalue())
-            return orig(self, *args, **kwargs)
-
-        return capturing
-
-    # the capture list is owned by tools/dump_plans.py (BUILDTIME_ACTIONS)
-    # so committed plan dumps and this sweep can never drift apart;
-    # test_buildtime_capture_list_matches_dump_plans pins the import
-    from tools.dump_plans import BUILDTIME_ACTIONS
-
-    origs = {m: getattr(DataFrame, m) for m in BUILDTIME_ACTIONS}
-    for m, orig in origs.items():
-        setattr(DataFrame, m, wrap(orig))
-    try:
-        df = QUERIES[name](spark, SF_DIR)
-    finally:
-        for m, orig in origs.items():
-            setattr(DataFrame, m, orig)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    return [buf.getvalue()] + captured
+    return _explain_str(QUERIES[name](spark, SF_DIR))
 
 
 def test_pricing_summary_pushdown_and_pruning(spark):
@@ -95,91 +53,6 @@ def test_grouped_agg_has_partial_aggregation(spark):
     plan = plan_of(spark, "event_day_stats")
     # two-phase aggregate: partial (map-side combine) + final
     assert plan.count("HashAggregate") >= 2
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        "edge_customer_order", "asof_nearest_line", "interval_scoped_avg",
-        "enrich_missing_brand", "pipeline_sap_element_results",
-        "pipeline_optimum_element_ranges", "pipeline_water_param_results",
-        "pipeline_app_nutrient_contents", "cooccurrence_triangles",
-        "ngram_jaccard_pairs", "salted_skew_join",
-        "benchmark_decontamination", "stratified_sample", "mixture_weights",
-        "sequence_packing", "multimodal_audio_features",
-        "multimodal_frame_sample", "multimodal_resize",
-        "repetition_quality", "pii_scrub_audit", "cms_heavy_hitters",
-        "bloom_semi_prune", "tfidf_top_terms", "vocab_coverage",
-        "shipping_priority", "large_volume_customers", "cms_day_merge",
-        "kmv_audience_overlap", "kmv_source_ngram_overlap",
-        "repeated_spans", "doc_chunks", "embedding_diversity",
-        "motif_branch_conation", "local_supplier_volume", "funnel_conversion",
-        "last_touch_attribution", "cohort_retention", "tokenizer_fertility",
-        "unigram_logperplexity", "quality_quantile_filter",
-        "event_transition_matrix", "source_dup_rate", "dow_seasonality",
-        "degree_histogram", "rolling_anomaly_flags", "session_overlap_pairs",
-        "order_priority_checking", "returned_item_reporting",
-        "scd2_user_state", "dataset_split_assign", "robust_outliers",
-        "link_prediction_adamic_adar", "label_propagation",
-        "gap_fill_forward", "table_profile", "dq_validation_report",
-        "trigram_lm_topk", "scd2_lookup_join", "equi_depth_histogram",
-        "entity_resolution_pairs", "corpus_global_shuffle",
-        "min_cost_supplier", "small_quantity_revenue", "sole_late_supplier",
-        "join_key_skew_profile", "bpe_top_pairs", "disjunctive_discount_revenue",
-        "ann_ivf_pq_topk", "dsir_selection", "tz_zone_correct_offsets",
-        "doc_token_entropy", "bm25_doc_ranking", "hybrid_retrieval_rerank",
-        "degree_assortativity",
-        # round-6 continuation, third batch (the heavy/side-effecting ones
-        # — modularity, snapshot, streaming — run driver probes at plan
-        # build and are exercised by their own oracle queries instead)
-        "autocorrelation_lags", "theil_sen_trend", "lineitem_correlations",
-        "zipf_law_fit", "jaccard_link_prediction", "ngram_containment_pairs",
-        "psi_distribution_drift", "ks_two_sample", "ab_test_proportions",
-        "mannwhitney_u_test", "trimmed_mean_stats", "bootstrap_ci_mean",
-        "embedding_eval_contamination",
-        # round-6 continuation, fourth batch
-        "rfm_customer_segments", "session_path_topk", "degree_powerlaw_mle",
-        "conversion_latency_quantiles", "sql_api_region_revenue",
-        "geo_grid_distance_join", "hierarchy_subtree_rollup",
-        # round-6 continuation, fifth/sixth batches (snapshot-commit and
-        # localCheckpoint-at-plan-build queries excluded as before)
-        "holt_trend_forecast", "kaplan_meier_churn", "k_anonymity_audit",
-        "sq8_quantization_bound", "moments_rollup_variance",
-        "window_funnel_levels",
-        # round-7 batteries (checkpoint-at-plan-build queries — katz,
-        # markov absorption, pca — excluded as before)
-        "gini_concentration", "benford_first_digit",
-        "cramers_v_association", "anova_f_oneway", "kruskal_wallis_test",
-        "ams_f2_moment", "stl_seasonal_decompose", "mase_forecast_accuracy",
-        "cross_correlation_lead_lag", "ols_normal_equations",
-        "naive_bayes_token_screen", "knn_loo_label_eval",
-        "mutual_nearest_pairs", "embedding_centroid_drift",
-        "dp_noisy_source_counts", "source_js_divergence",
-        "curriculum_phase_assign", "quantile_normalize_lengths",
-        "welch_t_test", "levene_variance_test", "sprt_sequential_decision",
-        "region_trade_assortativity", "association_rule_triples",
-        "item_item_collaborative_topk", "capture_recapture_estimate",
-        "good_turing_unseen_mass", "heaps_law_fit", "poisson_rate_ratio",
-        "dispersion_index_check", "mcnemar_paired_test",
-        "markov_entropy_rate", "binary_segmentation_changepoint",
-        "weighted_median_price", "positional_phrase_search",
-        "energy_distance_groups",
-        "trade_reciprocity", "rich_club_coefficient",
-        "token_pmi_collocations", "corpus_diversity_indices",
-        "open_order_backlog", "kendall_tau_b",
-        "theil_index_decomposition", "ndcg_label_retrieval",
-        "cohens_kappa_raters", "gumbel_extreme_value_fit",
-        "runs_test_randomness", "bland_altman_agreement", "ljung_box_q",
-        "spc_individuals_chart", "growth_accounting_weekly",
-        "revenue_var_cvar", "diff_in_diff_uplift", "brand_price_elasticity",
-    ],
-)
-def test_no_accidental_cartesian(spark, name):
-    """No CartesianProduct anywhere in the core inventory (the deliberate
-    broadcast nested loops — brute-force cosine and constant-matrix
-    attachment — are separate queries, excluded here by construction)."""
-    plan = plan_of(spark, name)
-    assert "CartesianProduct" not in plan, name
 
 
 @pytest.mark.parametrize(
@@ -322,7 +195,9 @@ def test_pca_covariance_stage_is_join_free(spark):
     only data-sized plan (the build-time grid collect) has no
     SortMergeJoin and exactly one Exchange (the 2144-group partial→final
     aggregate). The final emitted frame is a 1-row local relation."""
-    plans = plans_of(spark, "pca_power_iteration")
+    plans: list[str] = []
+    with _capture_buildtime(plans):
+        QUERIES["pca_power_iteration"](spark, SF_DIR)
     data_pass = [p for p in plans if "posexplode" in p or "Generate" in p]
     assert data_pass, "covariance grid plan not captured"
     for p in data_pass:
@@ -549,130 +424,6 @@ def test_benford_filter_reaches_scan(spark):
 
 
 # ---------------------------------------------------------------------------
-# Inventory-wide single-partition-window sweep (r7 verdict item 3)
-# ---------------------------------------------------------------------------
-
-# Queries allowed to carry a globally-ORDERED (partition-free) Window,
-# each with the boundedness argument for why the windowed frame does NOT
-# grow with the corpus (SCALE.md §26 policy). Everything else in the
-# inventory must keep every ordered Window partitioned — the two-level
-# prefix sum (`with_global_rank`), closed-form `ntile_of`, or TakeOrdered
-# replace the global forms (the r7-verdict rewrites: rfm, sprt, heaps,
-# naive-bayes; r8 sweep additions: curriculum, quantile-normalize).
-GLOBAL_WINDOW_ALLOWLIST = {
-    "ams_f2_moment": "median-of-means rank over the sketch's counter "
-    "estimates — row count fixed by sketch config, not by data",
-    "binary_segmentation_changepoint": "calendar-bounded daily series",
-    "kruskal_wallis_test": "distinct-value grid of the integer-valued "
-    "quantity column (~50 rows; cardinality assumption documented in the "
-    "query docstring with the with_global_rank escape hatch)",
-    "ljung_box_q": "calendar-bounded daily series",
-    "open_order_backlog": "calendar-bounded daily series",
-    "revenue_var_cvar": "calendar-bounded daily return series",
-    "runs_test_randomness": "calendar-bounded daily series",
-    "spc_individuals_chart": "calendar-bounded daily series",
-    "stl_seasonal_decompose": "calendar-bounded daily series",
-    "rrf_fusion_ranking": "rank assignment over post-TakeOrdered 100-row "
-    "candidate lists — k-sized by construction",
-    "hodges_lehmann_shift": "cumulative count over the adaptive-width "
-    "diff histogram — capped at 65536 buckets by construction (width is "
-    "derived from the day grids' min/max), independent of corpus size",
-    "wilcoxon_signed_rank": "cumulative tie-count over the |diff| value "
-    "grid, at most one row per calendar day",
-    "durbin_watson_trend": "lag-1 over the calendar-bounded daily series",
-    "max_drawdown_daily": "running max over the calendar-bounded daily "
-    "series",
-    "wasserstein_price_shift": "cumulative counts + lead over the "
-    "adaptive-width value histogram — capped at 65536 buckets by "
-    "construction",
-    "engle_granger_cointegration": "lag-1 over the calendar-bounded "
-    "daily residual series",
-    "weibull_time_to_convert": "KM at-risk/product windows over the "
-    "event-time day grid, bounded by the observation horizon",
-    "auc_doc_length_lang": "cumulative negatives over the n_chars value "
-    "grid — bounded by the document-length domain ([44, 577] in the "
-    "fixtures), not corpus size",
-    "granger_causality_f": "lag-1 over the calendar-bounded daily series",
-    "page_hinkley_drift": "cumulative mean + running min over the "
-    "calendar-bounded daily series — the windows execute at build time "
-    "behind eager localCheckpoints, visible to the sweep since the r11 "
-    "plans_of checkpoint capture (the r10-verdict blind-spot fix)",
-}
-
-
-def _top_level_bracket_groups(s: str) -> list[str]:
-    """Split a formatted-plan Arguments line into its top-level [...]
-    groups. Regex bracket-matching miscounts here: the window-function
-    spec group itself contains brackets/parens, so only a depth counter
-    is reliable."""
-    groups, depth, cur = [], 0, None
-    for ch in s:
-        if ch == "[":
-            depth += 1
-            if depth == 1:
-                cur = []
-                continue
-        elif ch == "]":
-            depth -= 1
-            if depth == 0:
-                groups.append("".join(cur))
-                cur = None
-                continue
-        if cur is not None:
-            cur.append(ch)
-    return groups
-
-
-def global_windows_in(plan: str) -> list[str]:
-    """Window nodes whose spec is single-partition. Formatted-mode
-    `Arguments:` carries [functions], [partition], [order] — but the
-    partition group is OMITTED (not emitted empty) when absent, so:
-    two groups whose last carries sort tokens = global ORDERED window
-    (single-partition sort); any empty partition group = global
-    unordered window (Window.partitionBy()); two groups without sort
-    tokens = partition-only window (key-partitioned, scale-safe)."""
-    import re
-
-    bad = []
-    for m in re.finditer(r"\(\d+\) Window\n(?:[^\n]*\n)*?Arguments: (.*)", plan):
-        g = _top_level_bracket_groups(m.group(1))
-        ordered_last = g and ("ASC NULLS" in g[-1] or "DESC NULLS" in g[-1])
-        if (len(g) == 2 and ordered_last) or any(
-            not grp.strip() for grp in g[1:]
-        ):
-            bad.append(m.group(1)[:160])
-    return bad
-
-
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_inventory_no_global_window_outside_allowlist(spark, name):
-    """Every queries() entry: no single-partition Window unless the
-    windowed frame is bounded by construction and documented in
-    GLOBAL_WINDOW_ALLOWLIST. This is the inventory-wide generalization
-    of test_two_level_rank_queries_have_no_global_window — it would
-    have caught all four r7-verdict global-window findings at commit
-    time, and goes red if any of those fixes is reverted. Since r11 the
-    sweep also sees THROUGH eager localCheckpoints (plans_of captures
-    each checkpointed frame's pre-checkpoint plan), so a global window
-    that executes at build time needs a real allowlist entry too."""
-    bad = [b for p in plans_of(spark, name) for b in global_windows_in(p)]
-    if name in GLOBAL_WINDOW_ALLOWLIST:
-        assert bad, (
-            f"{name} is allowlisted for a global window but its plan has "
-            "none — remove the stale allowlist entry"
-        )
-        return
-    assert not bad, (
-        f"{name}: single-partition Window over a frame not on the bounded "
-        f"allowlist: {bad}"
-    )
-
-
-def test_global_window_allowlist_entries_are_registered():
-    assert set(GLOBAL_WINDOW_ALLOWLIST) <= set(QUERIES)
-
-
-# ---------------------------------------------------------------------------
 # x100 amplification scale probe (r10 verdict item 5)
 # ---------------------------------------------------------------------------
 #
@@ -770,31 +521,41 @@ def test_decimal_moment_queries_survive_sf1_magnitudes(
 
 
 def test_buildtime_capture_list_matches_dump_plans():
-    """ADVICE r13: the build-time action list used by the committed plan
-    dumps (tools/dump_plans.py) and by plans_of above must be the same
-    object — a builder switching to another eager action (toPandas,
-    isEmpty) must be caught by BOTH captures or neither claim is
-    checkable. plans_of imports the list, so equality here pins the
-    import wiring, and the list itself must cover every eager action the
-    classic DataFrame does not route through collect."""
-    from tools.dump_plans import BUILDTIME_ACTIONS
-
+    """The build-time capture must cover every eager action the classic
+    DataFrame does not route through collect — a builder switching to
+    toPandas or isEmpty must still land in the ledger."""
     assert set(BUILDTIME_ACTIONS) >= {
         "collect", "count", "localCheckpoint", "toPandas", "isEmpty"
     }
 
 
-def test_dump_plans_usage_line_on_missing_args(monkeypatch, capsys):
-    """ADVICE r13: fewer than 3 operands prints the usage string and
-    returns non-zero instead of raising a bare IndexError."""
-    import sys as _sys
-
+def test_dump_plans_usage_line_on_operands(monkeypatch, capsys):
+    """The ledger command takes no operands: any operand prints the usage
+    string and returns non-zero before a session starts."""
     from tools import dump_plans
 
-    monkeypatch.setattr(_sys, "argv", ["dump_plans.py", "outdir"])
-    rc = dump_plans.main()
-    assert rc == 2
+    monkeypatch.setattr(sys, "argv", ["dump_plans.py", "pagerank"])
+    assert dump_plans.main() == 2
     assert "usage:" in capsys.readouterr().err
+
+
+def test_ledger_diff_names_query_field_and_change():
+    """The committed ledger lists exactly the QUERIES names in its
+    canonical form, and the comparator reports one line per changed
+    count, per unknown query and per query left out."""
+    committed = json.loads(LEDGER.read_text())
+    assert sorted(committed) == sorted(QUERIES)
+    assert format_ledger(committed) == LEDGER.read_text()
+    assert ledger_diff(committed, committed) == []
+
+    n = committed["pagerank"].get("Exchange", 0)
+    bumped = {**committed, "pagerank": {**committed["pagerank"], "Exchange": n + 1}}
+    assert ledger_diff(committed, bumped) == [f"pagerank: Exchange {n} → {n + 1}"]
+
+    unknown = {**committed, "no_such_query": {}}
+    assert ledger_diff(committed, unknown) == ["no_such_query: swept but not in plans/shape.json"]
+    missing = {k: v for k, v in committed.items() if k != "pagerank"}
+    assert ledger_diff(committed, missing) == ["pagerank: in plans/shape.json but not swept"]
 
 
 @pytest.mark.parametrize("min_value", [95, None])
@@ -816,3 +577,148 @@ def test_conversion_obs_matches_oracle_cte(spark, min_value):
     assert got and got == oracle
     if min_value is not None:  # the high-value cut leaves users censored
         assert {d for _, _, d in got} == {0, 1}
+
+
+# ---------------------------------------------------------------------------
+# Plan-shape ledger (plans/shape.json) and the rules read off the same sweep
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module", autouse=True)
+def _sweep_run(tmp_path_factory):
+    """Start one ``tools/dump_plans.py`` run over the working tree when
+    this module starts, so the sweep runs beside the in-process plan
+    tests above it; the ledger tests at the end wait for it. It runs in
+    its own process because it fixes its own core count (the suite's
+    session is local[nproc]), with a small driver heap beside the
+    suite's JVM and its own temp dir for the builders' scratch paths."""
+    d = tmp_path_factory.mktemp("sweep")
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="2g", TMPDIR=str(d))
+    with open(d / "shape.json", "w") as out, open(d / "stderr.txt", "w") as err:
+        proc = subprocess.Popen(
+            [sys.executable, "tools/dump_plans.py"], cwd=REPO, env=env, stdout=out, stderr=err
+        )
+    yield proc, d
+    proc.kill()
+    proc.wait()
+
+
+@pytest.fixture(scope="module")
+def swept(_sweep_run):
+    """(ledger, FAIL lines) of the sweep."""
+    proc, d = _sweep_run
+    proc.wait(timeout=1800)
+    err = (d / "stderr.txt").read_text(errors="replace")
+    failed = [line for line in err.splitlines() if line.startswith("FAIL ")]
+    return json.loads((d / "shape.json").read_text()), failed
+
+
+def _shape(swept, name: str) -> dict[str, int]:
+    ledger, failed = swept
+    assert name in ledger, [f for f in failed if f.startswith(f"FAIL {name}:")]
+    return ledger[name]
+
+
+def test_plan_shape_ledger_matches_sweep(swept):
+    """Every query's plan shape — exchanges, joins by strategy,
+    aggregates by kind, windows and build-time actions — equals its
+    committed line in plans/shape.json. A plan change fails here with one
+    line per changed count; if the change is intended, regenerate with
+    ``python tools/dump_plans.py > plans/shape.json`` and commit the
+    reviewed diff."""
+    ledger, failed = swept
+    diff = ledger_diff(json.loads(LEDGER.read_text()), ledger)
+    assert not diff, "\n".join(failed + diff)
+
+
+# Queries allowed to carry a globally-ORDERED (partition-free) Window,
+# each with the boundedness argument for why the windowed frame does NOT
+# grow with the corpus (SCALE.md §26 policy). Everything else in the
+# inventory must keep every ordered Window partitioned — the two-level
+# prefix sum (`with_global_rank`), closed-form `ntile_of`, or TakeOrdered
+# replace the global forms (the r7-verdict rewrites: rfm, sprt, heaps,
+# naive-bayes; r8 sweep additions: curriculum, quantile-normalize).
+GLOBAL_WINDOW_ALLOWLIST = {
+    "ams_f2_moment": "median-of-means rank over the sketch's counter "
+    "estimates — row count fixed by sketch config, not by data",
+    "binary_segmentation_changepoint": "calendar-bounded daily series",
+    "kruskal_wallis_test": "distinct-value grid of the integer-valued "
+    "quantity column (~50 rows; cardinality assumption documented in the "
+    "query docstring with the with_global_rank escape hatch)",
+    "ljung_box_q": "calendar-bounded daily series",
+    "open_order_backlog": "calendar-bounded daily series",
+    "revenue_var_cvar": "calendar-bounded daily return series",
+    "runs_test_randomness": "calendar-bounded daily series",
+    "spc_individuals_chart": "calendar-bounded daily series",
+    "stl_seasonal_decompose": "calendar-bounded daily series",
+    "rrf_fusion_ranking": "rank assignment over post-TakeOrdered 100-row "
+    "candidate lists — k-sized by construction",
+    "hodges_lehmann_shift": "cumulative count over the adaptive-width "
+    "diff histogram — capped at 65536 buckets by construction (width is "
+    "derived from the day grids' min/max), independent of corpus size",
+    "wilcoxon_signed_rank": "cumulative tie-count over the |diff| value "
+    "grid, at most one row per calendar day",
+    "durbin_watson_trend": "lag-1 over the calendar-bounded daily series",
+    "max_drawdown_daily": "running max over the calendar-bounded daily "
+    "series",
+    "wasserstein_price_shift": "cumulative counts + lead over the "
+    "adaptive-width value histogram — capped at 65536 buckets by "
+    "construction",
+    "engle_granger_cointegration": "lag-1 over the calendar-bounded "
+    "daily residual series",
+    "weibull_time_to_convert": "KM at-risk/product windows over the "
+    "event-time day grid, bounded by the observation horizon",
+    "auc_doc_length_lang": "cumulative negatives over the n_chars value "
+    "grid — bounded by the document-length domain ([44, 577] in the "
+    "fixtures), not corpus size",
+    "granger_causality_f": "lag-1 over the calendar-bounded daily series",
+    "page_hinkley_drift": "cumulative mean + running min over the "
+    "calendar-bounded daily series — the windows execute at build time "
+    "behind eager localCheckpoints, which the sweep's build-time capture "
+    "sees",
+}
+
+# Queries allowed a CartesianProduct, each with the bound on both sides.
+CARTESIAN_ALLOWLIST = {
+    "benjamini_hochberg_fdr": "the 25×25 brand rank grid — 25 brands by "
+    "construction of the part table",
+    "cumulative_gains_deciles": "the 10×10 decile grid",
+}
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_inventory_no_global_window_outside_allowlist(swept, name):
+    """Every queries() entry: no single-partition Window unless the
+    windowed frame is bounded by construction and documented in
+    GLOBAL_WINDOW_ALLOWLIST. The sweep sees the final plan AND every plan
+    the build executes on its own (eager localCheckpoints, driver
+    probes), so a global window that runs at build time needs a real
+    allowlist entry too. An allowlisted query with no global window is a
+    stale entry and fails."""
+    n = _shape(swept, name).get("single-partition Window", 0)
+    if name in GLOBAL_WINDOW_ALLOWLIST:
+        assert n, (
+            f"{name} is allowlisted for a global window but its plan has "
+            "none — remove the stale allowlist entry"
+        )
+        return
+    assert not n, (
+        f"{name}: {n} single-partition Window(s) over a frame not on the "
+        "bounded allowlist (tools/dump_plans.py:global_windows_in)"
+    )
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_no_accidental_cartesian(swept, name):
+    """No CartesianProduct anywhere in the inventory — final or build-time
+    plans — outside the bounded CARTESIAN_ALLOWLIST (the deliberate
+    broadcast nested loops are BroadcastNestedLoopJoin, not Cartesian).
+    An allowlisted query with no CartesianProduct is a stale entry."""
+    n = _shape(swept, name).get("CartesianProduct", 0)
+    if name in CARTESIAN_ALLOWLIST:
+        assert n, f"{name} is allowlisted for a CartesianProduct but has none"
+        return
+    assert not n, f"{name}: {n} CartesianProduct(s)"
+
+
+def test_global_window_allowlist_entries_are_registered():
+    assert set(GLOBAL_WINDOW_ALLOWLIST) | set(CARTESIAN_ALLOWLIST) <= set(QUERIES)

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from graph_db_spark.operators.sessionize import session_intervals
 from graph_db_spark.plans.families.q00_base import _await_stream
+from graph_db_spark.streaming import jobs
 from graph_db_spark.streaming.jobs import (
     dedupe_within_watermark,
     stream_daily_stats,
@@ -59,12 +60,11 @@ def test_stream_daily_stats_matches_batch(spark, events_stream_dir):
     assert got == expected
 
 
-def test_stream_sessions_matches_batch(spark, events_stream_dir):
+def test_stream_sessions_matches_batch(spark, events_stream_dir, monkeypatch):
+    monkeypatch.setattr(jobs, "_REPLAY_WATERMARK", "10 days")
     batch = load_table(spark, "/root/testdata/sf0.001", "events")
     stream = spark.readStream.schema(batch.schema).parquet(events_stream_dir)
-    out = run_to_memory(
-        stream_sessions(stream, gap="30 minutes", watermark="10 days"), "session_stream"
-    )
+    out = run_to_memory(stream_sessions(stream), "session_stream")
     got = {
         (r["user_id"], r["start_at"], r["end_at"]): r["n_events"] for r in out.collect()
     }
@@ -75,13 +75,14 @@ def test_stream_sessions_matches_batch(spark, events_stream_dir):
     assert got == expected
 
 
-def test_dedupe_within_watermark(spark, events_stream_dir, tmp_path):
+def test_dedupe_within_watermark(spark, events_stream_dir, tmp_path, monkeypatch):
+    monkeypatch.setattr(jobs, "_DEDUP_WATERMARK", "10 days")
     batch = load_table(spark, "/root/testdata/sf0.001", "events")
     # duplicate the stream: union of the same dir twice → exact replays
     dup_dir = str(tmp_path / "dup")
     batch.unionAll(batch).write.mode("overwrite").parquet(dup_dir)
     stream = spark.readStream.schema(batch.schema).parquet(dup_dir)
-    deduped = dedupe_within_watermark(stream, ["event_id"], watermark="10 days")
+    deduped = dedupe_within_watermark(stream, ["event_id"])
     q = (
         deduped.writeStream.format("memory")
         .queryName("dedup_stream")
@@ -114,7 +115,7 @@ def test_stateful_sessions_matches_batch(spark, tmp_path):
     batch.select("user_id", "ts").unionByName(sentinel).write.mode("overwrite").parquet(aug_dir)
 
     stream = spark.readStream.schema("user_id bigint, ts timestamp").parquet(aug_dir)
-    out = stateful_sessions(stream, key_col="user_id", ts_col="ts", gap_seconds=1800)
+    out = stateful_sessions(stream)
     q = (
         out.writeStream.format("memory")
         .queryName("stateful_sessions")
@@ -134,16 +135,15 @@ def test_stateful_sessions_matches_batch(spark, tmp_path):
     assert got == expected
 
 
-def test_stream_enriched_daily_matches_batch(spark, events_stream_dir):
+def test_stream_enriched_daily_matches_batch(spark, events_stream_dir, monkeypatch):
     from graph_db_spark.streaming.jobs import stream_enriched_daily
 
+    monkeypatch.setattr(jobs, "_REPLAY_WATERMARK", "10 days")
     batch = load_table(spark, "/root/testdata/sf0.001", "events")
     dim = load_table(spark, "/root/testdata/sf0.001", "customer")
     stream = spark.readStream.schema(batch.schema).parquet(events_stream_dir)
     out = run_to_memory(
-        stream_enriched_daily(
-            stream, dim, "c_custkey", "c_mktsegment", watermark="10 days"
-        ),
+        stream_enriched_daily(stream, dim, "c_custkey", "c_mktsegment"),
         "enriched_stream",
     )
     got = {
