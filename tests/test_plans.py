@@ -584,13 +584,17 @@ def test_conversion_obs_matches_oracle_cte(spark, min_value):
 # ---------------------------------------------------------------------------
 
 @pytest.fixture(scope="module", autouse=True)
-def _sweep_run(tmp_path_factory):
+def _sweep_run(request, tmp_path_factory):
     """Start one ``tools/dump_plans.py`` run over the working tree when
     this module starts, so the sweep runs beside the in-process plan
     tests above it; the ledger tests at the end wait for it. It runs in
     its own process because it fixes its own core count (the suite's
     session is local[nproc]), with a small driver heap beside the
-    suite's JVM and its own temp dir for the builders' scratch paths."""
+    suite's JVM and its own temp dir for the builders' scratch paths.
+    No sweep starts when no selected test reads it."""
+    if not any("swept" in item.fixturenames for item in request.session.items):
+        yield None
+        return
     d = tmp_path_factory.mktemp("sweep")
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="2g", TMPDIR=str(d))
     with open(d / "shape.json", "w") as out, open(d / "stderr.txt", "w") as err:
@@ -606,8 +610,11 @@ def _sweep_run(tmp_path_factory):
 def swept(_sweep_run):
     """(ledger, FAIL lines) of the sweep."""
     proc, d = _sweep_run
-    proc.wait(timeout=1800)
+    rc = proc.wait(timeout=1800)
     err = (d / "stderr.txt").read_text(errors="replace")
+    # rc 1 = some queries failed to build (FAIL lines); anything else
+    # means the sweep itself died before printing the ledger
+    assert rc in (0, 1), err[-4000:]
     failed = [line for line in err.splitlines() if line.startswith("FAIL ")]
     return json.loads((d / "shape.json").read_text()), failed
 
